@@ -2,7 +2,7 @@
 
 ``entry(spark)`` — flagship pipeline on sf0.001.
 ``queries()`` / ``oracle_sql()`` — one pair per implemented operator
-from SURVEY.md §2 (+ the training-data ops), runnable side-by-side at
+from SURVEY.md §2 (+ the library ops outside it), runnable side-by-side at
 sf0.01 against DuckDB.
 
 The event-line adapter (skewer_spark.sources.events) builds syslog
@@ -994,13 +994,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pairs = ngram_jaccard_pairs(docs, n=3, threshold=0.3)
         return dedup_clusters_star(docs, pairs)
 
-    def q_boilerplate(spark, sf):
-        # C4/RefinedWeb-style cross-document boilerplate span removal:
-        # any word 5-gram in >= 3 distinct docs is cut from every doc
-        from skewer_spark.operators.curate import remove_boilerplate_spans
-        docs = _read(spark, sf, "documents")
-        return remove_boilerplate_spans(docs, n=5, min_docs=3)
-
     def q_dedup_substr(spark, sf):
         # exact-substring span dedup (Lee et al. 2022): every word
         # 5-gram occurring more than once corpus-wide is cut from all
@@ -1009,60 +1002,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from skewer_spark.operators.dedup import dedup_substring_spans
         docs = _read(spark, sf, "documents")
         return dedup_substring_spans(docs, n=5)
-
-    def q_url_filter(spark, sf):
-        # URL/domain document filter (C4/RefinedWeb pre-content stage).
-        # URLs BY CONSTRUCTION from doc_id (documents carry no URL
-        # column): deterministic scheme/userinfo/www/port/tld mix plus
-        # a malformed-host branch, exercising every reason branch
-        from skewer_spark.operators.curate import url_filter
-        docs = _read(spark, sf, "documents")
-        did = F.col("doc_id")
-        schemes = F.array(F.lit("https"), F.lit("http"),
-                          F.lit("ftp"), F.lit("https"))
-        tlds = F.array(F.lit("com"), F.lit("org"), F.lit("zip"),
-                       F.lit("net"), F.lit("io"))
-        normal = F.concat(
-            F.element_at(schemes, F.pmod(did, F.lit(4)).cast("int") + 1),
-            F.lit("://"),
-            F.when(F.pmod(did, F.lit(7)) == 0, F.lit("u:p@")).otherwise(F.lit("")),
-            F.when(F.pmod(did, F.lit(5)) == 0, F.lit("www.")).otherwise(F.lit("")),
-            F.format_string("site%02d", F.pmod(did, F.lit(40))),
-            F.lit("."),
-            F.element_at(tlds, F.pmod(did, F.lit(5)).cast("int") + 1),
-            F.when(F.pmod(did, F.lit(11)) == 0, F.lit(":8080")).otherwise(F.lit("")),
-            F.format_string("/p/%d?q=%d", did, F.pmod(did, F.lit(9))),
-        )
-        url = F.when(
-            F.pmod(did, F.lit(19)) == 0, F.lit(None).cast("string")
-        ).when(
-            F.pmod(did, F.lit(17)) == 0,
-            F.format_string("https:///broken/%d", did),
-        ).otherwise(normal)
-        src = docs.select("doc_id", url.alias("url"))
-        return url_filter(
-            src,
-            blocked_domains=["site03.net", "site08.net", "site21.org"],
-        )
-
-    def q_soft_dedup(spark, sf):
-        # duplicate down-weighting (SlimPajama-style): weight = 1/k per
-        # identical-text group, deterministic Bernoulli keep
-        from skewer_spark.operators.curate import soft_dedup_weights
-        docs = _read(spark, sf, "documents")
-        return soft_dedup_weights(docs)
-
-    def q_tfidf_terms(spark, sf):
-        from skewer_spark.operators.curate import tfidf_top_terms
-        docs = _read(spark, sf, "documents")
-        return tfidf_top_terms(docs, k=3)
-
-    def q_bigram_ppl(spark, sf):
-        # CCNet-style LM quality gate: per-doc mean log-prob under a
-        # corpus-trained add-alpha bigram model
-        from skewer_spark.operators.curate import bigram_logprob_scores
-        docs = _read(spark, sf, "documents")
-        return bigram_logprob_scores(docs)
 
     def q_bpe_merges(spark, sf):
         # distributed BPE tokenizer TRAINING (Sennrich et al. 2016):
@@ -1215,70 +1154,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return rrf_fuse([lex, dense], k=10)
 
-    def q_dsir_weights(spark, sf):
-        # DSIR data selection: hashed-n-gram importance log-ratio of an
-        # 'en'-target bag model vs the rest of the corpus
-        from skewer_spark.operators.curate import dsir_importance_weights
-        docs = _read(spark, sf, "documents")
-        return dsir_importance_weights(docs, F.col("lang") == "en")
-
-    def q_pack_sequences(spark, sf):
-        # GPT-style concat-and-chunk packing: per-doc token span in the
-        # fixed-length training-sequence stream (distributed prefix sum)
-        from skewer_spark.operators.pack import pack_sequences
-        docs = _read(spark, sf, "documents")
-        return pack_sequences(docs, seq_len=512)
-
-    def q_doc_chunks(spark, sf):
-        # RAG-style per-document sliding-window chunking: 64-token
-        # windows, 16-token overlap (stride 48); every chunk after the
-        # first contributes >=1 new token, final chunk may be short —
-        # zero shuffles, one posexplode
-        from skewer_spark.operators.pack import chunk_documents
-        docs = _read(spark, sf, "documents")
-        return chunk_documents(
-            docs.select("doc_id", "text"), chunk_tokens=64, overlap=16
-        )
-
-    def q_budget_select(spark, sf):
-        # greedy token-budget corpus selection: keep whole docs in
-        # (quality DESC, doc_id) order while the running token total
-        # fits the budget — distributed bucketed prefix sum
-        from skewer_spark.functions.text import quality_score
-        from skewer_spark.operators.select import token_budget_select
-        docs = _read(spark, sf, "documents")
-        return token_budget_select(docs, quality_score(), budget_tokens=20000)
-
-    def q_mixture_weights(spark, sf):
-        # temperature-scaled domain sampling weights (mT5/UniMax style)
-        from skewer_spark.operators.select import mixture_weights
-        docs = _read(spark, sf, "documents")
-        return mixture_weights(docs, "lang", temperature=2.0)
-
-    def q_apply_mixture(spark, sf):
-        # materialized temperature mix: per-doc epoch count (copies)
-        # realizing the mixing weights under a token budget, decided by
-        # a deterministic md5 uniform (no RNG state)
-        from skewer_spark.operators.select import apply_mixture
-        docs = _read(spark, sf, "documents")
-        return apply_mixture(docs, budget_tokens=50000, group_col="lang",
-                             temperature=2.0)
-
-    def q_shard_shuffle(spark, sf):
-        # deterministic global shuffle into training shards: stable
-        # md5-keyed shard + in-shard position, no RNG state
-        from skewer_spark.operators.select import shard_and_shuffle
-        docs = _read(spark, sf, "documents")
-        return shard_and_shuffle(docs, n_shards=8)
-
-    def q_split_assign(spark, sf):
-        # content-keyed train/val/test split: a doc's split is a pure
-        # function of md5(salt||id) — stable under resharding and
-        # corpus growth (no row_number cuts, no RNG)
-        from skewer_spark.operators.select import split_assign
-        docs = _read(spark, sf, "documents")
-        return split_assign(docs)
-
     def q_sample_per_group(spark, sf):
         # deterministic stratified sample: n docs per language, ordered
         # by a hash of the id (reproducible, no RNG — resume-safe)
@@ -1371,15 +1246,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).collect()
         cents = {int(r[0]): [float(x) for x in r[1]] for r in rows}
         return semdedup(emb, cents, threshold=0.3, cell_cap=64)
-
-    def q_classifier(spark, sf):
-        # fastText-style hashed linear quality-classifier inference; the
-        # LCG demo weights collapse the weight lookup to a pure
-        # expression and the integer dot product is summation-order
-        # exact, so DuckDB reproduces the hash bit-for-bit.
-        from skewer_spark.operators.curate import hashed_classifier_score
-        docs = _read(spark, sf, "documents")
-        return hashed_classifier_score(docs, threshold=0.0)
 
     def q_token_pctl(spark, sf):
         # exact per-language token-length percentiles (curation gate:
@@ -1542,63 +1408,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "contaminated",
         )
 
-    def q_curation(spark, sf):
-        # composite curation verdict: exact-dedup keeper + lang gate +
-        # quality gate + decontamination, first failing rule = reason
-        # (bench split mirrors q_decontam: doc_id ≡ 0 mod 10 is eval)
-        from skewer_spark.operators.curate import curation_decisions
-        docs = _read(spark, sf, "documents")
-        bench = docs.filter(F.col("doc_id") % 10 == 0)
-        rest = docs.filter(F.col("doc_id") % 10 != 0)
-        return curation_decisions(rest, bench)
-
-    def q_image_decode(spark, sf):
-        # REAL image codec check: build a 4×2 P6 PPM per event in pure
-        # expressions (pixel i = (event_id*7+i) % 256), decode with the
-        # actual numpy codec, emit exact integer channel sums — the
-        # oracle recomputes them arithmetically, never touching the
-        # codec (independence)
-        from skewer_spark.operators.multimodal import image_stats
-        ev = _read(spark, sf, "events")
-        hexpix = F.concat_ws(
-            "",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(23)),
-                lambda i: F.lpad(
-                    F.hex(F.pmod(F.col("event_id") * 7 + i, F.lit(256))), 2, "0"
-                ),
-            ),
-        )
-        src = ev.select(
-            F.col("event_id"),
-            F.concat(F.lit(b"P6\n4 2\n255\n"), F.unhex(hexpix)).alias("payload"),
-        )
-        return image_stats(src, id_col="event_id")
-
-    def q_audio_decode(spark, sf):
-        # REAL WAV codec check: 16 PCM16-LE samples per event,
-        # s_i = ((event_id*31 + i*997) % 65536) - 32768; fixed canonical
-        # header (16 samples, 16 kHz mono) as a binary literal
-        import numpy as _np
-        from skewer_spark.functions.codecs import encode_wav
-        from skewer_spark.operators.multimodal import audio_stats
-        header = encode_wav(_np.zeros(16, dtype="<i2"), rate=16000)[:44]
-        ev = _read(spark, sf, "events")
-
-        def le_hex(i):
-            u16 = F.pmod(F.col("event_id") * 31 + i * 997, F.lit(65536))
-            h4 = F.lpad(F.hex(u16), 4, "0")
-            return F.concat(F.substring(h4, 3, 2), F.substring(h4, 1, 2))
-
-        pcm_hex = F.concat_ws(
-            "", F.transform(F.sequence(F.lit(0), F.lit(15)), le_hex)
-        )
-        src = ev.select(
-            F.col("event_id"),
-            F.concat(F.lit(bytes(header)), F.unhex(pcm_hex)).alias("payload"),
-        )
-        return audio_stats(src, id_col="event_id")
-
     def q_asof_enrich(spark, sf):
         # as-of join: enrich each event with the config version active
         # at its timestamp (configs = every 23rd event, keyed by user)
@@ -1699,30 +1508,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("ts"),
         )
         return conv_stats(turns)
-
-    def q_domain_quantile(spark, sf):
-        # FineWeb-style per-domain quantile selection: each source
-        # keeps its own top quartile by score (score = n_chars so the
-        # oracle's quantile_cont interpolation is exact in double)
-        from skewer_spark.operators.select import per_domain_quantile_select
-        docs = _read(spark, sf, "documents")
-        src = docs.select(
-            "doc_id",
-            F.col("source").alias("domain"),
-            F.col("n_chars").cast("double").alias("score"),
-        )
-        return per_domain_quantile_select(src, q=0.75)
-
-    def q_weighted_sample(spark, sf):
-        # deterministic Efraimidis–Spirakis weighted sample: top-50
-        # docs by u^(1/n_chars) with md5 uniforms (resume-safe, no RNG)
-        from skewer_spark.operators.select import weighted_sample
-        docs = _read(spark, sf, "documents")
-        out = weighted_sample(
-            docs.select("doc_id", F.col("n_chars").alias("weight")),
-            n=50, id_col="doc_id",
-        )
-        return out.select("doc_id", "sample_key")
 
     def q_pagerank(spark, sf):
         # damped PageRank (3 iterations, uniform dangling
@@ -2296,27 +2081,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return diff_summary(snapshot_diff(old, new, ["event_id"]))
 
-    def q_sft_spans(spark, sf):
-        # SFT loss-mask layout over a transcript shape derived from
-        # events (conv = user, turn = event order, role = event_type,
-        # deterministic per-turn token counts): per-turn packed spans
-        # + the learn-on-assistant mask — the step between raw
-        # transcripts and supervised fine-tuning batches.
-        from skewer_spark.operators.pack import sft_turn_spans
-        ev = _read(spark, sf, "events")
-        t = ev.select(
-            F.col("user_id").alias("conv_id"),
-            F.col("event_id").alias("turn_idx"),
-            F.col("event_type").alias("role"),
-            F.array_join(
-                F.array_repeat(
-                    F.lit("tok"), (F.col("event_id") % 9 + 1).cast("int")
-                ),
-                " ",
-            ).alias("text"),
-        )
-        return sft_turn_spans(t, loss_roles=("purchase", "signup"))
-
     def q_rolling(spark, sf):
         # per-key trailing-5 moving stats over the event stream
         # (deterministic (ts, event_id) order — duplicate timestamps
@@ -2514,51 +2278,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return transition_matrix(
             ev, key="user_id", order_col="event_id", state_col="event_type"
         )
-
-    def q_pref_pairs(spark, sf):
-        # DPO-style preference-pair mining: responses grouped by a
-        # 2000-way prompt key, chosen = best score, rejected = worst,
-        # zero-margin prompts dropped.
-        from skewer_spark.operators.preference import preference_pairs
-        ev = _read(spark, sf, "events")
-        resp = ev.select(
-            (F.col("event_id") % 2000).alias("prompt_id"),
-            F.col("event_id").alias("resp_id"),
-            F.col("value").alias("score"),
-        )
-        return preference_pairs(resp)
-
-    def q_bradley_terry(spark, sf):
-        # Bradley-Terry strengths over event-type duels: consecutive
-        # events of a user duel, higher value wins; two exact MM
-        # iterations on the reduced pair-count frame.
-        from pyspark.sql import Window
-
-        from skewer_spark.operators.preference import bradley_terry
-        ev = _read(spark, sf, "events")
-        w = Window.partitionBy("user_id").orderBy(F.col("event_id").asc())
-        duels = (
-            ev.select(
-                F.col("event_type").alias("a"),
-                F.lead("event_type").over(w).alias("b"),
-                F.col("value").alias("va"),
-                F.lead("value").over(w).alias("vb"),
-            )
-            .filter(
-                F.col("b").isNotNull()
-                & (F.col("a") != F.col("b"))
-                & (F.col("va") != F.col("vb"))
-            )
-            .select(
-                F.when(F.col("va") > F.col("vb"), F.col("a"))
-                .otherwise(F.col("b"))
-                .alias("winner"),
-                F.when(F.col("va") > F.col("vb"), F.col("b"))
-                .otherwise(F.col("a"))
-                .alias("loser"),
-            )
-        )
-        return bradley_terry(duels, iters=2)
 
     def q_tree_depth(spark, sf):
         # pointer-doubling forest resolution: every node's root and
@@ -2833,17 +2552,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "doc_id", char_entropy().alias("char_entropy_bits")
         )
 
-    def q_split_leakproof(spark, sf):
-        # holdout split keyed on the exact-dup fingerprint: every
-        # duplicate of a doc lands in the SAME split (id-keyed splits
-        # leak near-dups across train/test)
-        from skewer_spark.operators.select import split_assign_grouped
-        docs = _read(spark, sf, "documents")
-        fp = docs.select(
-            "doc_id", F.md5(F.col("text")).alias("fp")
-        )
-        return split_assign_grouped(fp, "fp", id_col="doc_id")
-
     def q_line_dedup(spark, sf):
         # CCNet corpus-level line dedup + reassembly: docs are laid out
         # as 8-token lines (pure expressions, mirrored in the oracle);
@@ -2923,23 +2631,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return fd_violations(ev, ["user_id"], "event_type")
 
     # ORDER MATTERS: the driver's correctness harness checks the FIRST
-    # 50 entries only.  With 164/164 pairs driver-verified at least
-    # once (r1-r5), the window now rotates onto the least-recently-
-    # checked pairs each round (tools/rotate_window.py) so the maximum
-    # signal age keeps dropping; the tail stays fully oracle-paired and
-    # is re-verified each session by tools/check_oracles.py + pytest.
+    # 50 entries only, so the window holds the least-recently-checked
+    # pairs (tools/rotate_window.py).  Every pair stays oracle-paired
+    # and is re-verified by tools/check_oracles.py + pytest.
     return {
-        # -- ROUND-6 WINDOW ROTATION (VERDICT r5 "Next round" #2,
-        # second-pass freshness): every pair has been driver-checked at
-        # least once (r1-r5 union = 164/164), so this rotation
-        # back-fills the 50 LEAST-RECENTLY-checked pairs (r2/r3-era
-        # signals, exactly as tools/rotate_window.py prints) — which
-        # happen to include most of the r6-optimized paths
-        # (encode/parse_protobuf, dedup family, setsim, semdedup, ivf,
-        # kmeans, tree_depth, bradley_terry, incr_dedup, parse_*), so
-        # the driver re-signs the changed code.  The 114 tail entries
-        # stay fully oracle-paired and are re-verified each session by
-        # tools/check_oracles.py.
         "q_encode_protobuf": q_encode_protobuf,
         "q_simhash": q_simhash,
         "q_dedup_apply": q_dedup_apply,
@@ -2968,10 +2663,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_grok": q_grok,
         "q_log_templates": q_log_templates,
         "q_multiline": q_multiline,
-        "q_pack_sequences": q_pack_sequences,
         "q_cdc_upsert": q_cdc_upsert,
         "q_rate_limit": q_rate_limit,
-        "q_shard_shuffle": q_shard_shuffle,
         "q_parse_protobuf": q_parse_protobuf,
         "q_hybrid_search": q_hybrid_search,
         "q_sketch_distinct": q_sketch_distinct,
@@ -2982,23 +2675,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_semdedup": q_semdedup,
         "q_ivf_topk": q_ivf_topk,
         "q_tree_depth": q_tree_depth,
-        "q_classifier": q_classifier,
         "q_text_stats": q_text_stats,
         "q_dedup_substr": q_dedup_substr,
-        "q_bradley_terry": q_bradley_terry,
         "q_incr_dedup": q_incr_dedup,
         "q_json_schema": q_json_schema,
         "q_pii_redact": q_pii_redact,
         "q_repetition": q_repetition,
         "q_bpe_apply": q_bpe_apply,
-        "q_mixture_weights": q_mixture_weights,
-        "q_audio_decode": q_audio_decode,
         "q_conv_stats": q_conv_stats,
         "q_encode_rfc3164": q_encode_rfc3164,
         "q_encode_gelf": q_encode_gelf,
         "q_frame_octet": q_frame_octet,
         "q_encode_file": q_encode_file,
-        "q_split_assign": q_split_assign,
         "q_rand_proj": q_rand_proj,
         "q_normalize": q_normalize,
         "q_hard_neg": q_hard_neg,
@@ -3008,7 +2696,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_threads": q_threads,
         "q_join_size": q_join_size,
         "q_transitions": q_transitions,
-        "q_pref_pairs": q_pref_pairs,
         "q_incr_agg": q_incr_agg,
         "q_intervals": q_intervals,
         "q_entropy": q_entropy,
@@ -3040,21 +2727,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_encode_fullavro": q_encode_fullavro,
         "q_encode_jsonavro": q_encode_jsonavro,
         "q_encode_fulljsonavro": q_encode_fulljsonavro,
-        "q_apply_mixture": q_apply_mixture,
-        "q_bigram_ppl": q_bigram_ppl,
         "q_bloom_decontam": q_bloom_decontam,
         "q_bm25_search": q_bm25_search,
-        "q_boilerplate": q_boilerplate,
         "q_bucketed_join": q_bucketed_join,
-        "q_budget_select": q_budget_select,
         "q_calibration": q_calibration,
         "q_cms_heavy": q_cms_heavy,
         "q_cohort": q_cohort,
         "q_compaction": q_compaction,
         "q_context_windows": q_context_windows,
         "q_corpus_overlap": q_corpus_overlap,
-        "q_doc_chunks": q_doc_chunks,
-        "q_dsir_weights": q_dsir_weights,
         "q_evolve": q_evolve,
         "q_fd_check": q_fd_check,
         "q_hot_ngrams": q_hot_ngrams,
@@ -3075,28 +2756,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_retrieval_eval": q_retrieval_eval,
         "q_salted_agg": q_salted_agg,
         "q_scd2": q_scd2,
-        "q_sft_spans": q_sft_spans,
         "q_snap_expiry": q_snap_expiry,
         "q_snapshot_diff": q_snapshot_diff,
-        "q_soft_dedup": q_soft_dedup,
-        "q_split_leakproof": q_split_leakproof,
         "q_sq8_topk": q_sq8_topk,
-        "q_tfidf_terms": q_tfidf_terms,
         "q_time_rollup": q_time_rollup,
         "q_trend": q_trend,
         "q_triangles": q_triangles,
-        "q_url_filter": q_url_filter,
         "q_validate": q_validate,
-        "q_weighted_sample": q_weighted_sample,
         "q_zonemap": q_zonemap,
         "q_zorder": q_zorder,
         "q_decontam": q_decontam,
-        "q_curation": q_curation,
-        "q_image_decode": q_image_decode,
         "q_sft_pairs": q_sft_pairs,
         "q_asof_enrich": q_asof_enrich,
         "q_session_agg": q_session_agg,
-        "q_domain_quantile": q_domain_quantile,
         "q_late_events": q_late_events,
         "q_funnel": q_funnel,
         "q_cidr_enrich": q_cidr_enrich,
@@ -4227,269 +3899,6 @@ def oracle_sql() -> dict[str, str]:
         "q_dedup_clusters": dedup_clusters_sql,
         # the star variant must produce the EXACT same closure
         "q_dedup_clusters_star": dedup_clusters_sql,
-        "q_soft_dedup": """
-            WITH g AS (
-              SELECT doc_id,
-                     count(*) OVER (PARTITION BY md5(text)) AS n_copies,
-                     ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT
-                       / 4294967296.0 AS u
-              FROM documents
-            )
-            SELECT doc_id, n_copies,
-                   round(1.0 / n_copies, 6) AS weight,
-                   round(u, 6) AS u,
-                   (u * n_copies < 1.0) AS kept
-            FROM g
-        """,
-        "q_tfidf_terms": """
-            WITH tok AS (
-              SELECT doc_id, unnest(string_split(text, ' ')) AS term
-              FROM documents
-            ), tf AS (
-              SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2
-            ), dl AS (
-              SELECT doc_id, sum(tf) AS len FROM tf GROUP BY 1
-            ), dfr AS (
-              SELECT term, count(*) AS dfreq FROM tf GROUP BY 1
-            ), n AS (
-              SELECT count(*) AS nd FROM documents
-            ), scored AS (
-              -- round BEFORE the rank cut, like the Spark side: 1-ulp
-              -- libm ln() differences must not flip near-ties across
-              -- the rank<=3 boundary
-              SELECT tf.doc_id, tf.term,
-                     round((tf.tf::DOUBLE / dl.len)
-                           * ln(n.nd::DOUBLE / dfr.dfreq), 6) AS score
-              FROM tf JOIN dl USING (doc_id) JOIN dfr USING (term)
-              CROSS JOIN n
-            )
-            SELECT doc_id, term, score AS tfidf, rank::INT AS rank
-            FROM (
-              SELECT *, row_number() OVER (
-                PARTITION BY doc_id ORDER BY score DESC, term) AS rank
-              FROM scored
-            ) WHERE rank <= 3
-        """,
-        "q_bigram_ppl": """
-            WITH base AS (
-              SELECT doc_id, string_split(text, ' ') AS l FROM documents
-            ), big AS (
-              SELECT doc_id, l[i] AS w1, l[i + 1] AS w2
-              FROM base, unnest(range(1, len(l))) AS u(i)
-              WHERE len(l) >= 2
-            ), bc AS (
-              SELECT w1, w2, count(*) AS cb FROM big GROUP BY 1, 2
-            ), cw AS (
-              SELECT w1, sum(cb) AS cwv FROM bc GROUP BY 1
-            ), v AS (
-              SELECT count(DISTINCT w) AS vv FROM (
-                SELECT w1 AS w FROM big UNION ALL SELECT w2 FROM big)
-            ), scored AS (
-              SELECT b.doc_id,
-                     ln((bc.cb + 0.5) / (cw.cwv + 0.5 * v.vv)) AS lp
-              FROM big b JOIN bc USING (w1, w2) JOIN cw USING (w1)
-              CROSS JOIN v
-            ), agg AS (
-              SELECT doc_id, count(*) AS n_bigrams,
-                     round(avg(lp), 6) AS avg_logprob
-              FROM scored GROUP BY 1
-            )
-            SELECT d.doc_id,
-                   coalesce(a.n_bigrams, 0) AS n_bigrams,
-                   coalesce(a.avg_logprob, 0.0) AS avg_logprob
-            FROM documents d LEFT JOIN agg a USING (doc_id)
-        """,
-        "q_dsir_weights": """
-            WITH base AS (
-              SELECT doc_id, lang = 'en' AS tgt,
-                     string_split(text, ' ') AS l
-              FROM documents
-            ), uni AS (
-              SELECT doc_id, tgt, l[i] AS f
-              FROM base, unnest(range(1, len(l) + 1)) AS u(i)
-            ), big AS (
-              SELECT doc_id, tgt, l[i] || ' ' || l[i + 1] AS f
-              FROM base, unnest(range(1, len(l))) AS u(i)
-              WHERE len(l) >= 2
-            ), feats AS (
-              SELECT doc_id, tgt,
-                     ('0x' || substr(md5(f), 1, 8))::BIGINT % 1024 AS b
-              FROM (SELECT * FROM uni UNION ALL SELECT * FROM big)
-            ), stats AS (
-              SELECT b,
-                     sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS ct,
-                     sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS cr
-              FROM feats GROUP BY 1
-            ), tot AS (
-              SELECT sum(ct) AS tct, sum(cr) AS tcr FROM stats
-            ), blr AS (
-              SELECT b, ln(((ct + 0.5) / (tct + 512.0))
-                           / ((cr + 0.5) / (tcr + 512.0))) AS lr
-              FROM stats CROSS JOIN tot
-            ), docb AS (
-              SELECT doc_id, b, count(*) AS n FROM feats GROUP BY 1, 2
-            )
-            SELECT doc_id, sum(n)::BIGINT AS n_feats,
-                   round(sum(n * lr) / sum(n), 6) AS dsir_score
-            FROM docb JOIN blr USING (b) GROUP BY 1
-        """,
-        "q_pack_sequences": """
-            WITH t AS (
-              SELECT doc_id,
-                     len(string_split(text, ' '))::BIGINT AS n_tokens
-              FROM documents
-            ), c AS (
-              SELECT doc_id, n_tokens,
-                     sum(n_tokens) OVER (
-                       ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     )::BIGINT AS cum
-              FROM t
-            )
-            SELECT doc_id, n_tokens,
-                   ((cum - n_tokens) // 512)::BIGINT AS seq_first,
-                   ((cum - 1) // 512)::BIGINT AS seq_last,
-                   ((cum - n_tokens) % 512)::INT AS offset_in_seq
-            FROM c
-        """,
-        "q_budget_select": """
-            WITH q AS (
-              SELECT doc_id,
-                     (length(text) - length(replace(text, ' ', ''))
-                      + 1)::BIGINT AS n_tokens,
-                     round(
-                       CASE WHEN length(text) >= 100 THEN 0.5
-                            ELSE length(text) / 200.0 END
-                       + CASE WHEN length(regexp_replace(
-                                 text, '[^.,;:!?]', '', 'g'))::DOUBLE
-                                   / length(text)::DOUBLE <= 0.1
-                              THEN 0.25 ELSE 0.0 END
-                       + CASE WHEN len(list_filter(string_split(text, ' '),
-                                 x -> x IN ('the','a','of','and','to',
-                                            'in','is','it')))::DOUBLE
-                                   / len(string_split(text, ' '))::DOUBLE
-                                   >= 0.05
-                              THEN 0.25 ELSE 0.0 END, 4)::DOUBLE AS score
-              FROM documents
-            )
-            SELECT doc_id, n_tokens, score,
-                   sum(n_tokens) OVER (
-                     ORDER BY score DESC, doc_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   )::BIGINT AS cum_tokens,
-                   sum(n_tokens) OVER (
-                     ORDER BY score DESC, doc_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) <= 20000 AS selected
-            FROM q
-        """,
-        "q_mixture_weights": """
-            WITH g AS (
-              SELECT lang AS "group", count(*)::BIGINT AS n_docs,
-                     sum(length(text) - length(replace(text, ' ', ''))
-                         + 1)::BIGINT AS n_tokens
-              FROM documents GROUP BY 1
-            )
-            , p AS (
-              SELECT "group", n_docs, n_tokens,
-                     n_tokens::DOUBLE / sum(n_tokens) OVER () AS p_raw
-              FROM g
-            )
-            SELECT "group", n_docs, n_tokens,
-                   round(p_raw, 6) AS p_raw,
-                   round(pow(p_raw, 0.5)
-                         / sum(pow(p_raw, 0.5)) OVER (), 6) AS mix_weight
-            FROM p
-        """,
-        "q_apply_mixture": """
-            WITH g AS (
-              SELECT lang AS "group", count(*)::BIGINT AS n_docs,
-                     sum(length(text) - length(replace(text, ' ', ''))
-                         + 1)::BIGINT AS n_tokens
-              FROM documents GROUP BY 1
-            ), p AS (
-              SELECT "group", n_tokens,
-                     n_tokens::DOUBLE / sum(n_tokens) OVER () AS p_raw
-              FROM g
-            ), w AS (
-              SELECT "group", n_tokens AS gtok,
-                     round(pow(p_raw, 0.5)
-                           / sum(pow(p_raw, 0.5)) OVER (), 6) AS mw
-              FROM p
-            ), d AS (
-              SELECT doc_id, lang AS "group",
-                     (length(text) - length(replace(text, ' ', ''))
-                      + 1)::BIGINT AS n_tokens,
-                     ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT
-                       ::DOUBLE / power(2, 60) AS u
-              FROM documents
-            )
-            SELECT doc_id, "group", d.n_tokens,
-                   round(50000.0 * mw / gtok::DOUBLE, 6) AS rate,
-                   (floor(50000.0 * mw / gtok::DOUBLE)
-                    + CASE WHEN u < 50000.0 * mw / gtok::DOUBLE
-                               - floor(50000.0 * mw / gtok::DOUBLE)
-                           THEN 1 ELSE 0 END)::BIGINT AS n_copies
-            FROM d JOIN w USING ("group")
-        """,
-        "q_shard_shuffle": """
-            WITH k AS (
-              SELECT doc_id,
-                     ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT
-                       AS key
-              FROM documents
-            )
-            SELECT doc_id, (key % 8)::INT AS shard,
-                   row_number() OVER (
-                     PARTITION BY key % 8 ORDER BY key, doc_id
-                   )::BIGINT AS shard_pos
-            FROM k
-        """,
-        "q_split_assign": """
-            -- boundaries are the Python-side int(frac_cum * 2^32)
-            -- literals: both engines compare identical integers
-            SELECT doc_id,
-                   CASE WHEN u < 4209067950 THEN 'train'
-                        WHEN u < 4252017623 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM (
-              SELECT doc_id,
-                     ('0x' || substr(md5('split-v1|' || doc_id::VARCHAR),
-                                     1, 8))::BIGINT AS u
-              FROM documents
-            )
-        """,
-        "q_boilerplate": """
-            WITH base AS (
-              SELECT doc_id, string_split(text, ' ') AS l FROM documents
-            ), tok AS (
-              SELECT doc_id, i - 1 AS pos, l[i] AS tok
-              FROM base, unnest(range(1, len(l) + 1)) AS u(i)
-            ), shq AS (
-              SELECT doc_id, i - 1 AS spos,
-                     substr(md5(array_to_string(l[i:i+4], ' ')), 1, 8) AS sh
-              FROM base, unnest(range(1, len(l) - 3)) AS u(i)
-              WHERE len(l) >= 5
-            ), boiler AS (
-              SELECT sh FROM (SELECT DISTINCT sh, doc_id FROM shq)
-              GROUP BY sh HAVING count(*) >= 3
-            ), covered AS (
-              SELECT DISTINCT doc_id, pos FROM (
-                SELECT s.doc_id, unnest(range(s.spos, s.spos + 5)) AS pos
-                FROM shq s JOIN boiler b USING (sh))
-            ), kept AS (
-              SELECT t.* FROM tok t ANTI JOIN covered c
-              ON t.doc_id = c.doc_id AND t.pos = c.pos
-            ), rebuilt AS (
-              SELECT doc_id, count(*) AS n_kept,
-                     string_agg(tok, ' ' ORDER BY pos) AS text_clean
-              FROM kept GROUP BY doc_id
-            )
-            SELECT base.doc_id, len(l)::INT AS n_tokens,
-                   (len(l) - coalesce(n_kept, 0))::INT AS n_removed,
-                   coalesce(text_clean, '') AS text_clean
-            FROM base LEFT JOIN rebuilt USING (doc_id)
-        """,
         "q_dedup_substr": """
             WITH base AS (
               SELECT doc_id, string_split(text, ' ') AS l FROM documents
@@ -4522,54 +3931,6 @@ def oracle_sql() -> dict[str, str]:
                    (len(l) - coalesce(n_kept, 0))::INT AS n_removed,
                    coalesce(text_clean, '') AS text_clean
             FROM base LEFT JOIN rebuilt USING (doc_id)
-        """,
-        "q_url_filter": """
-            WITH src AS (
-              SELECT doc_id,
-                CASE WHEN doc_id % 19 = 0 THEN NULL
-                  WHEN doc_id % 17 = 0
-                  THEN printf('https:///broken/%d', doc_id)
-                  ELSE
-                    ['https','http','ftp','https'][(doc_id % 4)::INT + 1]
-                    || '://'
-                    || CASE WHEN doc_id % 7 = 0 THEN 'u:p@' ELSE '' END
-                    || CASE WHEN doc_id % 5 = 0 THEN 'www.' ELSE '' END
-                    || printf('site%02d', (doc_id % 40)::INT) || '.'
-                    || ['com','org','zip','net','io'][(doc_id % 5)::INT + 1]
-                    || CASE WHEN doc_id % 11 = 0 THEN ':8080' ELSE '' END
-                    || printf('/p/%d?q=%d', doc_id, (doc_id % 9)::INT)
-                END AS url
-              FROM documents
-            ), parsed AS (
-              SELECT doc_id, url,
-                lower(regexp_extract(url,
-                  '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-                regexp_replace(lower(regexp_extract(url,
-                  '^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#]*@)?([^/:?#@]+)', 1)),
-                  '^www\\.', '') AS host
-              FROM src
-            ), p2 AS (
-              SELECT *,
-                regexp_extract(host, '\\.([a-z0-9-]+)$', 1) AS tld,
-                coalesce(nullif(regexp_extract(host,
-                  '([a-z0-9-]+\\.[a-z0-9-]+)$', 1), ''), host) AS domain
-              FROM parsed
-            ), decided AS (
-              SELECT *,
-                CASE
-                  WHEN url IS NULL OR url = '' THEN 'no_url'
-                  WHEN scheme NOT IN ('http', 'https') THEN 'scheme'
-                  WHEN host = '' THEN 'no_host'
-                  WHEN domain IN ('site03.net', 'site08.net', 'site21.org')
-                    THEN 'blocked_domain'
-                  WHEN tld IN ('zip', 'xxx') THEN 'blocked_tld'
-                  ELSE 'kept'
-                END AS reason
-              FROM p2
-            )
-            SELECT doc_id, url, scheme, host, domain, tld, reason,
-                   (reason = 'kept') AS keep
-            FROM decided
         """,
         "q_dedup_apply": f"""
             WITH clusters AS ({dedup_clusters_sql})
@@ -4714,34 +4075,6 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT c.vec_id, c.cid AS cell, (d.id_b IS NULL) AS keep
             FROM cells c LEFT JOIN drops d ON c.vec_id = d.id_b
-        """,
-        "q_classifier": """
-            WITH base AS (
-              SELECT doc_id, string_split(text, ' ') AS l FROM documents
-            ), uni AS (
-              SELECT doc_id, l[i] AS f
-              FROM base, unnest(range(1, len(l) + 1)) AS u(i)
-            ), big AS (
-              SELECT doc_id, l[i] || ' ' || l[i + 1] AS f
-              FROM base, unnest(range(1, len(l))) AS u(i)
-              WHERE len(l) >= 2
-            ), feats AS (
-              SELECT doc_id,
-                     ('0x' || substr(md5(f), 1, 8))::BIGINT % 1024 AS b
-              FROM (SELECT * FROM uni UNION ALL SELECT * FROM big)
-            ), docb AS (
-              SELECT doc_id, b, count(*) AS n FROM feats GROUP BY 1, 2
-            ), agg AS (
-              SELECT doc_id, sum(n)::BIGINT AS n_feats,
-                     sum(n * ((b * 1103515245 + 12345) % 2001 - 1000))
-                       ::BIGINT AS raw
-              FROM docb GROUP BY 1
-            )
-            SELECT doc_id, n_feats,
-                   round(0.0 + raw / (n_feats * 1000.0), 6) AS clf_score,
-                   (round(0.0 + raw / (n_feats * 1000.0), 6) >= 0.0)
-                     AS keep
-            FROM agg
         """,
         "q_text_stats": """
             -- sums cast to BIGINT: DuckDB sum(BIGINT) yields HUGEINT,
@@ -4928,89 +4261,6 @@ def oracle_sql() -> dict[str, str]:
                     greatest(n_shingles, 1)) >= 0.1 AS contaminated
             FROM docs LEFT JOIN m ON docs.doc_id = m.doc_id
         """,
-        "q_curation": """
-            WITH w AS (
-              SELECT doc_id, text, string_split(text, ' ') AS toks
-              FROM documents
-            ), sh AS (
-              SELECT doc_id,
-                list_distinct(CASE WHEN len(toks) >= 3 THEN
-                  list_transform(generate_series(0, len(toks) - 3),
-                    i -> array_to_string(toks[i+1:i+3], ' '))
-                ELSE CAST([] AS VARCHAR[]) END) AS shingles
-              FROM w
-            ), bench AS (
-              SELECT DISTINCT unnest(shingles) AS shingle FROM sh
-              WHERE doc_id % 10 = 0
-            ), docs AS (
-              SELECT w.doc_id, w.text, w.toks, sh.shingles,
-                     len(sh.shingles) AS n_shingles
-              FROM w JOIN sh USING (doc_id) WHERE w.doc_id % 10 <> 0
-            ), m AS (
-              SELECT d.doc_id, count(*) AS n_matched
-              FROM (SELECT doc_id, unnest(shingles) AS shingle FROM docs) d
-              JOIN bench USING (shingle) GROUP BY d.doc_id
-            ), scored AS (
-              SELECT docs.doc_id,
-                min(docs.doc_id) OVER (PARTITION BY md5(docs.text))
-                  AS keeper_id,
-                CASE WHEN strpos(text, ' the ') > 0 THEN 'en'
-                     WHEN strpos(text, ' el ') > 0 THEN 'es'
-                     WHEN strpos(text, ' le ') > 0 THEN 'fr'
-                     WHEN strpos(text, ' der ') > 0 THEN 'de'
-                     ELSE 'unk' END AS lang,
-                round(
-                  CASE WHEN length(text) >= 100 THEN 0.5
-                       ELSE length(text) / 200.0 END
-                  + CASE WHEN length(regexp_replace(text, '[^.,;:!?]',
-                              '', 'g'))::DOUBLE
-                              / length(text)::DOUBLE <= 0.1
-                         THEN 0.25 ELSE 0.0 END
-                  + CASE WHEN len(list_filter(toks,
-                            x -> x IN ('the','a','of','and','to','in',
-                                       'is','it')))::DOUBLE
-                              / len(toks)::DOUBLE >= 0.05
-                         THEN 0.25 ELSE 0.0 END, 4) AS quality,
-                coalesce(m.n_matched, 0)::DOUBLE
-                  / greatest(n_shingles, 1) AS frac
-              FROM docs LEFT JOIN m ON docs.doc_id = m.doc_id
-            ), dec AS (
-              SELECT doc_id, keeper_id, lang, quality,
-                round(frac, 4) AS overlap_frac,
-                CASE WHEN doc_id <> keeper_id THEN 'duplicate'
-                     WHEN lang <> 'en' THEN 'language'
-                     WHEN quality < 0.75 THEN 'low_quality'
-                     WHEN frac >= 0.1 THEN 'contaminated'
-                     ELSE 'kept' END AS reason
-              FROM scored
-            )
-            SELECT doc_id, keeper_id, lang, quality, overlap_frac,
-                   reason, (reason = 'kept') AS keep
-            FROM dec
-        """,
-        "q_image_decode": """
-            -- recompute channel sums arithmetically (pixel i of the
-            -- 4x2 RGB raster = (event_id*7+i) % 256; channel c sits at
-            -- i = 3k+c) — the codec itself is never invoked here
-            SELECT event_id, 4 AS width, 2 AS height,
-              list_aggregate(list_transform(generate_series(0, 7),
-                k -> (event_id*7 + 3*k) % 256), 'sum')::BIGINT AS sum_r,
-              list_aggregate(list_transform(generate_series(0, 7),
-                k -> (event_id*7 + 3*k + 1) % 256), 'sum')::BIGINT AS sum_g,
-              list_aggregate(list_transform(generate_series(0, 7),
-                k -> (event_id*7 + 3*k + 2) % 256), 'sum')::BIGINT AS sum_b
-            FROM events
-        """,
-        "q_audio_decode": """
-            -- sample i = int16 reinterpretation of the u16 value
-            -- (event_id*31 + i*997) % 65536, i.e. two's complement:
-            -- (v + 32768) % 65536 - 32768
-            SELECT event_id, 16000 AS rate, 16::BIGINT AS n_samples,
-              list_aggregate(list_transform(generate_series(0, 15),
-                i -> ((event_id*31 + i*997) % 65536 + 32768) % 65536 - 32768),
-                'sum')::BIGINT AS sum_amp
-            FROM events
-        """,
         "q_asof_enrich": """
             WITH cfg AS (
               SELECT user_id, ts, event_id AS cfg_version FROM events
@@ -5164,28 +4414,6 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked GROUP BY doc_id
             ORDER BY rrf_score DESC, doc_id LIMIT 10
         """,
-        # chunk starts 0, 48, 96, … while start < max(n-16, 1); chunk =
-        # 64-token slice from each start, final chunk may be short
-        "q_doc_chunks": """
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(text, '\\s+'),
-                                 x -> x <> '') AS toks
-              FROM documents
-            ), s AS (
-              SELECT doc_id, toks, len(toks) AS n FROM d WHERE len(toks) > 0
-            ), st AS (
-              SELECT doc_id, toks, n,
-                     unnest(range(0, greatest(n - 16, 1), 48)) AS start
-              FROM s
-            )
-            SELECT doc_id,
-                   (start // 48)::INT AS chunk_idx,
-                   least(64, n - start)::INT AS n_tokens,
-                   array_to_string(toks[start + 1 : start + 64],
-                                   ' ') AS chunk_text
-            FROM st
-        """,
         # the oracle replays the JVM double-space replace-chain encoding
         # (apply_bpe's documented algebra) against the PANDAS encoder —
         # cross-implementation parity is the point of the check
@@ -5239,18 +4467,6 @@ def oracle_sql() -> dict[str, str]:
                    max(length(text))::BIGINT AS max_chars
             FROM t GROUP BY conv_id
         """,
-        "q_domain_quantile": """
-            WITH s AS (
-              SELECT doc_id, source AS domain, n_chars::DOUBLE AS score
-              FROM documents
-            ), thr AS (
-              SELECT domain, quantile_cont(score, 0.75) AS thr
-              FROM s GROUP BY domain
-            )
-            SELECT s.doc_id, s.domain, s.score, thr.thr,
-                   s.score >= thr.thr AS keep
-            FROM s JOIN thr USING (domain)
-        """,
         "q_pagerank": pagerank_sql,
         "q_bpe_merges": bpe_merges_sql,
         "q_zorder": """
@@ -5295,23 +4511,6 @@ def oracle_sql() -> dict[str, str]:
             -- plain COUNT(DISTINCT) regardless of how slices cut keys
             SELECT event_type, COUNT(DISTINCT user_id)::BIGINT AS n_distinct
             FROM events GROUP BY event_type
-        """,
-        # Efraimidis–Spirakis weighted sample with md5 uniforms; the
-        # 6-dp round on u^(1/w) BEFORE the (key desc, id-string) cut
-        # pins the rank-50 boundary across engines (pow may differ by
-        # 1 ulp between libm implementations)
-        "q_weighted_sample": """
-            WITH k AS (
-              SELECT doc_id,
-                     round(pow(
-                       ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT
-                         / 4294967296.0,
-                       1.0 / n_chars::DOUBLE), 6) AS sample_key
-              FROM documents WHERE n_chars::DOUBLE > 0
-            )
-            SELECT doc_id, sample_key FROM k
-            ORDER BY sample_key DESC, doc_id::VARCHAR
-            LIMIT 50
         """,
         # robust windowed rate anomaly: gap-filled per-key hourly
         # counts, median/MAD (quantile_cont ≡ Spark F.percentile,
@@ -6341,28 +5540,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT status, count(*)::BIGINT AS n_keys
             FROM verdict GROUP BY status
         """,
-        # identical token-count derivation (k tokens per turn) and the
-        # identical conv-partitioned running sum.
-        "q_sft_spans": """
-            WITH t AS (
-              SELECT user_id AS conv, event_id AS turn,
-                     event_type AS role,
-                     (event_id % 9 + 1)::BIGINT AS n_tok
-              FROM events
-            )
-            SELECT conv, turn, role,
-              coalesce(sum(n_tok) OVER (
-                PARTITION BY conv ORDER BY turn
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                0)::BIGINT AS start_tok,
-              (coalesce(sum(n_tok) OVER (
-                PARTITION BY conv ORDER BY turn
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               + n_tok)::BIGINT AS end_tok,
-              n_tok,
-              role IN ('purchase', 'signup') AS loss_mask
-            FROM t
-        """,
         # identical bounded ROWS frame + (ts, event_id) order.
         "q_rolling": """
             SELECT event_type AS key,
@@ -6660,93 +5837,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT p.state, next_state, n,
               round(n / tot::DOUBLE, 6) AS prob
             FROM p JOIN o ON p.state = o.state
-        """,
-        # identical double-ranked extremes with id tiebreaks and the
-        # zero-margin drop.
-        "q_pref_pairs": """
-            WITH r AS (
-              SELECT event_id % 2000 AS prompt_id, event_id AS resp_id,
-                value::DOUBLE AS s
-              FROM events
-            ), w AS (
-              SELECT prompt_id, resp_id, s,
-                row_number() OVER (PARTITION BY prompt_id
-                  ORDER BY s DESC, resp_id ASC) AS rb,
-                row_number() OVER (PARTITION BY prompt_id
-                  ORDER BY s ASC, resp_id ASC) AS rw
-              FROM r
-            ), g AS (
-              SELECT prompt_id,
-                max(CASE WHEN rb = 1 THEN resp_id END) AS chosen_id,
-                max(CASE WHEN rb = 1 THEN s END) AS cs,
-                max(CASE WHEN rw = 1 THEN resp_id END) AS rejected_id,
-                max(CASE WHEN rw = 1 THEN s END) AS rs
-              FROM w WHERE rb = 1 OR rw = 1 GROUP BY prompt_id
-            )
-            SELECT prompt_id, chosen_id, rejected_id,
-              round(cs, 6) AS chosen_score,
-              round(rs, 6) AS rejected_score,
-              round(cs - rs, 6) AS margin
-            FROM g WHERE cs > rs
-        """,
-        # identical duel construction and two 6dp-quantized MM
-        # iterations over the reduced pair-count frame.
-        "q_bradley_terry": """
-            WITH seq AS (
-              SELECT event_type AS a, lead(event_type) OVER w AS b,
-                value AS va, lead(value) OVER w AS vb
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY event_id)
-            ), d AS (
-              SELECT CASE WHEN va > vb THEN a ELSE b END AS winner,
-                CASE WHEN va > vb THEN b ELSE a END AS loser
-              FROM seq
-              WHERE b IS NOT NULL AND a <> b AND va <> vb
-            ), dir AS (
-              SELECT winner AS item, loser AS opp,
-                count(*)::BIGINT AS w
-              FROM d GROUP BY 1, 2
-            ), pair AS (
-              SELECT item, opp, sum(wv)::BIGINT AS wins_vs,
-                sum(nv)::BIGINT AS n_vs
-              FROM (
-                SELECT item, opp, w AS wv, w AS nv FROM dir
-                UNION ALL
-                SELECT opp AS item, item AS opp, 0 AS wv, w AS nv
-                FROM dir
-              ) GROUP BY 1, 2
-            ), tot AS (
-              SELECT item, sum(wins_vs)::BIGINT AS n_wins,
-                sum(n_vs)::BIGINT AS n_duels
-              FROM pair GROUP BY item
-            ), nn AS (SELECT count(*)::BIGINT AS cnt FROM tot),
-            s0 AS (SELECT item, round(1.0 / cnt, 6) AS s FROM tot, nn),
-            d1 AS (
-              SELECT p.item, sum(p.n_vs / (si.s + sj.s)) AS dn
-              FROM pair p JOIN s0 si ON p.item = si.item
-              JOIN s0 sj ON p.opp = sj.item GROUP BY 1
-            ), r1 AS (
-              SELECT t.item, t.n_wins / greatest(dn, 1e-12) AS raw
-              FROM tot t JOIN d1 ON t.item = d1.item
-            ), z1 AS (SELECT sum(raw) AS z FROM r1),
-            s1 AS (
-              SELECT item, round(raw / greatest(z, 1e-12), 6) AS s
-              FROM r1, z1
-            ), d2 AS (
-              SELECT p.item, sum(p.n_vs / (si.s + sj.s)) AS dn
-              FROM pair p JOIN s1 si ON p.item = si.item
-              JOIN s1 sj ON p.opp = sj.item GROUP BY 1
-            ), r2 AS (
-              SELECT t.item, t.n_wins / greatest(dn, 1e-12) AS raw
-              FROM tot t JOIN d2 ON t.item = d2.item
-            ), z2 AS (SELECT sum(raw) AS z FROM r2),
-            s2 AS (
-              SELECT item, round(raw / greatest(z, 1e-12), 6)
-                  AS strength
-              FROM r2, z2
-            )
-            SELECT t.item, t.n_wins, t.n_duels, s2.strength
-            FROM tot t JOIN s2 ON t.item = s2.item
         """,
         # same forest, walked one hop at a time by the recursive CTE
         # (the Spark side resolves it in O(log depth) doubling joins).
@@ -7174,18 +6264,6 @@ def oracle_sql() -> dict[str, str]:
                   x -> x::DOUBLE * log2(x::DOUBLE))) / n, 4)
               ELSE 0.0 END AS char_entropy_bits
             FROM l
-        """,
-        "q_split_leakproof": """
-            SELECT doc_id, fp,
-                   CASE WHEN u < 4209067950 THEN 'train'
-                        WHEN u < 4252017623 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM (
-              SELECT doc_id, md5(text) AS fp,
-                     ('0x' || substr(md5('split-v1|' || md5(text)),
-                                     1, 8))::BIGINT AS u
-              FROM documents
-            )
         """,
         "q_line_dedup": """
             WITH base AS (

@@ -10,7 +10,7 @@ straggler/task-stall on a pathological 100k-token document (measured
 84× on 2k-token docs; the char-entropy rewrite measured 170× at
 sf0.1).  Plain column references do NOT pay this — they are bound
 attributes — which is why operators that first materialize
-``.select(toks.alias("_toks"))`` (pack, spans) were never affected.
+``.select(toks.alias("_toks"))`` (spans) were never affected.
 
 ``bind(arr, f)`` evaluates ``arr`` exactly once and passes it to
 ``f`` as a bound lambda variable: ``transform(array(arr), f)[0]`` —

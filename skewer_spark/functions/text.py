@@ -1,4 +1,4 @@
-"""Text-analysis scalar functions for training-data pipelines.
+"""Text-analysis scalar functions.
 
 All pure Column expressions (JVM-side, whole-stage codegen) so they run
 at 100 TB without Python in the loop.  Each has an exact ANSI-SQL

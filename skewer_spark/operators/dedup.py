@@ -681,23 +681,25 @@ def dedup_clusters_star(
         # persist computes it once (released after the round's eager
         # checkpoint — instance-scoped, never crosses invocations)
         e1 = large.filter(F.col("u") != F.col("v")).distinct().persist()
-        # small-star on the large-star output: orient toward the max
-        oriented = e1.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins2 = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        # emit (v, m) for every smaller neighbor v, plus (u, m) itself
-        small = (
-            oriented.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins2.select("u", F.col("m").alias("v")))
-        )
-        e_next = (
-            small.filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        e1.unpersist()
+        try:
+            # small-star on the large-star output: orient toward the max
+            oriented = e1.select(
+                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+            )
+            mins2 = oriented.groupBy("u").agg(F.min("v").alias("m"))
+            # emit (v, m) for every smaller neighbor v, plus (u, m) itself
+            small = (
+                oriented.join(mins2, "u")
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .union(mins2.select("u", F.col("m").alias("v")))
+            )
+            e_next = (
+                small.filter(F.col("u") != F.col("v"))
+                .distinct()
+                .localCheckpoint(eager=True)
+            )
+        finally:
+            e1.unpersist()
         p = e_next.agg(
             F.count("*").alias("n"), F.bit_xor(F.xxhash64("u", "v")).alias("h")
         ).collect()[0]
@@ -860,20 +862,15 @@ def dedup_substring_spans(
     occurrence EXCEPT the globally first (min ``(doc, pos)``) is cut,
     so exactly one copy of each duplicated span survives the corpus.
 
-    Contrast with :func:`~skewer_spark.operators.curate
-    .remove_boilerplate_spans`: boilerplate removal cuts ALL
-    occurrences of n-grams seen in ≥ ``min_docs`` distinct docs
-    (nothing survives); substring dedup is occurrence-level and
-    keep-first, the semantics of the reference suffix-array method
-    (here n-gram shingles stand in for the 50-byte suffix-array
-    threshold — the distributed-shuffle shape is what matters, the
-    suffix automaton does not distribute).
+    Substring dedup is occurrence-level and keep-first, the semantics
+    of the reference suffix-array method (here n-gram shingles stand in
+    for the 50-byte suffix-array threshold — the distributed-shuffle
+    shape is what matters, the suffix automaton does not distribute).
 
     Returns ``(id, n_tokens, n_removed, text_clean)``, one row per
     input doc.
 
-    Scale shape — the same exploded-row machinery as boilerplate
-    removal (no per-row quadratic work anywhere):
+    Scale shape — exploded rows, no per-row quadratic work anywhere:
 
     1. map-side posexplode of tokens and 32-bit shingle keys;
     2. per-shingle ``count(*)`` + ``min(struct(doc, pos))`` in ONE
@@ -882,13 +879,12 @@ def dedup_substring_spans(
        10^6 times ships one row per partition, never a hot key);
     3. duplicate occurrences = shingle join back, dropping the row
        equal to the first occurrence;
-    4. covered positions → LEFT ANTI join → groupBy(doc) rebuild,
-       identical to boilerplate steps 3-5.
+    4. covered positions → LEFT ANTI join → groupBy(doc) rebuild
+       (:func:`~skewer_spark.operators.spans.rebuild_minus_covered`).
 
     The keep-first rule makes the result deterministic and
     resume-idempotent (no RNG, no partition-order dependence).  The
-    tokenize/shingle and rebuild halves are shared with
-    ``curate.remove_boilerplate_spans`` via
+    tokenize/shingle and rebuild halves live in
     :mod:`~skewer_spark.operators.spans`.
     """
     from skewer_spark.operators.spans import (

@@ -2,8 +2,7 @@
 
 The two pre-content stages every web-scale corpus pipeline (C4,
 RefinedWeb, FineWeb) runs BEFORE the text operators in
-:mod:`skewer_spark.operators.curate` / :mod:`.dedup` ever see a
-document:
+:mod:`skewer_spark.operators.dedup` ever see a document:
 
 * ``html_to_text`` — strip markup down to visible text (script/style/
   comment removal, tag removal, entity decode, whitespace collapse);

@@ -115,8 +115,8 @@ def prefix_jaccard_pairs(
     # hashing than (df, tok) struct arrays).  The rank window runs on
     # the |vocab|-row frame only; if the vocabulary itself outgrows one
     # task (10^9+ distinct shingles), swap in the distributed two-phase
-    # prefix-sum rank from operators/pack.pack_sequences — the corpus
-    # never touches this window either way.
+    # prefix-sum rank from operators/transcripts._dense_conv_pos — the
+    # corpus never touches this window either way.
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
     vocab = dfreq.select(
         "tok",

@@ -1,15 +1,12 @@
-"""Shared exploded-span machinery for corpus-wide span operators.
+"""Exploded-span machinery for corpus-wide span operators.
 
-Two operators cut token spans out of documents corpus-wide:
-:func:`~skewer_spark.operators.curate.remove_boilerplate_spans`
-(cut ALL occurrences of n-grams seen in >= min_docs distinct docs) and
 :func:`~skewer_spark.operators.dedup.dedup_substring_spans`
-(occurrence-level keep-first substring dedup).  They share everything
-except the rule that selects which shingle OCCURRENCES are covered, so
-the shared halves live here: a fix to the shingle key width, the
-rebuild ordering, or the empty-doc coalesce lands once, not twice.
+(occurrence-level keep-first substring dedup) cuts token spans out of
+documents corpus-wide.  The halves that do not depend on which shingle
+OCCURRENCES are covered live here: tokenize + shingle, and the rebuild
+that drops covered positions.
 
-Scale shape (common to both callers): everything is exploded ROWS,
+Scale shape: everything is exploded ROWS,
 never per-row quadratic work; the token stream rides each shuffle as
 narrow ``(id, pos, tok)`` / ``(id, spos, sh)`` rows — text bytes never
 shuffle whole.

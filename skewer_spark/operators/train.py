@@ -1,11 +1,9 @@
 """Distributed classifier training: logistic regression by exact
 integer-quantized gradient aggregation.
 
-Closes the loop that :func:`skewer_spark.operators.curate.
-hashed_classifier_score` opens: that operator SCORES documents with a
-linear model; this one TRAINS the model in-cluster, so the
-quality-filter pipeline (fastText-style hashed features → linear
-classifier → keep/drop gate) never leaves Spark.  Batch gradient
+Trains a linear model over fastText-style hashed features in-cluster,
+so a quality-filter gate (hashed features → linear classifier →
+keep/drop) never leaves Spark.  Batch gradient
 descent — the right shape for a corpus-scale shuffle-once-per-epoch
 trainer (SGD's per-sample updates don't distribute; L-BFGS and friends
 add state for little benefit at these dimensionalities).

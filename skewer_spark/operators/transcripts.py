@@ -21,8 +21,8 @@ output (pinned by ``test_sft_pairs_paths_equal``):
   macroscopic fraction of all rows — that conv's partition becomes one
   straggler task.
 * the **skew-safe path** (``skew_safe=True``) — no per-conversation
-  window at all.  A dense per-conv position comes from the same
-  two-phase distributed prefix count as ``pack.pack_sequences``
+  window at all.  A dense per-conv position comes from a two-phase
+  distributed prefix count, :func:`_dense_conv_pos`
   (per-(conv, range-bucket) ``row_number`` + base offsets from the
   tiny (conv, bucket) totals frame), then each assistant row explodes
   its ≤ k context positions and equi-joins back on the UNIQUE
@@ -48,7 +48,7 @@ def _dense_conv_pos(
 ) -> DataFrame:
     """Add ``_pos``: the 1-based rank of each row inside its
     conversation by ``order_col``, computed WITHOUT a per-conversation
-    global window (distributed prefix count, cf. pack.pack_sequences).
+    global window (distributed prefix count).
 
     Buckets are ranges of the GLOBAL order key (broadcast min/max, no
     action), so every (conv, bucket) cell is a contiguous slice of the

@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -41,7 +42,11 @@ def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
     path = manifest_path(out_dir)
     try:
         rows = spark.read.schema(MANIFEST_SCHEMA).parquet(path).select("bucket").collect()
-    except Exception:
+    except AnalysisException as e:
+        # only a missing manifest means "nothing committed"; a corrupt
+        # one must not send every bucket back through the pipeline
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return set()
     return {r.bucket for r in rows}
 

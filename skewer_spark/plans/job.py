@@ -33,6 +33,7 @@ from __future__ import annotations
 import os
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from skewer_spark.operators.aggregate import (
@@ -457,7 +458,9 @@ def finalize_aggregates(spark: SparkSession, out_dir: str) -> None:
         src = os.path.join(out_dir, "agg", name)
         try:
             df = spark.read.option("basePath", src).parquet(src)
-        except Exception:
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             continue
         if name == "parse_error_counts":
             agg = [F.sum("n_errors").alias("n_errors")]
@@ -483,7 +486,9 @@ def finalize_aggregates(spark: SparkSession, out_dir: str) -> None:
     wfin = os.path.join(out_dir, "agg_final", "windowed_counts")
     try:
         wdf = spark.read.parquet(wfin)
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return
     (
         wdf.groupBy("sink", "severity_name")

@@ -11,6 +11,7 @@ thumb: total-input / 128 MB) — nothing else changes.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -49,22 +50,24 @@ def ensure_parallelism(df, min_parts: int | None = None):
 # sql confs applied to every session (runtime-settable, so they work
 # both from the local builder and under spark-submit)
 _SQL_TUNING = {
+    # AQE: runtime coalescing + skew-join splitting — the scale story
+    # for hot-conversation skew (SURVEY.md §4.2).
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Arrow transfer for every pandas UDF (the parse stage).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # Dictionary dims are tiny; make sure they broadcast even if stats
+    # are missing.
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
     "spark.sql.session.timeZone": "UTC",
     # zstd parquet: 40% smaller store than snappy at measured-equal
     # local write speed (r6 A/B on the 1M-turn pipeline: 308 vs 511 MB,
     # wall times within noise) — at 100 TB the write/read floor is
     # bytes through the NIC and disks, so the smaller codec IS the
-    # faster one at scale (optimization guide §1.3/§6); env override
-    # for deployments that want the old default.
-    "spark.sql.parquet.compression.codec": os.environ.get(
-        "SKEWER_PARQUET_CODEC", "zstd"
-    ),
+    # faster one at scale (optimization guide §1.3/§6).
+    "spark.sql.parquet.compression.codec": "zstd",
 }
 
 
@@ -93,52 +96,45 @@ def submit_session(app_name: str = "skewer-job") -> SparkSession:
     return spark
 
 
+def _half_physical_memory() -> str:
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // 2 // 2**30)}g"
+
+
 def build_session(
     app_name: str = "skewer-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Local-mode session sized from the host: ``SPARK_GRAFT_CPUS``
+    (default: the CPUs this process may run on), ``SKEWER_DRIVER_MEM``
+    (default: half of physical memory) and ``SKEWER_LOCAL_DIR`` (default:
+    ``spark-local`` under the system temp dir).  ``extra_conf`` overrides
+    any conf."""
     _ensure_pythonpath()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    n_cpus = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(n_cpus))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # 1x cores: measured best on local mode — over-partitioning
         # multiplies python-worker/task overhead and small files
         # (ablation: 4x cores was ~1.5x slower end-to-end)
-        n = cpus if cpus.isdigit() else str(os.cpu_count() or 8)
-        shuffle_partitions = max(int(n), 8)
+        shuffle_partitions = max(int(cpus) if cpus.isdigit() else n_cpus, 8)
 
-    b = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        # AQE: runtime coalescing + skew-join splitting — the scale story
-        # for hot-conversation skew (SURVEY.md §4.2).
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow transfer for every pandas UDF (the parse stage).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Dictionary dims are tiny; make sure they broadcast even if
-        # stats are missing.
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        .config("spark.sql.session.timeZone", "UTC")
-        # zstd parquet: 40% smaller store at measured-equal local write
-        # speed (see _SQL_TUNING note)
-        .config("spark.sql.parquet.compression.codec",
-                os.environ.get("SKEWER_PARQUET_CODEC", "zstd"))
-        .config("spark.driver.memory", os.environ.get("SKEWER_DRIVER_MEM", "48g"))
+    conf = {
+        **_SQL_TUNING,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # local mode: every task shares the one JVM heap — size it for
-        # max-cores concurrency or wide sorts spill; spills go to tmpfs
-        .config("spark.local.dir",
-                os.environ.get("SKEWER_LOCAL_DIR",
-                               "/dev/shm/spark-local"
-                               if os.path.isdir("/dev/shm") else "/tmp"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.scheduler.mode", "FAIR")
-    )
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
-    return b.getOrCreate()
+        # max-cores concurrency or wide sorts spill
+        "spark.driver.memory": os.environ.get(
+            "SKEWER_DRIVER_MEM", _half_physical_memory()),
+        "spark.local.dir": os.environ.get(
+            "SKEWER_LOCAL_DIR",
+            os.path.join(tempfile.gettempdir(), "spark-local")),
+        "spark.ui.enabled": "false",
+        "spark.scheduler.mode": "FAIR",
+        **(extra_conf or {}),
+    }
+    return (SparkSession.builder.appName(app_name).master(master)
+            .config(map=conf).getOrCreate())

@@ -1,13 +1,10 @@
-"""k-means training, exact Lloyd step, SemDeDup, hashed classifier."""
+"""k-means training, exact Lloyd step, SemDeDup."""
 
 from __future__ import annotations
-
-import hashlib
 
 from pyspark.sql import functions as F
 
 from skewer_spark.operators.cluster import kmeans_fit, kmeans_update, semdedup
-from skewer_spark.operators.curate import hashed_classifier_score
 from skewer_spark.operators.similarity import ivf_assign
 
 
@@ -132,45 +129,3 @@ def test_semdedup_cell_cap_keeps_decisions_for_capped_tail(spark):
 
 def _lcg_weight(bucket: int) -> int:
     return (bucket * 1103515245 + 12345) % 2001 - 1000
-
-
-def _bucket(feat: str, n_buckets: int = 1024) -> int:
-    return int(hashlib.md5(feat.encode()).hexdigest()[:8], 16) % n_buckets
-
-
-def test_classifier_lcg_matches_manual(spark):
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "solo")],
-        "doc_id int, text string",
-    )
-    out = {r.doc_id: r for r in hashed_classifier_score(docs).collect()}
-    for doc_id, text in ((1, "alpha beta gamma"), (2, "solo")):
-        toks = text.split(" ")
-        grams = toks + [
-            f"{a} {b}" for a, b in zip(toks, toks[1:])
-        ]
-        raw = sum(_lcg_weight(_bucket(g)) for g in grams)
-        want = round(0.0 + raw / (len(grams) * 1000.0), 6)
-        assert out[doc_id].n_feats == len(grams)
-        assert abs(out[doc_id].clf_score - want) < 1e-9
-        assert out[doc_id].keep == (want >= 0.0)
-
-
-def test_classifier_weight_dict_and_missing_bucket_zero(spark):
-    docs = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "zzz")], "doc_id int, text string"
-    )
-    # weight only alpha's bucket; everything else (beta, bigram, zzz)
-    # falls back to 0
-    wmap = {_bucket("alpha"): 1000}
-    out = {
-        r.doc_id: r
-        for r in hashed_classifier_score(
-            docs, weights=wmap, bias=0.25, threshold=0.5
-        ).collect()
-    }
-    # doc 1: grams = alpha, beta, "alpha beta" -> raw = 1000
-    assert abs(out[1].clf_score - round(0.25 + 1000 / 3000.0, 6)) < 1e-9
-    assert out[1].keep
-    assert abs(out[2].clf_score - 0.25) < 1e-9
-    assert not out[2].keep

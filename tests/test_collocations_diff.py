@@ -88,50 +88,6 @@ def test_diff_requires_value_columns(spark):
         snapshot_diff(df, df, ["k"])
 
 
-def test_sft_turn_spans(spark):
-    from skewer_spark.operators.pack import sft_turn_spans
-
-    rows = [
-        ("c1", 0, "system", "be helpful"),
-        ("c1", 1, "user", "hi there friend"),
-        ("c1", 2, "assistant", "hello how can i help"),
-        ("c1", 3, "user", None),
-        ("c1", 4, "assistant", "ok"),
-        ("c2", 0, "user", "solo"),
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string"
-    )
-    out = {(r["conv"], r["turn"]): r for r in sft_turn_spans(df).collect()}
-    # c1 token counts: 2, 3, 5, 0(null), 1
-    spans = [(out[("c1", i)]["start_tok"], out[("c1", i)]["end_tok"])
-             for i in range(5)]
-    assert spans == [(0, 2), (2, 5), (5, 10), (10, 10), (10, 11)]
-    assert out[("c1", 2)]["loss_mask"] and out[("c1", 4)]["loss_mask"]
-    assert not out[("c1", 0)]["loss_mask"] and not out[("c1", 1)]["loss_mask"]
-    # NULL turn: zero-width span, present, not masked in
-    assert out[("c1", 3)]["n_tok"] == 0
-    # second conversation restarts at 0
-    assert out[("c2", 0)]["start_tok"] == 0
-    # spans tile the sequence exactly: end_i == start_{i+1}
-    for i in range(4):
-        assert out[("c1", i)]["end_tok"] == out[("c1", i + 1)]["start_tok"]
-
-
-def test_sft_turn_spans_window_partitioned(spark):
-    from skewer_spark.operators.pack import sft_turn_spans
-
-    df = spark.createDataFrame(
-        [("c", 0, "user", "x")],
-        "conv_id string, turn_idx int, role string, text string",
-    )
-    plan = sft_turn_spans(df)._jdf.queryExecution().executedPlan().toString()
-    # the running sum must be conv-partitioned, never a global window
-    assert "Window" in plan
-    assert "partitionBy" not in plan or True
-    assert "hashpartitioning(conv" in plan
-
-
 def test_thread_turns(spark):
     from skewer_spark.operators.transcripts import thread_turns
 

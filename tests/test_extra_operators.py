@@ -1,14 +1,10 @@
-"""Tests for the JSON-family decoders, multimodal plumbing, file source,
+"""Tests for the JSON-family decoders, file source,
 streaming pipeline and dedup/similarity operators."""
 
 from __future__ import annotations
 
 import json
-import os
-from datetime import datetime
 
-import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -106,146 +102,6 @@ def test_parse_ltsv(spark):
     assert rows[1].priority == 0
     assert not rows[2].parse_ok and rows[2].properties_json is None
     assert not rows[3].parse_ok
-
-
-# ---------------------------------------------------------------------------
-# multimodal plumbing
-# ---------------------------------------------------------------------------
-
-def test_multimodal_features_deterministic(spark):
-    from skewer_spark.operators.multimodal import extract_features, synth_media
-    media = synth_media(spark, n=48, partitions=4)
-    feats = extract_features(media).collect()
-    assert len(feats) == 48
-    by_id = {r.media_id: r for r in feats}
-    assert all(len(r.features) == 8 for r in feats)
-    assert all(0.0 <= v <= 1.0 for r in feats for v in r.features)
-    # deterministic across re-runs
-    feats2 = {r.media_id: r.features for r in extract_features(media).collect()}
-    assert feats2[0] == by_id[0].features
-
-
-def test_multimodal_dedup(spark):
-    from skewer_spark.operators.multimodal import media_dedup, synth_media
-    media = synth_media(spark, n=24, partitions=2)
-    dups = media.unionByName(media)  # exact duplicates
-    groups = media_dedup(dups).collect()
-    assert len(groups) == 24
-    assert all(g.n_copies == 2 for g in groups)
-
-
-def test_sample_frames_one_row_per_timestamp(spark):
-    from skewer_spark.operators.multimodal import sample_frames, synth_media
-
-    media = synth_media(spark, n=24)
-    frames = sample_frames(media, every_ms=1000, max_frames=8).collect()
-    vids = {r.media_id: r for r in media.filter("media_type='video'").collect()}
-    assert frames and all(r.media_id in vids for r in frames)
-    # per-video frame count = min(duration//1000 + 1, 8), ts stride 1000
-    by_vid: dict = {}
-    for r in frames:
-        by_vid.setdefault(r.media_id, []).append(r)
-    for mid, rows in by_vid.items():
-        expect = min(vids[mid].duration_ms // 1000 + 1, 8)
-        assert len(rows) == expect
-        rows.sort(key=lambda r: r.frame_idx)
-        assert [r.frame_ts_ms for r in rows] == [i * 1000 for i in range(expect)]
-        # stub decode is deterministic and frame-distinct
-        assert len({r.frame_sha for r in rows}) == expect
-    # deterministic across runs
-    again = sample_frames(media, every_ms=1000, max_frames=8).collect()
-    assert sorted((r.media_id, r.frame_idx, r.frame_sha) for r in again) == sorted(
-        (r.media_id, r.frame_idx, r.frame_sha) for r in frames
-    )
-
-
-def test_resize_real_for_ppm(spark):
-    from skewer_spark.functions.codecs import decode_ppm
-    from skewer_spark.operators.multimodal import resize_images, synth_media
-    media = synth_media(spark, n=6, partitions=1)
-    out = {r.media_id: r.payload for r in resize_images(media, 32, 32).collect()}
-    assert out  # images exist in the synth mix
-    for payload in out.values():
-        arr = decode_ppm(bytes(payload))
-        assert arr.shape == (32, 32, 3)
-
-
-def _pil_missing() -> bool:
-    try:
-        import PIL  # noqa: F401
-        return False
-    except ImportError:
-        return True
-
-
-@pytest.mark.skipif(not _pil_missing(), reason="PIL present: real decode path")
-def test_resize_stubbed_for_compressed_formats(spark):
-    # formats with no in-container codec still raise (honest stub);
-    # with Pillow installed this same payload takes the real path below
-    from skewer_spark.operators.multimodal import resize_images
-    fake_jpeg = spark.createDataFrame(
-        [(1, "image", bytearray(b"\xff\xd8\xff\xe0 not a real jpeg"))],
-        "media_id long, media_type string, payload binary",
-    )
-    with pytest.raises(Exception) as ei:
-        resize_images(fake_jpeg, 8, 8).collect()
-    assert "NotImplementedError" in str(ei.value) or "codec" in str(ei.value)
-
-
-@pytest.mark.skipif(not _pil_missing(), reason="PIL present")
-def test_compressed_image_features_fall_back_to_digest_without_pil(spark):
-    """VERDICT r02 #7: without Pillow the digest stub is byte-for-byte
-    what it always was — deterministic, 8-dim, in [0,1]."""
-    import hashlib
-
-    import numpy as np
-
-    from skewer_spark.operators.multimodal import extract_features
-
-    payload = b"\x89PNG\r\n\x1a\n fake png bytes"
-    df = spark.createDataFrame(
-        [(7, "image", bytearray(payload))],
-        "media_id long, media_type string, payload binary",
-    )
-    row = extract_features(df).collect()[0]
-    digest = hashlib.sha256(payload).digest()
-    expect = (
-        np.frombuffer(digest[:32], dtype=np.uint8).reshape(8, 4).mean(axis=1)
-        / 255.0
-    ).astype(np.float32)
-    assert row.features == expect.tolist()
-
-
-@pytest.mark.skipif(_pil_missing(), reason="needs the Pillow wheel")
-def test_compressed_image_real_decode_with_pil(spark):
-    """On a Pillow-equipped cluster JPEG/PNG decode for real: a solid
-    red PNG must yield mean-R 1.0 / mean-G 0 / mean-B 0 features, exact
-    pixel sums, and a same-format resize."""
-    import io
-
-    from PIL import Image
-
-    from skewer_spark.operators.multimodal import (
-        extract_features,
-        image_stats,
-        resize_images,
-    )
-
-    buf = io.BytesIO()
-    Image.new("RGB", (10, 4), (255, 0, 0)).save(buf, "PNG")
-    png = buf.getvalue()
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(png))],
-        "media_id long, media_type string, payload binary",
-    )
-    feats = extract_features(df).collect()[0].features
-    assert feats[0] == 1.0 and feats[1] == 0.0 and feats[2] == 0.0
-    st = image_stats(df).collect()[0]
-    assert (st.width, st.height) == (10, 4)
-    assert (st.sum_r, st.sum_g, st.sum_b) == (255 * 40, 0, 0)
-    resized = resize_images(df, 5, 2).collect()[0].payload
-    with Image.open(io.BytesIO(bytes(resized))) as im:
-        assert im.size == (5, 2) and im.format == "PNG"
 
 
 # ---------------------------------------------------------------------------
@@ -554,106 +410,6 @@ def test_dedup_clusters_star_deep_chain_and_min_label_raises(spark):
         dedup_clusters(docs, chain, max_iter=20)
 
 
-def test_remove_boilerplate_spans(spark):
-    """C4-style span removal: the 5-gram shared by >= 3 docs is cut
-    from every occurrence (including repeats within one doc); clean
-    docs pass through untouched."""
-    from skewer_spark.operators.curate import remove_boilerplate_spans
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d e f a b c d e f"),
-            (2, "a b c d e x y"),
-            (3, "a b c d e z"),
-            (4, "q r s t u v"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        r.doc_id: (r.n_tokens, r.n_removed, r.text_clean)
-        for r in remove_boilerplate_spans(docs, n=5, min_docs=3).collect()
-    }
-    # "a b c d e" appears in docs 1,2,3 → boilerplate; doc 1's second
-    # occurrence starts at pos 6 so tokens 0-4 and 6-10 go ("f f" stays)
-    assert got == {
-        1: (12, 10, "f f"),
-        2: (7, 5, "x y"),
-        3: (6, 5, "z"),
-        4: (6, 0, "q r s t u v"),
-    }
-
-
-def test_soft_dedup_weights(spark):
-    """Soft dedup: 1/k weight per identical-text group; the Bernoulli
-    keep is deterministic in the id and keeps ~one doc per class in
-    expectation (singletons always survive)."""
-    from skewer_spark.operators.curate import soft_dedup_weights
-
-    docs = spark.createDataFrame(
-        [(1, "same"), (2, "same"), (3, "same"), (4, "solo")],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in soft_dedup_weights(docs).collect()}
-    assert all(rows[i].n_copies == 3 and rows[i].weight == round(1 / 3, 6)
-               for i in (1, 2, 3))
-    assert rows[4].n_copies == 1 and rows[4].kept is True
-    for i in (1, 2, 3):
-        assert rows[i].kept == (rows[i].u < 1 / 3)
-    # deterministic across runs
-    again = {r.doc_id: r.kept for r in soft_dedup_weights(docs).collect()}
-    assert again == {i: rows[i].kept for i in rows}
-
-
-def test_tfidf_top_terms(spark):
-    """TF-IDF ranks the term unique to a doc above corpus-wide terms;
-    terms present in every doc score exactly 0 (ln 1)."""
-    import math
-
-    from skewer_spark.operators.curate import tfidf_top_terms
-
-    docs = spark.createDataFrame(
-        [
-            (1, "common apple apple"),
-            (2, "common banana"),
-            (3, "common cherry"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        (r.doc_id, r.rank): (r.term, r.tfidf)
-        for r in tfidf_top_terms(docs, k=2).collect()
-    }
-    # doc 1: apple tf=2/3, df=1 → (2/3)·ln3 top; common scores 0
-    assert got[(1, 1)][0] == "apple"
-    assert got[(1, 1)][1] == round(2 / 3 * math.log(3), 6)
-    assert got[(1, 2)] == ("common", 0.0)
-    assert got[(2, 1)][0] == "banana" and got[(3, 1)][0] == "cherry"
-
-
-def test_bigram_logprob_scores(spark):
-    """Corpus-trained add-alpha bigram LM: frequent transitions score
-    higher than rare ones; docs with < 2 tokens get 0 bigrams / 0.0."""
-    import math
-
-    from skewer_spark.operators.curate import bigram_logprob_scores
-
-    docs = spark.createDataFrame(
-        [(1, "a b a b"), (2, "a b"), (3, "x")],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in bigram_logprob_scores(docs).collect()}
-    # corpus: c(a,b)=3, c(b,a)=1; contexts c(a)=3, c(b)=1; V={a,b}=2
-    lp_ab = math.log((3 + 0.5) / (3 + 0.5 * 2))
-    lp_ba = math.log((1 + 0.5) / (1 + 0.5 * 2))
-    assert rows[1].n_bigrams == 3
-    assert rows[1].avg_logprob == round((2 * lp_ab + lp_ba) / 3, 6)
-    assert rows[2].n_bigrams == 1
-    assert rows[2].avg_logprob == round(lp_ab, 6)
-    # the common transition outscores the rare one
-    assert rows[2].avg_logprob > round(lp_ba, 6)
-    assert rows[3].n_bigrams == 0 and rows[3].avg_logprob == 0.0
-
-
 def test_ngram_jaccard_pairs(spark):
     from skewer_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -701,36 +457,6 @@ def test_minhash_bucket_cap_bounds_pairs(spark):
     # cap larger than any bucket is a no-op
     wide = minhash_candidate_pairs(docs, bucket_cap=100).collect()
     assert len(wide) == len(uncapped)
-
-
-def test_curation_decisions_reason_priority(spark):
-    from skewer_spark.operators.curate import curation_decisions
-
-    good = ("the quick brown fox jumps over the lazy dog and then it "
-            "runs to the old stone bridge in the misty morning light")
-    docs = spark.createDataFrame(
-        [
-            (1, good),                                        # kept
-            (2, good),                                        # duplicate of 1
-            (3, "hola el gato come pescado en la casa grande"),  # language
-            (4, "aa the bb!!!???"),                           # low_quality
-            (5, "the river flows past the village and it turns near "
-                "the mill alpha beta gamma delta epsilon zeta"),  # contaminated
-        ],
-        "doc_id int, text string",
-    )
-    bench = spark.createDataFrame(
-        [(100, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id int, text string",
-    )
-    rows = {r.doc_id: r for r in curation_decisions(docs, bench).collect()}
-    assert {i: rows[i].reason for i in range(1, 6)} == {
-        1: "kept", 2: "duplicate", 3: "language",
-        4: "low_quality", 5: "contaminated",
-    }
-    assert rows[1].keep and not any(rows[i].keep for i in (2, 3, 4, 5))
-    assert rows[2].keeper_id == 1
-    assert rows[5].overlap_frac == 0.25
 
 
 def test_malformed_lines_never_abort_job(spark):
@@ -785,237 +511,6 @@ def test_malformed_lines_never_abort_job(spark):
     assert row.parse_ok
 
 
-def test_dsir_importance_weights(spark):
-    """Hashed-n-gram importance ratio: docs made of target-only n-grams
-    score high, reference-only low, and the score is an exact
-    add-alpha bucket-model computation (checked per-row in python)."""
-    import hashlib
-    import math
-
-    from skewer_spark.operators.curate import dsir_importance_weights
-
-    docs = spark.createDataFrame(
-        [(1, "aa bb aa bb", "en"), (2, "aa bb", "en"),
-         (3, "zz qq zz", "de"), (4, "aa zz", "de")],
-        "doc_id long, text string, lang string",
-    )
-    B, a = 64, 0.5
-
-    def feats(t):
-        toks = t.split(" ")
-        fs = toks + [f"{toks[i]} {toks[i+1]}" for i in range(len(toks) - 1)]
-        return [int(hashlib.md5(f.encode()).hexdigest()[:8], 16) % B
-                for f in fs]
-
-    ct, cr = {}, {}
-    rows_in = [(1, "aa bb aa bb", True), (2, "aa bb", True),
-               (3, "zz qq zz", False), (4, "aa zz", False)]
-    for _, t, tgt in rows_in:
-        for b in feats(t):
-            (ct if tgt else cr)[b] = (ct if tgt else cr).get(b, 0) + 1
-    Ct, Cr = sum(ct.values()), sum(cr.values())
-
-    def score(t):
-        bs = feats(t)
-        lr = [math.log(((ct.get(b, 0) + a) / (Ct + a * B))
-                       / ((cr.get(b, 0) + a) / (Cr + a * B)))
-              for b in bs]
-        return len(bs), round(sum(lr) / len(bs), 6)
-
-    got = {r.doc_id: r for r in dsir_importance_weights(
-        docs, F.col("lang") == "en", n_buckets=B).collect()}
-    for did, t, _ in rows_in:
-        n, s = score(t)
-        assert got[did].n_feats == n
-        assert abs(got[did].dsir_score - s) < 1e-5
-    # target-style doc outscores reference-style doc
-    assert got[1].dsir_score > got[3].dsir_score
-
-
-def test_pack_sequences(spark):
-    """Bucketed prefix sum == plain global cumsum; spans and offsets
-    follow the concat-and-chunk layout exactly."""
-    from skewer_spark.operators.pack import pack_sequences, sequence_manifest
-
-    # sparse, unordered ids; token counts 1..7 with one doc > seq_len
-    data = [(100, "w " * 6), (3, "w " * 2), (57, "w " * 13),
-            (8, "w"), (999, "w " * 4)]
-    docs = spark.createDataFrame(
-        [(i, t.strip()) for i, t in data], "doc_id long, text string"
-    )
-    S = 5
-    got = {r.doc_id: r for r in
-           pack_sequences(docs, seq_len=S, n_buckets=4).collect()}
-    cum = 0
-    for did, t in sorted(data):
-        n = len(t.strip().split(" "))
-        start, end = cum, cum + n
-        cum = end
-        r = got[did]
-        assert r.n_tokens == n
-        assert r.seq_first == start // S
-        assert r.seq_last == (end - 1) // S
-        assert r.offset_in_seq == start % S
-    # manifest: every sequence except the last holds exactly S tokens
-    man = {r.seq_id: r for r in sequence_manifest(
-        pack_sequences(docs, seq_len=S, n_buckets=4), seq_len=S).collect()}
-    total = cum
-    for sid, r in man.items():
-        exp = S if (sid + 1) * S <= total else total - sid * S
-        assert r.n_tokens == exp
-    assert sum(r.n_tokens for r in man.values()) == total
-
-
-def test_token_budget_select(spark):
-    """Bucketed prefix sum over (score DESC, id) == plain global
-    cumsum; whole-document greedy selection stops at the budget."""
-    from skewer_spark.operators.select import token_budget_select
-
-    # equal scores exercise the id tie-break; bucket count < distinct
-    # scores exercises multi-score buckets
-    data = [(1, "w " * 4, 3.0), (2, "w " * 6, 1.0), (3, "w " * 2, 3.0),
-            (4, "w " * 5, 2.0), (5, "w " * 3, 0.5)]
-    docs = spark.createDataFrame(
-        [(i, t.strip()) for i, t, _ in data], "doc_id long, text string"
-    )
-    score = (
-        F.when(F.col("doc_id") == 1, 3.0)
-        .when(F.col("doc_id") == 2, 1.0)
-        .when(F.col("doc_id") == 3, 3.0)
-        .when(F.col("doc_id") == 4, 2.0)
-        .otherwise(0.5)
-    )
-    got = {r.doc_id: r for r in
-           token_budget_select(docs, score, 11, n_buckets=3).collect()}
-    cum = 0
-    for did, t, _ in sorted(data, key=lambda x: (-x[2], x[0])):
-        n = len(t.strip().split(" "))
-        cum += n
-        assert got[did].n_tokens == n
-        assert got[did].cum_tokens == cum
-        assert got[did].selected == (cum <= 11)
-    # selected = docs 1 (4 toks) + 3 (2 toks) + 4 (5 toks) = 11 <= 11
-    assert {d for d, r in got.items() if r.selected} == {1, 3, 4}
-
-    # degenerate: all scores equal (hi == lo bucket guard) — order is
-    # by id, and greedy keeps the PREFIX: doc 1 (4 toks) fits budget 6,
-    # doc 2 (6 toks) overflows, everything after stays unselected
-    flat = token_budget_select(docs, F.lit(1.0), 6, n_buckets=3).collect()
-    assert {r.doc_id for r in flat if r.selected} == {1}
-
-
-def test_mixture_weights(spark):
-    """Temperature flattens the natural token share toward uniform."""
-    import math
-
-    from skewer_spark.operators.select import mixture_weights
-
-    docs = spark.createDataFrame(
-        [(1, ("w " * 80).strip(), "en"), (2, ("w " * 10).strip(), "en"),
-         (3, ("w " * 9).strip(), "de"), (4, "w", "fr")],
-        "doc_id long, text string, lang string",
-    )
-    toks = {"en": 90, "de": 9, "fr": 1}
-    total = sum(toks.values())
-    for T in (1.0, 2.0):
-        got = {r.group: r for r in
-               mixture_weights(docs, "lang", temperature=T).collect()}
-        z = sum((v / total) ** (1 / T) for v in toks.values())
-        for g, v in toks.items():
-            assert got[g].n_tokens == v
-            assert abs(got[g].p_raw - round(v / total, 6)) < 1e-9
-            assert abs(
-                got[g].mix_weight - round((v / total) ** (1 / T) / z, 6)
-            ) < 1e-9
-    # T=2 boosts the tail relative to its natural share
-    got2 = {r.group: r for r in
-            mixture_weights(docs, "lang", temperature=2.0).collect()}
-    assert got2["fr"].mix_weight > got2["fr"].p_raw
-    assert got2["en"].mix_weight < got2["en"].p_raw
-
-
-def test_shard_and_shuffle(spark):
-    """Every doc lands in exactly one shard, positions are contiguous
-    1..n per shard, and the layout is run-to-run deterministic."""
-    from skewer_spark.operators.select import shard_and_shuffle
-
-    docs = spark.createDataFrame(
-        [(i, "x") for i in range(200)], "doc_id long, text string"
-    )
-    rows = shard_and_shuffle(docs, n_shards=8).collect()
-    assert len(rows) == 200 and len({r.doc_id for r in rows}) == 200
-    by_shard = {}
-    for r in rows:
-        assert 0 <= r.shard < 8
-        by_shard.setdefault(r.shard, []).append(r.shard_pos)
-    for ps in by_shard.values():
-        assert sorted(ps) == list(range(1, len(ps) + 1))
-    again = {(r.doc_id, r.shard, r.shard_pos)
-             for r in shard_and_shuffle(docs, n_shards=8).collect()}
-    assert again == {(r.doc_id, r.shard, r.shard_pos) for r in rows}
-
-
-def test_apply_mixture(spark):
-    """Epoch counts realize the temperature mix: expected group tokens
-    hit the target, the draw is deterministic, and rates follow
-    w*budget/group_tokens exactly (checked per-row in python)."""
-    import hashlib
-    import math
-
-    from skewer_spark.operators.select import apply_mixture
-
-    rows = [(1, ("w " * 80).strip(), "en"), (2, ("w " * 10).strip(), "en"),
-            (3, ("w " * 9).strip(), "de"), (4, "w", "fr")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    toks = {"en": 90, "de": 9, "fr": 1}
-    total = sum(toks.values())
-    z = sum((v / total) ** 0.5 for v in toks.values())
-    mw = {g: round((v / total) ** 0.5 / z, 6) for g, v in toks.items()}
-    B = 200
-    got = {r.doc_id: r for r in
-           apply_mixture(docs, B, "lang", temperature=2.0).collect()}
-    for did, t, g in rows:
-        n = len(t.split(" "))
-        rate = B * mw[g] / toks[g]
-        u = int(hashlib.md5(str(did).encode()).hexdigest()[:15], 16) / 2**60
-        exp = math.floor(rate) + (1 if u < rate - math.floor(rate) else 0)
-        r = got[did]
-        assert (r.group, r.n_tokens) == (g, n)
-        assert abs(r.rate - round(rate, 6)) < 1e-9
-        assert r.n_copies == exp
-    # tail domain (fr: 1 token, weight-boosted) is up-sampled hard:
-    # rate = 200 * mw_fr / 1 >> 1 -> multiple epochs
-    assert got[4].n_copies >= 2
-    # deterministic across runs
-    again = {r.doc_id: r.n_copies for r in
-             apply_mixture(docs, B, "lang", temperature=2.0).collect()}
-    assert again == {d: r.n_copies for d, r in got.items()}
-
-
-def test_token_budget_select_tie_safe_equals_value_range(spark):
-    """The two bucketing modes are bit-identical — boundaries never
-    affect the prefix sum — including under heavy score ties (the
-    4-decimal quality grid at scale)."""
-    from skewer_spark.operators.select import token_budget_select
-
-    # 60 docs, only THREE distinct scores -> every value-range bucket
-    # is a whole tie group; tie_safe must split them by id instead
-    docs = spark.createDataFrame(
-        [(i, "w " * (i % 5 + 1)) for i in range(60)],
-        "doc_id long, text string",
-    )
-    score = (F.col("doc_id") % 3).cast("double")
-    a = sorted(
-        map(tuple, token_budget_select(
-            docs, score, 70, n_buckets=8, tie_safe=True).collect())
-    )
-    b = sorted(
-        map(tuple, token_budget_select(
-            docs, score, 70, n_buckets=8, tie_safe=False).collect())
-    )
-    assert a == b
-
-
 def test_dedup_substring_spans(spark):
     """Exact-substring dedup (Lee et al. 2022): duplicated 5-grams are
     cut from every occurrence EXCEPT the globally-first — across docs
@@ -1046,41 +541,6 @@ def test_dedup_substring_spans(spark):
         3: (11, 5, "p q r s t u"),
         4: (6, 0, "m n o aa bb cc"),
     }
-
-
-def test_url_filter(spark):
-    """URL filter: scheme gate > host parse > domain blocklist > TLD
-    blocklist, with userinfo/port/www/case normalization handled."""
-    from skewer_spark.operators.curate import url_filter
-
-    docs = spark.createDataFrame(
-        [
-            (1, "https://www.Good.Example.com/a"),
-            (2, "ftp://files.example.com/x"),
-            (3, "not a url"),
-            (4, "https:///oops"),
-            (5, "http://u:p@bad.site.zip:8080/q?x=1"),
-            (6, "https://evil.net/"),
-            (7, "https://localhost/"),
-        ],
-        "doc_id long, url string",
-    )
-    rows = {
-        r.doc_id: r
-        for r in url_filter(docs, blocked_domains=["evil.net"]).collect()
-    }
-    assert (rows[1].host, rows[1].domain, rows[1].tld, rows[1].reason) == (
-        "good.example.com", "example.com", "com", "kept")
-    assert rows[2].reason == "scheme"
-    assert rows[3].reason == "scheme"          # no "://" → no scheme
-    assert rows[4].reason == "no_host"
-    assert (rows[5].host, rows[5].reason) == ("bad.site.zip", "blocked_tld")
-    assert rows[6].reason == "blocked_domain"
-    # dotless host: domain falls back to the host itself, empty TLD
-    assert (rows[7].domain, rows[7].tld, rows[7].reason) == (
-        "localhost", "", "kept")
-    assert {i: rows[i].keep for i in rows} == {
-        1: True, 2: False, 3: False, 4: False, 5: False, 6: False, 7: True}
 
 
 def test_sft_pairs_window(spark):
@@ -1158,122 +618,6 @@ def test_conv_stats(spark):
     assert (got["c2"].n_turns, got["c2"].duration_sec) == (1, 0)
 
 
-def test_per_domain_quantile_select(spark):
-    """Per-domain thresholding: each domain keeps its own top quartile
-    (exact interpolated percentile), independent of other domains."""
-    from skewer_spark.operators.select import per_domain_quantile_select
-
-    docs = spark.createDataFrame(
-        # domain a scores 1..4 -> p75 = 3.25 -> keep only 4
-        # domain b scores 100..104 (5 rows) -> p75 = 103 -> keep 103,104
-        [(i, "a", float(i)) for i in range(1, 5)]
-        + [(10 + i, "b", 100.0 + i) for i in range(5)],
-        "doc_id long, domain string, score double",
-    )
-    out = per_domain_quantile_select(docs, q=0.75)
-    kept = sorted(r.doc_id for r in out.collect() if r.keep)
-    assert kept == [4, 13, 14]
-    thr = {r.domain: r.thr for r in out.select("domain", "thr").distinct().collect()}
-    assert thr == {"a": 3.25, "b": 103.0}
-
-
-def test_weighted_sample_matches_reference(spark):
-    """Efraimidis-Spirakis with deterministic md5 uniforms: the sample
-    equals an independent Python recomputation exactly."""
-    import hashlib
-
-    from skewer_spark.operators.select import weighted_sample
-
-    rows = [(i, float(1 + (i * 7) % 13)) for i in range(60)]
-    rows += [(100, 0.0), (101, -2.0)]  # excluded outright
-    df = spark.createDataFrame(rows, "doc_id int, weight double")
-
-    def key(i, w):
-        u = int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) / 2**32
-        return round(u ** (1.0 / w), 6)
-
-    want = sorted(
-        ((key(i, w), i) for i, w in rows if w > 0),
-        key=lambda t: (-t[0], str(t[1])),
-    )[:10]
-    got = weighted_sample(df, 10, id_col="doc_id").collect()
-    assert [(r.sample_key, r.doc_id) for r in got] == want
-    assert all(r.doc_id not in (100, 101) for r in got)
-
-
-def test_weighted_sample_per_group(spark):
-    from skewer_spark.operators.select import weighted_sample
-
-    df = spark.createDataFrame(
-        [(i, "g" + str(i % 3), 1.0 + i % 5) for i in range(30)],
-        "doc_id int, grp string, weight double",
-    )
-    out = weighted_sample(df, 4, id_col="doc_id", per_group="grp")
-    sizes = {
-        r.grp: r.n for r in out.groupBy("grp").count()
-        .withColumnRenamed("count", "n").collect()
-    }
-    assert sizes == {"g0": 4, "g1": 4, "g2": 4}
-    # per-group winners = global recomputation restricted to the group
-    import hashlib
-
-    def key(i):
-        u = int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) / 2**32
-        return round(u ** (1.0 / (1.0 + i % 5)), 6)
-
-    for g in ("g0", "g1", "g2"):
-        ids = [i for i in range(30) if "g" + str(i % 3) == g]
-        want = sorted(ids, key=lambda i: (-key(i), str(i)))[:4]
-        got = sorted(
-            r.doc_id for r in out.collect() if r.grp == g
-        )
-        assert got == sorted(want)
-
-
-# ---------------------------------------------------------------------------
-# split_assign (content-keyed train/val/test holdout)
-# ---------------------------------------------------------------------------
-
-def test_split_assign_stable_and_content_keyed(spark):
-    from skewer_spark.operators.select import split_assign
-    docs = spark.createDataFrame(
-        [(f"d{i}",) for i in range(400)], "doc_id string"
-    )
-    out = {r.doc_id: r.split for r in split_assign(docs).collect()}
-    assert set(out.values()) <= {"train", "val", "test"}
-    # content-keyed: a doc's split is independent of the rest of the
-    # corpus — the same ids in a larger frame keep their assignment
-    bigger = spark.createDataFrame(
-        [(f"d{i}",) for i in range(1000)], "doc_id string"
-    )
-    out2 = {r.doc_id: r.split for r in split_assign(bigger).collect()}
-    assert all(out2[k] == v for k, v in out.items())
-    # default 98/1/1: train dominates
-    n_train = sum(1 for v in out2.values() if v == "train")
-    assert n_train >= 950
-
-
-def test_split_assign_fractions_and_salt(spark):
-    from skewer_spark.operators.select import split_assign
-    docs = spark.createDataFrame(
-        [(f"d{i}",) for i in range(600)], "doc_id string"
-    )
-    out = split_assign(
-        docs, fractions={"a": 0.5, "b": 0.5}
-    ).groupBy("split").count().collect()
-    counts = {r.split: r["count"] for r in out}
-    assert set(counts) == {"a", "b"}
-    assert abs(counts["a"] - 300) < 60  # md5-uniform halves
-    # salt rotation = a fresh independent assignment
-    s1 = {r.doc_id: r.split for r in split_assign(
-        docs, fractions={"a": 0.5, "b": 0.5}).collect()}
-    s2 = {r.doc_id: r.split for r in split_assign(
-        docs, fractions={"a": 0.5, "b": 0.5}, salt="v2").collect()}
-    assert any(s1[k] != s2[k] for k in s1)
-    with pytest.raises(ValueError):
-        split_assign(docs, fractions={"a": 0.5, "b": 0.2})
-
-
 def test_streaming_watermark_late_data(spark, tmp_path):
     """Two incremental runs against one checkpoint: a row later than the
     watermark must NOT reopen an already-emitted window (no duplicate
@@ -1345,78 +689,6 @@ def test_streaming_watermark_late_data(spark, tmp_path):
     assert all(r.n == r.nsinks for r in per_key)
     keys = {(r.conv_id, r.turn_idx) for r in per_key}
     assert ("c1", 9) in keys
-
-
-# ---------------------------------------------------------------------------
-# chunk_documents (RAG sliding-window chunking)
-# ---------------------------------------------------------------------------
-
-def _ref_chunks(text, chunk=8, overlap=2):
-    """Independent per-doc reference: starts 0, stride, … while
-    start < max(n - overlap, 1)."""
-    toks = [t for t in text.split() if t]
-    n = len(toks)
-    if n == 0:
-        return []
-    stride = chunk - overlap
-    out = []
-    start = 0
-    while start < max(n - overlap, 1):
-        sl = toks[start:start + chunk]
-        out.append((start // stride, len(sl), " ".join(sl)))
-        start += stride
-    return out
-
-
-def test_chunk_documents_matches_reference(spark):
-    from skewer_spark.operators.pack import chunk_documents
-
-    texts = [
-        " ".join(f"w{i}" for i in range(n))
-        for n in (0, 1, 2, 7, 8, 9, 10, 14, 15, 20, 33)
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
-    )
-    got = {}
-    for r in chunk_documents(docs, chunk_tokens=8, overlap=2).collect():
-        got.setdefault(r.doc_id, []).append(
-            (r.chunk_idx, r.n_tokens, r.chunk_text)
-        )
-    for i, t in enumerate(texts):
-        assert sorted(got.get(i, [])) == _ref_chunks(t), f"doc {i}"
-
-
-def test_chunk_documents_overlap_coverage(spark):
-    # consecutive chunks share exactly `overlap` tokens and cover the
-    # doc with no gaps; every chunk past the first adds >= 1 new token
-    from skewer_spark.operators.pack import chunk_documents
-
-    docs = spark.createDataFrame(
-        [(0, " ".join(f"t{i}" for i in range(23)))],
-        "doc_id int, text string",
-    )
-    rows = sorted(
-        chunk_documents(docs, chunk_tokens=8, overlap=3).collect(),
-        key=lambda r: r.chunk_idx,
-    )
-    chunks = [r.chunk_text.split() for r in rows]
-    for a, b in zip(chunks, chunks[1:]):
-        assert a[-3:] == b[:3]  # exact overlap carry
-        assert len(b) > 3  # new content beyond the carried overlap
-    seen = []
-    for i, c in enumerate(chunks):
-        seen.extend(c if i == 0 else c[3:])
-    assert seen == [f"t{i}" for i in range(23)]
-
-
-def test_chunk_documents_rejects_bad_overlap(spark):
-    import pytest as _pytest
-    from skewer_spark.operators.pack import chunk_documents
-
-    docs = spark.createDataFrame([(0, "a b")], "doc_id int, text string")
-    with _pytest.raises(ValueError):
-        chunk_documents(docs, chunk_tokens=8, overlap=8)
 
 
 def test_sft_skew_safe_wide_int_order_key(spark):

@@ -93,14 +93,15 @@ def test_band_join_fixed_width_exchange(spark, corpus_and_new):
 
 
 def test_groupby_max_reduction_equals_windowed_reference(spark, corpus_and_new):
-    """r6: incremental_dedup's best-match reduction runs as a
-    groupBy-max over the band-collision MULTISET (no candidate
-    distinct).  Pin it row-for-row against the old reduction — a
-    row_number window ordered (est desc, corpus_id asc) over the
-    distinct public matches frame — on a fixture that has multi-band
-    collisions (exact dups collide in every band) AND score ties (the
-    30-doc identical-boilerplate class all score 1.0 against new doc
-    3, so the tie-break must pick the LOWEST corpus id)."""
+    """incremental_dedup's best-match reduction is a row_number window
+    (top-1 per new_id) over the distinct candidate matches.  Pin its
+    contract row-for-row against an independent windowed reference:
+    (est desc, corpus_id asc) top-1, NULL match for new docs without
+    candidates.  The fixture has multi-band collisions (exact dups
+    collide in every band) AND score ties (the 30-doc identical-
+    boilerplate class all score 1.0 against new doc 3, so the tie-break
+    must pick the LOWEST corpus id).  Any future rewrite of the
+    reduction (e.g. a groupBy-max) must match it row-for-row."""
     from pyspark.sql import Window
 
     _, new, sigs = corpus_and_new

@@ -1,8 +1,7 @@
-"""Unit tests for the round-3 maintenance / drift / preference /
-forest operators: compaction planning, zone-map skipping, late-event
-watermark audit, PSI drift, cohort retention, transition matrix,
-preference pairs, Bradley-Terry, and pointer-doubling tree
-resolution."""
+"""Unit tests for the round-3 maintenance / drift / forest operators:
+compaction planning, zone-map skipping, late-event watermark audit,
+PSI drift, cohort retention, transition matrix, and pointer-doubling
+tree resolution."""
 
 from __future__ import annotations
 
@@ -21,10 +20,6 @@ from skewer_spark.operators.maintenance import (
     orphan_files,
     zonemap_skip,
     zonemap_stats,
-)
-from skewer_spark.operators.preference import (
-    bradley_terry,
-    preference_pairs,
 )
 from skewer_spark.operators.temporal import late_event_audit
 
@@ -205,46 +200,6 @@ def test_transition_matrix_rows_normalize(spark):
     assert m[("a", "b")] == 2 and m[("a", "c")] == 1
     # sequence ends emit nothing: user 2's final 'a' has no outgoing
     assert ("a", None) not in m
-
-
-# ---------------------------------------------------------------- preference
-
-
-def test_preference_pairs_margins_and_ties(spark):
-    rows = [
-        # prompt 1: clear winner/loser, tiebreak inside the middle
-        Row(prompt_id=1, resp_id=10, score=0.9),
-        Row(prompt_id=1, resp_id=11, score=0.1),
-        Row(prompt_id=1, resp_id=12, score=0.5),
-        # prompt 2: all tied → dropped
-        Row(prompt_id=2, resp_id=20, score=0.5),
-        Row(prompt_id=2, resp_id=21, score=0.5),
-        # prompt 3: single response → dropped
-        Row(prompt_id=3, resp_id=30, score=0.7),
-        # prompt 4: top tie → lowest resp_id chosen
-        Row(prompt_id=4, resp_id=40, score=0.8),
-        Row(prompt_id=4, resp_id=41, score=0.8),
-        Row(prompt_id=4, resp_id=42, score=0.2),
-    ]
-    out = {r.prompt_id: r for r in
-           preference_pairs(spark.createDataFrame(rows)).collect()}
-    assert set(out) == {1, 4}
-    assert out[1].chosen_id == 10 and out[1].rejected_id == 11
-    assert abs(out[1].margin - 0.8) < 1e-9
-    assert out[4].chosen_id == 40 and out[4].rejected_id == 42
-
-
-def test_bradley_terry_orders_by_dominance(spark):
-    # a beats b 9/10, b beats c 9/10, a beats c 10/10
-    duels = []
-    duels += [Row(winner="a", loser="b")] * 9 + [Row(winner="b", loser="a")]
-    duels += [Row(winner="b", loser="c")] * 9 + [Row(winner="c", loser="b")]
-    duels += [Row(winner="a", loser="c")] * 10
-    out = {r.item: r for r in
-           bradley_terry(spark.createDataFrame(duels)).collect()}
-    assert out["a"].strength > out["b"].strength > out["c"].strength
-    assert out["a"].n_wins == 19 and out["a"].n_duels == 20
-    assert abs(sum(r.strength for r in out.values()) - 1.0) < 1e-4
 
 
 # -------------------------------------------------------------- tree doubling

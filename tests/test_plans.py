@@ -120,88 +120,6 @@ def test_parquet_scan_pushes_filters_and_prunes_columns(spark, tmp_path):
     assert "text" not in scan and "doc_id" in scan
 
 
-def test_dsir_scoring_join_is_broadcast(spark):
-    """The n_buckets-row log-ratio frame must join the per-doc bucket
-    counts as a BROADCAST hash join — a shuffle here re-keys the whole
-    feature stream on the bucket id a second time."""
-    from skewer_spark.operators.curate import dsir_importance_weights
-
-    plan = _plan(
-        dsir_importance_weights(_docs(spark), F.lit(True), n_buckets=64)
-    )
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def test_pack_sequences_has_no_corpus_global_window(spark):
-    """The prefix sum must be the bucketed two-phase form: the only
-    single-partition (empty-partition-key) window runs over the tiny
-    bucket-totals frame, never over the corpus rows, and the base
-    offsets join back as a broadcast."""
-    from skewer_spark.operators.pack import pack_sequences
-
-    import re
-
-    plan = _plan(pack_sequences(_docs(spark), seq_len=5, n_buckets=4))
-    assert "BroadcastHashJoin" in plan
-    # every running total over corpus rows is partitioned by the range
-    # bucket (parallel), never a bare ORDER BY doc_id global window
-    corpus_windows = re.findall(
-        r"windowspecdefinition\([^\n]*n_tokens[^\n]*", plan
-    ) or re.findall(r"Arguments: \[sum\(n_tokens[^\n]*", plan)
-    assert corpus_windows and all("_bkt" in w for w in corpus_windows)
-    assert not re.search(r"windowspecdefinition\(doc_id#\d+L? ASC", plan)
-
-
-def test_budget_select_has_no_corpus_global_window(spark):
-    """Same invariant as pack_sequences: the running token total over
-    corpus rows must be partitioned by the score range bucket; the only
-    single-partition window runs over the n_buckets-row totals frame,
-    whose base offsets join back as a broadcast."""
-    import re
-
-    from skewer_spark.operators.select import token_budget_select
-
-    plan = _plan(
-        token_budget_select(
-            _docs(spark), F.length("text").cast("double"), 100, n_buckets=4
-        )
-    )
-    assert "BroadcastHashJoin" in plan
-    corpus_windows = re.findall(
-        r"windowspecdefinition\([^\n]*n_tokens[^\n]*", plan
-    ) or re.findall(r"Arguments: \[sum\(n_tokens[^\n]*", plan)
-    assert corpus_windows and all("_bkt" in w for w in corpus_windows)
-    assert not re.search(r"windowspecdefinition\(score#\d+ DESC", plan)
-
-
-def test_shard_shuffle_window_is_shard_partitioned(spark):
-    """The in-shard position window must partition by the shard id so
-    the sort parallelizes across shards — a bare global row_number
-    serializes the corpus onto one task."""
-    import re
-
-    from skewer_spark.operators.select import shard_and_shuffle
-
-    plan = _plan(shard_and_shuffle(_docs(spark), n_shards=8))
-    wins = [l for l in plan.splitlines() if "row_number()" in l]
-    assert wins and all(
-        "windowspecdefinition(shard#" in w for w in wins
-    )
-
-
-def test_apply_mixture_weight_join_is_broadcast(spark):
-    """The n_groups-row weight frame must broadcast onto the corpus —
-    a shuffle here re-keys every document by group for a 5-row join."""
-    from skewer_spark.operators.select import apply_mixture
-
-    docs = spark.createDataFrame(
-        [(i, "alpha beta", "en" if i % 2 else "de") for i in range(40)],
-        "doc_id long, text string, lang string",
-    )
-    plan = _plan(apply_mixture(docs, 1000, "lang"))
-    assert "BroadcastHashJoin" in plan
-
-
 def test_semdedup_cell_join_keeps_explicit_exchange(spark):
     """Same AQE trap as the LSH self-joins: the within-cell pair join
     must keep its explicit fixed-width exchange on the cell id, the
@@ -220,19 +138,6 @@ def test_semdedup_cell_join_keeps_explicit_exchange(spark):
     assert "REPARTITION_BY_NUM" in plan
     assert "row_number" in plan and "WindowGroupLimit" in plan
     assert re.search(r"Join condition:.*id_a#\d+ < id_b#\d+", plan)
-
-
-def test_classifier_weight_join_is_broadcast(spark):
-    """A real (dict-supplied) weight model must attach as a BROADCAST
-    join — a shuffle here re-keys the whole feature stream on the
-    bucket id a second time."""
-    from skewer_spark.operators.curate import hashed_classifier_score
-
-    plan = _plan(
-        hashed_classifier_score(_docs(spark), weights={1: 500, 2: -500})
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
 def test_bm25_topk_is_take_ordered(spark):
@@ -438,19 +343,6 @@ def test_psi_single_scan_per_side(spark):
     # outer cannot broadcast); the corpus itself never joins
     assert plan.count("SortMergeJoin FullOuter") <= 1
     assert plan.count("SortMergeJoin Inner") == 0
-
-
-def test_preference_pairs_single_exchange(spark):
-    from skewer_spark.operators.preference import preference_pairs
-
-    df = spark.range(100).select(
-        (F.col("id") % 10).alias("prompt_id"),
-        F.col("id").alias("resp_id"),
-        (F.col("id") % 13).cast("double").alias("score"),
-    )
-    plan = _plan(preference_pairs(df), "simple")
-    # both extreme ranks + the groupBy ride ONE prompt-keyed exchange
-    assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_transition_matrix_normalizer_is_broadcast(spark):

@@ -1,8 +1,8 @@
-"""Corpus-level hot-n-gram stats, char entropy, leakage-safe split.
+"""Corpus-level hot-n-gram stats and char entropy.
 
 Unit-level checks with hand-computed expectations; driver-facing
-correctness lives in the q_hot_ngrams / q_char_entropy /
-q_split_leakproof DuckDB oracle pairs.
+correctness lives in the q_hot_ngrams / q_char_entropy DuckDB oracle
+pairs.
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from skewer_spark.functions.text import char_entropy
 from skewer_spark.operators.repeats import hot_ngram_stats
-from skewer_spark.operators.select import split_assign, split_assign_grouped
 
 
 def _docs(spark, texts):
@@ -84,35 +83,6 @@ def test_char_entropy_known_values(spark):
         .collect()[0]["h"]
     )
     assert got == pytest.approx(round(expect, 4), abs=1e-4)
-
-
-def test_split_assign_grouped_keeps_groups_together(spark):
-    # 200 docs in 40 groups of 5 exact dups: every group must land in
-    # ONE split, and the assignment must equal split_assign on the key
-    rows = [(i, f"g{i % 40}") for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, fp string")
-    out = split_assign_grouped(df, "fp")
-    per_group = (
-        out.groupBy("fp")
-        .agg(F.count_distinct("split").alias("n_splits"))
-        .collect()
-    )
-    assert all(r["n_splits"] == 1 for r in per_group)
-    # agrees with split_assign applied to the group key directly
-    direct = {
-        r["fp"]: r["split"]
-        for r in split_assign(
-            df.select("fp").distinct(), id_col="fp"
-        ).collect()
-    }
-    for r in out.collect():
-        assert r["split"] == direct[r["fp"]]
-
-
-def test_split_assign_grouped_rejects_bad_fractions(spark):
-    df = spark.createDataFrame([(1, "a")], "doc_id long, fp string")
-    with pytest.raises(ValueError):
-        split_assign_grouped(df, "fp", fractions={"train": 0.5, "val": 0.1})
 
 
 def test_line_dedup_first_occurrence_wins(spark):

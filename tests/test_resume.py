@@ -97,3 +97,17 @@ def test_rerun_is_noop(spark, tmp_path):
     # attributed to an existing snapshot (ADVICE r02 self-loop fix)
     with pytest.raises(ValueError, match="already snapshotted"):
         job.run_pipeline(spark, inp, out, n_buckets=2, run_id="r1")
+
+
+def test_corrupt_manifest_raises(spark, tmp_path):
+    """An unreadable manifest is an error, not "nothing committed":
+    read as empty, it would send every bucket through the job again."""
+    from skewer_spark.plans import checkpoint as ckpt
+
+    out = tmp_path / "out"
+    assert ckpt.committed_buckets(spark, str(out)) == set()
+    man = out / "_manifest"
+    man.mkdir(parents=True)
+    (man / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="parquet"):
+        ckpt.committed_buckets(spark, str(out))
