@@ -384,22 +384,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_encode_avro(spark, sf):
-        # numpy batch encoder (r6, guide §4.2): byte-identical to the
-        # interpreted-HOF expression twin wire.encode_avro (pinned by
-        # tests/test_wire_batch.py) — the HOF fold ran on the
-        # interpreted expression path per row and was the costliest
-        # per-row work in the sweep
-        from skewer_spark.sinks.wire_batch import encode_avro_batch
+        from skewer_spark.sinks.wire import encode_avro
         return _routed_events(spark, sf).select(
             F.col("turn_idx").cast("long").alias("event_id"),
-            F.lower(F.hex(encode_avro_batch())).alias("encoded_hex"),
+            F.lower(F.hex(encode_avro())).alias("encoded_hex"),
         )
 
     def q_encode_fullavro(spark, sf):
-        from skewer_spark.sinks.wire_batch import encode_fullavro_batch
+        from skewer_spark.sinks.wire import encode_fullavro
         return _enveloped(spark, sf).select(
             F.col("turn_idx").cast("long").alias("event_id"),
-            F.lower(F.hex(encode_fullavro_batch())).alias("encoded_hex"),
+            F.lower(F.hex(encode_fullavro())).alias("encoded_hex"),
         )
 
     def q_encode_jsonavro(spark, sf):
@@ -417,26 +412,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_encode_protobuf(spark, sf):
-        # numpy batch encoder (r6) — see q_encode_avro
-        from skewer_spark.sinks.wire_batch import encode_protobuf_batch
+        from skewer_spark.sinks.wire import encode_protobuf
         return _routed_events(spark, sf).select(
             F.col("turn_idx").cast("long").alias("event_id"),
-            F.lower(F.hex(encode_protobuf_batch())).alias("encoded_hex"),
+            F.lower(F.hex(encode_protobuf())).alias("encoded_hex"),
         )
 
     def q_parse_protobuf(spark, sf):
         from skewer_spark.operators.decode_protobuf import parse_protobuf
-        from skewer_spark.sinks.wire_batch import encode_protobuf_batch
+        from skewer_spark.sinks.wire import encode_protobuf
         enc = _routed_events(spark, sf).select(
             F.col("turn_idx").cast("long").alias("event_id"),
-            encode_protobuf_batch().alias("pb"),
+            encode_protobuf().alias("pb"),
         )
-        # allow_jvm=False: the JVM path escapes non-ASCII differently in
-        # properties_json — a classpath change must not flip the bytes
-        # this oracle-hashed query emits
-        d = enc.select(
-            "event_id", parse_protobuf("pb", allow_jvm=False).alias("d")
-        )
+        d = enc.select("event_id", parse_protobuf("pb").alias("d"))
         return d.select(
             "event_id",
             F.col("d.priority").cast("long").alias("priority"),
@@ -2965,11 +2954,12 @@ def oracle_sql() -> dict[str, str]:
     """
 
     # ---- avro / protobuf wire oracles (hex-level) ----
-    # DuckDB builds the same bytes as skewer_spark/sinks/wire.py from the
-    # public wire specs: varints from first principles, strings as
-    # hex(utf8), the fixture's constant properties maps as precomputed
-    # hex (verified against an independent Python encoder in
-    # tests/test_wire_codecs.py).
+    # DuckDB builds the bytes from the public wire specs, independently
+    # of skewer_spark/sinks/wire.py: varints from first principles,
+    # strings as hex(utf8), the fixture's two constant properties maps
+    # as precomputed hex (the strict spec readers in
+    # tests/test_wire_codecs.py decode the encoder's bytes for the same
+    # fixture back to those maps).
 
     def vh(n: str) -> str:
         """Unsigned LEB128 varint hex for values < 2^21 (lengths)."""

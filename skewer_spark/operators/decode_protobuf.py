@@ -1,7 +1,7 @@
 """Protobuf SyslogMessage decoder (reference ``decoders/protobuf.go:8-16``,
 wire schema ``model/types.proto:19-33``).
 
-No protobuf jar/library ships in this container, so this is a
+No protobuf library ships with the package, so this is a
 first-principles proto3 wire reader inside an Arrow-batched pandas UDF.
 Varint walking is sequential WITHIN a record but independent ACROSS
 records, so the batch path (`_decode_pb_batch`) runs all records in
@@ -9,10 +9,9 @@ numpy lockstep over one concatenated buffer: each step reads one
 varint / one field across every still-active record, bounding the
 Python-loop iteration count by the per-record field count (~14), not
 the row count.  The scalar reader (`decode_syslog_pb`) is kept as the
-independent reference the tests compare against and as the fail-safe
-fallback.  Unknown fields are skipped by wire type, like any proto3
-reader; malformed input yields a null struct (the reference surfaces
-``DecodingError``).
+independent reference the tests compare against.  Unknown fields are
+skipped by wire type, like any proto3 reader; malformed input yields a
+null struct (the reference surfaces ``DecodingError``).
 """
 
 from __future__ import annotations
@@ -676,292 +675,11 @@ def _decode_pb_batch(payload: pd.Series) -> pd.DataFrame:
 
 @F.pandas_udf(PB_SYSLOG_SCHEMA)
 def _decode_pb_udf(payload: pd.Series) -> pd.DataFrame:
-    try:
-        return _decode_pb_batch(payload)
-    except Exception:
-        # fail-safe, not fail-fast: the scalar reference reader gives
-        # the same answers (differentially fuzz-tested), so an
-        # unexpected vectorized-path fault degrades speed, not a 100 TB
-        # job.  dict-of-lists assembly builds each Arrow column in one
-        # pass.
-        data: dict[str, list] = {c: [] for c in _PB_COLS}
-        appends = [data[c].append for c in _PB_COLS]
-        for b in payload:
-            r = decode_syslog_pb(b)
-            if r is None:
-                for ap in appends:
-                    ap(None)
-            else:
-                for c, ap in zip(_PB_COLS, appends):
-                    ap(r[c])
-        return pd.DataFrame(data, columns=_PB_COLS)
+    return _decode_pb_batch(payload)
 
 
-# ---------------------------------------------------------------------------
-# spark-protobuf jar fast path (VERDICT r02 #6)
-#
-# At 100 TB the production decode is the JVM-side `from_protobuf` from
-# the spark-protobuf connector (whole-stage codegen, no Python worker
-# round-trip).  The jar is an external Spark module and is absent in
-# this container, so `parse_protobuf` probes for it and falls back to
-# the Arrow-batched Python wire reader above.  The descriptor the jar
-# needs is hand-encoded below from the PUBLIC descriptor.proto wire
-# format — no protoc/google.protobuf dependency.
-# ---------------------------------------------------------------------------
-
-
-def _pb_varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _pb_field(num: int, wire: int, payload: bytes | int) -> bytes:
-    tag = _pb_varint((num << 3) | wire)
-    if wire == 0:
-        return tag + _pb_varint(payload)
-    return tag + _pb_varint(len(payload)) + payload
-
-
-def _pb_str(num: int, s: str) -> bytes:
-    return _pb_field(num, 2, s.encode("utf-8"))
-
-
-def _fd_field(name: str, number: int, ftype: int, label: int = 1,
-              type_name: str | None = None) -> bytes:
-    """FieldDescriptorProto: 1=name 3=number 4=label 5=type 6=type_name
-    (descriptor.proto; labels: 1 optional, 3 repeated; types: 3 int64,
-    5 int32, 9 string, 11 message)."""
-    body = _pb_str(1, name) + _pb_field(3, 0, number) + _pb_field(4, 0, label)
-    body += _pb_field(5, 0, ftype)
-    if type_name:
-        body += _pb_str(6, type_name)
-    return body
-
-
-def _fd_message(name: str, fields: list[bytes], nested: list[bytes] = (),
-                map_entry: bool = False) -> bytes:
-    """DescriptorProto: 1=name 2=field 3=nested_type 7=options
-    (MessageOptions field 7 = map_entry)."""
-    body = _pb_str(1, name)
-    for f in fields:
-        body += _pb_field(2, 2, f)
-    for n in nested:
-        body += _pb_field(3, 2, n)
-    if map_entry:
-        body += _pb_field(7, 2, _pb_field(7, 0, 1))
-    return body
-
-
-def syslog_descriptor_set() -> bytes:
-    """Serialized FileDescriptorSet for the reference's SyslogMessage
-    (``model/types.proto:19-33``): fields 1-4 int32, 5-6 int64 (ns
-    timestamps), 7-12 string, 13 the ``Properties`` WRAPPER message —
-    ``message Properties { map<string, InnerProperties> map = 1; }``
-    with ``InnerProperties { map<string,string> kv = 1; }``.  The
-    wrapper level is load-bearing: the reference nests the map one
-    message deep (``types.proto:15-17``), and this module's own
-    encoder/decoder emit/read exactly that layout — a flat
-    map-at-field-13 descriptor would make the jar path misparse every
-    non-empty properties payload."""
-    inner_kv_entry = _fd_message(
-        "KvEntry",
-        [_fd_field("key", 1, 9), _fd_field("value", 2, 9)],
-        map_entry=True,
-    )
-    inner = _fd_message(
-        "InnerProperties",
-        [_fd_field("kv", 1, 11, label=3, type_name=".skw.InnerProperties.KvEntry")],
-        nested=[inner_kv_entry],
-    )
-    props_entry = _fd_message(
-        "MapEntry",
-        [
-            _fd_field("key", 1, 9),
-            _fd_field("value", 2, 11, type_name=".skw.InnerProperties"),
-        ],
-        map_entry=True,
-    )
-    props = _fd_message(
-        "Properties",
-        [_fd_field("map", 1, 11, label=3,
-                   type_name=".skw.Properties.MapEntry")],
-        nested=[props_entry],
-    )
-    msg_fields = (
-        [_fd_field(n, i + 1, 5) for i, n in enumerate(
-            ["priority", "facility", "severity", "version"])]
-        + [_fd_field("time_reported_num", 5, 3),
-           _fd_field("time_generated_num", 6, 3)]
-        + [_fd_field(n, i + 7, 9) for i, n in enumerate(
-            ["hostname", "appname", "procid", "msgid", "structured",
-             "message"])]
-        + [_fd_field("properties", 13, 11, type_name=".skw.Properties")]
-    )
-    syslog = _fd_message("SyslogMessage", msg_fields)
-    # FileDescriptorProto: 1=name 2=package 4=message_type 12=syntax
-    fdp = (
-        _pb_str(1, "skewer_syslog.proto")
-        + _pb_str(2, "skw")
-        + _pb_field(4, 2, syslog)
-        + _pb_field(4, 2, inner)
-        + _pb_field(4, 2, props)
-        + _pb_str(12, "proto3")
-    )
-    # FileDescriptorSet: 1=file (repeated)
-    return _pb_field(1, 2, fdp)
-
-
-def protobuf_jar_available(spark) -> bool:
-    """True iff the spark-protobuf connector classes are on the JVM
-    classpath (they are an external module, not part of core Spark)."""
-    cls = "org.apache.spark.sql.protobuf.ProtobufDataToCatalyst"
-    jvm = spark._jvm
-    try:
-        # Spark's context classloader sees --packages/spark.jars jars
-        # (MutableURLClassLoader) that py4j's Class.forName misses —
-        # same reasoning as sinks/wire.py avro_jar_available (ADVICE r4)
-        jvm.org.apache.spark.util.Utils.classForName(cls, False, False)
-        return True
-    except Exception:
-        pass
-    try:
-        jvm.java.lang.Class.forName(cls)
-        return True
-    except Exception:
-        return False
-
-
-def _sorted_json_map(m: Column) -> Column:
-    """map → key-sorted map (stable to_json output, matching the Python
-    reader's sorted json.dumps)."""
-    return F.map_from_entries(
-        F.array_sort(
-            F.map_entries(m),
-            lambda a, b: F.when(a["key"] < b["key"], F.lit(-1))
-            .when(a["key"] > b["key"], F.lit(1))
-            .otherwise(F.lit(0)),
-        )
-    )
-
-
-def parse_protobuf_jvm(col: Column | str = "payload") -> Column:
-    """JVM-side decode via spark-protobuf's ``from_protobuf`` — same
-    output struct as :func:`parse_protobuf`'s Python path.  Requires
-    the spark-protobuf jar (``protobuf_jar_available``); PERMISSIVE
-    mode maps malformed records to null, like the Python reader.
-
-    Note: ``properties_json`` serializes non-ASCII as raw UTF-8 here
-    (Spark ``to_json``) vs ``\\uXXXX`` escapes from the Python path —
-    byte-compare after a JSON parse, not as strings."""
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    c = F.col(col) if isinstance(col, str) else col
-    rec = from_protobuf(
-        c, "skw.SyslogMessage",
-        binaryDescriptorSet=syslog_descriptor_set(),
-        options={"mode": "PERMISSIVE"},
-    )
-    # properties is the wrapper message: the catalyst map lives at
-    # rec.properties.map (descriptor Properties.map), values are
-    # InnerProperties structs whose kv field holds the inner map
-    props = F.map_from_entries(
-        F.transform(
-            F.map_entries(_sorted_json_map(rec["properties"]["map"])),
-            lambda e: F.struct(
-                e["key"].alias("key"),
-                _sorted_json_map(e["value"]["kv"]).alias("value"),
-            ),
-        )
-    )
-    return F.when(
-        rec.isNotNull(),
-        F.struct(
-            *[rec[f].alias(f) for f in (
-                "priority", "facility", "severity", "version",
-                "time_reported_num", "time_generated_num", "hostname",
-                "appname", "procid", "msgid", "structured", "message")],
-            F.coalesce(F.to_json(props), F.lit("{}")).alias("properties_json"),
-        ),
-    ).cast(PB_SYSLOG_SCHEMA)
-
-
-def encode_protobuf_jvm() -> Column:
-    """JVM-side encode via spark-protobuf's ``to_protobuf`` over the
-    same hand-built descriptor — the consistency twin of
-    :func:`parse_protobuf_jvm` (VERDICT r02 #6): on a jar-equipped
-    cluster, bytes produced here must decode to the same values as the
-    pure-expression :func:`skewer_spark.sinks.wire.encode_protobuf`
-    (maps are key-sorted on both sides so even the map-entry order
-    agrees).  Expects the parsed-frame columns (priority … message,
-    properties_json, time_reported/time_generated timestamps)."""
-    from pyspark.sql.protobuf.functions import to_protobuf
-
-    outer = _sorted_json_map(
-        F.from_json(F.col("properties_json"), "map<string,map<string,string>>")
-    )
-    wrapped = F.struct(
-        F.map_from_entries(
-            F.transform(
-                F.map_entries(outer),
-                lambda e: F.struct(
-                    e["key"].alias("key"),
-                    F.struct(
-                        _sorted_json_map(e["value"]).alias("kv")
-                    ).alias("value"),
-                ),
-            )
-        ).alias("map")
-    )
-    ns = lambda c: F.coalesce(  # noqa: E731
-        F.unix_micros(F.col(c).cast("timestamp")) * 1000, F.lit(0)
-    )
-    rec = F.struct(
-        F.coalesce(F.col("priority"), F.lit(0)).cast("int").alias("priority"),
-        F.coalesce(F.col("facility"), F.lit(0)).cast("int").alias("facility"),
-        F.coalesce(F.col("severity"), F.lit(0)).cast("int").alias("severity"),
-        F.coalesce(F.col("version"), F.lit(0)).cast("int").alias("version"),
-        ns("time_reported").alias("time_reported_num"),
-        ns("time_generated").alias("time_generated_num"),
-        *[
-            F.coalesce(F.col(c), F.lit("")).alias(c)
-            for c in ("hostname", "appname", "procid", "msgid",
-                      "structured", "message")
-        ],
-        wrapped.alias("properties"),
-    )
-    return to_protobuf(
-        rec, "skw.SyslogMessage", binaryDescriptorSet=syslog_descriptor_set()
-    )
-
-
-def parse_protobuf(
-    col: Column | str = "payload", spark=None, allow_jvm: bool = True
-) -> Column:
+def parse_protobuf(col: Column | str = "payload") -> Column:
     """Decode a binary protobuf SyslogMessage column into a struct
-    (one message per frame, as ``decoders/protobuf.go``).
-
-    Uses the JVM spark-protobuf fast path when the jar is on the
-    classpath (no Python worker in the row path), else the first-
-    principles Arrow-batched Python wire reader.
-
-    ``allow_jvm=False`` pins the Python reader: the two paths agree on
-    values but NOT on JSON string escaping of non-ASCII property values
-    (Spark's ``to_json`` emits raw UTF-8 where Python's ``json.dumps``
-    emits ``\\uXXXX``), so anything hash-compared against a fixed
-    oracle (the driver's q_parse_protobuf) must not switch paths with
-    the deployment's classpath."""
-    if allow_jvm:
-        if spark is None:
-            from pyspark.sql import SparkSession
-
-            spark = SparkSession.getActiveSession()
-        if spark is not None and protobuf_jar_available(spark):
-            return parse_protobuf_jvm(col)
+    (one message per frame, as ``decoders/protobuf.go``) with the
+    Arrow-batched wire reader."""
     return _decode_pb_udf(F.col(col) if isinstance(col, str) else col)

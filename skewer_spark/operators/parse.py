@@ -131,23 +131,12 @@ def _pc_count_lit(s: pd.Series, lit: str) -> pd.Series:
 # regexes
 # --------------------------------------------------------------------------
 
-RE_5424_DETECT = re.compile(r"^<\d{1,9}>\d{1,9} ")
-RE_5424_HEAD = re.compile(
-    r"^<(\d{1,9})>(\d{1,9}) +([^ ]+) +([^ ]+) +([^ ]+) +([^ ]+) +([^ ]+) +(.*)$",
-    re.S,
-)
-RE_3339 = re.compile(
-    r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(\.\d+)?(Z|[+-]\d{2}:\d{2})$"
-)
-RE_SD_BLOCK = re.compile(r"^((?:\[(?:\\.|[^\]\\])*\])+)(?: +(.*))?$", re.S)
 RE_SD_ELEM = re.compile(r"\[([^\]\\ =]+)((?:\\.|[^\]\\])*)\]")
 RE_SD_PARAM = re.compile(r'([^=\s\]]+)="((?:\\.|[^"\\])*)"')
-RE_PRI = re.compile(r"^<(\d{1,9})>(.*)$", re.S)
 RE_HOSTNAME = re.compile(r"^[\w.:\-]*$")  # isHostname: letter|digit|.|:|-|_
-RE_STAMP_TIME = re.compile(r"^\d{2}:\d{2}:\d{2}$")
 
-# RE2 twins of the extract patterns above (named groups g0.., inline
-# (?s)); see the fast-path note at the helpers below
+# RE2 patterns for the pyarrow kernels (named groups g0.., inline
+# (?s)); see the fast-path note at the helpers above
 RE2_5424_DETECT = r"^<\d{1,9}>\d{1,9} "
 RE2_5424_HEAD = (
     r"(?s)^<(?P<g0>\d{1,9})>(?P<g1>\d{1,9}) +(?P<g2>[^ ]+) +(?P<g3>[^ ]+)"

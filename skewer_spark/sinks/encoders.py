@@ -195,16 +195,11 @@ def encode_file() -> Column:
     )
 
 
-# format-name → encoder registry (encoders/encoder.go:57-69).  The avro
-# family and protobuf have no jar in this container, so sinks/wire.py
-# produces both wire formats from the public specs in pure expressions.
-# The binary-avro entries route through encode_avro_auto: byte-identical
-# on either path, but on a jar-equipped cluster the encoding runs in
-# spark-avro's codegen'd JVM serializer instead of the interpreted HOF
-# expressions (parity pinned by tests/test_wire_codecs.py).
+# format-name → encoder registry (encoders/encoder.go:57-69).  No
+# avro/protobuf library ships with the package, so sinks/wire.py
+# produces both wire formats from the public specs.
 from skewer_spark.sinks.wire import (  # noqa: E402
     encode_avro,
-    encode_avro_auto,
     encode_fullavro,
     encode_fulljsonavro,
     encode_jsonavro,
@@ -218,8 +213,8 @@ ENCODERS = {
     "fulljson": encode_fulljson,
     "file": encode_file,
     "gelf": encode_gelf,
-    "avro": lambda: encode_avro_auto(full=False),
-    "fullavro": lambda: encode_avro_auto(full=True),
+    "avro": encode_avro,
+    "fullavro": encode_fullavro,
     "jsonavro": encode_jsonavro,
     "fulljsonavro": encode_fulljsonavro,
     "protobuf": encode_protobuf,
@@ -273,11 +268,6 @@ SINK_ENCODERS = {
     "sink_firehose": encode_file,
     "sink_rejects": encode_json,
 }
-
-
-def with_encoded(df, sink_name: str):
-    enc = SINK_ENCODERS.get(sink_name, encode_json)
-    return df.withColumn("encoded", enc())
 
 
 def encoded_by_sink() -> Column:

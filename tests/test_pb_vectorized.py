@@ -21,11 +21,31 @@ import pytest
 from skewer_spark.operators.decode_protobuf import (
     _PB_COLS,
     _decode_pb_batch,
-    _pb_field,
-    _pb_str,
-    _pb_varint,
     decode_syslog_pb,
 )
+
+
+def _pb_varint(n: int) -> bytes:
+    out = bytearray()
+    while True:
+        b = n & 0x7F
+        n >>= 7
+        if n:
+            out.append(b | 0x80)
+        else:
+            out.append(b)
+            return bytes(out)
+
+
+def _pb_field(num: int, wire: int, payload: bytes | int) -> bytes:
+    tag = _pb_varint((num << 3) | wire)
+    if wire == 0:
+        return tag + _pb_varint(payload)
+    return tag + _pb_varint(len(payload)) + payload
+
+
+def _pb_str(num: int, s: str) -> bytes:
+    return _pb_field(num, 2, s.encode("utf-8"))
 
 
 def _tag(num: int, wire: int) -> bytes:

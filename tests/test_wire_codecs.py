@@ -3,40 +3,41 @@
 The decoders in THIS file are written independently from the pipeline
 code, straight from the public Avro 1.x / proto3 wire specs, so a bug in
 ``skewer_spark/sinks/wire.py`` cannot self-verify (same policy as
-tests/oracle.py).  Golden byte vectors were additionally hand-checked
-against the specs.
+tests/oracle.py).  They are strict: they accept only the one encoding
+the encoders promise (minimal varints, one key-sorted avro map block,
+ascending protobuf fields with zero/empty scalars omitted and the
+properties message always present).  So a reader check that decodes the
+expected values AND consumes every byte pins the bytes exactly.  Golden
+byte vectors were additionally hand-checked against the specs.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 
 import pytest
 from pyspark.sql import functions as F
 
 from skewer_spark.sinks.encoders import ENCODERS, MIMETYPES
-from skewer_spark.sinks.wire import (
-    encode_avro,
-    encode_fullavro,
-    encode_fulljsonavro,
-    encode_jsonavro,
-    encode_protobuf,
-    uvarint,
-    zigzag,
-)
 
+SF = "/root/testdata/sf0.001"
 
 # ---------------------------------------------------------------------------
 # independent spec-based readers (no imports from the encoder under test)
 # ---------------------------------------------------------------------------
 
+
 def read_uvarint(b: bytes, i: int) -> tuple[int, int]:
-    shift = out = 0
+    start, shift = i, 0
+    out = 0
     while True:
         x = b[i]
         i += 1
         out |= (x & 0x7F) << shift
         if x < 0x80:
+            assert x or i - start == 1, "non-minimal varint"
+            assert out < 1 << 64, "varint overflow"
             return out, i
         shift += 7
 
@@ -48,21 +49,27 @@ def read_avro_long(b: bytes, i: int) -> tuple[int, int]:
 
 def read_avro_str(b: bytes, i: int) -> tuple[str, int]:
     n, i = read_avro_long(b, i)
+    assert n >= 0 and i + n <= len(b)
     return b[i : i + n].decode("utf-8"), i + n
 
 
 def read_avro_map(b: bytes, i: int, read_value) -> tuple[dict, int]:
+    """One positive-count block, keys in ascending UTF-8 byte order,
+    then the 0 terminator; an empty map is the terminator alone."""
     out: dict = {}
-    while True:
-        n, i = read_avro_long(b, i)
-        if n == 0:
-            return out, i
-        if n < 0:  # block with byte-size prefix
-            _, i = read_avro_long(b, i)
-            n = -n
-        for _ in range(n):
-            k, i = read_avro_str(b, i)
-            out[k], i = read_value(b, i)
+    n, i = read_avro_long(b, i)
+    assert n >= 0, "negative (byte-size prefixed) block"
+    prev = None
+    for _ in range(n):
+        k, i = read_avro_str(b, i)
+        kb = k.encode("utf-8")
+        assert prev is None or prev < kb, "map keys not ascending"
+        prev = kb
+        out[k], i = read_value(b, i)
+    if n:
+        end, i = read_avro_long(b, i)
+        assert end == 0, "more than one map block"
+    return out, i
 
 
 def read_avro_syslog(b: bytes, i: int = 0) -> tuple[dict, int]:
@@ -88,63 +95,172 @@ def read_avro_full(b: bytes) -> dict:
     return rec
 
 
-def read_pb_syslog(b: bytes) -> dict:
-    rec: dict = {"properties": {}}
+def _pb_fields(b: bytes) -> list[tuple[int, int, int | bytes]]:
+    """(field, wire, value) triples of one message; varint or
+    length-delimited only, the whole buffer consumed."""
+    out = []
     i = 0
     while i < len(b):
         tag, i = read_uvarint(b, i)
         field, wire = tag >> 3, tag & 7
         if wire == 0:
             val, i = read_uvarint(b, i)
-            rec[field] = val
         elif wire == 2:
             n, i = read_uvarint(b, i)
-            chunk = b[i : i + n]
-            i += n
-            if field == 13:
-                j = 0
-                while j < len(chunk):
-                    etag, j = read_uvarint(chunk, j)
-                    assert etag == 0x0A
-                    en, j = read_uvarint(chunk, j)
-                    entry = chunk[j : j + en]
-                    j += en
-                    ek = None
-                    inner: dict = {}
-                    p = 0
-                    while p < len(entry):
-                        t2, p = read_uvarint(entry, p)
-                        n2, p = read_uvarint(entry, p)
-                        body = entry[p : p + n2]
-                        p += n2
-                        if t2 >> 3 == 1:
-                            ek = body.decode()
-                        else:
-                            q = 0
-                            while q < len(body):
-                                t3, q = read_uvarint(body, q)
-                                assert t3 == 0x0A
-                                n3, q = read_uvarint(body, q)
-                                sub = body[q : q + n3]
-                                q += n3
-                                r = 0
-                                kk = vv = ""
-                                while r < len(sub):
-                                    t4, r = read_uvarint(sub, r)
-                                    n4, r = read_uvarint(sub, r)
-                                    s = sub[r : r + n4].decode()
-                                    r += n4
-                                    if t4 >> 3 == 1:
-                                        kk = s
-                                    else:
-                                        vv = s
-                                inner[kk] = vv
-                    rec["properties"][ek] = inner
-            else:
-                rec[field] = chunk.decode("utf-8")
+            assert i + n <= len(b), "length overruns the message"
+            val, i = b[i : i + n], i + n
         else:
             raise AssertionError(f"unexpected wire type {wire}")
+        out.append((field, wire, val))
+    return out
+
+
+def _pb_kv(b: bytes, read_value) -> tuple[str, object]:
+    """Map entry: exactly key (field 1) then value (field 2), both
+    written even when empty."""
+    (f1, w1, k), (f2, w2, v) = _pb_fields(b)
+    assert (f1, w1, f2, w2) == (1, 2, 2, 2), "malformed map entry"
+    return k.decode("utf-8"), read_value(v)
+
+
+def _pb_sorted_map(b: bytes, read_value) -> dict:
+    """Repeated field-1 map entries with ascending UTF-8 keys."""
+    out: dict = {}
+    prev = None
+    for field, wire, entry in _pb_fields(b):
+        assert (field, wire) == (1, 2), "unexpected map field"
+        k, v = _pb_kv(entry, read_value)
+        kb = k.encode("utf-8")
+        assert prev is None or prev < kb, "map keys not ascending"
+        prev = kb
+        out[k] = v
+    return out
+
+
+def read_pb_syslog(b: bytes) -> dict:
+    """SyslogMessage: ascending field numbers; fields 1-6 varints and
+    7-12 strings, present only when nonzero/nonempty; field 13 (the
+    properties message) always present."""
+    rec: dict = {}
+    prev = 0
+    for field, wire, val in _pb_fields(b):
+        assert field > prev, "fields not in ascending order"
+        prev = field
+        if field <= 6:
+            assert wire == 0 and val != 0, f"field {field}"
+            rec[field] = val
+        elif field <= 12:
+            assert wire == 2 and val, f"field {field}"
+            rec[field] = val.decode("utf-8")
+        else:
+            assert (field, wire) == (13, 2), f"field {field}"
+            rec["properties"] = _pb_sorted_map(
+                val, lambda inner: _pb_sorted_map(
+                    inner, lambda s: s.decode("utf-8")
+                )
+            )
+    assert "properties" in rec, "properties message missing"
     return rec
+
+
+def read_avro(b: bytes) -> dict:
+    rec, used = read_avro_syslog(b)
+    assert used == len(b), "trailing bytes"
+    return rec
+
+
+# ---------------------------------------------------------------------------
+# expected records, derived from a frame's source columns
+# ---------------------------------------------------------------------------
+
+_EPOCH = datetime.datetime(1970, 1, 1)
+
+
+def _rfc3339nano_expected(dt) -> str:
+    """Independent re-derivation of Go time.RFC3339Nano (UTC, trailing
+    zeros trimmed from the fraction; epoch for NULL)."""
+    if dt is None:
+        return "1970-01-01T00:00:00Z"
+    frac = f"{dt.microsecond:06d}".rstrip("0")
+    base = dt.strftime("%Y-%m-%dT%H:%M:%S")
+    return base + ("." + frac if frac else "") + "Z"
+
+
+def _utc(us):
+    return None if us is None else _EPOCH + datetime.timedelta(microseconds=us)
+
+
+_SYSLOG_STR = (
+    ("Facility", "facility_name"), ("Severity", "severity_name"),
+    ("Hostname", "hostname"), ("Appname", "appname"), ("Procid", "procid"),
+    ("Msgid", "msgid"), ("Message", "message"),
+)
+_PB_INT = ((1, "priority"), (2, "facility"), (3, "severity"), (4, "version"))
+_PB_STR = ((7, "hostname"), (8, "appname"), (9, "procid"), (10, "msgid"),
+           (11, "structured"), (12, "message"))
+
+
+def _source_rows(df, encoded):
+    """Collect the encoder's output next to the columns it reads: times
+    as UTC epoch micros, properties through Spark's own from_json (a
+    null inner map or value reads back as empty)."""
+    props = F.to_json(
+        F.from_json("properties_json", "map<string,map<string,string>>")
+    )
+    return df.select(
+        "*",
+        F.unix_micros(F.col("time_reported").cast("timestamp")).alias("_tr"),
+        F.unix_micros(F.col("time_generated").cast("timestamp")).alias("_tg"),
+        props.alias("_props"),
+        encoded.alias("_enc"),
+    ).collect()
+
+
+def _expect_props(r) -> dict:
+    if r._props is None:
+        return {}
+    return {
+        k: {k2: v2 or "" for k2, v2 in (inner or {}).items()}
+        for k, inner in json.loads(r._props).items()
+    }
+
+
+def _expect_avro(r) -> dict:
+    rec = {f: r[c] or "" for f, c in _SYSLOG_STR}
+    rec["TimeReported"] = _rfc3339nano_expected(_utc(r._tr))
+    rec["TimeGenerated"] = _rfc3339nano_expected(_utc(r._tg))
+    rec["Properties"] = _expect_props(r)
+    return rec
+
+
+def _expect_fullavro(r) -> dict:
+    return {
+        "ClientAddr": r.client_addr or "", "SourceType": r.source_type or "",
+        "SourcePath": r.source_path or "", "SourcePort": r.source_port or 0,
+        "Uid": r.uid or "", "Fields": _expect_avro(r),
+    }
+
+
+def _expect_pb(r) -> dict:
+    rec: dict = {f: r[c] for f, c in _PB_INT if r[c]}
+    for f, us in ((5, r._tr), (6, r._tg)):
+        if us:  # int64 UnixNano, two's complement on the wire
+            rec[f] = (us * 1000) % (1 << 64)
+    rec.update({f: r[c] for f, c in _PB_STR if r[c]})
+    rec["properties"] = _expect_props(r)
+    return rec
+
+
+def _check_frame(df, name: str, key: str = "turn_idx") -> None:
+    read, expect = {
+        "avro": (read_avro, _expect_avro),
+        "fullavro": (read_avro_full, _expect_fullavro),
+        "protobuf": (read_pb_syslog, _expect_pb),
+    }[name]
+    rows = _source_rows(df, ENCODERS[name]())
+    assert rows, "empty frame"
+    for r in rows:
+        assert read(bytes(r._enc)) == expect(r), (r[key], bytes(r._enc).hex())
 
 
 # ---------------------------------------------------------------------------
@@ -188,16 +304,83 @@ def _rows(frame, col):
     }
 
 
+@pytest.fixture(scope="module")
+def routed(spark):
+    """The sf0.001 routed fixture: every producer shape and every
+    degradation branch of parse/enrich."""
+    import __spark_entry__ as entry
+
+    return entry._routed_events(spark, SF)
+
+
+@pytest.fixture(scope="module")
+def enveloped(routed):
+    return (
+        routed.withColumn(
+            "client_addr",
+            F.format_string(
+                "10.0.0.%d:%d",
+                F.pmod(F.col("conv_id").cast("long"), F.lit(200)),
+                F.lit(40000) + F.pmod(F.col("turn_idx"), F.lit(1000)),
+            ),
+        )
+        .withColumn("source_type", F.lit("tcp"))
+        .withColumn("source_path", F.lit(""))
+        .withColumn("source_port", F.lit(1514))
+    )
+
+
+@pytest.fixture(scope="module")
+def adversarial(spark):
+    """Nulls everywhere, unicode, empty strings, sub-second, pre-epoch
+    and year-2262 timestamps, nested/empty/null/invalid properties."""
+    rows = [
+        # (turn_idx, pri, fac, sev, ver, t_rep, t_gen, host, app, procid,
+        #  msgid, structured, message, properties_json)
+        (1, 0, 0, 0, 0, None, None, "", "", "", "", "", "", None),
+        (2, 191, 23, 7, 1, "2024-01-10 01:02:03", "2024-01-10 01:02:03.5",
+         "höst✓", "äpp", "p1", "MSG01", '[meta k="v"]', "msg é" * 10,
+         '{"meta":{"k":"v"},"z":{"b":"2","a":"1"}}'),
+        (3, 5, None, None, None, "1969-12-31 23:59:59.999999", None,
+         None, "a", None, "m", None, "x", '{"empty":{}}'),
+        (4, 2**31 - 1, 1, 1, 1, "2024-06-05 12:13:14.000001",
+         "2262-04-11 23:47:16", "h", "", "p", "", "", "",
+         '{"outer":null}'),
+        (5, 1, 1, 1, 1, "2024-01-01 00:00:00", "2024-01-01 00:00:00",
+         "h", "a", "p", "m", "s", "m", "not json at all"),
+        (6, 1, 1, 1, 1, "2024-01-01 00:00:00", "2024-01-01 00:00:00",
+         "h", "a", "p", "m", "s", "m", '{"k":{"ü":"ß","a":"✓"}}'),
+        (7, 1, 1, 1, 1, "2024-01-01 00:00:00", "2024-01-01 00:00:00",
+         "h", "a", "p", "m", "s", "m", "{}"),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "turn_idx int, priority int, facility int, severity int, "
+        "version int, time_reported string, time_generated string, "
+        "hostname string, appname string, procid string, msgid string, "
+        "structured string, message string, properties_json string",
+    )
+    return (
+        df.withColumn("time_reported", F.col("time_reported").cast("timestamp"))
+        .withColumn("time_generated", F.col("time_generated").cast("timestamp"))
+        .withColumn("facility_name", F.coalesce("hostname", F.lit("kern")))
+        .withColumn("severity_name", F.lit("info"))
+        .withColumn("client_addr", F.lit(None).cast("string"))
+        .withColumn("source_type", F.lit("tcp"))
+        .withColumn("source_path", F.lit(""))
+        .withColumn("source_port", F.lit(0))
+        .withColumn("uid", F.sha2(F.col("turn_idx").cast("string"), 256))
+    )
+
+
 # ---------------------------------------------------------------------------
 # golden vectors (hand-derived from the Avro/proto3 specs)
 # ---------------------------------------------------------------------------
 
 def test_avro_golden(frame):
-    enc = _rows(frame, encode_avro())
+    enc = _rows(frame, ENCODERS["avro"]())
     # row 1 decoded by the independent reader
-    rec, used = read_avro_syslog(bytes(enc[1]))
-    assert used == len(enc[1])
-    assert rec == {
+    assert read_avro(bytes(enc[1])) == {
         "Facility": "kern", "Severity": "err",
         "TimeReported": "2024-01-01T01:45:40Z",
         "TimeGenerated": "2024-01-01T01:45:40.167754Z",
@@ -207,14 +390,14 @@ def test_avro_golden(frame):
     }
     # spot-check raw prefix: len("kern")*2=8 → 0x08 + utf8
     assert bytes(enc[1]).hex().startswith("086b65726e0665727228")
-    rec2, _ = read_avro_syslog(bytes(enc[2]))
+    rec2 = read_avro(bytes(enc[2]))
     assert rec2["Properties"] == {}
     assert rec2["TimeGenerated"] == "2024-03-01T00:00:00.5Z"
     assert rec2["Hostname"] == ""
 
 
 def test_fullavro_golden(frame):
-    enc = _rows(frame, encode_fullavro())
+    enc = _rows(frame, ENCODERS["fullavro"]())
     rec = read_avro_full(bytes(enc[1]))
     assert rec["ClientAddr"] == "10.0.0.1:5000"
     assert rec["SourceType"] == "tcp"
@@ -227,7 +410,7 @@ def test_fullavro_golden(frame):
 
 
 def test_jsonavro_golden(frame):
-    enc = _rows(frame, encode_jsonavro())
+    enc = _rows(frame, ENCODERS["jsonavro"]())
     d = json.loads(enc[1])
     assert list(d) == [
         "Facility", "Severity", "TimeReported", "TimeGenerated",
@@ -237,7 +420,7 @@ def test_jsonavro_golden(frame):
     d2 = json.loads(enc[2])
     assert d2["Properties"] == {} and d2["Hostname"] == ""
 
-    full = _rows(frame, encode_fulljsonavro())
+    full = _rows(frame, ENCODERS["fulljsonavro"]())
     fd = json.loads(full[1])
     assert list(fd) == [
         "ClientAddr", "SourceType", "SourcePath", "SourcePort", "Uid", "Fields",
@@ -246,7 +429,7 @@ def test_jsonavro_golden(frame):
 
 
 def test_protobuf_golden(frame):
-    enc = _rows(frame, encode_protobuf())
+    enc = _rows(frame, ENCODERS["protobuf"]())
     rec = read_pb_syslog(bytes(enc[1]))
     ns_reported = rec[5]
     assert ns_reported == 1704073540 * 10**9
@@ -266,7 +449,7 @@ def test_protobuf_roundtrip(frame):
     from skewer_spark.operators.decode_protobuf import parse_protobuf
 
     out = (
-        frame.select("event_id", encode_protobuf().alias("pb"))
+        frame.select("event_id", ENCODERS["protobuf"]().alias("pb"))
         .select("event_id", parse_protobuf("pb").alias("d"))
         .collect()
     )
@@ -288,245 +471,125 @@ def test_protobuf_roundtrip(frame):
     assert bad[0].d.hostname is None
 
 
-def test_protobuf_descriptor_set_well_formed():
-    """The hand-encoded FileDescriptorSet (jar fast path) must parse as
-    valid descriptor.proto wire bytes — walked here with an independent
-    minimal reader, not the module's own helpers."""
-    from skewer_spark.operators.decode_protobuf import syslog_descriptor_set
-
-    def rd_varint(b, i):
-        out = s = 0
-        while True:
-            out |= (b[i] & 0x7F) << s
-            i += 1
-            if b[i - 1] < 0x80:
-                return out, i
-            s += 7
-
-    def fields_of(b):
-        i, out = 0, []
-        while i < len(b):
-            tag, i = rd_varint(b, i)
-            num, wire = tag >> 3, tag & 7
-            if wire == 2:
-                n, i = rd_varint(b, i)
-                out.append((num, b[i:i + n]))
-                i += n
-            elif wire == 0:
-                v, i = rd_varint(b, i)
-                out.append((num, v))
-            else:
-                raise AssertionError(f"unexpected wire {wire}")
-        return out
-
-    fds = fields_of(syslog_descriptor_set())
-    assert [n for n, _ in fds] == [1]                      # one file
-    fdp = fields_of(fds[0][1])
-    assert dict(fdp)[2] == b"skw"                          # package
-    assert dict(fdp)[12] == b"proto3"
-    msgs = [fields_of(v) for n, v in fdp if n == 4]
-    names = [dict(m)[1] for m in msgs]
-    assert names == [b"SyslogMessage", b"InnerProperties", b"Properties"]
-    syslog, inner, props = msgs
-    flds = []
-    for n, v in syslog:
-        if n == 2:
-            f = dict(fields_of(v))
-            flds.append((f[1].decode(), f[3], f[5], f.get(6)))
-    # 1-4 int32(5), 5-6 int64(3), 7-12 string(9), 13 message(11)
-    assert [x[1] for x in flds] == list(range(1, 14))
-    assert [x[2] for x in flds] == [5] * 4 + [3] * 2 + [9] * 6 + [11]
-    # field 13 points at the Properties WRAPPER message, not a flat map
-    # (the reference nests the map one message deep, types.proto:15-17,
-    # and the module's own encoder/decoder emit exactly that layout)
-    assert flds[12][3] == b".skw.Properties"
-    assert not [v for n, v in syslog if n == 3]            # no nested types
-    # Properties.map = repeated .skw.Properties.MapEntry (label 3)
-    pf = dict(fields_of([v for n, v in props if n == 2][0]))
-    assert (pf[1], pf[4], pf[5], pf[6]) == (
-        b"map", 3, 11, b".skw.Properties.MapEntry")
-    # both synthetic map-entry messages carry MessageOptions.map_entry,
-    # and MapEntry.value is an InnerProperties message
-    for msg in (props, inner):
-        (entry,) = [fields_of(v) for n, v in msg if n == 3]
-        assert fields_of(dict(entry)[7]) == [(7, 1)]
-        if msg is props:
-            val = dict(fields_of([v for n, v in entry if n == 2][1]))
-            assert (val[1], val[6]) == (b"value", b".skw.InnerProperties")
-
-
-def test_parse_protobuf_jvm_path_parity(frame):
-    """VERDICT r02 #6: whichever decode path is available must produce
-    the same schema and values.  The spark-protobuf jar is absent in
-    this container, so the auto path must select the Python reader; on
-    a jar-equipped cluster the JVM branch runs and this test compares
-    both paths row-for-row."""
-    from skewer_spark.operators.decode_protobuf import (
-        parse_protobuf,
-        parse_protobuf_jvm,
-        protobuf_jar_available,
-    )
-
-    spark = frame.sparkSession
-    enc = frame.select("event_id", encode_protobuf().alias("pb"))
-    if not protobuf_jar_available(spark):
-        import pytest
-        pytest.skip("spark-protobuf jar not on classpath (documented swap)")
-    py = {r.event_id: r.d.asDict() for r in enc.select(
-        "event_id", parse_protobuf("pb").alias("d")).collect()}
-    jvm = {r.event_id: r.d.asDict() for r in enc.select(
-        "event_id", parse_protobuf_jvm("pb").alias("d")).collect()}
-    assert set(py) == set(jvm)
-    for k in py:
-        p, j = py[k], jvm[k]
-        # properties_json may differ in unicode escaping — compare parsed
-        assert json.loads(p.pop("properties_json") or "{}") == json.loads(
-            j.pop("properties_json") or "{}")
-        assert p == j
-
-
-def test_encode_protobuf_jvm_consistency(frame):
-    """VERDICT r02 #6 (encode side): on a jar-equipped cluster,
-    ``to_protobuf`` over the hand-built descriptor must produce bytes
-    the first-principles Python reader decodes to the same values as
-    the pure-expression encoder's bytes — cross-validating descriptor,
-    expression encoder, and wire reader against each other."""
-    from skewer_spark.operators.decode_protobuf import (
-        encode_protobuf_jvm,
-        parse_protobuf,
-        protobuf_jar_available,
-    )
-
-    spark = frame.sparkSession
-    if not protobuf_jar_available(spark):
-        import pytest
-        pytest.skip("spark-protobuf jar not on classpath (documented swap)")
-    both = frame.select(
-        "event_id",
-        parse_protobuf(encode_protobuf(), allow_jvm=False).alias("expr"),
-        parse_protobuf(encode_protobuf_jvm(), allow_jvm=False).alias("jvm"),
-    ).collect()
-    for r in both:
-        assert r.expr.asDict() == r.jvm.asDict(), r.event_id
-
-
-def test_varint_primitives(spark):
-    vals = [0, 1, 127, 128, 300, 16383, 16384, 1704073540 * 10**9]
-    df = spark.createDataFrame([(v,) for v in vals], "v long")
-    out = df.select("v", F.hex(uvarint(F.col("v"))).alias("h"),
-                    F.hex(uvarint(zigzag(F.col("v")))).alias("z")).collect()
-    for r in out:
-        # independent LEB128
-        n, b = r.v, bytearray()
-        while True:
-            x = n & 0x7F
-            n >>= 7
-            b.append(x | 0x80 if n else x)
-            if not n:
-                break
-        assert r.h.lower() == bytes(b).hex()
-        u, _ = read_uvarint(bytes.fromhex(r.z), 0)
-        assert (u >> 1) ^ -(u & 1) == r.v
-
-
 def test_registry_complete():
     for name in ("avro", "fullavro", "jsonavro", "fulljsonavro", "protobuf"):
         assert name in ENCODERS and name in MIMETYPES
     assert MIMETYPES["protobuf"] == "application/vnd.google.protobuf"
 
 
+def test_strict_readers_reject_alternative_encodings():
+    """The readers must refuse every other valid-by-spec encoding of
+    the same values, or a used == len check would not pin the bytes."""
+    assert read_uvarint(b"\x80\x01", 0) == (128, 2)
+    with pytest.raises(AssertionError):
+        read_uvarint(b"\x81\x00", 0)  # 1 padded to two bytes
+    # {"a": {}, "b": {}} as two one-entry blocks / keys descending /
+    # a negative-count block with its byte size
+    for bad in (
+        b"\x02\x02a\x00\x02\x02b\x00\x00",
+        b"\x04\x02b\x00\x02a\x00\x00",
+        b"\x03\x08\x02a\x00\x02b\x00\x00",
+    ):
+        with pytest.raises(AssertionError):
+            read_avro_map(
+                bad, 0, lambda bb, j: read_avro_map(bb, j, read_avro_str)
+            )
+    assert read_pb_syslog(b"\x08\x01\x6a\x00") == {1: 1, "properties": {}}
+    for bad in (
+        b"\x6a\x00\x08\x01",      # fields out of order
+        b"\x08\x00\x6a\x00",      # present zero varint
+        b"\x3a\x00\x6a\x00",      # present empty string
+        b"\x08\x01",              # properties message missing
+        b"\x08\x81\x00\x6a\x00",  # non-minimal varint
+    ):
+        with pytest.raises(AssertionError):
+            read_pb_syslog(bad)
+
+
 # ---------------------------------------------------------------------------
-# spark-avro JVM fast path (VERDICT r3 #3): parity on whichever path the
-# deployment has.  Without the external spark-avro jar (this sandbox),
-# encode_avro_auto must resolve to the pure-expression encoder — the
-# test then pins that selection AND that the auto column is byte-equal
-# to the pure one.  With the jar, the same assertions become the real
-# JVM-vs-pure byte-parity check, plus a from_avro roundtrip.
+# whole frames: every row decoded by the strict readers must equal the
+# record derived from the frame's own columns
 # ---------------------------------------------------------------------------
 
-def test_avro_auto_byte_parity_whichever_path(frame, spark):
-    from skewer_spark.sinks.wire import (
-        avro_jar_available,
-        encode_avro_auto,
+def test_protobuf_fixture_frame(routed):
+    _check_frame(routed, "protobuf")
+
+
+def test_avro_fixture_frame(routed):
+    _check_frame(routed, "avro")
+
+
+def test_fullavro_fixture_frame(enveloped):
+    _check_frame(enveloped, "fullavro")
+
+
+def test_protobuf_adversarial_frame(adversarial):
+    _check_frame(adversarial, "protobuf")
+
+
+def test_avro_adversarial_frame(adversarial):
+    _check_frame(adversarial, "avro")
+
+
+def test_fullavro_adversarial_frame(adversarial):
+    _check_frame(adversarial, "fullavro")
+
+
+_VARINT_BOUNDARIES = [0, 1, 127, 128, 300, 16383, 16384, 1704073540 * 10**9]
+
+
+def test_varint_boundary_values(spark):
+    """Varint widths at every 7-bit boundary the data can reach:
+    ``priority`` (protobuf uvarint) and ``source_port`` (avro zig-zag
+    long, negatives included) take the boundary values; timestamps put
+    UnixNano just below and at each 2^(7k) from 4 to 9 bytes, the
+    ns-scale boundary value, and one pre-epoch time (10 bytes)."""
+    ports = _VARINT_BOUNDARIES + [-1, -64, -65, -8192, -8193]
+    micros = [v // 1000 for v in _VARINT_BOUNDARIES[-1:]] + [-1]
+    for k in range(4, 9):
+        edge = 1 << (7 * k)
+        micros += [edge // 1000, -(-edge // 1000)]
+    n = max(len(ports), len(micros))
+    rows = [
+        (i, _VARINT_BOUNDARIES[i % len(_VARINT_BOUNDARIES)],
+         ports[i % len(ports)], micros[i % len(micros)])
+        for i in range(n)
+    ]
+    df = (
+        spark.createDataFrame(
+            rows, "turn_idx int, priority long, source_port long, us long"
+        )
+        .withColumn("time_reported", F.timestamp_micros("us"))
+        .withColumn("time_generated", F.timestamp_micros(F.col("us") + 1))
     )
-
-    has_jar = avro_jar_available(spark)
-    for full in (False, True):
-        pure = _rows(frame, encode_fullavro() if full else encode_avro())
-        auto = _rows(frame, encode_avro_auto(spark, full=full))
-        assert {k: bytes(v) for k, v in auto.items()} == {
-            k: bytes(v) for k, v in pure.items()
-        }, f"auto path (jar={has_jar}, full={full}) diverged from pure bytes"
-
-
-def test_avro_jvm_parity_and_roundtrip(frame, spark):
-    from skewer_spark.sinks.wire import (
-        FULL_AVSC,
-        avro_jar_available,
-        encode_avro_jvm,
-        encode_fullavro_jvm,
-    )
-
-    if not avro_jar_available(spark):
-        pytest.skip("spark-avro module jar not on classpath")
-    jvm = _rows(frame, encode_avro_jvm())
-    pure = _rows(frame, encode_avro())
-    assert {k: bytes(v) for k, v in jvm.items()} == {
-        k: bytes(v) for k, v in pure.items()
-    }
-    jvm_full = _rows(frame, encode_fullavro_jvm())
-    pure_full = _rows(frame, encode_fullavro())
-    assert {k: bytes(v) for k, v in jvm_full.items()} == {
-        k: bytes(v) for k, v in pure_full.items()
-    }
-    # decode the PURE bytes with the jar's from_avro: proves the pure
-    # wire format is schema-valid Avro, not merely self-consistent
-    from pyspark.sql.avro.functions import from_avro
-
-    dec = frame.select(
-        "event_id",
-        from_avro(encode_fullavro(), FULL_AVSC).alias("r"),
-    ).collect()
-    by_id = {r.event_id: r.r for r in dec}
-    assert by_id[1].Uid == "UIDX" and by_id[1].SourcePort == 1514
-    assert by_id[1].Fields.Message == "hello world"
-
-
-def test_avro_auto_selection_matches_jar_presence(frame, spark):
-    """Pin WHICH path auto picks: the compiled plan of the jar path
-    contains the avro expression node, the pure path is a concat of
-    codegen string expressions."""
-    from skewer_spark.sinks.wire import avro_jar_available, encode_avro_auto
-
-    plan = frame.select(
-        encode_avro_auto(spark).alias("enc")
-    )._jdf.queryExecution().analyzed().toString()
-    if avro_jar_available(spark):
-        assert "to_avro" in plan or "CatalystDataToAvro" in plan
-    else:
-        assert "to_avro" not in plan and "CatalystDataToAvro" not in plan
+    for c in ("facility", "severity", "version"):
+        df = df.withColumn(c, F.lit(0))
+    for c in ("facility_name", "severity_name", "hostname", "appname",
+              "procid", "msgid", "structured", "message", "properties_json",
+              "client_addr", "source_type", "source_path", "uid"):
+        df = df.withColumn(c, F.lit(None).cast("string"))
+    got = {r.turn_idx: r for r in df.select(
+        "turn_idx",
+        ENCODERS["protobuf"]().alias("pb"),
+        ENCODERS["fullavro"]().alias("fa"),
+    ).collect()}
+    for i, pri, port, us in rows:
+        rec = read_pb_syslog(bytes(got[i].pb))
+        assert rec.get(1, 0) == pri
+        assert rec.get(5, 0) == (us * 1000) % (1 << 64)
+        assert rec.get(6, 0) == ((us + 1) * 1000) % (1 << 64)
+        assert read_avro_full(bytes(got[i].fa))["SourcePort"] == port
 
 
 # ---------------------------------------------------------------------------
-# seeded fuzz: avro binary codec vs the independent spec reader (r4).
-# The golden tests pin hand-derived vectors; this drives the encoder
+# seeded fuzz: the binary codecs vs the independent spec readers (r4).
+# The golden tests pin hand-derived vectors; this drives the encoders
 # across 300 randomized records — unicode (incl. astral plane), empty
 # and NULL fields, empty/nested property maps, random timestamps — and
-# round-trips every byte through the spec-based reader above.
+# round-trips every byte through the strict readers above.
 # ---------------------------------------------------------------------------
 
-def _rfc3339nano_expected(dt) -> str:
-    """Independent re-derivation of Go time.RFC3339Nano (UTC, trailing
-    zeros trimmed from the fraction; epoch for NULL)."""
-    if dt is None:
-        return "1970-01-01T00:00:00Z"
-    frac = f"{dt.microsecond:06d}".rstrip("0")
-    base = dt.strftime("%Y-%m-%dT%H:%M:%S")
-    return base + ("." + frac if frac else "") + "Z"
-
-
 def test_avro_fuzz_roundtrip(spark):
-    import datetime
     import random
 
     rng = random.Random(0xA5_0401)
@@ -587,11 +650,12 @@ def test_avro_fuzz_roundtrip(spark):
     )
     enc = {
         r.event_id: bytes(r.enc)
-        for r in df.select("event_id", encode_avro().alias("enc")).collect()
+        for r in df.select(
+            "event_id", ENCODERS["avro"]().alias("enc")
+        ).collect()
     }
     for i, row in enumerate(rows):
-        rec, used = read_avro_syslog(enc[i])
-        assert used == len(enc[i]), f"row {i}: trailing bytes"
+        rec = read_avro(enc[i])
         expect_props = json.loads(row[8]) if row[8] is not None else {}
         assert rec["Facility"] == (row[1] or "")
         assert rec["Severity"] == (row[2] or "")
