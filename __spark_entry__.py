@@ -992,40 +992,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = _read(spark, sf, "documents")
         return dedup_substring_spans(docs, n=5)
 
-    def q_bpe_merges(spark, sf):
-        # distributed BPE tokenizer TRAINING (Sennrich et al. 2016):
-        # one corpus pass builds the word-frequency table, then each
-        # merge round is one partial-aggregable pair-count shuffle with
-        # a TakeOrdered argmax — the corpus is never touched again
-        from skewer_spark.operators.tokenizer import (
-            bpe_train, merges_frame, word_frequency,
-        )
-        docs = _read(spark, sf, "documents")
-        merges, final = bpe_train(word_frequency(docs), num_merges=4)
-        final.unpersist()
-        return merges_frame(spark, merges)
-
-    def q_bpe_apply(spark, sf):
-        # large-vocab BPE APPLY path: Arrow-batched pandas encoder with
-        # a per-worker word memo (Zipfian hit rate), training-order
-        # merge semantics identical to the JVM expression path (parity
-        # pinned by test); fixed 4-merge list so the oracle can mirror
-        # the double-space replace chain exactly
-        from skewer_spark.operators.tokenizer import apply_bpe_pandas
-        docs = _read(spark, sf, "documents")
-        merges = [
-            {"step": 1, "lhs": "t", "rhs": "h", "pair_count": 0},
-            {"step": 2, "lhs": "th", "rhs": "e", "pair_count": 0},
-            {"step": 3, "lhs": "i", "rhs": "n", "pair_count": 0},
-            {"step": 4, "lhs": "a", "rhs": "n", "pair_count": 0},
-        ]
-        toks = apply_bpe_pandas(docs.select("doc_id", "text"), merges)
-        return toks.select(
-            "doc_id",
-            F.size("tokens").cast("bigint").alias("n_tokens"),
-            F.concat_ws("|", F.slice("tokens", 1, 12)).alias("head_tokens"),
-        )
-
     def q_zorder(spark, sf):
         # Morton (Z-order) layout key over (n_chars, doc_id): the
         # multi-column file-pruning sort key (Delta OPTIMIZE ZORDER /
@@ -1346,57 +1312,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .groupBy("quality").agg(F.count("*").alias("n"))
         )
 
-    def q_pii_redact(spark, sf):
-        # PII scrub: lines with known-shape email/IP/card/phone built
-        # from event fields; the operator redacts + counts per class
-        from skewer_spark.functions.scrub import pii_counts, redact_pii
-        ev = _read(spark, sf, "events")
-        line = F.format_string(
-            "user u%d@example.org at %d.%d.%d.%d card 4111111111%06d "
-            "tel +3361234%04d note %s",
-            F.pmod(F.col("user_id"), F.lit(50)),
-            F.pmod(F.col("event_id"), F.lit(223)) + 1,
-            F.pmod(F.col("event_id"), F.lit(250)),
-            F.pmod(F.col("user_id"), F.lit(250)),
-            F.pmod(F.col("event_id"), F.lit(254)) + 1,
-            F.pmod(F.col("event_id"), F.lit(1000000)),
-            F.pmod(F.col("event_id"), F.lit(10000)),
-            F.col("event_type"),
-        )
-        src = ev.select("event_id", line.alias("text"))
-        return src.select("event_id", redact_pii().alias("redacted"), *pii_counts())
-
-    def q_repetition(spark, sf):
-        # Gopher-style repetition quality gates (Rae et al. 2021 A1)
-        from skewer_spark.functions.scrub import (
-            dup_ngram_ratio,
-            dup_word_ratio,
-            top_word_ratio,
-        )
-        docs = _read(spark, sf, "documents")
-        return docs.select(
-            "doc_id",
-            dup_word_ratio().alias("dup_word_frac"),
-            top_word_ratio().alias("top_word_frac"),
-            dup_ngram_ratio(n=2).alias("dup_2gram_frac"),
-        )
-
-    def q_decontam(spark, sf):
-        # benchmark decontamination: docs ≡ 0 (mod 10) act as the eval
-        # set; the rest get 3-gram overlap fraction + contaminated flag
-        from skewer_spark.operators.decontaminate import contamination_report
-        docs = _read(spark, sf, "documents")
-        bench = docs.filter(F.col("doc_id") % 10 == 0)
-        rest = docs.filter(F.col("doc_id") % 10 != 0)
-        rep = contamination_report(rest, bench, n=3, threshold=0.1)
-        return rep.select(
-            "doc_id",
-            F.col("n_shingles").cast("long").alias("n_shingles"),
-            F.col("n_matched").cast("long").alias("n_matched"),
-            "overlap_frac",
-            "contaminated",
-        )
-
     def q_asof_enrich(spark, sf):
         # as-of join: enrich each event with the config version active
         # at its timestamp (configs = every 23rd event, keyed by user)
@@ -1497,23 +1412,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("ts"),
         )
         return conv_stats(turns)
-
-    def q_pagerank(spark, sf):
-        # damped PageRank (3 iterations, uniform dangling
-        # redistribution) over a deterministic bipartite-ish link
-        # graph derived from events: every event links its user to a
-        # synthetic hub u<event_id%97>; every 3rd event links back
-        from skewer_spark.operators.graph import pagerank
-        ev = _read(spark, sf, "events")
-        hub = F.concat(
-            F.lit("u"), F.pmod(F.col("event_id"), F.lit(97)).cast("string")
-        )
-        uid = F.col("user_id").cast("string")
-        fwd = ev.select(uid.alias("src"), hub.alias("dst"))
-        back = ev.filter(F.col("event_id") % 3 == 0).select(
-            hub.alias("src"), uid.alias("dst")
-        )
-        return pagerank(fwd.union(back), iters=3)
 
     def q_rate_anomaly(spark, sf):
         # robust windowed rate anomaly (Iglewicz–Hoaglin modified
@@ -1870,40 +1768,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         urls = ev.select(F.col("event_id").alias("doc_id"), url.alias("url"))
         return url_dedup(urls)
 
-    def q_kanon(spark, sf):
-        # k-anonymity / l-diversity re-identification audit over a
-        # quasi-identifier pair (event_type × user bucket) with a
-        # floor-bucketed sensitive value — the governance gate that
-        # runs AFTER redact_pii removes direct identifiers.  Group
-        # frame is compact (|QI combos| rows); the corpus shuffles as
-        # key columns only.
-        from skewer_spark.operators.privacy import qi_group_audit
-        ev = _read(spark, sf, "events")
-        qi = ev.select(
-            "event_type",
-            (F.col("user_id") % 20).alias("user_bucket"),
-            (F.floor("value").cast("long") % 5).alias("value_band"),
-        )
-        return qi_group_audit(
-            qi, ["event_type", "user_bucket"], "value_band", k=5, l=3
-        )
-
-    def q_label_agg(spark, sf):
-        # annotation majority vote + agreement (the RLHF label-curation
-        # reduce): items get ~40 votes each from 7 annotators; winning
-        # label by (count DESC, label ASC) — the deterministic
-        # tie-break both engines replay exactly.
-        from skewer_spark.operators.labels import majority_labels
-        ev = _read(spark, sf, "events")
-        votes = ev.select(
-            (F.col("event_id") % 250).alias("item_id"),
-            F.concat(F.lit("ann"), (F.col("user_id") % 7).cast("string")).alias(
-                "annotator_id"
-            ),
-            F.col("event_type").alias("label"),
-        )
-        return majority_labels(votes)
-
     def q_rand_proj(spark, sf):
         # Johnson–Lindenstrauss random projection 64-d -> 8-d with
         # md5-drawn integer planes (engine-replicable); exploded to
@@ -2107,27 +1971,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ev.select("event_id", "value"), "value", p_lo=0.01, p_hi=0.99
         )
 
-    def q_logreg(spark, sf):
-        # distributed logistic-regression training, audited: 2 exact
-        # integer-quantized batch-GD steps from zero weights over
-        # 4-dim embedding features — bit-reproducible under any
-        # partitioning (the kmeans_update contract), mirrored by an
-        # unrolled DuckDB replay (the q_pagerank pattern for
-        # iterative ops).
-        from skewer_spark.operators.train import (
-            logreg_gradient_step,
-            weights_frame,
-        )
-        emb = _read(spark, sf, "embeddings")
-        df = emb.select(
-            F.slice(F.col("embedding"), F.lit(1), F.lit(4)).alias("features"),
-            (F.col("vec_id") % 3 == 0).cast("int").alias("label"),
-        )
-        w = [0.0] * 4
-        for _ in range(2):
-            w = logreg_gradient_step(df, w, lr=0.5)
-        return weights_frame(spark, w)
-
     def q_threads(spark, sf):
         # agent-trace threading over a transcript shape derived from
         # events (click/view=user, signup/purchase=assistant,
@@ -2267,22 +2110,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return transition_matrix(
             ev, key="user_id", order_col="event_id", state_col="event_type"
         )
-
-    def q_tree_depth(spark, sf):
-        # pointer-doubling forest resolution: every node's root and
-        # depth in O(log depth) self-joins; parents form 8 binary
-        # trees (ids < 8 are roots, parent = id DIV 2 otherwise), so
-        # depth ~ log2(n) and the DuckDB recursive-CTE oracle walks
-        # the same forest one hop at a time.
-        from skewer_spark.operators.graph import tree_root_depth
-        ev = _read(spark, sf, "events")
-        nodes = ev.select(
-            F.col("event_id").alias("id"),
-            F.when(F.col("event_id") < 8, F.lit(None).cast("bigint"))
-            .otherwise(F.expr("event_id DIV 2"))
-            .alias("parent"),
-        )
-        return tree_root_depth(nodes)
 
     def q_range_bounds(spark, sf):
         # range-partitioner planning: exact 8-way percentile cuts on
@@ -2495,31 +2322,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             k=10,
         )
 
-    def q_calibration(spark, sf):
-        # reliability-curve bins for a [0,1] score; dyadic scores
-        # (k/1024) make every sum exact regardless of add order
-        from skewer_spark.operators.train import calibration_bins
-        ev = _read(spark, sf, "events")
-        scored = ev.select(
-            ((F.col("event_id") % 1024) / F.lit(1024.0)).alias("score"),
-            F.when(F.col("event_id") % 3 == 0, F.lit(1.0))
-            .otherwise(F.lit(0.0))
-            .alias("label"),
-        )
-        return calibration_bins(scored, "score", "label", n_bins=10)
-
-    def q_triangles(spark, sf):
-        # degree-ordered triangle counting over a 61-node residue
-        # graph — every triangle materializes once, wedges bounded
-        # O(m^1.5) by orientation.
-        from skewer_spark.operators.graph import triangle_counts
-        ev = _read(spark, sf, "events")
-        edges = ev.select(
-            (F.col("event_id") % 61).alias("src"),
-            (F.expr("event_id DIV 61") % 61).alias("dst"),
-        )
-        return triangle_counts(edges)
-
     def q_hot_ngrams(spark, sf):
         # corpus-level repeated-n-gram excision signal (C4-style):
         # an n-gram is hot when >= 2 distinct docs contain it; int64
@@ -2578,14 +2380,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             docs.select(F.col("lang").alias("corpus"), "text"),
             n_hashes=16,
         )
-
-    def q_dp_counts(spark, sf):
-        # epsilon-DP released per-type event counts: Laplace(1/eps)
-        # noise drawn deterministically from md5(salt||key) so the
-        # release is rerun-stable and engine-replicable
-        from skewer_spark.operators.privacy import dp_counts
-        ev = _read(spark, sf, "events")
-        return dp_counts(ev, ["event_type"], epsilon=1.0)
 
     def q_retrieval_eval(spark, sf):
         # distributed retrieval-evaluation: recall@10 / MRR@10 /
@@ -2657,20 +2451,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_parse_protobuf": q_parse_protobuf,
         "q_hybrid_search": q_hybrid_search,
         "q_sketch_distinct": q_sketch_distinct,
-        "q_bpe_merges": q_bpe_merges,
         "q_minhash_lsh": q_minhash_lsh,
         "q_kmeans": q_kmeans,
         "q_setsim_exact": q_setsim_exact,
         "q_semdedup": q_semdedup,
         "q_ivf_topk": q_ivf_topk,
-        "q_tree_depth": q_tree_depth,
         "q_text_stats": q_text_stats,
         "q_dedup_substr": q_dedup_substr,
         "q_incr_dedup": q_incr_dedup,
         "q_json_schema": q_json_schema,
-        "q_pii_redact": q_pii_redact,
-        "q_repetition": q_repetition,
-        "q_bpe_apply": q_bpe_apply,
         "q_conv_stats": q_conv_stats,
         "q_encode_rfc3164": q_encode_rfc3164,
         "q_encode_gelf": q_encode_gelf,
@@ -2691,7 +2480,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_topk_group": q_topk_group,
         "q_char_entropy": q_char_entropy,
         "q_seq_ngrams": q_seq_ngrams,
-        "q_dp_counts": q_dp_counts,
         "q_tpch_q1": q_tpch_q1,
         "q_simhash_pairs": q_simhash_pairs,
         "q_embed_neardup": q_embed_neardup,
@@ -2719,7 +2507,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_bloom_decontam": q_bloom_decontam,
         "q_bm25_search": q_bm25_search,
         "q_bucketed_join": q_bucketed_join,
-        "q_calibration": q_calibration,
         "q_cms_heavy": q_cms_heavy,
         "q_cohort": q_cohort,
         "q_compaction": q_compaction,
@@ -2730,10 +2517,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_hot_ngrams": q_hot_ngrams,
         "q_html_text": q_html_text,
         "q_json_drift": q_json_drift,
-        "q_kanon": q_kanon,
         "q_key_skew": q_key_skew,
-        "q_label_agg": q_label_agg,
-        "q_logreg": q_logreg,
         "q_orphan_files": q_orphan_files,
         "q_pmi": q_pmi,
         "q_psi": q_psi,
@@ -2750,11 +2534,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_sq8_topk": q_sq8_topk,
         "q_time_rollup": q_time_rollup,
         "q_trend": q_trend,
-        "q_triangles": q_triangles,
         "q_validate": q_validate,
         "q_zonemap": q_zonemap,
         "q_zorder": q_zorder,
-        "q_decontam": q_decontam,
         "q_sft_pairs": q_sft_pairs,
         "q_asof_enrich": q_asof_enrich,
         "q_session_agg": q_session_agg,
@@ -2764,7 +2546,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_line_dedup": q_line_dedup,
         "q_url_canon": q_url_canon,
         "q_rate_anomaly": q_rate_anomaly,
-        "q_pagerank": q_pagerank,
     }
 
 
@@ -3386,97 +3167,6 @@ def oracle_sql() -> dict[str, str]:
                    least(doc.doc_id, coalesce(c.min_reach, doc.doc_id))::BIGINT
                      AS cluster_id
             FROM documents doc LEFT JOIN comp c ON c.s = doc.doc_id
-    """
-
-    # damped PageRank, 3 iterations unrolled (no recursive aggregates
-    # in a recursive CTE): each round mirrors operators/graph.pagerank
-    # operand-for-operand — contrib sum, dangling mass, then
-    # (1.0 - 0.85)/N + 0.85 * (s_in + dm/N) — so doubles agree up to
-    # summation order; only the final rank rounds to 6 dp.
-    _pr_rounds = []
-    _prev = "r0"
-    for _i in (1, 2, 3):
-        _pr_rounds.append(f"""
-            c{_i} AS (
-              SELECT e.t AS id, sum({_prev}.rank / od.od) AS s_in
-              FROM e JOIN od USING (s) JOIN {_prev} ON e.s = {_prev}.id
-              GROUP BY e.t
-            ), d{_i} AS (
-              SELECT coalesce(sum(r.rank), 0.0) AS dm
-              FROM {_prev} r LEFT JOIN od ON r.id = od.s
-              WHERE od.s IS NULL
-            ), r{_i} AS (
-              SELECT nodes.id,
-                     (1.0 - 0.85) / nn.n
-                       + 0.85 * (coalesce(c.s_in, 0.0) + d.dm / nn.n)
-                       AS rank
-              FROM nodes CROSS JOIN nn CROSS JOIN d{_i} d
-              LEFT JOIN c{_i} c ON nodes.id = c.id
-            )""")
-        _prev = f"r{_i}"
-    # BPE training unrolled: each step = adjacent-pair count + argmax
-    # (count DESC, lhs, rhs) + literal replace-merge — the exact loop
-    # bpe_train runs, expressed as chained CTEs (the pagerank pattern)
-    _bpe_steps = []
-    for _s in range(1, 5):
-        _bpe_steps.append(f"""
-            p{_s} AS (
-              SELECT syms[g] AS lhs, syms[g+1] AS rhs,
-                     SUM(cnt)::BIGINT AS pc
-              FROM (SELECT string_split(trim(sym), '  ') AS syms, cnt
-                    FROM w{_s - 1}) t,
-                   UNNEST(generate_series(1, len(syms) - 1)) AS u(g)
-              GROUP BY 1, 2
-            ), b{_s} AS (
-              SELECT {_s}::INT AS step, lhs, rhs, pc FROM p{_s}
-              ORDER BY pc DESC, lhs, rhs LIMIT 1
-            ), w{_s} AS (
-              SELECT replace(sym, ' '||lhs||'  '||rhs||' ',
-                             ' '||lhs||rhs||' ') AS sym, cnt
-              FROM w{_s - 1} CROSS JOIN b{_s}
-            )""")
-    _bpe_heads = " UNION ALL ".join(
-        f"SELECT step, lhs, rhs, pc AS pair_count FROM b{_s}"
-        for _s in range(1, 5)
-    )
-    bpe_merges_sql = f"""
-            WITH w0 AS (
-              -- double-space symbol separators: the ' l  r ' merge
-              -- pattern leaves one boundary space for the adjacent
-              -- match, giving canonical greedy-left BPE on runs
-              SELECT '  ' || regexp_replace(word, '(.)', '\\1  ', 'g')
-                       AS sym,
-                     COUNT(*)::BIGINT AS cnt
-              FROM (SELECT unnest(string_split_regex(text, '\\s+'))
-                       AS word FROM documents)
-              WHERE word <> '' GROUP BY word
-            ),{",".join(_bpe_steps)}
-            {_bpe_heads}
-    """
-
-    pagerank_sql = f"""
-            WITH e0 AS (
-              SELECT user_id::VARCHAR AS s,
-                     'u' || (event_id % 97)::VARCHAR AS t
-              FROM events
-              UNION ALL
-              SELECT 'u' || (event_id % 97)::VARCHAR AS s,
-                     user_id::VARCHAR AS t
-              FROM events WHERE event_id % 3 = 0
-            ), e AS (
-              SELECT DISTINCT s, t FROM e0
-              WHERE s IS NOT NULL AND t IS NOT NULL
-            ), nodes AS (
-              SELECT DISTINCT id
-              FROM (SELECT s AS id FROM e UNION ALL SELECT t FROM e)
-            ), nn AS (
-              SELECT count(*)::BIGINT AS n FROM nodes
-            ), od AS (
-              SELECT s, count(*)::BIGINT AS od FROM e GROUP BY s
-            ), r0 AS (
-              SELECT id, 1.0 / nn.n AS rank FROM nodes CROSS JOIN nn
-            ),{",".join(_pr_rounds)}
-            SELECT id AS node, round(rank, 6) AS rank FROM {_prev}
     """
 
     return {
@@ -4170,87 +3860,6 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT round(raw, 4) AS quality, count(*) AS n FROM q GROUP BY 1
         """,
-        "q_pii_redact": r"""
-            WITH src AS (
-              SELECT event_id,
-                'user u' || (user_id % 50) || '@example.org at ' ||
-                (event_id % 223 + 1) || '.' || (event_id % 250) || '.' ||
-                (user_id % 250) || '.' || (event_id % 254 + 1) ||
-                ' card 4111111111' || lpad((event_id % 1000000)::VARCHAR, 6, '0') ||
-                ' tel +3361234' || lpad((event_id % 10000)::VARCHAR, 4, '0') ||
-                ' note ' || event_type AS text
-              FROM events
-            ), s1 AS (
-              SELECT *, regexp_replace(text,
-                '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                '<EMAIL>', 'g') AS t1 FROM src
-            ), s2 AS (
-              SELECT *, regexp_replace(t1,
-                '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g') AS t2 FROM s1
-            ), s3 AS (
-              SELECT *, regexp_replace(t2,
-                '\+[0-9]{7,15}\b', '<PHONE>', 'g') AS t3 FROM s2
-            )
-            SELECT event_id,
-              regexp_replace(t3, '\b[0-9]{13,16}\b', '<CARD>', 'g') AS redacted,
-              len(regexp_extract_all(text,
-                '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))::BIGINT
-                AS n_emails,
-              len(regexp_extract_all(t1,
-                '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b'))::BIGINT AS n_ips,
-              len(regexp_extract_all(t2, '\+[0-9]{7,15}\b'))::BIGINT AS n_phones,
-              len(regexp_extract_all(t3, '\b[0-9]{13,16}\b'))::BIGINT AS n_cards
-            FROM s3
-        """,
-        "q_repetition": """
-            WITH w AS (
-              SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-            ), g AS (
-              SELECT doc_id, toks,
-                list_transform(generate_series(1, greatest(len(toks) - 1, 1)),
-                  i -> array_to_string(toks[i:i+1], ' ')) AS grams
-              FROM w
-            )
-            SELECT doc_id,
-              round(1.0 - len(list_distinct(toks))::DOUBLE / len(toks), 4)
-                AS dup_word_frac,
-              round(list_max(list_transform(list_distinct(toks),
-                  w2 -> len(list_filter(toks, x -> x = w2))))::DOUBLE
-                / len(toks), 4) AS top_word_frac,
-              round(1.0 - len(list_distinct(grams))::DOUBLE / len(grams), 4)
-                AS dup_2gram_frac
-            FROM g
-        """,
-        "q_decontam": """
-            WITH w AS (
-              SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-            ), sh AS (
-              SELECT doc_id,
-                list_distinct(CASE WHEN len(toks) >= 3 THEN
-                  list_transform(generate_series(0, len(toks) - 3),
-                    i -> array_to_string(toks[i+1:i+3], ' '))
-                ELSE CAST([] AS VARCHAR[]) END) AS shingles
-              FROM w
-            ), bench AS (
-              SELECT DISTINCT unnest(shingles) AS shingle FROM sh
-              WHERE doc_id % 10 = 0
-            ), docs AS (
-              SELECT doc_id, shingles, len(shingles) AS n_shingles FROM sh
-              WHERE doc_id % 10 <> 0
-            ), m AS (
-              SELECT d.doc_id, count(*) AS n_matched
-              FROM (SELECT doc_id, unnest(shingles) AS shingle FROM docs) d
-              JOIN bench USING (shingle) GROUP BY d.doc_id
-            )
-            SELECT docs.doc_id,
-              n_shingles::BIGINT AS n_shingles,
-              coalesce(m.n_matched, 0)::BIGINT AS n_matched,
-              round(coalesce(m.n_matched, 0)::DOUBLE /
-                    greatest(n_shingles, 1), 4) AS overlap_frac,
-              (coalesce(m.n_matched, 0)::DOUBLE /
-                    greatest(n_shingles, 1)) >= 0.1 AS contaminated
-            FROM docs LEFT JOIN m ON docs.doc_id = m.doc_id
-        """,
         "q_asof_enrich": """
             WITH cfg AS (
               SELECT user_id, ts, event_id AS cfg_version FROM events
@@ -4404,35 +4013,6 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked GROUP BY doc_id
             ORDER BY rrf_score DESC, doc_id LIMIT 10
         """,
-        # the oracle replays the JVM double-space replace-chain encoding
-        # (apply_bpe's documented algebra) against the PANDAS encoder —
-        # cross-implementation parity is the point of the check
-        "q_bpe_apply": """
-            WITH w AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(text, '\\s+'),
-                                 x -> x <> '') AS words
-              FROM documents
-            ), enc AS (
-              SELECT doc_id,
-                flatten(list_transform(words, w ->
-                  list_filter(
-                    string_split(
-                      trim(
-                        replace(replace(replace(replace(
-                          '  ' || regexp_replace(w, '(.)', '\\1  ', 'g'),
-                          ' t  h ', ' th '),
-                          ' th  e ', ' the '),
-                          ' i  n ', ' in '),
-                          ' a  n ', ' an ')
-                      ), '  '),
-                    t -> t <> ''))) AS tokens
-              FROM w
-            )
-            SELECT doc_id, len(tokens)::BIGINT AS n_tokens,
-                   array_to_string(tokens[1:12], '|') AS head_tokens
-            FROM enc
-        """,
         "q_conv_stats": """
             WITH t AS (
               SELECT user_id::VARCHAR AS conv_id, event_id::INT AS turn_idx,
@@ -4457,8 +4037,6 @@ def oracle_sql() -> dict[str, str]:
                    max(length(text))::BIGINT AS max_chars
             FROM t GROUP BY conv_id
         """,
-        "q_pagerank": pagerank_sql,
-        "q_bpe_merges": bpe_merges_sql,
         "q_zorder": """
             -- Morton interleave after min/max width-bucket
             -- normalization; scale factors are computed as
@@ -5130,42 +4708,6 @@ def oracle_sql() -> dict[str, str]:
             FROM canon WHERE canon_url IS NOT NULL
             GROUP BY canon_url
         """,
-        # same QI grouping + exact distinct over the floor-bucketed
-        # sensitive band; DuckDB count(*) is BIGINT like Spark's.
-        "q_kanon": """
-            SELECT event_type,
-                   user_id % 20 AS user_bucket,
-                   count(*)::BIGINT AS group_size,
-                   count(DISTINCT floor(value)::BIGINT % 5)::BIGINT
-                     AS n_sensitive,
-                   count(*) >= 5 AS k_anonymous,
-                   count(DISTINCT floor(value)::BIGINT % 5) >= 3 AS l_diverse
-            FROM events
-            GROUP BY event_type, user_id % 20
-        """,
-        # identical vote construction; winner via QUALIFY with the
-        # (count DESC, label ASC) deterministic tie-break.
-        "q_label_agg": """
-            WITH votes AS (
-              SELECT event_id % 250 AS item,
-                     'ann' || (user_id % 7) AS annotator,
-                     event_type AS label
-              FROM events
-            ), counts AS (
-              SELECT item, label, count(*)::BIGINT AS cnt
-              FROM votes GROUP BY item, label
-            ), tot AS (
-              SELECT item, sum(cnt)::BIGINT AS n_annotations,
-                     count(*)::BIGINT AS n_labels
-              FROM counts GROUP BY item
-            )
-            SELECT c.item, t.n_annotations, t.n_labels,
-                   c.label AS majority_label, c.cnt AS majority_n,
-                   round(c.cnt::DOUBLE / t.n_annotations, 6) AS agreement
-            FROM counts c JOIN tot t USING (item)
-            QUALIFY row_number() OVER (
-              PARTITION BY c.item ORDER BY c.cnt DESC, c.label ASC) = 1
-        """,
         # identical md5-derived integer planes + the identical JL scale
         # formula; list_dot_product folds left-to-right like Spark's
         # sequential aggregate (the q_embed_neardup-proven pairing).
@@ -5578,43 +5120,6 @@ def oracle_sql() -> dict[str, str]:
               (value < lo OR value > hi) AS is_clipped
             FROM events, th
         """,
-        # unrolled 2-step replay: iter 1 from w=0 (p = 0.5 exactly, so
-        # the quantized sums are pure integers), iter 2 through the
-        # sigmoid; HALF-AWAY-FROM-ZERO rounding spelled out as
-        # floor(|v|+0.5) to pin both engines to Spark's round().
-        "q_logreg": """
-            WITH f AS (
-              SELECT list_transform(embedding[1:4], v -> v::DOUBLE) AS x,
-                     CASE WHEN vec_id % 3 = 0 THEN 1 ELSE 0 END AS y
-              FROM embeddings
-            ), n AS (SELECT count(*)::BIGINT AS cnt FROM f
-            ), c1 AS (
-              SELECT j,
-                (0.5 - y) * x[j] * 1048576.0 AS v
-              FROM f, (SELECT unnest(generate_series(1, 4)) AS j)
-            ), g1 AS (
-              SELECT j, sum(CASE WHEN v >= 0 THEN floor(v + 0.5)
-                            ELSE -floor(-v + 0.5) END)::BIGINT AS s
-              FROM c1 GROUP BY j
-            ), w1 AS (
-              SELECT j, 0.0 - 0.5 * ((s / 1048576.0) / cnt) AS w
-              FROM g1, n
-            ), lw AS (
-              SELECT list(w ORDER BY j) AS wv FROM w1
-            ), c2 AS (
-              SELECT j,
-                ((1.0 / (1.0 + exp(-list_dot_product(x, wv)))) - y)
-                  * x[j] * 1048576.0 AS v
-              FROM f, lw, (SELECT unnest(generate_series(1, 4)) AS j)
-            ), g2 AS (
-              SELECT j, sum(CASE WHEN v >= 0 THEN floor(v + 0.5)
-                            ELSE -floor(-v + 0.5) END)::BIGINT AS s
-              FROM c2 GROUP BY j
-            )
-            SELECT (w1.j - 1)::INT AS pos,
-              round(w1.w - 0.5 * ((g2.s / 1048576.0) / cnt), 6) AS weight
-            FROM w1 JOIN g2 ON w1.j = g2.j, n
-        """,
         # identical role->level map and window algebra (running
         # max-turn per level + running user count).
         "q_threads": """
@@ -5828,25 +5333,6 @@ def oracle_sql() -> dict[str, str]:
               round(n / tot::DOUBLE, 6) AS prob
             FROM p JOIN o ON p.state = o.state
         """,
-        # same forest, walked one hop at a time by the recursive CTE
-        # (the Spark side resolves it in O(log depth) doubling joins).
-        "q_tree_depth": """
-            WITH RECURSIVE t AS (
-              SELECT event_id AS id,
-                CASE WHEN event_id < 8 THEN NULL
-                     ELSE event_id // 2 END AS parent
-              FROM events
-            ), r AS (
-              SELECT id, id AS cur, 0 AS depth FROM t
-              UNION ALL
-              SELECT r.id, t2.parent AS cur, r.depth + 1
-              FROM r JOIN t t2 ON r.cur = t2.id
-              WHERE t2.parent IS NOT NULL
-            )
-            SELECT id, arg_max(cur, depth) AS root,
-              max(depth)::BIGINT AS depth
-            FROM r GROUP BY id
-        """,
         # identical exact quantile_cont boundaries (rounded 6dp) and
         # strictly-below assignment.
         "q_range_bounds": """
@@ -5965,48 +5451,6 @@ def oracle_sql() -> dict[str, str]:
               round(sum(v), 6) AS sum_v,
               min(v) AS min_v, max(v) AS max_v
             FROM k GROUP BY user_id
-        """,
-        # identical canonical-dedup, (degree, id) orientation, and
-        # two-join wedge closure.
-        "q_triangles": """
-            WITH raw AS (
-              SELECT event_id % 61 AS x, (event_id // 61) % 61 AS y
-              FROM events
-            ), und AS (
-              SELECT DISTINCT least(x, y) AS u, greatest(x, y) AS v
-              FROM raw WHERE x <> y
-            ), deg AS (
-              SELECT n, count(*)::BIGINT AS d FROM (
-                SELECT u AS n FROM und
-                UNION ALL SELECT v FROM und
-              ) GROUP BY n
-            ), o AS (
-              SELECT
-                CASE WHEN du.d < dv.d OR (du.d = dv.d AND u < v)
-                  THEN u ELSE v END AS a,
-                CASE WHEN du.d < dv.d OR (du.d = dv.d AND u < v)
-                  THEN v ELSE u END AS b
-              FROM und
-              JOIN deg du ON und.u = du.n
-              JOIN deg dv ON und.v = dv.n
-            ), t AS (
-              SELECT e1.a, e1.b, e2.b AS c
-              FROM o e1
-              JOIN o e2 ON e1.b = e2.a
-              JOIN o e3 ON e3.a = e1.a AND e3.b = e2.b
-            ), pn AS (
-              SELECT node, count(*)::BIGINT AS n_triangles FROM (
-                SELECT a AS node FROM t
-                UNION ALL SELECT b FROM t
-                UNION ALL SELECT c FROM t
-              ) GROUP BY node
-            ), tot AS (
-              SELECT count(*)::BIGINT AS total_triangles FROM t
-            )
-            SELECT deg.n AS node,
-              coalesce(n_triangles, 0)::BIGINT AS n_triangles,
-              total_triangles
-            FROM deg LEFT JOIN pn ON deg.n = pn.node, tot
         """,
         "q_cidr_enrich": """
             WITH ips AS (
@@ -6185,23 +5629,6 @@ def oracle_sql() -> dict[str, str]:
             FROM events
             QUALIFY rank <= 10
         """,
-        "q_calibration": """
-            WITH scored AS (
-              SELECT (event_id % 1024) / 1024.0 AS score,
-                CASE WHEN event_id % 3 = 0 THEN 1.0 ELSE 0.0 END AS label
-              FROM events
-            ), agg AS (
-              SELECT least(floor(score * 10)::INT, 9) AS bin,
-                count(*)::BIGINT AS n,
-                sum(score) AS ss, sum(label) AS sy
-              FROM scored GROUP BY bin
-            )
-            SELECT bin, n,
-              round(ss / n::DOUBLE, 6) AS mean_score,
-              round(sy / n::DOUBLE, 6) AS pos_rate,
-              round(sy / n::DOUBLE - ss / n::DOUBLE, 6) AS gap
-            FROM agg
-        """,
         "q_hot_ngrams": """
             WITH w AS (
               SELECT doc_id, string_split(text, ' ') AS toks
@@ -6318,20 +5745,6 @@ def oracle_sql() -> dict[str, str]:
               (CASE WHEN a.mh_0 = b.mh_0 THEN 1 ELSE 0 END + CASE WHEN a.mh_1 = b.mh_1 THEN 1 ELSE 0 END + CASE WHEN a.mh_2 = b.mh_2 THEN 1 ELSE 0 END + CASE WHEN a.mh_3 = b.mh_3 THEN 1 ELSE 0 END + CASE WHEN a.mh_4 = b.mh_4 THEN 1 ELSE 0 END + CASE WHEN a.mh_5 = b.mh_5 THEN 1 ELSE 0 END + CASE WHEN a.mh_6 = b.mh_6 THEN 1 ELSE 0 END + CASE WHEN a.mh_7 = b.mh_7 THEN 1 ELSE 0 END + CASE WHEN a.mh_8 = b.mh_8 THEN 1 ELSE 0 END + CASE WHEN a.mh_9 = b.mh_9 THEN 1 ELSE 0 END + CASE WHEN a.mh_10 = b.mh_10 THEN 1 ELSE 0 END + CASE WHEN a.mh_11 = b.mh_11 THEN 1 ELSE 0 END + CASE WHEN a.mh_12 = b.mh_12 THEN 1 ELSE 0 END + CASE WHEN a.mh_13 = b.mh_13 THEN 1 ELSE 0 END + CASE WHEN a.mh_14 = b.mh_14 THEN 1 ELSE 0 END + CASE WHEN a.mh_15 = b.mh_15 THEN 1 ELSE 0 END)::BIGINT AS n_match,
               round((CASE WHEN a.mh_0 = b.mh_0 THEN 1 ELSE 0 END + CASE WHEN a.mh_1 = b.mh_1 THEN 1 ELSE 0 END + CASE WHEN a.mh_2 = b.mh_2 THEN 1 ELSE 0 END + CASE WHEN a.mh_3 = b.mh_3 THEN 1 ELSE 0 END + CASE WHEN a.mh_4 = b.mh_4 THEN 1 ELSE 0 END + CASE WHEN a.mh_5 = b.mh_5 THEN 1 ELSE 0 END + CASE WHEN a.mh_6 = b.mh_6 THEN 1 ELSE 0 END + CASE WHEN a.mh_7 = b.mh_7 THEN 1 ELSE 0 END + CASE WHEN a.mh_8 = b.mh_8 THEN 1 ELSE 0 END + CASE WHEN a.mh_9 = b.mh_9 THEN 1 ELSE 0 END + CASE WHEN a.mh_10 = b.mh_10 THEN 1 ELSE 0 END + CASE WHEN a.mh_11 = b.mh_11 THEN 1 ELSE 0 END + CASE WHEN a.mh_12 = b.mh_12 THEN 1 ELSE 0 END + CASE WHEN a.mh_13 = b.mh_13 THEN 1 ELSE 0 END + CASE WHEN a.mh_14 = b.mh_14 THEN 1 ELSE 0 END + CASE WHEN a.mh_15 = b.mh_15 THEN 1 ELSE 0 END)::DOUBLE / 16, 4) AS jaccard_est
             FROM sig a JOIN sig b ON a.c < b.c
-        """,
-        "q_dp_counts": """
-            WITH g AS (
-              SELECT event_type, count(*) AS n,
-                ('0x' || substr(md5('dp-v1|' ||
-                    coalesce(event_type, chr(1) || '<null>')), 1, 8))::BIGINT
-                  / 4294967296.0 AS u
-              FROM events GROUP BY event_type
-            )
-            SELECT event_type,
-              round(n + (-1.0 * sign(u - 0.5)
-                * ln(greatest(1.0 - 2.0 * abs(u - 0.5), 1e-12))), 3)
-                AS n_noisy
-            FROM g
         """,
         "q_retrieval_eval": """
             WITH res AS (

@@ -26,8 +26,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--out", required=True, help="output directory")
     p.add_argument(
         "--mode", choices=("buckets", "flat"), default="buckets",
-        help="buckets = resumable per-bucket waves (Store mode); "
-             "flat = single-slice throughput shape (DirectRELP mode)",
+        help="buckets = resumable per-bucket waves; "
+             "flat = one slice, no checkpoint waves (run_flat); "
+             "both write the routed table (Store mode)",
     )
     p.add_argument("--buckets", type=int, default=8)
     p.add_argument("--no-resume", action="store_true",

@@ -178,8 +178,7 @@ def char_entropy(c: str = "text") -> Column:
 
     O(n log n) per row and zero shuffle: ``array_sort`` the chars, then
     ONE ``aggregate`` fold over the sorted array tracking (prev char,
-    current run length, running Σ run·log2(run), element count) — the
-    same sorted-run-length shape as ``scrub.top_word_ratio``.  Entropy
+    current run length, running Σ run·log2(run), element count).  Entropy
     falls out algebraically as ``log2(n) - Σ r·log2(r) / n``
     (identical to -Σ p·log2 p), so nothing but the fold ever touches
     the array.

@@ -567,7 +567,7 @@ def dedup_clusters(
             # carry the OLD label through the same projection: the
             # convergence probe then reads the cached frame directly
             # instead of paying a labels-vs-new-labels shuffle join per
-            # round (r6, fused probe — same shape as tree_root_depth)
+            # round (r6, fused probe)
             new_labels = (
                 labels.join(neigh, "s", "left")
                 .select(

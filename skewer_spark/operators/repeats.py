@@ -1,9 +1,8 @@
 """Corpus-level repeated-n-gram detection (C4-style excision signal).
 
-Within-document repetition lives in ``functions/scrub.py`` (Gopher A1
-ratios); THIS module is the cross-document signal: an n-gram is "hot"
-when it appears in at least ``min_docs`` distinct documents, and a
-document is flagged when too many of its n-grams are hot — the C4
+This module is the cross-document signal: an n-gram is "hot" when it
+appears in at least ``min_docs`` distinct documents, and a document
+is flagged when too many of its n-grams are hot — the C4
 pipeline's "remove any document containing a repeated span" rule,
 re-expressed as two map-side-combinable aggregations instead of a
 corpus-wide suffix structure.

@@ -369,10 +369,10 @@ def dd_quantiles(
 # Bloom filter: mergeable set membership for scale-out semi-join pruning
 # ---------------------------------------------------------------------------
 #
-# The decontamination operator broadcasts the benchmark shingle SET
-# (operators/decontaminate.py) — fine while the reference corpus fits
-# in a broadcast (~100s of MB), wrong once the "do not train on this"
-# list is itself web-scale (every eval suite + every opted-out domain).
+# An exact decontamination check broadcasts the benchmark shingle SET
+# — fine while the reference corpus fits in a broadcast (~100s of MB),
+# wrong once the "do not train on this" list is itself web-scale
+# (every eval suite + every opted-out domain).
 # The classic production answer is a Bloom filter: membership bits, no
 # keys, zero false negatives — probe-side docs that miss CANNOT be
 # contaminated, so the expensive exact check (or the full anti-join)

@@ -159,8 +159,7 @@ def radius_counts(
 ) -> DataFrame:
     """Per-point neighbor count within ``radius`` (undirected) — the
     density signal for spatial outlier screens.  Points with no
-    neighbor appear with count 0 (left join back to the point set,
-    same zero-fill contract as ``graph.triangle_counts``)."""
+    neighbor appear with count 0 (left join back to the point set)."""
     pairs = radius_pairs(df, id_col, x_col, y_col, radius, cell_cap)
     per = (
         pairs.select(F.col("id_a").alias("pid"))

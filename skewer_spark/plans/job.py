@@ -33,6 +33,8 @@ from __future__ import annotations
 import os
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,7 +50,6 @@ from skewer_spark.plans import checkpoint as ckpt
 # the routed table keeps full message fidelity; sink files are
 # Kafka-message-shaped (store/dests/kafkadest.go:78-108: key, partition,
 # topic, value=encoded, timestamp=time_reported) plus the join/test keys
-ROUTED_COLUMNS_FULL = True  # routed table: all columns
 SINK_COLUMNS = [
     "uid", "conv_id", "turn_idx", "role", "tool", "ts", "severity",
     "severity_name", "filter_status", "parse_ok", "parser_name",
@@ -155,26 +156,16 @@ def write_outputs(
     routed,
     out_dir: str,
     sub: str = "",
-    write_routed: bool = True,
     secret: bytes | None = None,
 ) -> tuple[int, int]:
-    """Materialize one slice.
+    """Materialize one slice in Store mode (badger durable queue analog,
+    store/store.go): the full-fidelity routed table is written once,
+    then the sink fan-out and aggregates read it back with column
+    pruning.  Lineage keeps every parsed field.
 
-    Two modes, mirroring the reference's two delivery paths:
-
-    * ``write_routed=True`` — Store mode (badger durable queue analog,
-      store/store.go): the full-fidelity routed table is written once,
-      then the sink fan-out and aggregates read it back with column
-      pruning.  Lineage keeps every parsed field.
-    * ``write_routed=False`` — DirectRELP mode
-      (services/network/directrelp.go: parse → produce straight to
-      Kafka, no store): ONE pass from raw input to the exploded
-      per-destination write; metrics derive from the sink files.
-      This is the throughput shape.
-
-    Either way the metrics come from the sink parquet: every message
-    lands in exactly one CANONICAL sink (firehose / rejects / _dropped
-    audit), so counter metrics never rescan the input.
+    The metrics come from the sink parquet: every message lands in
+    exactly one CANONICAL sink (firehose / rejects / _dropped audit),
+    so counter metrics never rescan the input.
     """
     from skewer_spark.operators.route import (
         CANONICAL_SINKS, DROPPED_SINK, with_sink_labels,
@@ -183,24 +174,22 @@ def write_outputs(
 
     from concurrent.futures import ThreadPoolExecutor
 
-    src = routed
-    if write_routed:
-        routed_path = os.path.join(out_dir, "routed", sub)
-        if secret is not None:
-            # the routed table keeps full message fidelity — sealed
-            # mode must not leave it as a plaintext copy of everything
-            # the sinks seal (content columns boxed per (uid, column);
-            # metadata stays clear, see SEALED_CONTENT_COLUMNS)
-            routed = seal_content_cols(routed, secret, "routed")
-        # REBALANCE: the turn-rank window shuffles by conv_id, so a hot
-        # conversation lands in one partition; AQE rebalance splits it
-        # for the write stage (straggler kill, SURVEY.md §4.2).
-        routed.hint("rebalance").write.mode("overwrite").parquet(routed_path)
-        src = spark.read.parquet(routed_path)
-        if secret is not None:
-            # the fan-out encoders need plaintext back (one open per
-            # bucket — the cost of not storing cleartext)
-            src = open_content_cols(src, secret)
+    routed_path = os.path.join(out_dir, "routed", sub)
+    if secret is not None:
+        # the routed table keeps full message fidelity — sealed
+        # mode must not leave it as a plaintext copy of everything
+        # the sinks seal (content columns boxed per (uid, column);
+        # metadata stays clear, see SEALED_CONTENT_COLUMNS)
+        routed = seal_content_cols(routed, secret, "routed")
+    # REBALANCE: the turn-rank window shuffles by conv_id, so a hot
+    # conversation lands in one partition; AQE rebalance splits it
+    # for the write stage (straggler kill, SURVEY.md §4.2).
+    routed.hint("rebalance").write.mode("overwrite").parquet(routed_path)
+    src = spark.read.parquet(routed_path)
+    if secret is not None:
+        # the fan-out encoders need plaintext back (one open per
+        # bucket — the cost of not storing cleartext)
+        src = open_content_cols(src, secret)
 
     sinks_path = os.path.join(out_dir, "sinks", sub)
     labeled = with_sink_labels(src, include_dropped=True).withColumn(
@@ -246,17 +235,12 @@ def write_outputs(
         return metric_grouping_sets(canonical).toPandas()
 
     # both jobs read the (small-column) sink parquet — run concurrently
-    # so planning/commit phases overlap.  SKEWER_SEQUENTIAL_JOBS=1
-    # disables (ablation hook).
-    if os.environ.get("SKEWER_SEQUENTIAL_JOBS"):
-        _windowed()
-        gs = _metrics()
-    else:
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_win = ex.submit(_windowed)
-            f_gs = ex.submit(_metrics)
-            f_win.result()
-            gs = f_gs.result()
+    # so planning/commit phases overlap
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        f_win = ex.submit(_windowed)
+        f_gs = ex.submit(_metrics)
+        f_win.result()
+        gs = f_gs.result()
     fc = (
         gs[gs["gid"] == 3][["filter_status", "role", "n_messages"]]
         .reset_index(drop=True)
@@ -281,48 +265,31 @@ def write_outputs(
     return n_rows, n_pass
 
 
-def _agg_arrow_schemas():
-    import pyarrow as pa
-
-    s = pa.string()
-    i = pa.int64()
-    return {
-        "filter_counts": pa.schema(
-            [("filter_status", s), ("role", s), ("n_messages", i)]
-        ),
-        "parse_error_counts": pa.schema([("parser_name", s), ("n_errors", i)]),
-        "incoming_counts": pa.schema(
-            [("role", s), ("n_messages", i), ("n_convs", i),
-             ("convs_hll", pa.binary())]
-        ),
-    }
+_AGG_ARROW_SCHEMAS = {
+    "filter_counts": pa.schema(
+        [("filter_status", pa.string()), ("role", pa.string()),
+         ("n_messages", pa.int64())]
+    ),
+    "parse_error_counts": pa.schema(
+        [("parser_name", pa.string()), ("n_errors", pa.int64())]
+    ),
+    "incoming_counts": pa.schema(
+        [("role", pa.string()), ("n_messages", pa.int64()),
+         ("n_convs", pa.int64()), ("convs_hll", pa.binary())]
+    ),
+}
 
 
-class _LazySchemas(dict):
-    """Deferred so importing this module never needs pyarrow."""
-
-    def __missing__(self, key):
-        self.update(_agg_arrow_schemas())
-        return self[key]
-
-
-_AGG_ARROW_SCHEMAS = _LazySchemas()
-
-
-def _write_pandas_parquet(pdf, path: str, schema=None) -> None:
+def _write_pandas_parquet(pdf, path: str, schema) -> None:
     """Write a tiny driver-side partial with an EXPLICIT arrow schema.
 
     Without it, a bucket whose partial is EMPTY (e.g. zero parse errors)
     lets pyarrow infer a different physical type for the same column
     than its sibling buckets, and the finalize scan fails with a parquet
     type mismatch (hit by the 3-bucket spark-submit resume test)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     os.makedirs(path, exist_ok=True)
     table = pa.Table.from_pandas(pdf, preserve_index=False)
-    if schema is not None:
-        table = table.select(schema.names).cast(schema)
+    table = table.select(schema.names).cast(schema)
     pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
 
@@ -335,7 +302,7 @@ def process_bucket(
         src = open_content_cols(src, secret)
     routed = build_routed(src)
     return write_outputs(spark, routed, out_dir, f"bucket={bucket}",
-                         write_routed=True, secret=secret)
+                         secret=secret)
 
 
 ENCRYPTION_MARKER = "_encryption.json"
@@ -508,7 +475,7 @@ def run_flat(spark: SparkSession, input_path: str, out_dir: str) -> int:
     # Store mode measured faster AND better-scaling than the fused
     # single-pass on local[N] (the mega-stage saturates memory
     # bandwidth at high core counts); it is also the full-lineage path.
-    n_rows, _ = write_outputs(spark, routed, out_dir, "", write_routed=True)
+    n_rows, _ = write_outputs(spark, routed, out_dir, "")
     return n_rows
 
 

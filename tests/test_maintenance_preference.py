@@ -1,7 +1,7 @@
-"""Unit tests for the round-3 maintenance / drift / forest operators:
+"""Unit tests for the round-3 maintenance / drift operators:
 compaction planning, zone-map skipping, late-event watermark audit,
-PSI drift, cohort retention, transition matrix, and pointer-doubling
-tree resolution."""
+PSI drift, cohort retention, transition matrix, orphan files,
+snapshot expiry, range partitioning and incremental aggregate state."""
 
 from __future__ import annotations
 
@@ -14,7 +14,6 @@ from skewer_spark.operators.funnel import (
     cohort_retention,
     transition_matrix,
 )
-from skewer_spark.operators.graph import tree_root_depth
 from skewer_spark.operators.maintenance import (
     compaction_plan,
     orphan_files,
@@ -202,51 +201,6 @@ def test_transition_matrix_rows_normalize(spark):
     assert ("a", None) not in m
 
 
-# -------------------------------------------------------------- tree doubling
-
-
-def test_tree_root_depth_deep_chain(spark):
-    # one chain 0←1←2←…←40 plus a separate 2-node tree
-    rows = [Row(id=0, parent=None)] + [
-        Row(id=i, parent=i - 1) for i in range(1, 41)
-    ] + [Row(id=100, parent=None), Row(id=101, parent=100)]
-    out = {r.id: r for r in tree_root_depth(
-        spark.createDataFrame(rows, "id long, parent long")
-    ).collect()}
-    assert len(out) == 43
-    assert out[40].root == 0 and out[40].depth == 40
-    assert out[17].root == 0 and out[17].depth == 17
-    assert out[0].root == 0 and out[0].depth == 0
-    assert out[101].root == 100 and out[101].depth == 1
-
-
-def test_tree_root_depth_cycle_fails_visible(spark):
-    rows = [Row(id=1, parent=2), Row(id=2, parent=1),
-            Row(id=3, parent=None)]
-    out = {r.id: r for r in tree_root_depth(
-        spark.createDataFrame(rows, "id long, parent long"),
-        max_rounds=5,
-    ).collect()}
-    assert out[3].root == 3 and out[3].depth == 0
-    assert out[1].root is None and out[1].depth is None
-    assert out[2].root is None and out[2].depth is None
-
-
-def test_tree_root_depth_releases_caches(spark):
-    rows = [Row(id=0, parent=None)] + [
-        Row(id=i, parent=i - 1) for i in range(1, 20)
-    ]
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-    tree_root_depth(
-        spark.createDataFrame(rows, "id long, parent long")
-    ).collect()
-    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-    # every loop iteration's persisted frame is released; only the
-    # result's own checkpoint RDDs (final + the every-4-rounds lineage
-    # cut it builds on) may remain — same contract as pagerank
-    assert len(after - before) <= 2
-
-
 # ------------------------------------------------- orphan files / snapshots
 
 
@@ -374,32 +328,3 @@ def test_merge_agg_state_equals_recompute(spark):
         assert abs(merged[k].sum_v - want[k].sum_v) < 1e-9, k
         assert merged[k].min_v == want[k].min_v, k
         assert merged[k].max_v == want[k].max_v, k
-
-
-def test_tree_root_depth_random_forests_vs_python(spark):
-    """Seeded randomized forests: pointer doubling must agree with a
-    per-node Python walk on every shape (multiple roots, mixed
-    depths, stars, chains)."""
-    import random
-    rng = random.Random(0xC0FFEE)
-    for trial in range(4):
-        n = rng.randrange(30, 120)
-        parent: dict[int, int | None] = {}
-        for i in range(n):
-            # earlier-id parents only → guaranteed acyclic forest
-            parent[i] = rng.randrange(i) if i and rng.random() < 0.9 \
-                else None
-        rows = [Row(id=i, parent=parent[i]) for i in range(n)]
-        got = {r.id: (r.root, r.depth) for r in tree_root_depth(
-            spark.createDataFrame(rows, "id long, parent long")
-        ).collect()}
-
-        def walk(i):
-            d = 0
-            while parent[i] is not None:
-                i = parent[i]
-                d += 1
-            return i, d
-
-        for i in range(n):
-            assert got[i] == walk(i), (trial, i)

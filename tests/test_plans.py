@@ -456,16 +456,6 @@ def test_line_dedup_keeper_election_partial_aggregates(spark):
     assert "Window" not in plan
 
 
-def test_dp_counts_single_exchange(spark):
-    from skewer_spark.operators.privacy import dp_counts
-
-    df = spark.range(100).select((F.col("id") % 5).alias("k"))
-    plan = _plan(dp_counts(df, ["k"]), "simple")
-    # one partial-aggregable groupBy; noise is scalar on the reduced frame
-    assert plan.count("Exchange") == 1
-    assert "partial_count" in plan
-
-
 def test_retrieval_metrics_no_window_over_results(spark):
     from skewer_spark.operators.search import retrieval_metrics
 

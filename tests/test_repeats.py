@@ -140,39 +140,6 @@ def test_corpus_overlap_identical_and_disjoint(spark):
     assert out[("B", "C")]["n_match"] == 0
 
 
-def test_dp_counts_deterministic_and_eps_scaling(spark):
-    import math
-
-    from skewer_spark.operators.privacy import dp_counts
-
-    df = spark.createDataFrame(
-        [(i, "k%d" % (i % 3)) for i in range(90)], "i long, k string"
-    )
-    r1 = {r["k"]: r["n_noisy"] for r in dp_counts(df, ["k"], epsilon=1.0).collect()}
-    r2 = {r["k"]: r["n_noisy"] for r in dp_counts(df, ["k"], epsilon=1.0).collect()}
-    assert r1 == r2                      # rerun-stable release
-    # noise matches the closed form (u from md5, Laplace inverse CDF)
-    import hashlib
-
-    for k, released in r1.items():
-        u = int(hashlib.md5(f"dp-v1|{k}".encode()).hexdigest()[:8], 16) / 2**32
-        c = u - 0.5
-        noise = -1.0 * math.copysign(1.0, c) * math.log(
-            max(1.0 - 2.0 * abs(c), 1e-12)
-        ) if c != 0 else 0.0
-        assert released == pytest.approx(round(30 + noise, 3), abs=1e-9)
-    # epsilon=2 halves the same key's noise
-    r_half = {
-        r["k"]: r["n_noisy"] for r in dp_counts(df, ["k"], epsilon=2.0).collect()
-    }
-    for k in r1:
-        assert abs(r_half[k] - 30) == pytest.approx(
-            abs(r1[k] - 30) / 2, abs=2e-3
-        )
-    with pytest.raises(ValueError):
-        dp_counts(df, ["k"], epsilon=0.0)
-
-
 def test_retrieval_metrics_hand_computed(spark):
     import math
 
@@ -221,19 +188,6 @@ def test_fd_violations_holds_and_fails(spark):
     assert out[3]["n_rhs_values"] == 2       # NULL counts as a level
 
 
-def test_dp_counts_multikey_separator(spark):
-    from skewer_spark.operators.privacy import dp_counts
-
-    # ("ab","c") and ("a","bc") must draw DIFFERENT noise: equal group
-    # sizes, so equal releases would mean the joint key collided
-    df = spark.createDataFrame(
-        [("ab", "c")] * 10 + [("a", "bc")] * 10, "x string, y string"
-    )
-    out = dp_counts(df, ["x", "y"], epsilon=1.0).collect()
-    vals = {(r["x"], r["y"]): r["n_noisy"] for r in out}
-    assert vals[("ab", "c")] != vals[("a", "bc")]
-
-
 def test_long_doc_ngram_ops_are_not_quadratic(spark):
     # 40 docs x 20k tokens: the BOUND forms finish in seconds; the
     # unbound (per-element split re-evaluation) forms measured 84x
@@ -241,7 +195,6 @@ def test_long_doc_ngram_ops_are_not_quadratic(spark):
     # minutes here.  Wide margin so CPU-grant swings can't flake it.
     import time
 
-    from skewer_spark.functions.scrub import dup_ngram_ratio
     from skewer_spark.operators.dedup import word_shingles
     from skewer_spark.operators.repeats import hot_ngram_stats
 
@@ -250,7 +203,6 @@ def test_long_doc_ngram_ops_are_not_quadratic(spark):
         [(i, doc) for i in range(40)], "doc_id long, text string"
     )
     t = time.time()
-    df.select(dup_ngram_ratio().alias("r")).agg(F.sum("r")).collect()
     df.select(F.size(word_shingles("text", 3)).alias("s")).agg(
         F.sum("s")
     ).collect()
@@ -262,35 +214,14 @@ def test_ngram_expressions_use_bound_split():
     # the binding idiom is load-bearing (functions/hof.py): the split
     # must appear as transform(array(split(...)), ...) so it evaluates
     # once per row, not once per element
-    from skewer_spark.functions.scrub import dup_ngram_ratio
     from skewer_spark.functions.text import char_entropy
     from skewer_spark.operators.dedup import word_shingles
 
-    for col in (
-        dup_ngram_ratio(),
-        word_shingles("text", 3),
-    ):
-        assert "transform(array(split" in str(col)
+    assert "transform(array(split" in str(word_shingles("text", 3))
     # char_entropy folds over the sorted array directly — the sort must
     # be the aggregate's INPUT, never referenced inside its lambdas
     s = str(char_entropy())
     assert "aggregate(array_sort(" in s
-
-
-def test_dp_counts_null_keys_get_distinct_noise(spark):
-    from skewer_spark.operators.privacy import dp_counts
-
-    # (NULL,'a') vs ('a',NULL): concat_ws drops NULLs, so without the
-    # sentinel both groups would key as 'a' and share noise
-    df = spark.createDataFrame(
-        [(None, "a")] * 10 + [("a", None)] * 10 + [("", "a")] * 10,
-        "x string, y string",
-    )
-    out = {(r["x"], r["y"]): r["n_noisy"] for r in
-           dp_counts(df, ["x", "y"], epsilon=1.0).collect()}
-    assert len(out) == 3
-    vals = list(out.values())
-    assert len(set(vals)) == 3        # three distinct draws
 
 
 def test_line_dedup_null_text_doc_is_kept(spark):

@@ -4,7 +4,6 @@ micro-batches and survives a restart from the checkpoint."""
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import functions as F
 
@@ -27,16 +26,11 @@ def _run_once(spark, inp, out):
         .trigger(availableNow=True)
         .start()
     )
-    # The sessionizer's processing-time timeout makes an availableNow
-    # query run empty batches forever, so it never ends by itself (and
-    # processAllAvailable never returns).  Stop it once the input is
-    # consumed: a batch read rows, and the latest batch read none.
-    deadline = time.monotonic() + 180
-    while time.monotonic() < deadline and not q.awaitTermination(0.5):
-        rows = [p.numInputRows for p in q.recentProgress]
-        if rows and rows[-1] == 0 and any(rows):
-            break
-    q.stop()
+    # an availableNow run must end by itself once its input is drained
+    try:
+        assert q.awaitTermination(180)
+    finally:
+        q.stop()
 
 
 def test_sessionizer_accumulates_across_restarts(spark, tmp_path):

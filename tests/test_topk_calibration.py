@@ -1,12 +1,10 @@
-"""Unit tests: two-stage salted top-k, calibration bins."""
+"""Unit tests: two-stage salted top-k."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from skewer_spark.operators.skew import salted_topk
-from skewer_spark.operators.train import calibration_bins
 
 
 def test_salted_topk_equals_window_formulation(spark):
@@ -48,16 +46,3 @@ def test_salted_topk_small_group(spark):
            salted_topk(df, ["g"], "v", "id", k=10).orderBy("rank").collect()]
     assert got == [(1, 2), (2, 1)]
 
-
-def test_calibration_bins_exact(spark):
-    # perfectly calibrated coin at score 0.25 / miscalibrated at 0.95
-    rows = [(0.25, 1.0)] * 1 + [(0.25, 0.0)] * 3 + [(0.95, 0.0)] * 4 + [(1.0, 1.0)]
-    df = spark.createDataFrame(rows, ["score", "label"])
-    got = {r["bin"]: r for r in calibration_bins(df, "score", "label").collect()}
-    assert got[2]["n"] == 4 and got[2]["pos_rate"] == 0.25
-    assert got[2]["gap"] == 0.0
-    # score 1.0 clamps into the last bin with the 0.95 rows
-    assert got[9]["n"] == 5
-    assert got[9]["mean_score"] == pytest.approx(0.96)
-    assert got[9]["pos_rate"] == pytest.approx(0.2)
-    assert set(got) == {2, 9}
