@@ -271,6 +271,41 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from skewer_spark.operators.aggregate import sink_counts
         return sink_counts(_routed_events(spark, sf))
 
+    def q_route_rules(spark, sf):
+        # per-source rules (FilterSubConfig per conf_id): conf_id is
+        # user_id % 3 — 'audit' and 'relay' carry rules that differ in
+        # filter and topic, 'other' falls through to the default rule
+        from skewer_spark.operators.enrich import enrich
+        from skewer_spark.operators.parse import parse_transcripts
+        from skewer_spark.operators.route import RoutingRule, route
+        from skewer_spark.sources.events import event_transcripts
+
+        rules = [
+            RoutingRule(
+                conf_id="audit",
+                filter_expr="CASE WHEN NOT parse_ok THEN 'ERROR' "
+                            "WHEN severity >= 5 THEN 'DROPPED' ELSE 'PASS' END",
+                topic_expr="concat('audit-', "
+                           "coalesce(nullif(hostname, ''), 'unknown'))",
+            ),
+            RoutingRule(
+                conf_id="relay",
+                filter_expr="CASE WHEN message LIKE '%REJECTME%' "
+                            "THEN 'REJECTED' ELSE 'PASS' END",
+                # NULL for an empty appname → default-topic fallback
+                topic_expr="concat('relay-', nullif(appname, ''))",
+            ),
+        ]
+        k = F.pmod(F.col("conv_id").cast("long"), F.lit(3))
+        tdf = event_transcripts(spark, sf).withColumn(
+            "conf_id",
+            F.when(k == 0, "audit").when(k == 1, "relay").otherwise("other"),
+        )
+        r = route(enrich(parse_transcripts(tdf)), rules)
+        return r.groupBy("conf_id", "filter_status", "topic").agg(
+            F.count("*").alias("n_messages")
+        )
+
     def q_windowed_agg(spark, sf):
         ev = _read(spark, sf, "events")
         return (
@@ -2432,6 +2467,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_gelf_chunks": q_gelf_chunks,
         "q_parse_json": q_parse_json,
         "q_route_topic": q_route_topic,
+        "q_route_rules": q_route_rules,
         "q_window_rank": q_window_rank,
         "q_enrich_broadcast": q_enrich_broadcast,
         "q_profile": q_profile,
@@ -3227,6 +3263,29 @@ def oracle_sql() -> dict[str, str]:
         "q_route_topic": f"""
             {EV_PRELUDE}
             SELECT topic, count(*) AS n_messages FROM routed GROUP BY topic
+        """,
+        "q_route_rules": f"""
+            {EV_PRELUDE}
+            , ruled AS (
+              SELECT *, CASE user_id % 3 WHEN 0 THEN 'audit'
+                WHEN 1 THEN 'relay' ELSE 'other' END AS conf_id
+              FROM routed
+            )
+            SELECT conf_id,
+              CASE conf_id
+                WHEN 'audit' THEN CASE WHEN NOT ok THEN 'ERROR'
+                  WHEN severity >= 5 THEN 'DROPPED' ELSE 'PASS' END
+                WHEN 'relay' THEN CASE WHEN message LIKE '%REJECTME%'
+                  THEN 'REJECTED' ELSE 'PASS' END
+                ELSE filter_status END AS filter_status,
+              CASE conf_id
+                WHEN 'audit' THEN 'audit-' ||
+                  (CASE WHEN hostname = '' THEN 'unknown' ELSE hostname END)
+                WHEN 'relay' THEN (CASE WHEN appname = ''
+                  THEN 'default-topic' ELSE 'relay-' || appname END)
+                ELSE topic END AS topic,
+              count(*) AS n_messages
+            FROM ruled GROUP BY 1, 2, 3
         """,
         "q_sink_counts": sinks_union,
         "q_windowed_agg": """

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from skewer_spark.operators.route import SINKS
+from skewer_spark.operators.route import with_sink_labels
 
 
 def metric_grouping_sets(routed: DataFrame) -> DataFrame:
@@ -90,8 +90,6 @@ def sink_counts(routed: DataFrame) -> DataFrame:
     Single pass: explode the matching-sink array instead of N filtered
     unions — one scan regardless of destination count.
     """
-    from skewer_spark.operators.route import with_sink_labels
-
     return (
         with_sink_labels(routed)
         .groupBy("sink", "severity_name")
@@ -117,19 +115,7 @@ def windowed_counts_from_labeled(labeled: DataFrame, window: str = "1 hour") -> 
 
 def windowed_counts(routed: DataFrame, window: str = "1 hour") -> DataFrame:
     """Hourly rollup per (sink, severity_name, tool) — one exploded pass."""
-    from skewer_spark.operators.route import with_sink_labels
-
-    return (
-        with_sink_labels(routed)
-        .groupBy(
-            F.window("ts", window).alias("w"), "sink", "severity_name", "tool"
-        )
-        .agg(F.count("*").alias("n_messages"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "sink", "severity_name", "tool", "n_messages",
-        )
-    )
+    return windowed_counts_from_labeled(with_sink_labels(routed), window)
 
 
 def time_rollup(

@@ -1,30 +1,39 @@
-"""Routing stage: four-way filter + topic / partition-key resolution.
+"""Routing stage: the rules table → four-way filter + topic / partition key.
 
-Semantics from the reference forwarder + JS filter environment
-(SURVEY.md §2.4):
+The reference attaches a ``FilterSubConfig`` {filter func, topic
+template/func, partition-key template/func} to every source config and
+looks it up per message by ConfID (reference ``conf/types.go:368-375``,
+``store/forwarder.go:133-156``, SURVEY.md §2.4).  Here a rule is a row
+of SQL expression strings (``RoutingRule``); ``route`` compiles the rule
+set into nested ``when`` Columns keyed on ``conf_id`` — native Column
+expressions, whole-stage codegen, no Python and no per-row lookup.
+
+``DEFAULT_RULE`` holds the fixture rules (FIXTURES.md §3):
 
 * Filter verdict ``PASS / DROPPED / REJECTED / ERROR``
-  (``/root/reference/javascript/vm.go:45-60, 399-442``) with dispatch
-  per ``store/forwarder.go:192-208``.  Fixture rules (FIXTURES.md §3):
-  severity==7 → DROPPED; message contains ``REJECTME`` → REJECTED;
-  parse failure → ERROR; else PASS.
+  (``javascript/vm.go:45-60, 399-442``) dispatched per
+  ``store/forwarder.go:192-208``: severity==7 → DROPPED; message
+  contains ``REJECTME`` → REJECTED; parse failure → ERROR; else PASS.
 * Topic: template ``syslog-{{.Appname}}`` with ``unknown`` fallback
-  (``skewer.example.toml:14-23``), validated against
-  ``^[A-Za-z0-9._-]{1,249}$`` with fallback ``default-topic``
-  (``javascript/vm.go:497-535``, ``store/forwarder.go:174``).
+  (``skewer.example.toml:14-23``).
 * Partition key: ``mypk-{{.Hostname}}`` (``skewer.example.toml:26``).
-* Partition number: hash of the key mod partition count — sarama's
-  default "hash" partitioner (``conf/defaults.go:307``); here
-  ``pmod(xxhash64(partition_key), n)``.
-* Sink fan-out (destination bitmask analog,
-  ``conf/destinations.go:11-44``): every PASS row goes to every sink
-  whose predicate it matches; sinks per FIXTURES.md §3.
 
-Everything is native Column expressions — whole-stage codegen, no
-Python in this stage.
+Every rule's topic is validated against ``^[A-Za-z0-9._-]{1,249}$``
+with fallback ``default-topic`` (``javascript/vm.go:497-535``,
+``store/forwarder.go:174``).  Partition number: hash of the key mod
+partition count — sarama's default "hash" partitioner
+(``conf/defaults.go:307``); here
+``pmod(xxhash64(partition_key), N_PARTITIONS)``.
+
+Sink fan-out (destination bitmask analog, ``conf/destinations.go:11-44``):
+every PASS row goes to every sink whose predicate it matches; sinks per
+FIXTURES.md §3.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -32,8 +41,6 @@ from pyspark.sql import functions as F
 TOPIC_RE = "^[A-Za-z0-9._-]{1,249}$"
 DEFAULT_TOPIC = "default-topic"
 N_PARTITIONS = 10
-
-PASS, DROPPED, REJECTED, ERROR = "PASS", "DROPPED", "REJECTED", "ERROR"
 
 # sink predicates over a routed row (FIXTURES.md §3); evaluated on PASS
 # rows except sink_rejects which captures REJECTED/ERROR.
@@ -45,51 +52,54 @@ SINKS: dict[str, str] = {
 }
 
 
-def filter_status_col() -> Column:
-    """Four-way verdict in fixture precedence order."""
-    return (
-        F.when(F.col("severity") == 7, F.lit(DROPPED))
-        .when(F.col("message").contains("REJECTME"), F.lit(REJECTED))
-        .when(~F.col("parse_ok"), F.lit(ERROR))
-        .otherwise(F.lit(PASS))
+@dataclass(frozen=True)
+class RoutingRule:
+    """One source config's routing behavior (SQL expression strings)."""
+    conf_id: str
+    # expression → PASS/DROPPED/REJECTED/ERROR
+    filter_expr: str = (
+        "CASE WHEN severity = 7 THEN 'DROPPED' "
+        "WHEN message LIKE '%REJECTME%' THEN 'REJECTED' "
+        "WHEN NOT parse_ok THEN 'ERROR' ELSE 'PASS' END"
     )
-
-
-def topic_col() -> Column:
-    """syslog-{{.Appname}} template + validation fallback."""
-    raw = F.concat(
-        F.lit("syslog-"),
-        F.coalesce(F.nullif(F.col("appname"), F.lit("")), F.lit("unknown")),
+    topic_expr: str = (
+        "concat('syslog-', coalesce(nullif(appname, ''), 'unknown'))"
     )
-    return F.when(raw.rlike(TOPIC_RE), raw).otherwise(F.lit(DEFAULT_TOPIC))
+    partition_key_expr: str = "concat('mypk-', coalesce(hostname, ''))"
 
 
-def partition_key_col() -> Column:
-    return F.concat(F.lit("mypk-"), F.coalesce(F.col("hostname"), F.lit("")))
+DEFAULT_RULE = RoutingRule(conf_id="__default__")
 
 
-def partition_number_col(n_partitions: int = N_PARTITIONS) -> Column:
-    return F.pmod(F.xxhash64(partition_key_col()), F.lit(n_partitions)).cast("int")
+def _per_conf(rules: Sequence[RoutingRule], attr: str) -> Column:
+    """Nested when-chain: conf_id → compiled expression, DEFAULT_RULE last."""
+    expr = F.expr(getattr(DEFAULT_RULE, attr))
+    for r in rules:
+        expr = F.when(
+            F.col("conf_id") == r.conf_id, F.expr(getattr(r, attr))
+        ).otherwise(expr)
+    return expr
 
 
-def route(df: DataFrame, n_partitions: int = N_PARTITIONS) -> DataFrame:
-    """enriched → routed (adds filter_status/topic/partition_* columns)."""
-    return (
-        df.withColumn("filter_status", filter_status_col())
-        .withColumn("topic", topic_col())
-        .withColumn("partition_key", partition_key_col())
-        .withColumn("partition_number", partition_number_col(n_partitions))
-    )
+def route(df: DataFrame, rules: Sequence[RoutingRule] = ()) -> DataFrame:
+    """enriched → routed (adds filter_status/topic/partition_* columns).
 
-
-def sink_frames(routed: DataFrame) -> dict[str, DataFrame]:
-    """Destination fan-out: N filtered views of the routed frame.
-
-    Callers should persist/write ``routed`` once and derive the sinks
-    from it (ingest-once / reference-per-destination,
-    ``store/store.go:1161-1177``) — see plans.job.
+    A row whose ``conf_id`` matches a rule takes that rule; every other
+    row takes ``DEFAULT_RULE``.  Without rules ``conf_id`` is neither
+    read nor added, so a single-source frame needs no such column.
     """
-    return {name: routed.filter(F.expr(pred)) for name, pred in SINKS.items()}
+    raw_topic = _per_conf(rules, "topic_expr")
+    pkey = _per_conf(rules, "partition_key_expr")
+    return df.withColumns({
+        "filter_status": _per_conf(rules, "filter_expr"),
+        "topic": F.when(raw_topic.rlike(TOPIC_RE), raw_topic).otherwise(
+            F.lit(DEFAULT_TOPIC)
+        ),
+        "partition_key": pkey,
+        "partition_number": F.pmod(
+            F.xxhash64(pkey), F.lit(N_PARTITIONS)
+        ).cast("int"),
+    })
 
 
 DROPPED_SINK = "_dropped"

@@ -14,8 +14,8 @@ always-on mode, sharing every operator with the batch path:
 * fan-out: ``foreachBatch`` reuses the batch one-pass exploded sink
   write per micro-batch (micro-batch = the reference's ingest batch,
   ``store.batch_size`` at ``conf/defaults.go:320``),
-* aggregates: watermarked sliding-window counts — the streaming twin
-  of the batch windowed_counts table,
+* aggregates: the batch ``windowed_counts`` rollup itself, run as a
+  watermarked append aggregation,
 * delivery: the streaming checkpoint dir IS the Ready/Sent/ACK state,
   replacing the badger queue.  The parquet agg leg is exactly-once via
   the file-sink commit log; the foreachBatch sink leg is
@@ -36,6 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from skewer_spark.operators.aggregate import windowed_counts
 from skewer_spark.operators.enrich import enrich
 from skewer_spark.operators.parse import parse_transcripts
 from skewer_spark.operators.route import route, with_sink_labels
@@ -104,37 +105,18 @@ def run_streaming(
         .start()
     )
 
-    # UPGRADE NOTE (ADVICE r5): adding 'sink' to this groupBy in r5
-    # changed the stateful operator's key schema AND the output table
-    # schema.  A deployment restarting from a pre-r5 _ckpt/agg
-    # checkpoint fails state-schema validation (loud, not silent);
-    # clear the agg checkpoint directory — or version it, e.g.
+    # UPGRADE NOTE (ADVICE r5): adding 'sink' to the windowed_counts
+    # grouping in r5 changed the stateful operator's key schema AND the
+    # output table schema.  A deployment restarting from a pre-r5
+    # _ckpt/agg checkpoint fails state-schema validation (loud, not
+    # silent); clear the agg checkpoint directory — or version it, e.g.
     # _ckpt/agg_v2 — when upgrading across any change to this grouping.
     #
-    # watermark already set upstream (dedup stage) — redefining is
-    # disallowed when chaining stateful operators.  The grouping is
-    # EXACTLY the batch windowed_counts rollup (operators/aggregate.py
-    # windowed_counts: sink-labeled fan-out → (window, sink,
-    # severity_name, tool)), so a drained stream's agg table is
-    # row-comparable to the batch table — pinned by
-    # test_stream_windowed_counts_equals_batch.  The explode is narrow
-    # and streaming-safe; DROPPED rows still advance the watermark
-    # (it is computed upstream of the explode) without contributing
-    # counts, matching the batch side's exclusion.
-    windowed = (
-        with_sink_labels(routed)
-        .groupBy(
-            F.window("ts", "1 hour").alias("w"), "sink",
-            "severity_name", "tool",
-        )
-        .agg(F.count("*").alias("n_messages"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "sink", "severity_name", "tool", "n_messages",
-        )
-    )
+    # The watermark is set upstream (dedup stage): redefining it is
+    # disallowed when chaining stateful operators.  DROPPED rows still
+    # advance it without contributing counts, as on the batch side.
     agg_q = (
-        windowed.writeStream.outputMode("append")
+        windowed_counts(routed).writeStream.outputMode("append")
         .format("parquet")
         .option("path", os.path.join(out_dir, "agg", "windowed_counts"))
         .option("checkpointLocation", os.path.join(out_dir, "_ckpt", "agg"))

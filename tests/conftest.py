@@ -12,9 +12,13 @@ from skewer_spark.session import build_session  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
+    # master and driver memory come from build_session's host-derived
+    # defaults.  Tests assume 8 shuffle partitions, and the plan-shape
+    # tests assume defaultParallelism equals that count (their
+    # fixed-width exchanges are sized by it), so both stay pinned.
     s = build_session(
-        app_name="skewer-tests", master="local[8]", shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "8g"},
+        app_name="skewer-tests", shuffle_partitions=8,
+        extra_conf={"spark.default.parallelism": "8"},
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s
