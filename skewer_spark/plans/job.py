@@ -14,19 +14,20 @@ Execution model (SURVEY.md §3.1 "Spark trace", §4.2):
    conversation (10% of all rows on one key) spreads across tasks for
    the narrow stages.
 2. **Per-bucket wave** — scan only ``bucket=k`` files → vectorized
-   parse (narrow) → broadcast-join enrich (narrow) → route (narrow) →
-   ``persist()`` once → 4 sink writes + aggregate writes (the fan-out
-   reads the routed frame once, mirroring ingest-once /
-   reference-per-destination, ``store/store.go:1161-1177``) → manifest
-   commit (the ACK).  A killed run leaves un-committed buckets; a rerun
-   into the same ``out_dir`` processes exactly those (a full rerun takes
-   a fresh ``out_dir``).
+   parse (narrow) → dedup + turn rank (one shuffle) → enrich and route
+   (narrow) → write the routed table → re-read it for ONE
+   ``partitionBy(sink)`` fan-out write (ingest-once /
+   reference-per-destination, ``store/store.go:1161-1177``) → two
+   aggregate scans of the sink files → manifest commit (the ACK).  A
+   killed run leaves un-committed buckets; a rerun into the same
+   ``out_dir`` processes exactly those (a full rerun takes a fresh
+   ``out_dir``).
 3. **Finalize** — per-bucket partial aggregate tables are summed
    (counts are associative) into the final metric tables.
 
-``dropDuplicates(uid)`` inside a bucket is globally correct because the
-uid is a function of (conv_id, turn_idx) and conv_id determines the
-bucket — dedup never needs a global shuffle.
+uid dedup inside a bucket is globally correct because the uid is a
+function of (conv_id, turn_idx) and conv_id determines the bucket —
+dedup never needs a global shuffle.
 """
 
 from __future__ import annotations
@@ -182,10 +183,12 @@ def write_outputs(
         # the sinks seal (content columns boxed per (uid, column);
         # metadata stays clear, see SEALED_CONTENT_COLUMNS)
         routed = seal_content_cols(routed, secret, "routed")
-    # REBALANCE: the turn-rank window shuffles by conv_id, so a hot
-    # conversation lands in one partition; AQE rebalance splits it
-    # for the write stage (straggler kill, SURVEY.md §4.2).
-    routed.hint("rebalance").write.mode("overwrite").parquet(routed_path)
+    # No shuffle between dedup_and_rank's window and this write: its
+    # tasks hold rows sorted by (conv_id, turn_idx), so each file comes
+    # out clustered by conversation and compresses to less.  Partition
+    # size stays bounded because the window keys on (conv_id,
+    # turn_idx div 8192).
+    routed.write.mode("overwrite").parquet(routed_path)
     src = spark.read.parquet(routed_path)
     if secret is not None:
         # the fan-out encoders need plaintext back (one open per
@@ -671,6 +674,9 @@ def compact_sinks(
         keys.append(F.pmod(F.xxhash64("uid"), F.lit(files_per_partition)))
     (
         df.repartition(n_leaves * files_per_partition, *keys)
+        # the exchange (and its uid salt) scatters conversations;
+        # restore the store's conversation order within each file
+        .sortWithinPartitions(*part_cols, "conv_id", "turn_idx")
         .write.mode("overwrite")
         .partitionBy(*part_cols)
         .parquet(tmp)

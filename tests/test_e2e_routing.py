@@ -9,8 +9,12 @@ aggregate-count tables.
 from __future__ import annotations
 
 import collections
+import glob
+import json
+import os
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from skewer_spark.plans import job
@@ -36,7 +40,9 @@ def oracle_rows(pipeline_out):
     pdf = pd.read_parquet(inp)
     rows = []
     for r in pdf.to_dict("records"):
-        r["ts"] = pd.Timestamp(r["ts"]).to_pydatetime()
+        # the store keeps UTC-adjusted INT64 timestamps, which pandas
+        # reads tz-aware; the oracle works in naive UTC
+        r["ts"] = pd.Timestamp(r["ts"]).tz_convert(None).to_pydatetime()
         rows.append(oracle.enrich_route_row(r))
     return rows
 
@@ -164,3 +170,32 @@ def test_encoded_payloads_shape(spark, pipeline_out):
     assert alerts["encoded"].str.match(r"^<\d+>1 \d{4}-").all()
     tools = job.read_sink(spark, out, "sink_tools").toPandas()
     assert tools["encoded"].str.startswith('{"facility":').all()
+
+
+def test_flat_store_layout(spark, tmp_path):
+    """run_flat writes routed files in conversation order and stores
+    every timestamp as INT64 micros adjusted to UTC."""
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    transcripts_df(spark, 30, 40).write.parquet(inp)
+    job.run_flat(spark, inp, out)
+
+    routed = glob.glob(os.path.join(out, "routed", "*.parquet"))
+    sinks = glob.glob(os.path.join(out, "sinks", "sink=*", "*.parquet"))
+    assert routed and sinks
+    for f in routed:
+        t = pq.read_table(f, columns=["conv_id", "turn_idx"])
+        keys = list(zip(t["conv_id"].to_pylist(), t["turn_idx"].to_pylist()))
+        assert keys == sorted(keys), f
+
+    seen = set()
+    for f in routed + sinks:
+        schema = pq.ParquetFile(f).schema
+        for i in range(len(schema)):
+            c = schema.column(i)
+            if c.name in ("ts", "time_reported", "time_generated"):
+                seen.add(c.name)
+                assert c.physical_type == "INT64", (f, c.name)
+                lt = json.loads(c.logical_type.to_json())
+                assert (lt["Type"], lt["isAdjustedToUTC"], lt["timeUnit"]) \
+                    == ("Timestamp", True, "microseconds"), (f, c.name)
+    assert seen == {"ts", "time_reported", "time_generated"}

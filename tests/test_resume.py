@@ -5,6 +5,9 @@ restart + ULID dedup, store/store.go:887-941)."""
 
 from __future__ import annotations
 
+import glob
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -27,7 +30,31 @@ def _sink_fingerprint(spark, out):
     return (str(row["s"]), row["n"])
 
 
-def test_crash_resume_byte_equal(spark, tmp_path):
+def _agg_final(spark, out):
+    return {
+        name: sorted(spark.read.parquet(f"{out}/agg_final/{name}").collect(),
+                     key=repr)
+        for name in job.AGG_TABLES
+    }
+
+
+def _routed_ts_types(out):
+    types = set()
+    for f in glob.glob(f"{out}/routed/bucket=*/*.parquet"):
+        schema = pq.ParquetFile(f).schema
+        types.add(schema.column(schema.names.index("ts")).physical_type)
+    return types
+
+
+TS_TYPE = "spark.sql.parquet.outputTimestampType"
+
+
+@pytest.mark.parametrize("crash_ts_type", [None, "INT96"],
+                         ids=["default", "int96"])
+def test_crash_resume_byte_equal(spark, tmp_path, crash_ts_type):
+    """``int96``: the crashed attempt writes the INT96 timestamps of
+    stores made before the INT64 default, and the resume finishes the
+    store under the default — one store holding both physical types."""
     inp = str(tmp_path / "in")
     transcripts_df(spark, 20, 20).write.parquet(inp)
 
@@ -37,16 +64,26 @@ def test_crash_resume_byte_equal(spark, tmp_path):
 
     # crashed run: dies after 2 buckets, then resumes
     out_cr = str(tmp_path / "crash")
-    with pytest.raises(RuntimeError):
-        job.run_pipeline(spark, inp, out_cr, n_buckets=4, fail_after=2,
-                         run_id="runA")
+    default_ts_type = spark.conf.get(TS_TYPE)
+    if crash_ts_type is not None:
+        spark.conf.set(TS_TYPE, crash_ts_type)
+    try:
+        with pytest.raises(RuntimeError):
+            job.run_pipeline(spark, inp, out_cr, n_buckets=4, fail_after=2,
+                             run_id="runA")
+    finally:
+        spark.conf.set(TS_TYPE, default_ts_type)
     man = spark.read.parquet(f"{out_cr}/_manifest")
     assert man.count() == 2
     res = job.run_pipeline(spark, inp, out_cr, n_buckets=4, run_id="runB")
     assert res["rows"] == 400
+    assert _routed_ts_types(out_cr) == (
+        {"INT64"} if crash_ts_type is None else {"INT96", "INT64"}
+    )
 
     # resumed result == never-failed result
     assert _sink_fingerprint(spark, out_cr) == _sink_fingerprint(spark, out_ref)
+    assert _agg_final(spark, out_cr) == _agg_final(spark, out_ref)
 
     # resume processed exactly the missing buckets
     man2 = spark.read.parquet(f"{out_cr}/_manifest").collect()

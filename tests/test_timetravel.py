@@ -8,6 +8,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -113,12 +114,16 @@ def test_compaction_preserves_rows_and_records_replace(spark, store):
     assert n_files_before > 20  # fragmentation took
     sid = job.compact_sinks(spark, out, run_id="compact1")
     after = fingerprint()
-    n_files_after = len(
-        glob.glob(os.path.join(out, "sinks", "**", "*.parquet"),
-                  recursive=True)
-    )
+    files_after = glob.glob(os.path.join(out, "sinks", "**", "*.parquet"),
+                            recursive=True)
+    n_files_after = len(files_after)
     assert after == before  # byte-level content identical
     assert n_files_after < n_files_before  # actually compacted
+    # the salted fragments lost conversation order; compaction restores it
+    for f in files_after:
+        t = pq.read_table(f, columns=["conv_id", "turn_idx"])
+        keys = list(zip(t["conv_id"].to_pylist(), t["turn_idx"].to_pylist()))
+        assert keys == sorted(keys), f
     snap = (
         ckpt.read_snapshots(spark, out)
         .filter(F.col("snapshot_id") == sid)
