@@ -14,6 +14,9 @@
   dedup idempotent (SURVEY.md §4.3).
 * Missing-msgid backfill (``add_missing_msgid``,
   ``/root/reference/conf/defaults.go:321``, ``store/store.go:605``).
+* Both are pure functions of stored columns, so the store writes
+  neither: ``strip_derived`` drops ``uid`` and blanks a ``msgid`` that
+  equals it, and ``restore_derived`` recomputes both on read.
 * Timestamp defaulting: ``time_reported = coalesce(parsed, ts)``,
   ``time_generated = ts`` — the batch-deterministic substitute for the
   reference's wall-clock now (``decoders/rfc3164_format.go:35-38``).
@@ -39,6 +42,34 @@ def with_uid(df: DataFrame) -> DataFrame:
         "uid",
         F.sha2(F.concat_ws(UNIT_SEP, F.col("conv_id"), F.col("turn_idx")), 256),
     )
+
+
+def add_missing_msgid(df: DataFrame) -> DataFrame:
+    """add_missing_msgid (store/store.go:605): an empty msgid becomes
+    the uid."""
+    return df.withColumn(
+        "msgid", F.when(F.col("msgid") == "", F.col("uid")).otherwise(F.col("msgid"))
+    )
+
+
+def strip_derived(df: DataFrame) -> DataFrame:
+    """The store form of an enriched frame: ``uid`` dropped and a
+    ``msgid`` equal to it stored as ``""``.  ``restore_derived`` undoes
+    it exactly: a backfilled msgid and a parsed msgid that happens to
+    equal its own uid both read back as the uid; any other value, NULL
+    included, passes through."""
+    return df.withColumn(
+        "msgid",
+        F.when(F.col("msgid") == F.col("uid"), F.lit("")).otherwise(F.col("msgid")),
+    ).drop("uid")
+
+
+def restore_derived(df: DataFrame) -> DataFrame:
+    """Recompute what ``strip_derived`` left out.  The uid is always
+    recomputed, never read from disk, so files that still carry one
+    read the same."""
+    df = with_uid(df)
+    return add_missing_msgid(df) if "msgid" in df.columns else df
 
 
 def with_turn_rank(df: DataFrame) -> DataFrame:
@@ -134,9 +165,4 @@ def enrich(df: DataFrame, spark: SparkSession | None = None) -> DataFrame:
         .withColumn("time_generated", F.col("ts"))
         .withColumn("time_reported", F.coalesce("time_reported", "ts"))
     )
-    out = with_uid(out)
-    # add_missing_msgid (store/store.go:605)
-    out = out.withColumn(
-        "msgid", F.when(F.col("msgid") == "", F.col("uid")).otherwise(F.col("msgid"))
-    )
-    return out
+    return add_missing_msgid(with_uid(out))

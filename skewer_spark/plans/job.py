@@ -28,6 +28,13 @@ Execution model (SURVEY.md §3.1 "Spark trace", §4.2):
 uid dedup inside a bucket is globally correct because the uid is a
 function of (conv_id, turn_idx) and conv_id determines the bucket —
 dedup never needs a global shuffle.
+
+The store holds no derived key: neither the routed nor the sink files
+carry ``uid``, and a routed ``msgid`` backfilled from it is stored as
+``""`` (``enrich.strip_derived``).  Both are recomputed on read
+(``enrich.restore_derived``), so a raw parquet reader gets ``uid`` and
+the backfilled ``msgid`` only through :func:`read_routed` and
+:func:`read_sink`.
 """
 
 from __future__ import annotations
@@ -44,16 +51,20 @@ from skewer_spark.operators.aggregate import (
     metric_grouping_sets,
     windowed_counts_from_labeled,
 )
-from skewer_spark.operators.enrich import dedup_and_rank, enrich
+from skewer_spark.operators.enrich import (
+    dedup_and_rank, enrich, restore_derived, strip_derived,
+)
 from skewer_spark.operators.parse import parse_transcripts
 from skewer_spark.operators.route import route
 from skewer_spark.plans import checkpoint as ckpt
 
 # the routed table keeps full message fidelity; sink files are
 # Kafka-message-shaped (store/dests/kafkadest.go:78-108: key, partition,
-# topic, value=encoded, timestamp=time_reported) plus the join/test keys
+# topic, value=encoded, timestamp=time_reported) plus the join/test keys.
+# No derived key: uid is a function of (conv_id, turn_idx), so read_sink
+# recomputes it rather than reading it from disk.
 SINK_COLUMNS = [
-    "uid", "conv_id", "turn_idx", "role", "tool", "ts", "severity",
+    "conv_id", "turn_idx", "role", "tool", "ts", "severity",
     "severity_name", "filter_status", "parse_ok", "parser_name",
     "topic", "partition_key", "partition_number", "time_reported", "encoded",
 ]
@@ -187,13 +198,15 @@ def write_outputs(
     # tasks hold rows sorted by (conv_id, turn_idx), so each file comes
     # out clustered by conversation and compresses to less.  Partition
     # size stays bounded because the window keys on (conv_id,
-    # turn_idx div 8192).
-    routed.write.mode("overwrite").parquet(routed_path)
+    # turn_idx div 8192).  The derived keys are stripped after the
+    # seal, whose nonces are keyed on uid.
+    strip_derived(routed).write.mode("overwrite").parquet(routed_path)
     src = spark.read.parquet(routed_path)
     if secret is not None:
         # the fan-out encoders need plaintext back (one open per
         # bucket — the cost of not storing cleartext)
         src = open_content_cols(src, secret)
+    src = restore_derived(src)
 
     sinks_path = os.path.join(out_dir, "sinks", sub)
     labeled = with_sink_labels(src, include_dropped=True).withColumn(
@@ -214,8 +227,7 @@ def write_outputs(
         labeled = labeled.withColumn(
             "encoded", seal_col("encoded", "uid", secret, salt_col="sink")
         )
-    cols = [c for c in SINK_COLUMNS if c in labeled.columns]
-    labeled.select(*cols, "sink").write.partitionBy("sink").mode(
+    labeled.select(*SINK_COLUMNS, "sink").write.partitionBy("sink").mode(
         "overwrite"
     ).parquet(sinks_path)
 
@@ -482,53 +494,47 @@ def run_flat(spark: SparkSession, input_path: str, out_dir: str) -> int:
     return n_rows
 
 
+def _check_read_mode(out_dir: str, secret: bytes | None) -> None:
+    """run_pipeline stores carry the at-rest marker: refuse the two
+    silent failure shapes (ciphertext handed downstream as content;
+    plaintext "decrypted" with a key)."""
+    mode = _read_store_encryption(out_dir)
+    if mode is None:
+        return
+    if mode.get("sealed") and secret is None:
+        raise ValueError(
+            f"store {out_dir!r} is sealed at rest (key "
+            f"{mode.get('key_fp')}); pass secret= to read it"
+        )
+    if not mode.get("sealed") and secret is not None:
+        raise ValueError(
+            f"store {out_dir!r} is not sealed; drop the secret= argument"
+        )
+
+
 def read_routed(
     spark: SparkSession, out_dir: str, secret: bytes | None = None
 ) -> DataFrame:
     """Read the full-fidelity routed table (all parsed/enriched
-    columns); ``secret`` revives content columns sealed at rest (same
-    mode contract as :func:`read_sink` — fail loud on a missing or
-    superfluous key)."""
-    mode = _read_store_encryption(out_dir)
-    if mode is not None:
-        if mode.get("sealed") and secret is None:
-            raise ValueError(
-                f"store {out_dir!r} is sealed at rest (key "
-                f"{mode.get('key_fp')}); pass secret= to read content"
-            )
-        if not mode.get("sealed") and secret is not None:
-            raise ValueError(
-                f"store {out_dir!r} is not sealed; drop the secret= "
-                "argument"
-            )
+    columns, ``uid`` and the backfilled ``msgid`` recomputed);
+    ``secret`` revives content columns sealed at rest (fail loud on a
+    missing or superfluous key)."""
+    _check_read_mode(out_dir, secret)
     path = os.path.join(out_dir, "routed")
     df = spark.read.option("basePath", path).parquet(path)
     if secret is not None:
         df = open_content_cols(df, secret)
-    return df
+    return restore_derived(df)
 
 
 def read_sink(
     spark: SparkSession, out_dir: str, name: str,
     secret: bytes | None = None,
 ) -> DataFrame:
-    """Read one destination's rows (partition-pruned on sink=);
-    ``secret`` opens payloads sealed at rest (fail-loud on tamper)."""
-    mode = _read_store_encryption(out_dir)
-    if mode is not None:
-        # run_pipeline stores carry the at-rest marker: refuse the two
-        # silent failure shapes (ciphertext handed downstream as the
-        # payload; plaintext "decrypted" with a key)
-        if mode.get("sealed") and secret is None:
-            raise ValueError(
-                f"store {out_dir!r} is sealed at rest (key "
-                f"{mode.get('key_fp')}); pass secret= to read payloads"
-            )
-        if not mode.get("sealed") and secret is not None:
-            raise ValueError(
-                f"store {out_dir!r} is not sealed; drop the secret= "
-                "argument"
-            )
+    """Read one destination's rows (partition-pruned on sink=, ``uid``
+    recomputed); ``secret`` opens payloads sealed at rest (fail-loud on
+    tamper)."""
+    _check_read_mode(out_dir, secret)
     path = os.path.join(out_dir, "sinks")
     df = (
         spark.read.option("basePath", path).parquet(path)
@@ -538,7 +544,7 @@ def read_sink(
         from skewer_spark.functions.crypto import open_col
 
         df = df.withColumn("encoded", open_col("encoded", secret))
-    return df
+    return restore_derived(df)
 
 
 def read_sink_asof(
@@ -667,14 +673,15 @@ def compact_sinks(
     n_leaves = max(1, df.select(*part_cols).distinct().count())
     # hash-repartition on the partition columns puts each leaf's rows in
     # ONE task → one output file per leaf; files_per_partition > 1 adds
-    # a deterministic uid salt so big leaves split into exactly that
-    # many files
+    # a deterministic per-turn salt so big leaves split into exactly
+    # that many files
     keys = [F.col(c) for c in part_cols]
     if files_per_partition > 1:
-        keys.append(F.pmod(F.xxhash64("uid"), F.lit(files_per_partition)))
+        keys.append(F.pmod(F.xxhash64("conv_id", "turn_idx"),
+                           F.lit(files_per_partition)))
     (
         df.repartition(n_leaves * files_per_partition, *keys)
-        # the exchange (and its uid salt) scatters conversations;
+        # the exchange (and its salt) scatters conversations;
         # restore the store's conversation order within each file
         .sortWithinPartitions(*part_cols, "conv_id", "turn_idx")
         .write.mode("overwrite")

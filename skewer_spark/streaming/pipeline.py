@@ -40,6 +40,7 @@ from skewer_spark.operators.aggregate import windowed_counts
 from skewer_spark.operators.enrich import enrich
 from skewer_spark.operators.parse import parse_transcripts
 from skewer_spark.operators.route import route, with_sink_labels
+from skewer_spark.plans.job import SINK_COLUMNS
 from skewer_spark.schema import TRANSCRIPT_SCHEMA
 from skewer_spark.sinks.encoders import encoded_by_sink
 
@@ -68,13 +69,13 @@ def write_sink_batch(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
     failure replaces its partial output instead of appending duplicates
     — this upgrades the foreachBatch leg from at-least-once to
     effectively-once (the parquet agg leg gets it from the file-sink
-    commit log natively)."""
+    commit log natively).  Rows carry the batch store's sink schema."""
     labeled = with_sink_labels(batch_df, include_dropped=True).withColumn(
         "encoded", encoded_by_sink()
     )
-    labeled.write.partitionBy("sink").mode("overwrite").parquet(
-        os.path.join(out_dir, "sinks", f"batch={batch_id}")
-    )
+    labeled.select(*SINK_COLUMNS, "sink").write.partitionBy("sink").mode(
+        "overwrite"
+    ).parquet(os.path.join(out_dir, "sinks", f"batch={batch_id}"))
 
 
 def run_streaming(

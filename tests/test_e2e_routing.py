@@ -173,8 +173,9 @@ def test_encoded_payloads_shape(spark, pipeline_out):
 
 
 def test_flat_store_layout(spark, tmp_path):
-    """run_flat writes routed files in conversation order and stores
-    every timestamp as INT64 micros adjusted to UTC."""
+    """run_flat writes routed files in conversation order, stores
+    every timestamp as INT64 micros adjusted to UTC, and stores no
+    derived uid."""
     inp, out = str(tmp_path / "in"), str(tmp_path / "out")
     transcripts_df(spark, 30, 40).write.parquet(inp)
     job.run_flat(spark, inp, out)
@@ -190,6 +191,7 @@ def test_flat_store_layout(spark, tmp_path):
     seen = set()
     for f in routed + sinks:
         schema = pq.ParquetFile(f).schema
+        assert "uid" not in schema.names, f
         for i in range(len(schema)):
             c = schema.column(i)
             if c.name in ("ts", "time_reported", "time_generated"):
@@ -199,3 +201,24 @@ def test_flat_store_layout(spark, tmp_path):
                 assert (lt["Type"], lt["isAdjustedToUTC"], lt["timeUnit"]) \
                     == ("Timestamp", True, "microseconds"), (f, c.name)
     assert seen == {"ts", "time_reported", "time_generated"}
+
+
+def test_derived_keys_round_trip(spark):
+    """strip_derived → restore_derived gives back every enriched row:
+    an ordinary msgid, a backfilled one, NULL, and a parsed msgid that
+    equals its own uid."""
+    from skewer_spark.operators.enrich import (
+        add_missing_msgid, restore_derived, strip_derived, with_uid,
+    )
+
+    own_uid = oracle.uid_of("c", 3)
+    x = add_missing_msgid(with_uid(spark.createDataFrame(
+        [("c", 0, "ID47"), ("c", 1, ""), ("c", 2, None), ("c", 3, own_uid)],
+        "conv_id string, turn_idx int, msgid string",
+    )))
+    stored = strip_derived(x)
+    assert "uid" not in stored.columns
+    assert [r.msgid for r in stored.orderBy("turn_idx").collect()] \
+        == ["ID47", "", None, ""]
+    got = restore_derived(stored).select(*x.columns).orderBy("turn_idx")
+    assert got.collect() == x.orderBy("turn_idx").collect()

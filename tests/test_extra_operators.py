@@ -267,7 +267,7 @@ def test_streaming_sink_write_idempotent(spark, tmp_path):
 
 def test_stream_output_equals_batch(spark, tmp_path):
     """VERDICT r01 #10: the streaming path and the batch one-pass
-    fan-out agree row-for-row on (uid, sink, encoded)."""
+    fan-out agree row-for-row on (conv_id, turn_idx, sink, encoded)."""
     from skewer_spark.operators.route import with_sink_labels
     from skewer_spark.plans.job import build_routed
     from skewer_spark.sinks.encoders import encoded_by_sink
@@ -280,18 +280,16 @@ def test_stream_output_equals_batch(spark, tmp_path):
     q1, q2 = run_streaming(spark, inp, out, trigger_once=True)
     q1.awaitTermination(120)
     q2.awaitTermination(120)
+    keys = ["conv_id", "turn_idx", "sink", "encoded"]
     streamed = {
-        (r.uid, r.sink, r.encoded)
+        tuple(r)
         for r in spark.read.option("basePath", f"{out}/sinks")
-        .parquet(f"{out}/sinks").select("uid", "sink", "encoded").collect()
+        .parquet(f"{out}/sinks").select(*keys).collect()
     }
     batch = with_sink_labels(
         build_routed(spark.read.parquet(inp)), include_dropped=True
     ).withColumn("encoded", encoded_by_sink())
-    expected = {
-        (r.uid, r.sink, r.encoded)
-        for r in batch.select("uid", "sink", "encoded").collect()
-    }
+    expected = {tuple(r) for r in batch.select(*keys).collect()}
     assert streamed == expected and len(streamed) > 0
 
 

@@ -20,7 +20,8 @@ def _sink_fingerprint(spark, out):
     df = spark.read.option("basePath", f"{out}/sinks").parquet(f"{out}/sinks")
     row = (
         df.select(
-            F.sha2(F.concat_ws("\x1f", "uid", "sink", "topic", "encoded"), 256)
+            F.sha2(F.concat_ws("\x1f", "conv_id", "turn_idx", "sink",
+                               "topic", "encoded"), 256)
             .alias("h")
         )
         .agg(F.sum(F.conv(F.substring("h", 1, 8), 16, 10).cast("decimal(38,0)"))

@@ -83,7 +83,8 @@ def test_compaction_preserves_rows_and_records_replace(spark, store):
             df.count(),
             df.agg(
                 F.bit_xor(
-                    F.xxhash64("uid", "sink", "encoded", "bucket")
+                    F.xxhash64("conv_id", "turn_idx", "sink", "encoded",
+                               "bucket")
                 ).alias("h")
             ).collect()[0].h,
         )
@@ -98,7 +99,7 @@ def test_compaction_preserves_rows_and_records_replace(spark, store):
     )
     (
         src.repartition(80, "bucket", "sink",
-                        F.pmod(F.xxhash64("uid"), F.lit(4)))
+                        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(4)))
         .write.mode("overwrite").partitionBy("bucket", "sink").parquet(frag)
     )
     import shutil
