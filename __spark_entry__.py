@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -453,298 +452,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.lower(F.hex(encode_protobuf())).alias("encoded_hex"),
         )
 
-    def q_parse_protobuf(spark, sf):
-        from skewer_spark.operators.decode_protobuf import parse_protobuf
-        from skewer_spark.sinks.wire import encode_protobuf
-        enc = _routed_events(spark, sf).select(
-            F.col("turn_idx").cast("long").alias("event_id"),
-            encode_protobuf().alias("pb"),
-        )
-        d = enc.select("event_id", parse_protobuf("pb").alias("d"))
-        return d.select(
-            "event_id",
-            F.col("d.priority").cast("long").alias("priority"),
-            F.col("d.facility").cast("long").alias("facility"),
-            F.col("d.severity").cast("long").alias("severity"),
-            F.col("d.version").cast("long").alias("version"),
-            F.col("d.time_reported_num").alias("time_reported_num"),
-            F.col("d.time_generated_num").alias("time_generated_num"),
-            F.col("d.hostname").alias("hostname"),
-            F.col("d.appname").alias("appname"),
-            F.col("d.procid").alias("procid"),
-            F.col("d.msgid").alias("msgid"),
-            F.col("d.structured").alias("structured"),
-            F.col("d.message").alias("message"),
-            F.col("d.properties_json").alias("properties_json"),
-        )
-
-    def q_parse_collectd(spark, sf):
-        from skewer_spark.sources.binary import decode_collectd
-
-        ev = _read(spark, sf, "events")
-
-        def spart(t, s):
-            b = F.encode(s, "UTF-8")
-            return F.concat(
-                F.unhex(F.format_string("%04x", F.lit(t))),
-                F.unhex(F.format_string("%04x", F.octet_length(b) + 5)),
-                b, F.unhex(F.lit("00")),
-            )
-
-        host = F.format_string("cdh%02d", F.pmod("user_id", F.lit(30)))
-        time_part = F.unhex(
-            F.format_string("0001000c%016x", F.unix_timestamp("ts"))
-        )
-        # values part: n=2, kinds derive/derive, two BE int64 cells
-        values = F.unhex(F.format_string(
-            "00060018""0002""0202""%016x%016x",
-            F.col("event_id"), F.col("user_id"),
-        ))
-        pkt = F.concat(
-            spart(0x0000, host), time_part, spart(0x0002, F.lit("ifx")),
-            spart(0x0003, F.lit("eth0")), spart(0x0004, F.lit("if_octets")),
-            values,
-        )
-        staged = ev.select(
-            "event_id", pkt.alias("payload"),
-            F.date_trunc("second", "ts").alias("ts"),
-        )
-        out = decode_collectd(staged)
-        return out.select(
-            "event_id", "hostname", "procid", "properties_json", "message",
-            F.date_format("time_reported", "yyyy-MM-dd'T'HH:mm:ss'Z'")
-            .alias("tr_str"),
-        )
-
-    def q_parse_acct(spark, sf):
-        # acct(5) BY CONSTRUCTION: build the 64-byte little-endian
-        # struct acct_v3 from event fields in pure expressions
-        # (reference layout accounting/acct_linux.go:30-52), decode
-        # with the real batch decoder; the oracle recomputes every
-        # decoded field arithmetically.  etime (float32) is the one
-        # constant field — IEEE bit synthesis isn't portable SQL.
-        from skewer_spark.sources.binary import decode_acct_records
-
-        ev = _read(spark, sf, "events")
-        eid = F.col("event_id")
-
-        def le(v, n):
-            args = [
-                F.shiftright(v.cast("long"), 8 * i).bitwiseAND(F.lit(255))
-                for i in range(n)
-            ]
-            return F.format_string("%02x" * n, *args)
-
-        flag = F.pmod(eid, F.lit(32))
-        comm = F.format_string("proc%02d", F.pmod(eid, F.lit(50)))
-        hexstr = F.concat(
-            le(flag, 1), F.lit("03"),                      # flag, version 3
-            le(F.pmod(eid, F.lit(100)), 2),                # tty
-            le(F.pmod(eid, F.lit(256)), 4),                # exitcode
-            le(F.pmod(F.col("user_id"), F.lit(1000)), 4),  # uid
-            le(F.pmod(F.col("user_id"), F.lit(100)), 4),   # gid
-            le(F.pmod(eid, F.lit(32768)), 4),              # pid
-            le(F.pmod(eid * 3, F.lit(32768)), 4),          # ppid
-            le(F.unix_timestamp("ts"), 4),                 # btime
-            F.lit("0000c842"),                             # etime = 100.0f LE
-            le(F.pmod(eid, F.lit(8192)), 2),               # utime: exp 0
-            le(F.pmod(eid, F.lit(8192)) + 8192, 2),        # stime: exp 1 (<<3)
-            le(F.pmod(eid, F.lit(4096)), 2),               # mem
-            le(F.lit(0), 2), F.lit("0000" * 4),            # io, rw..swaps
-            F.rpad(F.lower(F.hex(F.encode(comm, "UTF-8"))), 32, "0"),
-        )
-        src = ev.select("event_id", F.unhex(hexstr).alias("payload"))
-        out = decode_acct_records(src)
-        return out.select(
-            "event_id", "comm", "uid", "gid", "pid", "ppid",
-            F.col("tty").cast("long").alias("tty"), "exitcode",
-            F.date_format("btime", "yyyy-MM-dd HH:mm:ss").alias("btime_str"),
-            "utime_ns", "stime_ns", "etime_ns", "mem", "io", "flags",
-        )
-
-    def q_gelf_chunks(spark, sf):
-        # chunked + zlib GELF BY CONSTRUCTION: compress the GELF JSON
-        # and split it into 2 chunked datagrams per message (header
-        # 0x1e0f + msg_id + seq/total, graylog.go:33-41), shuffle them
-        # through reassembly, then decode.  Compression is stdlib zlib
-        # in an Arrow-batched UDF; the oracle recomputes the decoded
-        # fields from the same event columns.
-        from pyspark.sql import types as TT
-        from pyspark.sql.functions import pandas_udf
-
-        from skewer_spark.operators.decode_json import parse_gelf
-        from skewer_spark.sources.binary import reassemble_gelf_datagrams
-
-        ev = _read(spark, sf, "events")
-        line = F.to_json(F.struct(
-            F.lit("1.1").alias("version"),
-            F.format_string("ch%02d", F.pmod(F.col("user_id"), F.lit(25))).alias("host"),
-            F.format_string("chunked msg %d", F.col("event_id")).alias("short_message"),
-            F.pmod(F.col("event_id"), F.lit(8)).cast("int").alias("level"),
-            F.unix_timestamp(F.date_trunc("second", "ts")).cast("double")
-            .alias("timestamp"),
-        ))
-
-        @pandas_udf(TT.ArrayType(TT.BinaryType()))
-        def chunkify(text: pd.Series, eid: pd.Series) -> pd.Series:
-            import zlib as _z
-
-            out = []
-            for t, i in zip(text, eid):
-                z = _z.compress(t.encode())
-                mid = int(i).to_bytes(8, "big")
-                half = (len(z) + 1) // 2
-                out.append([
-                    b"\x1e\x0f" + mid + bytes([s, 2]) + z[s * half:(s + 1) * half]
-                    for s in (0, 1)
-                ])
-            return pd.Series(out)
-
-        # eager checkpoint = the datagram table a real deployment reads
-        # from storage: reassembly's chunked/single branches each scan
-        # their input, which here would re-run the zlib chunkify UDF +
-        # explode per branch (r6; instance-scoped blocks, no cross-run
-        # result sharing)
-        grams = ev.select(
-            F.explode(chunkify(line, F.col("event_id"))).alias("payload")
-        ).localCheckpoint(eager=True)
-        text = reassemble_gelf_datagrams(grams)
-        parsed = parse_gelf(text)
-        return parsed.select(
-            F.conv("msg_id", 16, 10).cast("long").alias("event_id"),
-            "priority", "facility", "severity", "hostname", "message",
-            F.date_format("time_reported", "yyyy-MM-dd HH:mm:ss").alias("tr_str"),
-        )
-
-    def q_parse_rsyslog(spark, sf):
-        from skewer_spark.operators.decode_json import parse_rsyslog_json
-        ev = _read(spark, sf, "events")
-        pri = F.pmod(F.col("event_id"), F.lit(192))
-        hostname = F.when(
-            F.pmod(F.col("event_id"), F.lit(5)) == 0, F.lit("-")
-        ).otherwise(
-            F.format_string("rh%02d", F.pmod(F.col("user_id"), F.lit(25)))
-        )
-        line = F.to_json(F.struct(
-            pri.cast("string").alias("pri"),
-            F.date_format(F.date_trunc("second", "ts"),
-                          "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("timereported"),
-            hostname.alias("hostname"),
-            F.format_string("rapp%d", F.pmod(F.col("event_id"), F.lit(6)))
-            .alias("app-name"),
-            F.pmod(F.col("event_id"), F.lit(500)).cast("string").alias("procid"),
-            F.lit("-").alias("msgid"),
-            F.concat(F.lit("rsys msg "), F.col("event_id")).alias("msg"),
-            F.create_map(F.lit("k1"), F.col("event_type")).alias("$!"),
-        ))
-        out = parse_rsyslog_json(ev.select("event_id", line.alias("text")))
-        return out.select(
-            "event_id",
-            F.col("priority").cast("int").alias("priority"),
-            F.col("facility").cast("int").alias("facility"),
-            F.col("severity").cast("int").alias("severity"),
-            "hostname", "appname", "procid", "msgid", "message",
-            F.get_json_object("properties_json", "$.rsyslog.k1").alias("k1"),
-            F.date_format("time_reported", "yyyy-MM-dd HH:mm:ss").alias("tr_str"),
-        )
-
-    def q_parse_gelf(spark, sf):
-        from skewer_spark.operators.decode_json import parse_gelf
-        ev = _read(spark, sf, "events")
-        fac_name = F.element_at(
-            F.array(*[F.lit(x) for x in
-                      ("kern", "daemon", "authpriv", "nosuchfac")]),
-            F.pmod(F.col("event_id"), F.lit(4)).cast("int") + 1,
-        )
-        line = F.to_json(F.struct(
-            F.lit("1.1").alias("version"),
-            F.format_string("gh%02d", F.pmod(F.col("user_id"), F.lit(35)))
-            .alias("host"),
-            F.concat(F.lit("gelf msg "), F.col("event_id"))
-            .alias("short_message"),
-            F.unix_timestamp(F.date_trunc("second", "ts")).cast("double")
-            .alias("timestamp"),
-            F.pmod(F.col("event_id"), F.lit(8)).cast("int").alias("level"),
-            fac_name.alias("facility"),
-        ))
-        out = parse_gelf(ev.select("event_id", line.alias("text")))
-        return out.select(
-            "event_id",
-            F.col("priority").cast("int").alias("priority"),
-            F.col("facility").cast("int").alias("facility"),
-            F.col("severity").cast("int").alias("severity"),
-            "hostname", "message",
-            F.date_format("time_reported", "yyyy-MM-dd HH:mm:ss").alias("tr_str"),
-        )
-
-    def q_parse_w3c(spark, sf):
-        from skewer_spark.operators.decode_json import parse_w3c
-        from skewer_spark.schema import PROPERTIES_TYPE
-        ev = _read(spark, sf, "events")
-        fields = ["date", "time", "c-ip", "cs-method", "sc-status"]
-        line = F.concat_ws(
-            " ",
-            F.date_format("ts", "yyyy-MM-dd"),
-            F.date_format("ts", "HH:mm:ss"),
-            F.format_string("192.168.%d.%d",
-                            F.pmod(F.col("user_id"), F.lit(50)),
-                            F.pmod(F.col("event_id"), F.lit(200))),
-            F.element_at(
-                F.array(F.lit("GET"), F.lit("POST"), F.lit("PUT")),
-                F.pmod(F.col("event_id"), F.lit(3)).cast("int") + 1,
-            ),
-            (F.lit(200) + F.pmod(F.col("event_id"), F.lit(5))).cast("string"),
-        )
-        out = parse_w3c(ev.select("event_id", line.alias("text")), fields)
-        w3c = F.from_json("properties_json", PROPERTIES_TYPE)["w3c"]
-        return out.withColumn("_w", w3c).select(
-            "event_id",
-            F.col("_w")["c-ip"].alias("c_ip"),
-            F.col("_w")["cs-method"].alias("method"),
-            F.col("_w")["sc-status"].alias("status"),
-            F.col("parse_ok").cast("boolean").alias("parse_ok"),
-        )
-
-    def q_parse_ltsv(spark, sf):
-        from skewer_spark.operators.decode_json import parse_ltsv
-        ev = _read(spark, sf, "events")
-        pri = F.pmod(F.col("event_id"), F.lit(192))
-        line = F.concat_ws(
-            "\t",
-            F.concat(F.lit("time:"),
-                     F.date_format(F.date_trunc("second", "ts"),
-                                   "yyyy-MM-dd'T'HH:mm:ss'Z'")),
-            F.concat(F.lit("host:"),
-                     F.format_string("lh%02d", F.pmod(F.col("user_id"),
-                                                      F.lit(30)))),
-            F.concat(F.lit("ident:"),
-                     F.format_string("lapp%d", F.pmod(F.col("event_id"),
-                                                      F.lit(7)))),
-            F.concat(F.lit("pid:"),
-                     F.pmod(F.col("event_id"), F.lit(900)).cast("string")),
-            F.concat(F.lit("pri:"), pri.cast("string")),
-            # colon inside the value: split must stop at the FIRST colon
-            F.concat(F.lit("msg:ltsv msg "), F.col("event_id"),
-                     F.lit(" k:v")),
-            F.concat(F.lit("status:"),
-                     (F.lit(200) + F.pmod(F.col("event_id"),
-                                          F.lit(5))).cast("string")),
-        )
-        out = parse_ltsv(ev.select("event_id", line.alias("text")))
-        return out.select(
-            "event_id",
-            F.col("priority").cast("int").alias("priority"),
-            F.col("facility").cast("int").alias("facility"),
-            F.col("severity").cast("int").alias("severity"),
-            "hostname", "appname", "procid", "message",
-            F.get_json_object("properties_json", "$.ltsv.status")
-            .alias("status"),
-            "properties_json",
-            F.col("parse_ok").cast("boolean").alias("parse_ok"),
-            F.date_format("time_reported", "yyyy-MM-dd HH:mm:ss")
-            .alias("tr_str"),
-        )
-
     def q_grok(spark, sf):
         # grok-compiled apache common-log extraction: the fixture line
         # is BUILT from events columns, so the oracle checks the
@@ -884,32 +591,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return dd_quantiles(
             sk, (0.5, 0.95, 0.99), key_cols=["event_type"]
-        )
-
-    def q_frame_octet(spark, sf):
-        # RFC6587 octet-counting framing round-trip (tcp.go:304-334):
-        # even event_ids arrive framed ('<len> <pri>msg'), odd ones
-        # bare (LF-framing fallback); strip_octet_count must remove
-        # exactly the prefix on framed lines and pass bare lines
-        # through byte-identically.  Oracle-paired r4 (was
-        # pytest-golden only).  The prefix counts BYTES
-        # (octet_length), matching tcp.go's len([]byte) — char length
-        # would mis-frame non-ASCII payloads (ADVICE r4).
-        from skewer_spark.sources.misc import strip_octet_count
-        ev = _read(spark, sf, "events")
-        msg = F.concat(
-            F.lit("<"), F.pmod("event_id", F.lit(192)).cast("string"),
-            F.lit(">"), F.col("event_type"), F.lit(" msg "),
-            F.col("event_id").cast("string"),
-        )
-        framed = F.when(
-            F.pmod("event_id", F.lit(2)) == 0,
-            F.concat(F.octet_length(msg).cast("string"), F.lit(" "), msg),
-        ).otherwise(msg)
-        return ev.select(
-            F.col("event_id").cast("long").alias("event_id"),
-            framed.alias("framed"),
-            strip_octet_count(framed).alias("stripped"),
         )
 
     def q_multiline(spark, sf):
@@ -1282,62 +963,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_doc_fingerprint(spark, sf):
         docs = _read(spark, sf, "documents")
         return docs.select("doc_id", word_fingerprint().alias("fp"))
-
-    def q_parse_json(spark, sf):
-        # Regular-JSON decoder: build the JSON line from event fields,
-        # decode with the real operator; oracle recomputes by construction
-        from skewer_spark.operators.decode_json import parse_regular_json
-        ev = _read(spark, sf, "events")
-        fac_name = F.element_at(
-            F.array(*[F.lit(x) for x in
-                      ("kern", "auth", "cron", "local3")]),
-            F.pmod(F.col("event_id"), F.lit(4)).cast("int") + 1,
-        )
-        sev_name = F.element_at(
-            F.array(*[F.lit(x) for x in
-                      ("emerg", "crit", "notice", "debug")]),
-            F.pmod(F.col("event_id"), F.lit(3)).cast("int") + 1,
-        )
-        line = F.to_json(F.struct(
-            fac_name.alias("facility"),
-            sev_name.alias("severity"),
-            F.date_format(F.date_trunc("second", "ts"),
-                          "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("timereported"),
-            F.format_string("jh%02d", F.pmod(F.col("user_id"), F.lit(30))).alias("hostname"),
-            F.lit("japp").alias("appname"),
-            F.col("event_type").alias("message"),
-        ))
-        src = ev.select(F.col("event_id"), line.alias("text"))
-        out = parse_regular_json(src)
-        return out.select(
-            "event_id", "priority", "facility", "severity", "hostname",
-            "appname", "message",
-            F.date_format("time_reported", "yyyy-MM-dd HH:mm:ss").alias("tr_str"),
-        )
-
-    def q_parse_influx(spark, sf):
-        from skewer_spark.operators.decode_influx import parse_influx
-        ev = _read(spark, sf, "events")
-        line = F.format_string(
-            "cpu,host=ih%02d,region=r%d count=%di,ok=true,note=\"n%d\" %d",
-            F.pmod(F.col("user_id"), F.lit(40)),
-            F.pmod(F.col("event_id"), F.lit(5)),
-            F.pmod(F.col("event_id"), F.lit(1000)),
-            F.pmod(F.col("event_id"), F.lit(7)),
-            F.col("event_id") * F.lit(1_000_000_000),
-        )
-        src = ev.select("event_id", line.alias("text"),
-                        F.col("ts"))
-        out = parse_influx(src)
-        return out.select(
-            "event_id", "priority", "facility", "severity", "hostname",
-            "appname", "message",
-            F.get_json_object("properties_json",
-                              "$.influxdb_fields.count_integer").alias("count_i"),
-            F.get_json_object("properties_json",
-                              "$.influxdb_tags.region").alias("region"),
-            F.date_format("time_reported", "yyyy-MM-dd HH:mm:ss").alias("tr_str"),
-        )
 
     def q_quality_score(spark, sf):
         from skewer_spark.functions.text import quality_score
@@ -2459,13 +2084,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_dedup_clusters": q_dedup_clusters,
         "q_ann_topk": q_ann_topk,
         "q_incoming_counts": q_incoming_counts,
-        "q_parse_rsyslog": q_parse_rsyslog,
-        "q_parse_gelf": q_parse_gelf,
-        "q_parse_w3c": q_parse_w3c,
         "q_ngram_jaccard": q_ngram_jaccard,
-        "q_parse_ltsv": q_parse_ltsv,
-        "q_gelf_chunks": q_gelf_chunks,
-        "q_parse_json": q_parse_json,
         "q_route_topic": q_route_topic,
         "q_route_rules": q_route_rules,
         "q_window_rank": q_window_rank,
@@ -2484,7 +2103,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_multiline": q_multiline,
         "q_cdc_upsert": q_cdc_upsert,
         "q_rate_limit": q_rate_limit,
-        "q_parse_protobuf": q_parse_protobuf,
         "q_hybrid_search": q_hybrid_search,
         "q_sketch_distinct": q_sketch_distinct,
         "q_minhash_lsh": q_minhash_lsh,
@@ -2499,7 +2117,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_conv_stats": q_conv_stats,
         "q_encode_rfc3164": q_encode_rfc3164,
         "q_encode_gelf": q_encode_gelf,
-        "q_frame_octet": q_frame_octet,
         "q_encode_file": q_encode_file,
         "q_rand_proj": q_rand_proj,
         "q_normalize": q_normalize,
@@ -2519,13 +2136,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_tpch_q1": q_tpch_q1,
         "q_simhash_pairs": q_simhash_pairs,
         "q_embed_neardup": q_embed_neardup,
-        "q_parse_influx": q_parse_influx,
         "q_priority_decode": q_priority_decode,
-        "q_parse_acct": q_parse_acct,
         "q_dedup_exact": q_dedup_exact,
         "q_parse_errors": q_parse_errors,
         "q_sample_per_group": q_sample_per_group,
-        "q_parse_collectd": q_parse_collectd,
         "q_lang_id": q_lang_id,
         "q_doc_fingerprint": q_doc_fingerprint,
         "q_encode_avro": q_encode_avro,
@@ -2643,29 +2257,6 @@ def oracle_sql() -> dict[str, str]:
             THEN '[' || trim(procid) || ']' ELSE '' END) ||
       ': ' || message AS encoded
     FROM routed
-    """
-
-
-    frame_octet = """
-    WITH m AS (
-      SELECT event_id,
-        '<' || (event_id % 192) || '>' || event_type || ' msg ' || event_id
-          AS msg
-      FROM events
-    ), f AS (
-      SELECT event_id,
-        CASE WHEN event_id % 2 = 0
-             -- strlen = BYTE length (DuckDB's octet_length analog for
-             -- varchar), matching Spark's octet_length
-             THEN strlen(msg)::varchar || ' ' || msg ELSE msg END
-          AS framed
-      FROM m
-    )
-    SELECT event_id, framed,
-      CASE WHEN regexp_matches(framed, '^[0-9]+ <')
-           THEN regexp_replace(framed, '^[0-9]+ ', '') ELSE framed END
-        AS stripped
-    FROM f
     """
 
     encode_file_sql = f"""
@@ -2938,46 +2529,6 @@ def oracle_sql() -> dict[str, str]:
     encode_protobuf_sql = f"""
     {EV_PRELUDE}
     SELECT event_id, {pb_body} AS encoded_hex FROM routed
-    """
-
-    parse_protobuf_sql = f"""
-    {EV_PRELUDE}
-    SELECT event_id,
-      (CASE WHEN ok THEN pri ELSE 0 END)::BIGINT AS priority,
-      (CASE WHEN ok THEN fac ELSE 0 END)::BIGINT AS facility,
-      (CASE WHEN ok THEN sev ELSE 0 END)::BIGINT AS severity,
-      {version_expr}::BIGINT AS version,
-      epoch_ns(coalesce(time_reported, ts))::BIGINT AS time_reported_num,
-      epoch_ns(ts)::BIGINT AS time_generated_num,
-      hostname, appname, procid,
-      {msgid_eff} AS msgid,
-      {sd_expr} AS structured,
-      message,
-      (CASE WHEN shape = 0 AND ok THEN '{{"meta":{{"k":"v"}}}}'
-            ELSE '{{}}' END) AS properties_json
-    FROM routed
-    """
-
-    parse_collectd_sql = """
-    WITH ev AS (
-      SELECT event_id, user_id,
-        'cdh' || lpad((user_id % 30)::varchar, 2, '0') AS host,
-        epoch(date_trunc('second', ts))::BIGINT AS es,
-        date_trunc('second', ts) AS tss
-      FROM events
-    )
-    SELECT event_id,
-      host AS hostname,
-      'ifx' AS procid,
-      '{"collectd":{"plugin_instance":"eth0","type":"if_octets"},"derive":{"rx":"'
-        || event_id || '","tx":"' || user_id || '"}}' AS properties_json,
-      '{"values":[' || event_id || ',' || user_id ||
-        '],"dstypes":["derive","derive"],"dsnames":["rx","tx"],"time":' ||
-        es || '.0,"interval":0.0,"host":"' || host ||
-        '","plugin":"ifx","plugin_instance":"eth0","type":"if_octets","type_instance":""}'
-        AS message,
-      strftime(tss, '%Y-%m-%dT%H:%M:%SZ') AS tr_str
-    FROM ev
     """
 
     # ---- hyperplane-LSH oracles: identical integer LCG planes ----
@@ -3304,7 +2855,6 @@ def oracle_sql() -> dict[str, str]:
         "q_encode_rfc5424": encode_5424,
         "q_encode_rfc3164": encode_3164,
         "q_encode_gelf": encode_gelf_sql,
-        "q_frame_octet": frame_octet,
         "q_encode_file": encode_file_sql,
         "q_encode_json": encode_json_sql,
         "q_encode_fulljson": encode_fulljson_sql,
@@ -3313,120 +2863,6 @@ def oracle_sql() -> dict[str, str]:
         "q_encode_jsonavro": encode_jsonavro_sql,
         "q_encode_fulljsonavro": encode_fulljsonavro_sql,
         "q_encode_protobuf": encode_protobuf_sql,
-        "q_parse_protobuf": parse_protobuf_sql,
-        "q_parse_collectd": parse_collectd_sql,
-        "q_parse_acct": """
-            -- every decoded field recomputed arithmetically from the
-            -- event columns the record was synthesized from
-            SELECT event_id,
-              'proc' || lpad((event_id % 50)::varchar, 2, '0') AS comm,
-              (user_id % 1000)::BIGINT AS uid,
-              (user_id % 100)::BIGINT AS gid,
-              (event_id % 32768)::BIGINT AS pid,
-              ((event_id * 3) % 32768)::BIGINT AS ppid,
-              (event_id % 100)::BIGINT AS tty,
-              (event_id % 256)::BIGINT AS exitcode,
-              strftime(date_trunc('second', ts), '%Y-%m-%d %H:%M:%S')
-                AS btime_str,
-              ((event_id % 8192) * 10 * 1000000)::BIGINT AS utime_ns,
-              ((event_id % 8192) * 80 * 1000000)::BIGINT AS stime_ns,
-              1000000000::BIGINT AS etime_ns,
-              (event_id % 4096)::BIGINT AS mem,
-              0::BIGINT AS io,
-              concat_ws(',',
-                CASE WHEN (event_id % 32) & 4 > 0 THEN 'compatmode' END,
-                CASE WHEN (event_id % 32) & 8 > 0 THEN 'dumpedcore' END,
-                CASE WHEN (event_id % 32) & 1 > 0 THEN 'forked' END,
-                CASE WHEN (event_id % 32) & 2 > 0 THEN 'superuser' END,
-                CASE WHEN (event_id % 32) & 16 > 0 THEN 'killedbysignal' END
-              ) AS flags
-            FROM events
-        """,
-        "q_gelf_chunks": """
-            SELECT event_id,
-                   (8 + event_id % 8)::int AS priority,
-                   1 AS facility,
-                   (event_id % 8)::int AS severity,
-                   'ch' || lpad((user_id % 25)::varchar, 2, '0') AS hostname,
-                   'chunked msg ' || event_id::varchar AS message,
-                   strftime(date_trunc('second', ts), '%Y-%m-%d %H:%M:%S')
-                     AS tr_str
-            FROM events
-        """,
-        "q_parse_rsyslog": """
-            SELECT event_id,
-                   (event_id % 192)::int AS priority,
-                   ((event_id % 192) // 8)::int AS facility,
-                   ((event_id % 192) % 8)::int AS severity,
-                   CASE WHEN event_id % 5 = 0 THEN ''
-                        ELSE 'rh' || lpad((user_id % 25)::varchar, 2, '0')
-                   END AS hostname,
-                   'rapp' || (event_id % 6)::varchar AS appname,
-                   (event_id % 500)::varchar AS procid,
-                   '' AS msgid,
-                   'rsys msg ' || event_id::varchar AS message,
-                   event_type AS k1,
-                   strftime(date_trunc('second', ts), '%Y-%m-%d %H:%M:%S')
-                     AS tr_str
-            FROM events
-        """,
-        "q_parse_gelf": """
-            WITH g AS (
-              SELECT event_id, user_id, event_type, ts,
-                CASE (event_id % 4)::int WHEN 0 THEN 0 WHEN 1 THEN 3
-                     WHEN 2 THEN 10 ELSE 1 END AS facility,
-                (event_id % 8)::int AS severity
-              FROM events
-            )
-            SELECT event_id,
-                   (facility * 8 + severity)::int AS priority,
-                   facility::int AS facility, severity::int AS severity,
-                   'gh' || lpad((user_id % 35)::varchar, 2, '0') AS hostname,
-                   'gelf msg ' || event_id::varchar AS message,
-                   strftime(date_trunc('second', ts), '%Y-%m-%d %H:%M:%S')
-                     AS tr_str
-            FROM g
-        """,
-        "q_parse_w3c": """
-            SELECT event_id,
-                   '192.168.' || (user_id % 50)::varchar || '.' ||
-                     (event_id % 200)::varchar AS c_ip,
-                   ['GET','POST','PUT'][(event_id % 3)::int + 1] AS method,
-                   (200 + event_id % 5)::varchar AS status,
-                   true AS parse_ok
-            FROM events
-        """,
-        "q_parse_ltsv": """
-            WITH l AS (
-              SELECT event_id, user_id, ts,
-                     (event_id % 192)::int AS pri,
-                     'lh' || lpad((user_id % 30)::varchar, 2, '0') AS host,
-                     'lapp' || (event_id % 7)::varchar AS ident,
-                     (event_id % 900)::varchar AS pid,
-                     'ltsv msg ' || event_id::varchar || ' k:v' AS msg,
-                     (200 + event_id % 5)::varchar AS status,
-                     strftime(date_trunc('second', ts),
-                              '%Y-%m-%dT%H:%M:%SZ') AS time_s
-              FROM events
-            )
-            SELECT event_id,
-                   pri AS priority,
-                   (pri // 8)::int AS facility,
-                   (pri % 8)::int AS severity,
-                   host AS hostname, ident AS appname, pid AS procid,
-                   msg AS message, status,
-                   '{"ltsv":{"host":"' || host ||
-                   '","ident":"' || ident ||
-                   '","msg":"' || msg ||
-                   '","pid":"' || pid ||
-                   '","pri":"' || pri::varchar ||
-                   '","status":"' || status ||
-                   '","time":"' || time_s || '"}}' AS properties_json,
-                   true AS parse_ok,
-                   strftime(date_trunc('second', ts), '%Y-%m-%d %H:%M:%S')
-                     AS tr_str
-            FROM l
-        """,
         # INDEPENDENT formulation: the oracle never runs the regex — it
         # recomputes what the fixture embedded in each line, so the
         # compiled grok pattern must recover those values exactly
@@ -3870,39 +3306,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, md5(array_to_string(list_sort(list_distinct(
                      string_split(text, ' '))), ' ')) AS fp
             FROM documents
-        """,
-        "q_parse_json": """
-            WITH j AS (
-              SELECT event_id,
-                ['kern','auth','cron','local3'][(event_id % 4)::int + 1] AS fn,
-                ['emerg','crit','notice','debug'][(event_id % 3)::int + 1] AS sn,
-                'jh' || lpad((user_id % 30)::varchar, 2, '0') AS hostname,
-                event_type AS message,
-                date_trunc('second', ts) AS tr
-              FROM events
-            ), c AS (
-              SELECT *,
-                CASE fn WHEN 'kern' THEN 0 WHEN 'auth' THEN 4
-                        WHEN 'cron' THEN 15 ELSE 19 END AS facility,
-                CASE sn WHEN 'emerg' THEN 0 WHEN 'crit' THEN 2
-                        WHEN 'notice' THEN 5 ELSE 7 END AS severity
-              FROM j
-            )
-            SELECT event_id, (facility * 8 + severity)::int AS priority,
-                   facility::int AS facility, severity::int AS severity,
-                   hostname, 'japp' AS appname, message,
-                   strftime(tr, '%Y-%m-%d %H:%M:%S') AS tr_str
-            FROM c
-        """,
-        "q_parse_influx": """
-            SELECT event_id,
-                   134 AS priority, 16 AS facility, 6 AS severity,
-                   'ih' || lpad((user_id % 40)::varchar, 2, '0') AS hostname,
-                   'influxdb' AS appname, 'cpu' AS message,
-                   (event_id % 1000)::varchar AS count_i,
-                   'r' || (event_id % 5)::varchar AS region,
-                   strftime(to_timestamp(event_id), '%Y-%m-%d %H:%M:%S') AS tr_str
-            FROM events
         """,
         "q_quality_score": """
             WITH q AS (

@@ -15,6 +15,9 @@ a count table here:
 * distinct conversations — ``skw_client_connections_total`` analog
   (``metrics.go:25-31``) via approx_count_distinct at scale.
 
+The incoming, parse-error and filter tables come out of one scan,
+``metric_grouping_sets``; ``plans.job.write_outputs`` splits them.
+
 Plus the batch-native **windowed** rollup the north rule asks for:
 ``groupBy(window(ts, '1 hour'), sink, severity_name, tool).count()``.
 
@@ -59,28 +62,6 @@ def metric_grouping_sets(routed: DataFrame) -> DataFrame:
             F.hll_sketch_agg("conv_id", F.lit(12)).alias("convs_hll"),
             F.grouping_id().alias("gid"),
         )
-    )
-
-
-def incoming_counts(df: DataFrame) -> DataFrame:
-    return df.groupBy("role").agg(
-        F.count("*").alias("n_messages"),
-        F.approx_count_distinct("conv_id").alias("approx_convs"),
-    )
-
-
-def parse_error_counts(df: DataFrame) -> DataFrame:
-    return (
-        df.filter(~F.col("parse_ok"))
-        .groupBy("parser_name")
-        .agg(F.count("*").alias("n_errors"))
-    )
-
-
-def filter_counts(routed: DataFrame) -> DataFrame:
-    """(status, role) verdict counts — skw_message_filtering_total."""
-    return routed.groupBy("filter_status", "role").agg(
-        F.count("*").alias("n_messages")
     )
 
 

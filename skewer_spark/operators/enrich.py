@@ -6,8 +6,8 @@
   (``model/types.go:182-208``) — r6: was broadcast hash joins; the
   dictionaries are compile-time constants, so the join machinery
   (BroadcastExchange build per query, four join nodes) bought nothing
-  (guide §2.4).  ``schema.facility_dim``/...) still provide the
-  DataFrame dims for genuinely dynamic dictionaries.
+  (guide §2.4).  ``schema.facility_dim``/``severity_dim`` still provide
+  the DataFrame dims for genuinely dynamic dictionaries.
 * role/tool dictionaries — the transcript-specific dims (input_hint).
 * Deterministic uid: ``sha2(conv_id <US> turn_idx)`` — the ULID analog
   (``services/network/tcp.go:157``); determinism is what makes resume +
@@ -20,16 +20,18 @@
 * Timestamp defaulting: ``time_reported = coalesce(parsed, ts)``,
   ``time_generated = ts`` — the batch-deterministic substitute for the
   reference's wall-clock now (``decoders/rfc3164_format.go:35-38``).
-* Stable turn ordering: ``turn_rank = row_number() over (partition by
-  conv_id order by turn_idx)`` — the RELP txnr analog (SURVEY.md §2.8).
+* Stable turn ordering: ``turn_rank``, the 1-based position of a turn
+  in its conversation by ``turn_idx`` — the RELP txnr analog (SURVEY.md
+  §2.8).  ``dedup_and_rank`` computes it in the same skew-safe shuffle
+  that drops redelivered turns.
 
-The whole stage is narrow expressions — no joins, no exchanges,
+``enrich`` itself is narrow expressions — no joins, no exchanges,
 regardless of stats (pinned by tests/test_plans.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from skewer_spark import schema as S
@@ -70,11 +72,6 @@ def restore_derived(df: DataFrame) -> DataFrame:
     read the same."""
     df = with_uid(df)
     return add_missing_msgid(df) if "msgid" in df.columns else df
-
-
-def with_turn_rank(df: DataFrame) -> DataFrame:
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return df.withColumn("turn_rank", F.row_number().over(w))
 
 
 def dedup_and_rank(df: DataFrame, bucket_size: int = 8192) -> DataFrame:
@@ -149,7 +146,7 @@ def _dict_case(col: str, mapping: dict, default=None):
     return expr
 
 
-def enrich(df: DataFrame, spark: SparkSession | None = None) -> DataFrame:
+def enrich(df: DataFrame) -> DataFrame:
     """parsed → enriched.  Expects columns from parse_transcripts()."""
     out = (
         df.withColumn(

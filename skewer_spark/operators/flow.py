@@ -3,10 +3,9 @@
 Two classic syslog-gateway behaviors the reference handles at the
 socket layer, re-expressed as batch/stream DataFrame plans:
 
-* **Multiline merge** — the inverse of LF framing
-  (``sources/filepoll.explode_multiline``): continuation lines (stack
-  trace frames, wrapped payloads — anything matching a continuation
-  pattern) fold into their preceding header line, the
+* **Multiline merge** — the inverse of LF framing: continuation
+  lines (stack trace frames, wrapped payloads — anything matching a
+  continuation pattern) fold into their preceding header line, the
   filebeat/rsyslog ``multiline`` feature.  The reference frames on LF
   only (``/root/reference/utils/scanner.go``), so a Java stack trace
   arrives as ~40 separate messages; this operator reassembles them.

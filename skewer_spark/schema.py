@@ -90,10 +90,6 @@ SEVERITIES: dict[int, str] = {
 DEFAULT_FACILITY_NAME = "user"
 DEFAULT_SEVERITY_NAME = "info"
 
-# Reverse maps (RFacilities / RSeverities, model/types.go:94-107)
-RFACILITIES = {v: k for k, v in FACILITIES.items()}
-RSEVERITIES = {v: k for k, v in SEVERITIES.items()}
-
 # Transcript-specific dims (FIXTURES.md §2)
 ROLE_KINDS: dict[str, str] = {
     "user": "human", "assistant": "model", "system": "system", "tool": "tool",
@@ -125,22 +121,3 @@ def severity_dim(spark: SparkSession) -> DataFrame:
         ]),
     )
 
-
-def role_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(k, v) for k, v in sorted(ROLE_KINDS.items())],
-        T.StructType([
-            T.StructField("role", T.StringType(), False),
-            T.StructField("role_kind", T.StringType(), False),
-        ]),
-    )
-
-
-def tool_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(k, v) for k, v in sorted(TOOL_FAMILIES.items())],
-        T.StructType([
-            T.StructField("tool", T.StringType(), False),
-            T.StructField("tool_family", T.StringType(), False),
-        ]),
-    )

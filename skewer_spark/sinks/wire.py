@@ -3,9 +3,10 @@
 The reference ships four Avro encoders (``avro``/``fullavro`` binary,
 ``jsonavro``/``fulljsonavro`` textual — ``encoders/json.go:46-132``)
 over the schemas ``avro/syslogmessage.avsc`` and ``avro/fullmessage.avsc``,
-plus a protobuf encoder/decoder pair for the internal ``SyslogMessage``
-(``encoders/protobuf.go``, ``decoders/protobuf.go``,
-schema ``model/types.proto:19-33``).  No Avro/protobuf library ships with
+plus a protobuf encoder for the internal ``SyslogMessage``
+(``encoders/protobuf.go``, schema ``model/types.proto:19-33``).  The
+reference's protobuf decoder has no counterpart here: no pipeline path
+reads protobuf input.  No Avro/protobuf library ships with
 the package, so both wire formats are produced here from first
 principles (the public Avro 1.x and protobuf-v3 binary specs).
 
@@ -51,9 +52,8 @@ from pyspark.sql.types import BinaryType
 _EMPTY_U8 = np.empty(0, np.uint8)
 _I64_1 = np.uint64(1)
 
-# one growable 0..n ramp per worker process (same rationale as
-# decode_protobuf._ramp: np.arange over megabyte totals dominates
-# otherwise)
+# one growable 0..n ramp per worker process: np.arange over megabyte
+# totals dominates otherwise
 _RAMP = np.empty(0, np.int64)
 
 

@@ -11,9 +11,11 @@ always-on mode, sharing every operator with the batch path:
 * dedup: ``dropDuplicatesWithinWatermark`` on (conv_id, turn_idx) —
   the streaming analog of the reservoir UID-dedup
   (``/root/reference/utils/reservoir/reservoir.go:40-50``),
-* fan-out: ``foreachBatch`` reuses the batch one-pass exploded sink
-  write per micro-batch (micro-batch = the reference's ingest batch,
-  ``store.batch_size`` at ``conf/defaults.go:320``),
+* fan-out: ``foreachBatch`` runs ``write_sink_batch`` per micro-batch
+  (micro-batch = the reference's ingest batch, ``store.batch_size`` at
+  ``conf/defaults.go:320``).  It is its own twin of the batch job's
+  sink write in ``plans.job.write_outputs``, not a call into it: same
+  labels, encoder and sink schema, separate code (ROADMAP item 8),
 * aggregates: the batch ``windowed_counts`` rollup itself, run as a
   watermarked append aggregation,
 * delivery: the streaming checkpoint dir IS the Ready/Sent/ACK state,

@@ -1,4 +1,5 @@
-"""Contract guards: synth determinism (FIXTURES.md) + encoder goldens."""
+"""Contract guards: synth determinism (FIXTURES.md), encoder goldens,
+the driver-compare registry and no test-only modules."""
 
 from __future__ import annotations
 
@@ -127,3 +128,16 @@ def test_queries_oracle_parity_and_window():
                 }
     never = set(q) - green
     assert never <= set(window), sorted(never - set(window))
+
+
+def test_every_module_has_a_non_test_importer():
+    """Every package module is reached from a pipeline entry point
+    (``tools/loc_report.py``'s ``ENTRIES``) or from ``__spark_entry__``
+    by static imports: a module only tests import is dead code."""
+    from tools.loc_report import ENTRIES, PKG, ROOT, closure, imports, modules
+
+    mods = modules()
+    roots = [f"{PKG}.{e}" for e in ENTRIES]
+    roots += imports("__spark_entry__", ROOT / "__spark_entry__.py", mods)
+    test_only = sorted(set(mods) - closure(roots, mods))
+    assert not test_only, test_only

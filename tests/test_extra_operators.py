@@ -1,132 +1,11 @@
-"""Tests for the JSON-family decoders, file source,
-streaming pipeline and dedup/similarity operators."""
+"""Tests for the streaming pipeline, the GELF encoder and the
+dedup/similarity operators."""
 
 from __future__ import annotations
 
 import json
 
 from pyspark.sql import functions as F
-
-
-def _lines_df(spark, lines):
-    return spark.createDataFrame([(ln,) for ln in lines], "text string")
-
-
-# ---------------------------------------------------------------------------
-# JSON-family decoders
-# ---------------------------------------------------------------------------
-
-def test_parse_regular_json(spark):
-    from skewer_spark.operators.decode_json import parse_regular_json
-    line = json.dumps({
-        "facility": "auth", "severity": "crit",
-        "timereported": "2026-01-01T00:00:05Z",
-        "timegenerated": "2026-01-01T00:00:06Z",
-        "hostname": "h1", "appname": "sshd", "procid": "42",
-        "msgid": "m1", "message": "boom",
-        "properties": {"a": {"k": "v"}},
-    })
-    r = parse_regular_json(_lines_df(spark, [line])).collect()[0]
-    assert (r.facility, r.severity, r.priority) == (4, 2, 34)
-    assert r.hostname == "h1" and r.appname == "sshd" and r.message == "boom"
-    assert json.loads(r.properties_json) == {"a": {"k": "v"}}
-    # unknown names → user/info defaults (model/types.go:189-208)
-    r2 = parse_regular_json(
-        _lines_df(spark, [json.dumps({"facility": "nope", "severity": "nah"})])
-    ).collect()[0]
-    assert (r2.facility, r2.severity) == (1, 6)
-
-
-def test_parse_rsyslog_json(spark):
-    from skewer_spark.operators.decode_json import parse_rsyslog_json
-    line = json.dumps({
-        "pri": "34", "timereported": "2026-01-01T00:00:05Z",
-        "hostname": "-", "app-name": "app", "procid": "-",
-        "msgid": "-", "msg": "hello", "$!": {"x": "1"},
-    })
-    r = parse_rsyslog_json(_lines_df(spark, [line])).collect()[0]
-    assert (r.priority, r.facility, r.severity) == (34, 4, 2)
-    assert r.hostname == "" and r.appname == "app" and r.message == "hello"
-    assert json.loads(r.properties_json) == {"rsyslog": {"x": "1"}}
-
-
-def test_parse_gelf(spark):
-    from skewer_spark.operators.decode_json import parse_gelf
-    line = json.dumps({
-        "version": "1.1", "host": "gh", "short_message": "sm",
-        "timestamp": 1767225600.0, "level": 3, "facility": "mail",
-    })
-    r = parse_gelf(_lines_df(spark, [line])).collect()[0]
-    assert (r.severity, r.facility) == (3, 2)
-    assert r.hostname == "gh" and r.message == "sm"
-    # missing facility → 1 (gelf.go:41-50)
-    r2 = parse_gelf(
-        _lines_df(spark, [json.dumps({"short_message": "x", "level": 7})])
-    ).collect()[0]
-    assert r2.facility == 1 and r2.severity == 7
-
-
-def test_parse_w3c(spark):
-    from skewer_spark.operators.decode_json import parse_w3c
-    fields = ["date", "time", "cs-method", "sc-status"]
-    r = parse_w3c(
-        _lines_df(spark, ["2026-01-01 00:00:05 GET 200"]), fields
-    ).collect()[0]
-    props = json.loads(r.properties_json)
-    assert props["w3c"] == {
-        "date": "2026-01-01", "time": "00:00:05",
-        "cs-method": "GET", "sc-status": "200",
-    }
-    assert r.parse_ok
-
-
-def test_parse_ltsv(spark):
-    from skewer_spark.operators.decode_json import parse_ltsv
-    rows = parse_ltsv(_lines_df(spark, [
-        "time:2026-01-01T00:00:05Z\thost:h1\tident:app\tpid:42"
-        "\tpri:165\tmsg:hello k:v\tstatus:200",
-        "host:h2\tmessage:fallback label",   # msg absent → message label
-        "no colon here",                      # malformed token
-        "",
-    ])).collect()
-    r = rows[0]
-    assert (r.priority, r.facility, r.severity) == (165, 20, 5)
-    assert (r.hostname, r.appname, r.procid) == ("h1", "app", "42")
-    assert r.message == "hello k:v"          # value split at FIRST colon only
-    assert str(r.time_reported) == "2026-01-01 00:00:05"
-    props = json.loads(r.properties_json)["ltsv"]
-    assert props["status"] == "200"
-    assert list(props) == sorted(props)      # deterministic key order
-    assert r.parse_ok
-    assert rows[1].message == "fallback label" and rows[1].hostname == "h2"
-    assert rows[1].priority == 0
-    assert not rows[2].parse_ok and rows[2].properties_json is None
-    assert not rows[3].parse_ok
-
-
-# ---------------------------------------------------------------------------
-# file source
-# ---------------------------------------------------------------------------
-
-def test_read_log_files(spark, tmp_path):
-    from skewer_spark.sources.filepoll import read_log_files
-    p = tmp_path / "a.log"
-    p.write_text("<34>Jan 10 13:14:15 h app[1]: one\nplain two\n")
-    df = read_log_files(spark, str(tmp_path / "*.log"))
-    rows = sorted(df.collect(), key=lambda r: r.turn_idx)
-    assert len(rows) == 2
-    assert rows[0].turn_idx == 0 and rows[0].text.startswith("<34>")
-    assert rows[1].text == "plain two"
-    assert rows[0].conv_id.endswith("a.log")
-
-
-def test_explode_multiline(spark):
-    from skewer_spark.sources.filepoll import explode_multiline
-    df = spark.createDataFrame(
-        [("c1", 0, "l1\r\nl2\nl3")], "conv_id string, turn_idx int, text string"
-    )
-    out = explode_multiline(df).orderBy("line_idx").collect()
-    assert [r.text for r in out] == ["l1", "l2", "l3"]
 
 
 # ---------------------------------------------------------------------------
@@ -336,23 +215,6 @@ def test_stream_windowed_counts_equals_batch(spark, tmp_path):
     assert streamed == expected and len(streamed) > 0
 
 
-def test_read_log_files_ts_is_file_mtime(spark, tmp_path):
-    """Determinism contract: no wall-clock now() — ts = file mtime, so
-    two reads of the same files are byte-equal."""
-    import os as _os
-
-    from skewer_spark.sources.filepoll import read_log_files
-
-    p = tmp_path / "b.log"
-    p.write_text("one\ntwo\n")
-    glob = str(tmp_path / "*.log")
-    r1 = sorted(read_log_files(spark, glob).collect(), key=lambda r: r.turn_idx)
-    r2 = sorted(read_log_files(spark, glob).collect(), key=lambda r: r.turn_idx)
-    assert [row.ts for row in r1] == [row.ts for row in r2]
-    mtime = int(_os.stat(p).st_mtime)
-    assert int(r1[0].ts.timestamp()) == mtime
-
-
 def test_dedup_clusters_transitive_closure(spark):
     from skewer_spark.operators.dedup import dedup_clusters
 
@@ -455,58 +317,6 @@ def test_minhash_bucket_cap_bounds_pairs(spark):
     # cap larger than any bucket is a no-op
     wide = minhash_candidate_pairs(docs, bucket_cap=100).collect()
     assert len(wide) == len(uncapped)
-
-
-def test_malformed_lines_never_abort_job(spark):
-    # one absurd value per decoder must yield a null/invalid ROW, not a
-    # job-level ANSI exception (CAST_OVERFLOW / CAST_INVALID_INPUT /
-    # DUPLICATED_MAP_KEY / year-out-of-range on Arrow collect)
-    from skewer_spark.operators.decode_json import (
-        parse_gelf,
-        parse_ltsv,
-        parse_regular_json,
-        parse_rsyslog_json,
-    )
-    from skewer_spark.sources.misc import parse_journald
-
-    g = spark.createDataFrame(
-        [(1, '{"host":"h","short_message":"m","timestamp":1e30,"level":3}')],
-        "id int, text string",
-    )
-    assert parse_gelf(g).collect()[0].time_reported is None
-
-    j = spark.createDataFrame(
-        [(1, '{"_SOURCE_REALTIME_TIMESTAMP":"9223372036854775807",'
-             '"MESSAGE":"x","_HOSTNAME":"h"}'),
-         (2, '{"_SOURCE_REALTIME_TIMESTAMP":"garbage","PRIORITY":"nope",'
-             '"SYSLOG_FACILITY":"x","MESSAGE":"y"}')],
-        "id int, text string",
-    )
-    rows = {r.id: r for r in parse_journald(j).collect()}
-    assert rows[1].time_reported is None
-    assert rows[2].time_reported is None and rows[2].severity == 0
-
-    r = spark.createDataFrame(
-        [(1, '{"timereported":"not a time","pri":"NaNope","msg":"m"}')],
-        "id int, text string",
-    )
-    row = parse_rsyslog_json(r).collect()[0]
-    assert row.time_reported is None and row.priority == 0
-
-    q = spark.createDataFrame(
-        [(1, '{"timereported":"junk","facility":"kern","severity":"err",'
-             '"message":"m"}')],
-        "id int, text string",
-    )
-    assert parse_regular_json(q).collect()[0].time_reported is None
-
-    lt = spark.createDataFrame(
-        [(1, "host:a\thost:b\ttime:junk\tpri:zzz\tmsg:m")],
-        "id int, text string",
-    )
-    row = parse_ltsv(lt).collect()[0]
-    assert (row.hostname, row.priority, row.time_reported) == ("b", 0, None)
-    assert row.parse_ok
 
 
 def test_dedup_substring_spans(spark):

@@ -1,9 +1,6 @@
-"""Config-driven routing rules + InfluxDB line-protocol decoder."""
+"""Config-driven routing rules (``operators.route``'s rules table)."""
 
 from __future__ import annotations
-
-import json
-from datetime import datetime
 
 
 def _df(spark, rows, extra="conf_id string"):
@@ -69,34 +66,3 @@ def test_route_without_rules_needs_no_conf_id(spark):
     assert (r.filter_status, r.topic, r.partition_key) == (
         "PASS", "syslog-app", "mypk-h")
     assert 0 <= r.partition_number < 10
-
-
-def test_parse_influx(spark):
-    from skewer_spark.operators.decode_influx import parse_influx
-    lines = [
-        'cpu,host=server01,region=us west usage_idle=87.5,count=4i,ok=true,'
-        'note="hi" 1700000000000000000',
-        "mem value=1.5",
-        "not a valid line",
-    ]
-    # note: tag value "us west"? no — unescaped space splits; use clean line
-    lines[0] = ('cpu,host=server01,region=uswest usage_idle=87.5,count=4i,'
-                'ok=true,note="hi" 1700000000000000000')
-    df = spark.createDataFrame(
-        [(ln, datetime(2026, 1, 1)) for ln in lines], "text string, ts timestamp"
-    )
-    rows = parse_influx(df).collect()
-    r0 = next(r for r in rows if r.message == "cpu")
-    assert r0.appname == "influxdb" and (r0.facility, r0.severity) == (16, 6)
-    assert r0.hostname == "server01"
-    props = json.loads(r0.properties_json)
-    assert props["influxdb_tags"] == {"host": "server01", "region": "uswest"}
-    assert props["influxdb_fields"]["count_integer"] == "4"
-    assert props["influxdb_fields"]["ok_boolean"] == "true"
-    assert props["influxdb_fields"]["note_string"] == "hi"
-    assert props["influxdb_fields"]["usage_idle_float"] == "87.5"
-    assert str(r0.time_reported) == "2023-11-14 22:13:20"
-    r1 = next(r for r in rows if r.message == "mem")
-    assert r1.parse_ok and r1.hostname == ""
-    r2 = next(r for r in rows if not r.parse_ok)
-    assert r2.parser_name == "influx"

@@ -1,9 +1,8 @@
-"""Destination layouts + encoder registry (SURVEY.md §2.5)."""
+"""Envelope + encoder registry (SURVEY.md §2.5)."""
 
 from __future__ import annotations
 
 import json
-import os
 from datetime import datetime
 
 import pytest
@@ -36,51 +35,6 @@ def _routed_fixture(spark):
         .withColumn("parse_ok", F.lit(True))
         .withColumn("uid", F.sha2(F.concat_ws("|", "conv_id", "turn_idx"), 256))
     )
-
-
-def test_file_sink_date_appname_layout(spark, tmp_path):
-    from skewer_spark.sinks.destinations import write_file_sink
-
-    out = str(tmp_path / "filesink")
-    write_file_sink(_routed_fixture(spark), out)
-    dirs = set()
-    for root, _, files in os.walk(out):
-        for f in files:
-            if f.endswith(".txt") or f.startswith("part-"):
-                dirs.add(os.path.relpath(root, out))
-    # /var/log/skewer/{{.Date}}/{{.AppName}}.log analog:
-    assert "date=2024-01-10/appname_dir=appA" in dirs
-    assert "date=2024-01-11/appname_dir=unknown" in dirs
-    back = spark.read.text(out).collect()
-    assert any("hello world" in r.value for r in back)
-
-
-def test_elasticsearch_frame_and_templates(spark, tmp_path):
-    from skewer_spark.sinks.destinations import (
-        elasticsearch_frame, template_col, write_elasticsearch_sink,
-    )
-
-    r = _routed_fixture(spark)
-    # default index template is the literal 'skewer' (conf/defaults.go:63)
-    frame = elasticsearch_frame(r).collect()
-    assert {x.es_index for x in frame} == {"skewer"}
-    assert all(x.es_type == "syslogmsg" for x in frame)
-    # doc id = message UID (elasticsearch.go:265)
-    uids = {x.uid for x in r.select("uid").collect()}
-    assert {x.doc_id for x in frame} == uids
-    body = json.loads(frame[0].body)
-    assert body["facility"] == "auth" and "timereported" in body
-
-    # templated index: one partition dir per (date-derived) index
-    out = str(tmp_path / "es")
-    write_elasticsearch_sink(r, out, "skewer-{{.Date}}")
-    idx = {
-        d.split("=", 1)[1] for d in os.listdir(out) if d.startswith("es_index=")
-    }
-    assert idx == {"skewer-2024-01-10", "skewer-2024-01-11"}
-
-    with pytest.raises(ValueError):
-        template_col("{{.NoSuchField}}")
 
 
 def test_fulljson_envelope(spark):

@@ -1,4 +1,4 @@
-"""Avro + protobuf wire-format codecs (sinks/wire.py, decode_protobuf.py).
+"""Avro + protobuf wire-format encoders (sinks/wire.py).
 
 The decoders in THIS file are written independently from the pipeline
 code, straight from the public Avro 1.x / proto3 wire specs, so a bug in
@@ -443,32 +443,6 @@ def test_protobuf_golden(frame):
     assert 1 not in rec2 and 7 not in rec2 and 12 not in rec2
     assert rec2[10] == "U2"
     assert rec2["properties"] == {}
-
-
-def test_protobuf_roundtrip(frame):
-    from skewer_spark.operators.decode_protobuf import parse_protobuf
-
-    out = (
-        frame.select("event_id", ENCODERS["protobuf"]().alias("pb"))
-        .select("event_id", parse_protobuf("pb").alias("d"))
-        .collect()
-    )
-    by_id = {r.event_id: r.d for r in out}
-    d1 = by_id[1]
-    assert d1.priority == 3 and d1.version == 1
-    assert d1.hostname == "host1" and d1.structured == '[meta k="v"]'
-    assert json.loads(d1.properties_json) == {
-        "aa": {"b": "c", "x": "y"}, "meta": {"k": "v"},
-    }
-    d2 = by_id[2]
-    assert d2.priority == 0 and d2.hostname == "" and d2.msgid == "U2"
-    # malformed bytes → null struct, not an exception
-    bad = (
-        frame.select(F.lit(b"\xff\xff\xff").alias("pb"))
-        .select(parse_protobuf("pb").alias("d"))
-        .collect()
-    )
-    assert bad[0].d.hostname is None
 
 
 def test_registry_complete():

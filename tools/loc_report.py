@@ -6,6 +6,8 @@ static import closure of the pipeline's entry modules (``plans.job``,
 ``session``).  The closure follows every ``import`` statement the
 ``ast`` finds, including function-level (lazy) imports, plus the
 ``__init__`` of every package on the way.  Nothing is imported or run.
+``tests/test_contracts.py`` walks the same closure (``closure``) to
+check that no module is reached only by tests.
 
     python3 tools/loc_report.py
 """
@@ -13,6 +15,7 @@ static import closure of the pipeline's entry modules (``plans.job``,
 from __future__ import annotations
 
 import ast
+from collections.abc import Iterable
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -23,7 +26,7 @@ ENTRIES = (
 )
 
 
-def _modules() -> dict[str, Path]:
+def modules() -> dict[str, Path]:
     """Dotted module name → source file, for every module in the package."""
     out = {}
     for path in sorted((ROOT / PKG).rglob("*.py")):
@@ -34,7 +37,7 @@ def _modules() -> dict[str, Path]:
     return out
 
 
-def _imports(name: str, path: Path, mods: dict[str, Path]) -> set[str]:
+def imports(name: str, path: Path, mods: dict[str, Path]) -> set[str]:
     """Package modules that ``name`` imports anywhere in its body."""
     package = name if path.name == "__init__.py" else name.rpartition(".")[0]
     found = set()
@@ -58,16 +61,22 @@ def _with_parents(name: str) -> set[str]:
     return {".".join(parts[:i]) for i in range(1, len(parts) + 1)}
 
 
-def main() -> None:
-    mods = _modules()
-    lines = {m: len(p.read_text().splitlines()) for m, p in mods.items()}
-    todo = [f"{PKG}.{e}" for e in ENTRIES]
+def closure(roots: Iterable[str], mods: dict[str, Path]) -> set[str]:
+    """Package modules reachable from the dotted names ``roots``."""
+    todo = list(roots)
     seen: set[str] = set()
     while todo:
         for m in _with_parents(todo.pop()) - seen:
             if m in mods:
                 seen.add(m)
-                todo.extend(_imports(m, mods[m], mods))
+                todo.extend(imports(m, mods[m], mods))
+    return seen
+
+
+def main() -> None:
+    mods = modules()
+    lines = {m: len(p.read_text().splitlines()) for m, p in mods.items()}
+    seen = closure([f"{PKG}.{e}" for e in ENTRIES], mods)
     total = sum(lines.values())
     reach = sum(lines[m] for m in seen)
     print(f"package lines: {total}")
