@@ -14,12 +14,14 @@
   dedup idempotent (SURVEY.md §4.3).
 * Missing-msgid backfill (``add_missing_msgid``,
   ``/root/reference/conf/defaults.go:321``, ``store/store.go:605``).
-* Both are pure functions of stored columns, so the store writes
-  neither: ``strip_derived`` drops ``uid`` and blanks a ``msgid`` that
-  equals it, and ``restore_derived`` recomputes both on read.
 * Timestamp defaulting: ``time_reported = coalesce(parsed, ts)``,
   ``time_generated = ts`` — the batch-deterministic substitute for the
   reference's wall-clock now (``decoders/rfc3164_format.go:35-38``).
+* The store writes nothing a reader can rebuild from the other columns:
+  ``strip_derived`` drops ``uid`` and ``time_generated``, blanks a
+  ``msgid`` that equals the uid and nulls a ``time_reported`` that
+  equals ``ts``; ``restore_derived`` and ``with_time_generated`` give
+  every one of them back on read.
 * Stable turn ordering: ``turn_rank``, the 1-based position of a turn
   in its conversation by ``turn_idx`` — the RELP txnr analog (SURVEY.md
   §2.8).  ``dedup_and_rank`` computes it in the same skew-safe shuffle
@@ -55,23 +57,43 @@ def add_missing_msgid(df: DataFrame) -> DataFrame:
 
 
 def strip_derived(df: DataFrame) -> DataFrame:
-    """The store form of an enriched frame: ``uid`` dropped and a
-    ``msgid`` equal to it stored as ``""``.  ``restore_derived`` undoes
-    it exactly: a backfilled msgid and a parsed msgid that happens to
-    equal its own uid both read back as the uid; any other value, NULL
-    included, passes through."""
+    """The store form of an enriched frame (routed or sink rows):
+    ``uid`` and ``time_generated`` dropped, a ``msgid`` equal to the uid
+    stored as ``""`` and a ``time_reported`` equal to ``ts`` stored as
+    NULL.  ``restore_derived`` undoes it exactly: a backfilled msgid and
+    a parsed msgid that happens to equal its own uid both read back as
+    the uid, and a NULL ``time_reported`` reads back as ``ts``, which is
+    what ``enrich`` put there; any other value passes through, a
+    ``time_reported`` beside a NULL ``ts`` included."""
+    if "msgid" in df.columns:
+        df = df.withColumn(
+            "msgid",
+            F.when(F.col("msgid") == F.col("uid"), F.lit(""))
+            .otherwise(F.col("msgid")),
+        )
     return df.withColumn(
-        "msgid",
-        F.when(F.col("msgid") == F.col("uid"), F.lit("")).otherwise(F.col("msgid")),
-    ).drop("uid")
+        "time_reported", F.nullif("time_reported", "ts")
+    ).drop("uid", "time_generated")
 
 
 def restore_derived(df: DataFrame) -> DataFrame:
-    """Recompute what ``strip_derived`` left out.  The uid is always
-    recomputed, never read from disk, so files that still carry one
-    read the same."""
-    df = with_uid(df)
+    """Recompute what ``strip_derived`` left out, ``time_generated``
+    aside (sink rows never carried it; routed readers add it with
+    ``with_time_generated``).  The uid is always recomputed, never read
+    from disk, so files that still carry one read the same, and a
+    ``time_reported`` stored in full reads as stored."""
+    df = with_uid(df).withColumn(
+        "time_reported", F.coalesce("time_reported", "ts")
+    )
     return add_missing_msgid(df) if "msgid" in df.columns else df
+
+
+def with_time_generated(df: DataFrame) -> DataFrame:
+    """``time_generated = ts``, as the last column: ``enrich`` sets it
+    and routed readers rebuild it.  A stored copy (routed files written
+    before the store dropped it) is replaced, so old, new and mixed
+    stores read with one schema."""
+    return df.drop("time_generated").withColumn("time_generated", F.col("ts"))
 
 
 def dedup_and_rank(df: DataFrame, bucket_size: int = 8192) -> DataFrame:
@@ -148,7 +170,7 @@ def _dict_case(col: str, mapping: dict, default=None):
 
 def enrich(df: DataFrame) -> DataFrame:
     """parsed → enriched.  Expects columns from parse_transcripts()."""
-    out = (
+    out = with_time_generated(
         df.withColumn(
             "facility_name",
             _dict_case("facility", S.FACILITIES, S.DEFAULT_FACILITY_NAME),
@@ -159,7 +181,5 @@ def enrich(df: DataFrame) -> DataFrame:
         )
         .withColumn("role_kind", _dict_case("role", S.ROLE_KINDS))
         .withColumn("tool_family", _dict_case("tool", S.TOOL_FAMILIES))
-        .withColumn("time_generated", F.col("ts"))
-        .withColumn("time_reported", F.coalesce("time_reported", "ts"))
-    )
+    ).withColumn("time_reported", F.coalesce("time_reported", "ts"))
     return add_missing_msgid(with_uid(out))

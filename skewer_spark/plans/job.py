@@ -29,12 +29,15 @@ uid dedup inside a bucket is globally correct because the uid is a
 function of (conv_id, turn_idx) and conv_id determines the bucket —
 dedup never needs a global shuffle.
 
-The store holds no derived key: neither the routed nor the sink files
-carry ``uid``, and a routed ``msgid`` backfilled from it is stored as
-``""`` (``enrich.strip_derived``).  Both are recomputed on read
-(``enrich.restore_derived``), so a raw parquet reader gets ``uid`` and
-the backfilled ``msgid`` only through :func:`read_routed` and
-:func:`read_sink`.
+The store holds nothing a reader can rebuild from the other columns
+(``enrich.strip_derived``): neither the routed nor the sink files carry
+``uid``, routed files carry no ``time_generated`` (always ``ts``), a
+routed ``msgid`` backfilled from the uid is stored as ``""``, and a
+``time_reported`` equal to ``ts`` is stored as NULL in both.  Readers
+recompute all of them (``enrich.restore_derived``; routed readers also
+``enrich.with_time_generated``), so a raw parquet reader gets ``uid``,
+``time_generated``, the backfilled ``msgid`` and the defaulted
+``time_reported`` only through :func:`read_routed` and :func:`read_sink`.
 """
 
 from __future__ import annotations
@@ -53,6 +56,7 @@ from skewer_spark.operators.aggregate import (
 )
 from skewer_spark.operators.enrich import (
     dedup_and_rank, enrich, restore_derived, strip_derived,
+    with_time_generated,
 )
 from skewer_spark.operators.parse import parse_transcripts
 from skewer_spark.operators.route import route
@@ -62,7 +66,8 @@ from skewer_spark.plans import checkpoint as ckpt
 # Kafka-message-shaped (store/dests/kafkadest.go:78-108: key, partition,
 # topic, value=encoded, timestamp=time_reported) plus the join/test keys.
 # No derived key: uid is a function of (conv_id, turn_idx), so read_sink
-# recomputes it rather than reading it from disk.
+# recomputes it rather than reading it from disk, and the Kafka timestamp
+# time_reported is stored NULL where it equals ts (write_sink_files).
 SINK_COLUMNS = [
     "conv_id", "turn_idx", "role", "tool", "ts", "severity",
     "severity_name", "filter_status", "parse_ok", "parser_name",
@@ -71,6 +76,15 @@ SINK_COLUMNS = [
 
 AGG_TABLES = ("filter_counts", "sink_counts", "windowed_counts",
               "parse_error_counts", "incoming_counts")
+
+
+def write_sink_files(labeled: DataFrame, path: str) -> None:
+    """The sink store form, shared by the batch and streaming writers:
+    ``SINK_COLUMNS`` stripped by ``enrich.strip_derived``, one
+    ``sink=`` directory per destination, overwriting ``path``."""
+    strip_derived(labeled.select(*SINK_COLUMNS, "sink")).write.partitionBy(
+        "sink"
+    ).mode("overwrite").parquet(path)
 
 
 def bucket_col(n_buckets: int):
@@ -198,7 +212,7 @@ def write_outputs(
     # tasks hold rows sorted by (conv_id, turn_idx), so each file comes
     # out clustered by conversation and compresses to less.  Partition
     # size stays bounded because the window keys on (conv_id,
-    # turn_idx div 8192).  The derived keys are stripped after the
+    # turn_idx div 8192).  The derived columns are stripped after the
     # seal, whose nonces are keyed on uid.
     strip_derived(routed).write.mode("overwrite").parquet(routed_path)
     src = spark.read.parquet(routed_path)
@@ -206,7 +220,7 @@ def write_outputs(
         # the fan-out encoders need plaintext back (one open per
         # bucket — the cost of not storing cleartext)
         src = open_content_cols(src, secret)
-    src = restore_derived(src)
+    src = with_time_generated(restore_derived(src))
 
     sinks_path = os.path.join(out_dir, "sinks", sub)
     labeled = with_sink_labels(src, include_dropped=True).withColumn(
@@ -227,9 +241,7 @@ def write_outputs(
         labeled = labeled.withColumn(
             "encoded", seal_col("encoded", "uid", secret, salt_col="sink")
         )
-    labeled.select(*SINK_COLUMNS, "sink").write.partitionBy("sink").mode(
-        "overwrite"
-    ).parquet(sinks_path)
+    write_sink_files(labeled, sinks_path)
 
     sinks_p = spark.read.option("basePath", sinks_path).parquet(sinks_path)
     canonical = sinks_p.filter(F.col("sink").isin(*CANONICAL_SINKS))
@@ -516,7 +528,8 @@ def read_routed(
     spark: SparkSession, out_dir: str, secret: bytes | None = None
 ) -> DataFrame:
     """Read the full-fidelity routed table (all parsed/enriched
-    columns, ``uid`` and the backfilled ``msgid`` recomputed);
+    columns; ``uid``, ``time_generated``, the backfilled ``msgid`` and
+    the defaulted ``time_reported`` recomputed);
     ``secret`` revives content columns sealed at rest (fail loud on a
     missing or superfluous key)."""
     _check_read_mode(out_dir, secret)
@@ -524,16 +537,16 @@ def read_routed(
     df = spark.read.option("basePath", path).parquet(path)
     if secret is not None:
         df = open_content_cols(df, secret)
-    return restore_derived(df)
+    return with_time_generated(restore_derived(df))
 
 
 def read_sink(
     spark: SparkSession, out_dir: str, name: str,
     secret: bytes | None = None,
 ) -> DataFrame:
-    """Read one destination's rows (partition-pruned on sink=, ``uid``
-    recomputed); ``secret`` opens payloads sealed at rest (fail-loud on
-    tamper)."""
+    """Read one destination's rows (partition-pruned on sink=; ``uid``
+    and the defaulted ``time_reported`` recomputed); ``secret`` opens
+    payloads sealed at rest (fail-loud on tamper)."""
     _check_read_mode(out_dir, secret)
     path = os.path.join(out_dir, "sinks")
     df = (

@@ -14,8 +14,9 @@ always-on mode, sharing every operator with the batch path:
 * fan-out: ``foreachBatch`` runs ``write_sink_batch`` per micro-batch
   (micro-batch = the reference's ingest batch, ``store.batch_size`` at
   ``conf/defaults.go:320``).  It is its own twin of the batch job's
-  sink write in ``plans.job.write_outputs``, not a call into it: same
-  labels, encoder and sink schema, separate code (ROADMAP item 8),
+  fan-out in ``plans.job.write_outputs``, not a call into it: same
+  labels and encoder, separate code (ROADMAP item 8), but the one sink
+  store form (``plans.job.write_sink_files``),
 * aggregates: the batch ``windowed_counts`` rollup itself, run as a
   watermarked append aggregation,
 * delivery: the streaming checkpoint dir IS the Ready/Sent/ACK state,
@@ -42,7 +43,7 @@ from skewer_spark.operators.aggregate import windowed_counts
 from skewer_spark.operators.enrich import enrich
 from skewer_spark.operators.parse import parse_transcripts
 from skewer_spark.operators.route import route, with_sink_labels
-from skewer_spark.plans.job import SINK_COLUMNS
+from skewer_spark.plans.job import write_sink_files
 from skewer_spark.schema import TRANSCRIPT_SCHEMA
 from skewer_spark.sinks.encoders import encoded_by_sink
 
@@ -71,13 +72,15 @@ def write_sink_batch(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
     failure replaces its partial output instead of appending duplicates
     — this upgrades the foreachBatch leg from at-least-once to
     effectively-once (the parquet agg leg gets it from the file-sink
-    commit log natively).  Rows carry the batch store's sink schema."""
+    commit log natively).  Rows are written in the batch store's sink
+    form (``plans.job.write_sink_files``), so ``read_sink`` reads both
+    alike."""
     labeled = with_sink_labels(batch_df, include_dropped=True).withColumn(
         "encoded", encoded_by_sink()
     )
-    labeled.select(*SINK_COLUMNS, "sink").write.partitionBy("sink").mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, "sinks", f"batch={batch_id}"))
+    write_sink_files(
+        labeled, os.path.join(out_dir, "sinks", f"batch={batch_id}")
+    )
 
 
 def run_streaming(

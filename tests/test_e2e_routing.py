@@ -12,10 +12,13 @@ import collections
 import glob
 import json
 import os
+import shutil
+from datetime import datetime
 
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from skewer_spark.plans import job
 from skewer_spark.synth import transcripts_df
@@ -174,8 +177,9 @@ def test_encoded_payloads_shape(spark, pipeline_out):
 
 def test_flat_store_layout(spark, tmp_path):
     """run_flat writes routed files in conversation order, stores
-    every timestamp as INT64 micros adjusted to UTC, and stores no
-    derived uid."""
+    every timestamp as INT64 micros adjusted to UTC, stores no derived
+    uid and no routed time_generated, and stores time_reported as NULL
+    exactly where the reader's value equals ts."""
     inp, out = str(tmp_path / "in"), str(tmp_path / "out")
     transcripts_df(spark, 30, 40).write.parquet(inp)
     job.run_flat(spark, inp, out)
@@ -187,6 +191,7 @@ def test_flat_store_layout(spark, tmp_path):
         t = pq.read_table(f, columns=["conv_id", "turn_idx"])
         keys = list(zip(t["conv_id"].to_pylist(), t["turn_idx"].to_pylist()))
         assert keys == sorted(keys), f
+        assert "time_generated" not in pq.ParquetFile(f).schema.names, f
 
     seen = set()
     for f in routed + sinks:
@@ -200,25 +205,106 @@ def test_flat_store_layout(spark, tmp_path):
                 lt = json.loads(c.logical_type.to_json())
                 assert (lt["Type"], lt["isAdjustedToUTC"], lt["timeUnit"]) \
                     == ("Timestamp", True, "microseconds"), (f, c.name)
-    assert seen == {"ts", "time_reported", "time_generated"}
+    assert seen == {"ts", "time_reported"}
+
+    def stored_vs_read(raw_dir, reader):
+        cols = ["conv_id", "turn_idx", "ts", "time_reported"]
+        raw = spark.read.parquet(raw_dir).select(
+            "conv_id", "turn_idx", F.col("time_reported").alias("stored"))
+        return [tuple(r) for r in reader.select(*cols)
+                .join(raw, ["conv_id", "turn_idx"], "full_outer").collect()]
+
+    checked = [
+        stored_vs_read(os.path.join(out, "routed"), job.read_routed(spark, out))
+    ] + [
+        stored_vs_read(os.path.join(out, "sinks", f"sink={name}"),
+                       job.read_sink(spark, out, name))
+        for name in ("sink_alerts", "sink_tools", "sink_firehose",
+                     "sink_rejects", "_dropped")
+    ]
+    # the synthetic lines' own timestamps equal their turn's ts, so
+    # every stored time_reported here is NULL; test_derived_keys_round_trip
+    # covers one stored as-is
+    for rows in checked:
+        assert rows
+        for conv_id, turn_idx, ts, tr, stored in rows:
+            assert ts is not None and tr is not None, (conv_id, turn_idx)
+            assert stored == (None if tr == ts else tr), \
+                (conv_id, turn_idx, stored, tr)
 
 
 def test_derived_keys_round_trip(spark):
-    """strip_derived → restore_derived gives back every enriched row:
-    an ordinary msgid, a backfilled one, NULL, and a parsed msgid that
-    equals its own uid."""
+    """strip_derived → restore_derived (+ with_time_generated, as the
+    routed readers do) gives back every enriched row: an ordinary msgid,
+    a backfilled one, NULL, and a parsed msgid that equals its own uid;
+    a time_reported equal to ts, a different one (stored as-is), a NULL
+    parsed time that enrich filled from ts, and NULL ts beside a parsed
+    time and beside none."""
     from skewer_spark.operators.enrich import (
-        add_missing_msgid, restore_derived, strip_derived, with_uid,
+        add_missing_msgid, restore_derived, strip_derived, with_time_generated,
+        with_uid,
     )
 
     own_uid = oracle.uid_of("c", 3)
-    x = add_missing_msgid(with_uid(spark.createDataFrame(
-        [("c", 0, "ID47"), ("c", 1, ""), ("c", 2, None), ("c", 3, own_uid)],
-        "conv_id string, turn_idx int, msgid string",
-    )))
+    t0, t1 = datetime(2026, 1, 1, 0, 0, 5), datetime(2026, 1, 10, 13, 14, 15)
+    raw = spark.createDataFrame(
+        [("c", 0, "ID47", t0, t0), ("c", 1, "", t0, t1),
+         ("c", 2, None, t0, None), ("c", 3, own_uid, None, t1),
+         ("c", 4, "ID48", None, None)],
+        "conv_id string, turn_idx int, msgid string, ts timestamp, "
+        "time_reported timestamp",
+    )
+    # enrich's timestamp defaulting, on a frame with no parse columns
+    x = add_missing_msgid(with_uid(
+        raw.withColumn("time_generated", F.col("ts"))
+        .withColumn("time_reported", F.coalesce("time_reported", "ts"))
+    ))
     stored = strip_derived(x)
-    assert "uid" not in stored.columns
-    assert [r.msgid for r in stored.orderBy("turn_idx").collect()] \
-        == ["ID47", "", None, ""]
-    got = restore_derived(stored).select(*x.columns).orderBy("turn_idx")
-    assert got.collect() == x.orderBy("turn_idx").collect()
+    assert not {"uid", "time_generated"} & set(stored.columns)
+    rows = stored.orderBy("turn_idx").collect()
+    assert [r.msgid for r in rows] == ["ID47", "", None, "", "ID48"]
+    assert [r.time_reported for r in rows] == [None, t1, None, t1, None]
+    got = with_time_generated(restore_derived(stored)).select(*x.columns)
+    assert got.orderBy("turn_idx").collect() \
+        == x.orderBy("turn_idx").collect()
+
+
+def test_old_and_mixed_stores_read_alike(spark, pipeline_out, tmp_path):
+    """Buckets written before the store stripped its timestamps (full
+    time_reported, a routed time_generated) read through read_routed and
+    read_sink exactly like buckets written now, in either order: Spark
+    takes a store's schema from its first file, so the old layout in
+    bucket 0 makes time_generated a stored column and the new layout in
+    bucket 0 leaves it out."""
+    _, out, _ = pipeline_out
+    sinks = ("sink_alerts", "sink_tools", "sink_firehose", "sink_rejects",
+             "_dropped")
+
+    def rewrite_old(store, buckets):
+        # the restored frame without uid, written raw
+        routed = job.read_routed(spark, out).drop("uid")
+        for b in buckets:
+            routed.filter(F.col("bucket") == b).drop("bucket").write.mode(
+                "overwrite").parquet(f"{store}/routed/bucket={b}")
+            for name in sinks:
+                job.read_sink(spark, out, name).filter(
+                    F.col("bucket") == b
+                ).drop("uid", "bucket", "sink").write.mode("overwrite").parquet(
+                    f"{store}/sinks/bucket={b}/sink={name}")
+
+    def read_all(store):
+        return [
+            (df.columns, sorted(df.collect(),
+                                key=lambda r: (r.conv_id, r.turn_idx)))
+            for df in [job.read_routed(spark, store)]
+            + [job.read_sink(spark, store, n) for n in sinks]
+        ]
+
+    want = read_all(out)
+    for old_buckets, old_first in (([0, 2], True), ([1, 3], False)):
+        store = str(tmp_path / f"mixed{old_buckets[0]}")
+        shutil.copytree(out, store)
+        rewrite_old(store, old_buckets)
+        inferred = spark.read.parquet(f"{store}/routed").columns
+        assert ("time_generated" in inferred) is old_first
+        assert read_all(store) == want, old_buckets

@@ -8,13 +8,14 @@ value hash (columns sorted by name, rows sorted, values stringified).
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -60,7 +61,7 @@ def main(
     import __spark_entry__ as entrymod
     from skewer_spark.session import build_session
 
-    spark = build_session(master="local[8]", shuffle_partitions=8)
+    spark = build_session()
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
