@@ -62,11 +62,12 @@ _SQL_TUNING = {
     # are missing.
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
     "spark.sql.session.timeZone": "UTC",
-    # zstd parquet: 40% smaller store than snappy at measured-equal
-    # local write speed (r6 A/B on the 1M-turn pipeline: 308 vs 511 MB,
-    # wall times within noise) — at 100 TB the write/read floor is
-    # bytes through the NIC and disks, so the smaller codec IS the
-    # faster one at scale (optimization guide §1.3/§6).
+    # zstd parquet at its default level 3: on flat_store (seed 1, v1
+    # pages, one JVM, 6 alternating runs per codec) it wrote the
+    # smallest store (3.66 MB; zstd-1 3.82, snappy 6.33, lz4_raw 6.41)
+    # at no CPU cost (median cpu_s 5.37 s; zstd-1 5.50, snappy 5.48,
+    # lz4_raw 5.83).  No codec is a CPU lever, and at 100 TB the
+    # write/read floor is bytes through the NIC and disks.
     "spark.sql.parquet.compression.codec": "zstd",
     # INT64 micros, not the deprecated INT96: lossless (Spark timestamps
     # are µs), smaller, and the type Iceberg's timestamptz requires.

@@ -23,8 +23,11 @@ from pyspark.sql import functions as F
 from skewer_spark.plans import job
 from skewer_spark.synth import transcripts_df
 from tests import oracle
+from tests.store_meta import ts_encodings
 
 N_CONVS, TURNS = 40, 25  # 1000 rows
+SINKS = ("sink_alerts", "sink_tools", "sink_firehose", "sink_rejects",
+         "_dropped")
 
 
 @pytest.fixture(scope="module")
@@ -177,9 +180,10 @@ def test_encoded_payloads_shape(spark, pipeline_out):
 
 def test_flat_store_layout(spark, tmp_path):
     """run_flat writes routed files in conversation order, stores
-    every timestamp as INT64 micros adjusted to UTC, stores no derived
-    uid and no routed time_generated, and stores time_reported as NULL
-    exactly where the reader's value equals ts."""
+    every timestamp as INT64 micros adjusted to UTC, delta-packs ts
+    (Parquet v2 pages), stores no derived uid and no routed
+    time_generated, and stores time_reported as NULL exactly where the
+    reader's value equals ts."""
     inp, out = str(tmp_path / "in"), str(tmp_path / "out")
     transcripts_df(spark, 30, 40).write.parquet(inp)
     job.run_flat(spark, inp, out)
@@ -197,6 +201,7 @@ def test_flat_store_layout(spark, tmp_path):
     for f in routed + sinks:
         schema = pq.ParquetFile(f).schema
         assert "uid" not in schema.names, f
+        assert "DELTA_BINARY_PACKED" in ts_encodings(f), f
         for i in range(len(schema)):
             c = schema.column(i)
             if c.name in ("ts", "time_reported", "time_generated"):
@@ -219,8 +224,7 @@ def test_flat_store_layout(spark, tmp_path):
     ] + [
         stored_vs_read(os.path.join(out, "sinks", f"sink={name}"),
                        job.read_sink(spark, out, name))
-        for name in ("sink_alerts", "sink_tools", "sink_firehose",
-                     "sink_rejects", "_dropped")
+        for name in SINKS
     ]
     # the synthetic lines' own timestamps equal their turn's ts, so
     # every stored time_reported here is NULL; test_derived_keys_round_trip
@@ -270,23 +274,22 @@ def test_derived_keys_round_trip(spark):
 
 
 def test_old_and_mixed_stores_read_alike(spark, pipeline_out, tmp_path):
-    """Buckets written before the store stripped its timestamps (full
-    time_reported, a routed time_generated) read through read_routed and
+    """Buckets written before the store stripped its timestamps and
+    moved to v2 pages (full time_reported, a routed time_generated,
+    Parquet v1 pages with PLAIN ts) read through read_routed and
     read_sink exactly like buckets written now, in either order: Spark
     takes a store's schema from its first file, so the old layout in
     bucket 0 makes time_generated a stored column and the new layout in
     bucket 0 leaves it out."""
     _, out, _ = pipeline_out
-    sinks = ("sink_alerts", "sink_tools", "sink_firehose", "sink_rejects",
-             "_dropped")
 
     def rewrite_old(store, buckets):
-        # the restored frame without uid, written raw
+        # the restored frame without uid, written raw (v1 pages)
         routed = job.read_routed(spark, out).drop("uid")
         for b in buckets:
             routed.filter(F.col("bucket") == b).drop("bucket").write.mode(
                 "overwrite").parquet(f"{store}/routed/bucket={b}")
-            for name in sinks:
+            for name in SINKS:
                 job.read_sink(spark, out, name).filter(
                     F.col("bucket") == b
                 ).drop("uid", "bucket", "sink").write.mode("overwrite").parquet(
@@ -297,7 +300,7 @@ def test_old_and_mixed_stores_read_alike(spark, pipeline_out, tmp_path):
             (df.columns, sorted(df.collect(),
                                 key=lambda r: (r.conv_id, r.turn_idx)))
             for df in [job.read_routed(spark, store)]
-            + [job.read_sink(spark, store, n) for n in sinks]
+            + [job.read_sink(spark, store, n) for n in SINKS]
         ]
 
     want = read_all(out)
@@ -307,4 +310,78 @@ def test_old_and_mixed_stores_read_alike(spark, pipeline_out, tmp_path):
         rewrite_old(store, old_buckets)
         inferred = spark.read.parquet(f"{store}/routed").columns
         assert ("time_generated" in inferred) is old_first
+        # the store really mixes page versions
+        for b in range(4):
+            files = glob.glob(f"{store}/routed/bucket={b}/*.parquet") \
+                + glob.glob(f"{store}/sinks/bucket={b}/sink=*/*.parquet")
+            assert files, b
+            for f in files:
+                enc = ts_encodings(f)
+                if b in old_buckets:
+                    assert "PLAIN" in enc, (f, enc)
+                    assert "DELTA_BINARY_PACKED" not in enc, (f, enc)
+                else:
+                    assert "DELTA_BINARY_PACKED" in enc, (f, enc)
         assert read_all(store) == want, old_buckets
+
+
+def test_raw_readers_read_v2_store(spark, pipeline_out):
+    """DuckDB and pyarrow read the v2-page routed and sink files: keyed
+    on (conv_id, turn_idx), their rows, ts and encoded values equal
+    read_routed's and read_sink's."""
+    import duckdb
+    import pyarrow.dataset as ds
+
+    _, out, _ = pipeline_out
+    con = duckdb.connect()
+
+    def by_key(rows):
+        got = {(r[0], r[1]): tuple(r[2:]) for r in rows}
+        assert len(got) == len(rows)
+        return got
+
+    def check(pattern, reader, extra=()):
+        want = by_key(reader.select(
+            "conv_id", "turn_idx", F.unix_micros("ts"), *extra).collect())
+        assert want
+        files = sorted(glob.glob(os.path.join(out, pattern)))
+        assert files, pattern
+        select = ", ".join(["conv_id", "turn_idx", "epoch_us(ts)", *extra])
+        duck = con.execute(
+            f"SELECT {select} FROM read_parquet(?)", [files]).fetchall()
+        assert by_key(duck) == want, pattern
+        t = ds.dataset(files, format="parquet").to_table(
+            columns=["conv_id", "turn_idx", "ts", *extra])
+        t = t.set_column(2, "ts", t["ts"].cast("int64"))
+        arrow = list(zip(*(t[c].to_pylist() for c in t.column_names)))
+        assert by_key(arrow) == want, pattern
+
+    check("routed/bucket=*/*.parquet", job.read_routed(spark, out))
+    for name in SINKS:
+        check(f"sinks/bucket=*/sink={name}/*.parquet",
+              job.read_sink(spark, out, name), ["encoded"])
+
+
+def test_store_report_smoke(pipeline_out):
+    """tools/store_report.py reports every table of a bucketed store
+    from its footers: routed, each sink, _staged."""
+    import subprocess
+    import sys
+
+    from tools.store_report import report
+
+    _, out, _ = pipeline_out
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    text = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "store_report.py"), out],
+        check=True, capture_output=True, text=True).stdout
+    reps = report(out)
+    assert list(reps) == ["routed", *sorted(f"sinks/{n}" for n in SINKS),
+                          "_staged"]
+    for name, rep in reps.items():
+        assert f"{name}: {rep.files} files, {rep.file_bytes:,} B" in text
+        assert rep.footer_bytes + sum(rep.column_bytes.values()) \
+            < rep.file_bytes, name
+        assert "uid" not in rep.column_bytes, name
+    assert "DELTA_BINARY_PACKED" in reps["routed"].encodings["ts"]
+    assert "DELTA_BINARY_PACKED" not in reps["_staged"].encodings["ts"]

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from skewer_spark.plans import checkpoint as ckpt
 from skewer_spark.plans import job
 from skewer_spark.synth import transcripts_df
+from tests.store_meta import ts_encodings
 
 
 @pytest.fixture(scope="module")
@@ -113,6 +114,10 @@ def test_compaction_preserves_rows_and_records_replace(spark, store):
                   recursive=True)
     )
     assert n_files_before > 20  # fragmentation took
+    # the raw fragmenting rewrite wrote v1 pages (PLAIN ts)
+    assert all("DELTA_BINARY_PACKED" not in ts_encodings(f)
+               for f in glob.glob(os.path.join(out, "sinks", "**", "*.parquet"),
+                                  recursive=True))
     sid = job.compact_sinks(spark, out, run_id="compact1")
     after = fingerprint()
     files_after = glob.glob(os.path.join(out, "sinks", "**", "*.parquet"),
@@ -120,8 +125,10 @@ def test_compaction_preserves_rows_and_records_replace(spark, store):
     n_files_after = len(files_after)
     assert after == before  # byte-level content identical
     assert n_files_after < n_files_before  # actually compacted
-    # the salted fragments lost conversation order; compaction restores it
+    # the salted fragments lost conversation order; compaction restores
+    # it, and writes the store's v2 pages (delta-packed ts)
     for f in files_after:
+        assert "DELTA_BINARY_PACKED" in ts_encodings(f), f
         t = pq.read_table(f, columns=["conv_id", "turn_idx"])
         keys = list(zip(t["conv_id"].to_pylist(), t["turn_idx"].to_pylist()))
         assert keys == sorted(keys), f
