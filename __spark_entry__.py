@@ -103,18 +103,15 @@ def _routed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _parsed_events(spark: SparkSession, sf_dir: str, pre=None) -> DataFrame:
-    """``pre`` filters the TRANSCRIPT frame below the parse UDF: the
-    parse projection runs in single-eval mode here (guide §4.4 guard —
-    every consumer of this helper filters on a PARSED field), so
-    pre-parse-column filters no longer push through it automatically
-    and selective queries place them here (r6)."""
+    """``pre`` filters the TRANSCRIPT frame before the parse, so a
+    selective query parses only the lines it keeps."""
     from skewer_spark.operators.parse import parse_transcripts
     from skewer_spark.sources.events import event_transcripts
 
     tdf = event_transcripts(spark, sf_dir)
     if pre is not None:
         tdf = tdf.filter(pre)
-    return parse_transcripts(tdf, single_eval=True)
+    return parse_transcripts(tdf)
 
 
 # ---------------------------------------------------------------------------
@@ -218,7 +215,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return out
 
     def q_parse_rfc3164(spark, sf):
-        # shape filter below the parse UDF (see _parsed_events): only
+        # shape filter before the parse (see _parsed_events): only
         # the rfc3164-classic third of the lines is parsed at all
         p = _parsed_events(
             spark, sf, pre=F.pmod(F.col("turn_idx"), F.lit(3)) == 1
@@ -232,8 +229,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_parse_rfc5424(spark, sf):
-        # pre-parse shape filter below the UDF; parse_ok (a PARSED
-        # field) stays above it — single parse eval either way now
+        # pre-parse shape filter; parse_ok is a PARSED field, so its
+        # filter applies after the parse
         p = _parsed_events(
             spark, sf, pre=F.pmod(F.col("turn_idx"), F.lit(3)) == 0
         )

@@ -111,8 +111,8 @@ def dedup_and_rank(df: DataFrame, bucket_size: int = 8192) -> DataFrame:
     Dedup on (conv_id, turn_idx) rides the same sort via ``lag``
     (reference ingest semantics: reservoir map keyed by UID,
     services/store.go:136-156) — no second shuffle.  The offsets branch
-    only reads (conv_id, turn_idx), so Catalyst prunes the parse UDF
-    out of it entirely.
+    only reads (conv_id, turn_idx), so Catalyst prunes the parse out
+    of it entirely.
     """
     d = df.withColumn(
         "_tbkt", F.floor(F.col("turn_idx") / bucket_size).cast("int")

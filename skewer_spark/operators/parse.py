@@ -1,4 +1,4 @@
-"""The decode stage: vectorized syslog parsing.
+"""The decode stage: syslog parsing as Spark SQL expressions.
 
 Reproduces the reference decoders' semantics (SURVEY.md §2.2):
 
@@ -25,136 +25,89 @@ Spec deviations (deliberate, documented):
 * PRI / version must be 1-9 digits.  Go's ``strconv.Atoi`` would accept
   ``9999999999`` on 64-bit and wrap when narrowed to the int32 proto
   field; we treat >9 digits as malformed (FIXTURES.md "malformed PRI"
-  branch).
+  branch).  Digits are ASCII ``[0-9]``, as Go's ``Atoi`` and
+  ``time.Parse`` read them; ``tests/oracle.py``'s Python ``\\d`` also
+  takes other Unicode decimal digits in the PRI and ``Mmm dd hh:mm:ss``
+  fields, so its fuzz keeps those fields ASCII.
 * ``time.Now()`` substitutions resolve to the row's ``ts`` column
   (batch determinism): the parser returns NULL ``time_reported`` where
   the reference would stamp wall-clock "now", and the enrich stage
   coalesces to ``ts``.  The RFC3164 ``Mmm dd`` year injection
-  (``rfc3164_format.go:107``) uses ``year(ts)``.
-* Spark timestamps are µs, the reference stores int64 ns — all fixtures
-  are second-granularity so equality holds.
+  (``rfc3164_format.go:107``) uses ``year(ts)`` (1970 for a NULL ``ts``).
+* Spark timestamps are µs, the reference stores int64 ns: RFC3339
+  fractions beyond 6 digits are truncated.
+* Trimming and the SD key class use Python's ``str.isspace`` set
+  (``_WS``), hostnames Unicode letters and numbers (``\\p{L}\\p{N}``),
+  as the independent oracle does; Java's ``\\s`` and ``(?U)\\w`` differ
+  from both.
+* ``properties_json`` is Spark's ``to_json`` of the sorted two-level
+  map: byte-identical to ``json.dumps(sort_keys=True,
+  separators=(",", ":"))`` for printable-ASCII SD text; non-ASCII
+  values stay raw UTF-8 (Python writes ``\\uXXXX``) and control
+  characters use upper-case hex escapes.  The decoded maps are equal.
 
-Everything is pandas-vectorized (``.str`` ops / extract / extractall)
-inside one Arrow-batched pandas UDF; the only Python-level loop is the
-assembly of structured-data dicts, grouped per SD-bearing row.
+The parse is a chain of narrow projections (:func:`_stages`).  Each
+stage names the values the next ones reuse, so each regex of the
+common path runs at most once per row, gated by the ``when`` of the
+branch that needs it; one
+nested expression would re-evaluate shared subtrees (CLAUDE.md's
+codegen trap).  Every call is ANSI-safe (``try_make_timestamp``,
+``try_cast``, ``get``).  The chain compiles to two whole-stage-codegen
+stages around the SD-properties projection, and no Python worker runs.
 """
 
 from __future__ import annotations
 
-import json
-import re
+import functools
 
-import numpy as np
-import pandas as pd
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-from skewer_spark.schema import PARSED_STRUCT, PROPERTIES_TYPE
+from skewer_spark.schema import PROPERTIES_TYPE
 
-
-# --------------------------------------------------------------------------
-# RE2 fast-path twins of the hot pandas .str ops (r6, guide §4.2).
-#
-# pandas .str.extract/match/count loop per element in Python; pyarrow's
-# RE2 kernels run the same ASCII-structural patterns 2-6× faster at the
-# C++ level.  ONLY patterns whose semantics are identical under RE2 are
-# converted (digit/space/bracket structure — no \w, no backreferences);
-# RE_HOSTNAME keeps Python re because its \w must stay UNICODE word
-# chars (Go unicode.IsLetter parity), and .str.strip() keeps Python
-# whitespace semantics (isspace covers \x1c-\x1f, Unicode WSpace does
-# not).  Known deviation, audited at every converted call site: RE2
-# returns '' (not NaN) for a non-participating OPTIONAL group — at each
-# such site the '' row flows into an assignment of message='' that
-# equals the column default, so outputs are unchanged (pinned by the
-# 50k-line differential fuzz in tests/test_parse_fuzz.py).
-# --------------------------------------------------------------------------
-
-
-def _pa_arr(s: pd.Series) -> pa.Array:
-    return pa.array(s, type=pa.large_utf8(), from_pandas=True)
-
-
-def _pc_extract(s: pd.Series, pattern: str) -> pd.DataFrame:
-    """``Series.str.extract`` twin: integer-labeled columns, NaN rows
-    where the whole pattern failed to match."""
-    if len(s) == 0:
-        n_groups = pattern.count("(?P<")
-        return pd.DataFrame(
-            {i: pd.Series(dtype=object) for i in range(n_groups)},
-            index=s.index,
-        )
-    r = pc.extract_regex(_pa_arr(s), pattern)
-    invalid = ~np.asarray(r.is_valid())
-    cols = {}
-    for i in range(r.type.num_fields):
-        v = r.field(i).to_pandas().astype(object)
-        if invalid.any():
-            v[invalid] = np.nan
-        v.index = s.index
-        cols[i] = v
-    return pd.DataFrame(cols, index=s.index)
-
-
-def _pc_match(s: pd.Series, pattern: str) -> pd.Series:
-    """``Series.str.match`` twin (anchored via a leading ``^`` in the
-    pattern itself); nulls match False."""
-    m = pc.match_substring_regex(_pa_arr(s), pattern)
-    return pd.Series(
-        np.asarray(m.fill_null(False)), index=s.index, dtype=bool
-    )
-
-
-def _pc_contains_re(s: pd.Series, pattern: str) -> pd.Series:
-    m = pc.match_substring_regex(_pa_arr(s), pattern)
-    return pd.Series(
-        np.asarray(m.fill_null(False)), index=s.index, dtype=bool
-    )
-
-
-def _pc_contains_lit(s: pd.Series, lit: str) -> pd.Series:
-    m = pc.match_substring(_pa_arr(s), lit)
-    return pd.Series(
-        np.asarray(m.fill_null(False)), index=s.index, dtype=bool
-    )
-
-
-def _pc_count_lit(s: pd.Series, lit: str) -> pd.Series:
-    c = pc.count_substring(_pa_arr(s), lit)
-    return pd.Series(
-        np.asarray(c.fill_null(0)), index=s.index, dtype="int64"
-    )
-
-# --------------------------------------------------------------------------
-# regexes
-# --------------------------------------------------------------------------
-
-RE_SD_ELEM = re.compile(r"\[([^\]\\ =]+)((?:\\.|[^\]\\])*)\]")
-RE_SD_PARAM = re.compile(r'([^=\s\]]+)="((?:\\.|[^"\\])*)"')
-RE_HOSTNAME = re.compile(r"^[\w.:\-]*$")  # isHostname: letter|digit|.|:|-|_
-
-# RE2 patterns for the pyarrow kernels (named groups g0.., inline
-# (?s)); see the fast-path note at the helpers above
-RE2_5424_DETECT = r"^<\d{1,9}>\d{1,9} "
-RE2_5424_HEAD = (
-    r"(?s)^<(?P<g0>\d{1,9})>(?P<g1>\d{1,9}) +(?P<g2>[^ ]+) +(?P<g3>[^ ]+)"
-    r" +(?P<g4>[^ ]+) +(?P<g5>[^ ]+) +(?P<g6>[^ ]+) +(?P<g7>.*)$"
+# Python's str.isspace() set (str.strip() with no argument), for btrim
+_WS = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a"
+    "\u2028\u2029\u202f\u205f\u3000"
 )
-RE2_3339 = (
-    r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(\.\d+)?(Z|[+-]\d{2}:\d{2})$"
+# the same set as a Java regex class body
+_WS_CLASS = (
+    r"\t\n\x0B\f\r\x1C-\x20\x85\xA0\u1680\u2000-\u200A"
+    r"\u2028\u2029\u202F\u205F\u3000"
 )
-RE2_SD_BLOCK = (
-    r"(?s)^(?P<g0>(?:\[(?:\\.|[^\]\\])*\])+)(?: +(?P<g1>.*))?$"
-)
-RE2_PRI = r"(?s)^<(?P<g0>\d{1,9})>(?P<g1>.*)$"
-RE2_STAMP_TIME = r"^\d{2}:\d{2}:\d{2}$"
 
-MONTHS = {
-    "Jan": 1, "Feb": 2, "Mar": 3, "Apr": 4, "May": 5, "Jun": 6,
-    "Jul": 7, "Aug": 8, "Sep": 9, "Oct": 10, "Nov": 11, "Dec": 12,
-}
+RE_5424_DETECT = r"^<[0-9]{1,9}>[0-9]{1,9} "
+# RFC5424 HEADER up to MSGID and the spaces after it; no match = a
+# header the grammar rejects
+RE_5424_HEAD = r"^<[0-9]{1,9}>[0-9]{1,9}(?: ++[^ ]++){5} ++"
+RE_PRI = r"^<([0-9]{1,9})>"
+RE_3339 = (
+    r"^[0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2}"
+    r"(?:\.[0-9]+)?(?:Z|[+-][0-9]{2}:[0-9]{2})\z"
+)
+# time.Stamp "Jan _2 15:04:05" as the first three single-space tokens
+RE_STAMP = (
+    r"^(?:Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec)"
+    r" [0-9]{1,2} [0-9]{2}:[0-9]{2}:[0-9]{2}(?: |\z)"
+)
+RE_TAG_CHARS = r"[\[\]:]"
+RE_HOSTNAME = r"^[\p{L}\p{N}._:\-]*\z"  # isHostname: letter|number|.|:|-|_
+# The maximal run of SD elements at the start of the SD field; the
+# element grammar is deterministic, so the possessive quantifiers give
+# the same match as backtracking ones, and keep Java's regex from
+# recursing once per character of a long value.
+RE_SD_BLOCK = r"(?s)^(?:\[(?:[^\]\\]++|\\.)*+\])++"
+# findall over the block: SD-ID + raw params text, and over the params
+# text: name + raw value.  No DOTALL, as in the oracle: an escaped
+# newline ends the element.
+RE_SD_ELEM = r"\[([^\]\\ =]++)((?:[^\]\\]++|\\[^\n])*+)\]"
+RE_SD_PARAM = (
+    rf'([^=\]{_WS_CLASS}]++)="((?:[^"\\]++|\\[^\n])*+)"'
+)
+
+_MONTHS = "JanFebMarAprMayJunJulAugSepOctNovDec"
+_US = 1_000_000
 
 _COLS = [
     "priority", "facility", "severity", "version", "time_reported",
@@ -163,380 +116,303 @@ _COLS = [
 ]
 
 
-def _empty_result(index) -> pd.DataFrame:
-    """Defaults = model.Factory() zero message."""
-    return pd.DataFrame(
+def _c(name: str) -> Column:
+    return F.col(f"_p_{name}")
+
+
+def _dash(field: Column) -> Column:
+    """RFC5424 NILVALUE → empty."""
+    return F.when(field == "-", "").otherwise(field)
+
+
+def _timestamp(y, mo, d, hh, mi, ss) -> Column:
+    """The instant of digit strings read in the session time zone (UTC,
+    ``session._SQL_TUNING``); NULL if they are no valid date-time,
+    second 60 (which ``make_timestamp`` rolls over) and year 0
+    included."""
+    i = [c.try_cast("int") for c in (y, mo, d, hh, mi, ss)]
+    return F.when((i[0] > 0) & (i[5] < 60), F.try_make_timestamp(*i))
+
+
+def _rfc3339(x: Column) -> Column:
+    """The instant of a string already matched by ``RE_3339``, as
+    Python's ``fromisoformat`` takes it: fraction truncated to µs, any
+    offset under 24 h (minutes up to 99)."""
+    zulu = x.endswith("Z")
+    frac = F.when(
+        F.substr(x, F.lit(20), F.lit(1)) == ".",
+        F.rpad(F.substr(x, F.lit(21), F.length(x) - F.when(zulu, 21)
+                        .otherwise(26)), 6, "0"),
+    ).otherwise("0").try_cast("long")
+    off_min = F.when(zulu, 0).otherwise(
+        F.when(F.substr(x, F.lit(-6), F.lit(1)) == "-", -1).otherwise(1)
+        * (F.substr(x, F.lit(-5), F.lit(2)).try_cast("int") * 60
+           + F.substr(x, F.lit(-2), F.lit(2)).try_cast("int"))
+    )
+    local = _timestamp(*(x.substr(a, n) for a, n in (
+        (1, 4), (6, 2), (9, 2), (12, 2), (15, 2), (18, 2))))
+    return F.when(F.abs(off_min) < 1440, F.timestamp_micros(
+        F.unix_micros(local) + frac - off_min * F.lit(60 * _US).cast("long")))
+
+
+def _stamp(x: Column, year: Column) -> Column:
+    """The time.Stamp that starts ``x`` (already matched by
+    ``RE_STAMP``), in ``year``."""
+    day = F.substring_index(F.substr(x, F.lit(5)), " ", 1)
+    hms = F.substr(x, F.length(day) + 6, F.lit(8))
+    mon = (F.position(x.substr(1, 3), F.lit(_MONTHS)) + 2) / 3
+    return _timestamp(year, mon.cast("int"), day,
+                      hms.substr(1, 2), hms.substr(4, 2), hms.substr(7, 2))
+
+
+def _ascending(a: Column, up_to: int = 4) -> Column:
+    """``a`` holds at most ``up_to`` strictly ascending strings."""
+    cond = F.size(a) <= 1
+    for n in range(2, up_to + 1):
+        cond = cond | functools.reduce(
+            lambda x, i: x & (F.get(a, i) < F.get(a, i + 1)),
+            range(n - 1), F.size(a) == n)
+    return cond
+
+
+def _properties(ids: Column, params: Column) -> Column:
+    """SD elements → JSON of ``{sd_id: {name: raw value}}``, keys
+    ascending (``sort_keys``); the last of a repeated name wins (the
+    listener's map assignment), and an element replaces an earlier one
+    with the same SD-ID (ClearDomain, rfc5424_format.go:194-204).
+    Higher-order functions: evaluated interpreted, per row."""
+    def last_wins(pairs: Column) -> Column:
+        # array<struct<k, v>> → sorted map; bound once via a 1-array
+        return F.get(F.transform(F.array(pairs), lambda ps: F.map_from_entries(
+            F.array_sort(
+                F.filter(ps, lambda e, i: ~F.exists(
+                    F.slice(ps, i + 2, F.size(ps)), lambda x: x.k == e.k)),
+                lambda a, b: F.when(a.k < b.k, -1).when(a.k > b.k, 1)
+                .otherwise(0),
+            )
+        )), 0)
+
+    elems = F.zip_with(ids, params, lambda sid, p: F.struct(
+        sid.alias("k"),
+        last_wins(F.zip_with(
+            F.regexp_extract_all(p, F.lit(RE_SD_PARAM), F.lit(1)),
+            F.regexp_extract_all(p, F.lit(RE_SD_PARAM), F.lit(2)),
+            lambda k, v: F.struct(k.alias("k"), v.alias("v")),
+        )).alias("v"),
+    ))
+    return F.to_json(last_wins(elems))
+
+
+def _stages(text_col: str, ts_col: str) -> list[dict[str, Column]]:
+    """The parse as a chain of projections; each dict is one stage.
+
+    The stages before ``props`` run in the scan's whole-stage codegen.
+    ``props`` holds higher-order functions, so Catalyst compiles that
+    projection on its own (expression by expression); it also takes
+    the timestamps and the RFC5424 fields, and the stages after it form
+    a second codegen stage.  Each codegen stage stays under the JVM's
+    8000-byte limit for JIT-compiling a method; the whole parse fused
+    into one method exceeded it and ran in the bytecode interpreter.
+    ``props`` references ``keys`` more than once, and the stage after it
+    ``tstamp``, so CollapseProject merges neither neighbour into it."""
+    s, h, r = _c("s"), _c("h"), _c("r")
+    t, t0, t1, n = _c("t"), _c("t0"), _c("t1"), _c("n")
+    is5424, hdr, rest5 = _c("is5424"), _c("hdr"), _c("rest5")
+    ids, keys, blk, tg = _c("ids"), _c("keys"), _c("blk"), _c("tg")
+    first = F.substr(r, F.lit(1), F.lit(1))
+    year = F.coalesce(F.year(F.col(ts_col)), F.lit(1970))
+    return [
+        {"s": F.btrim(F.coalesce(F.col(text_col), F.lit("")), F.lit(_WS))},
+        {"is5424": s.rlike(RE_5424_DETECT)},
         {
-            "priority": pd.Series(0, index=index, dtype="int64"),
-            "facility": pd.Series(0, index=index, dtype="int64"),
-            "severity": pd.Series(0, index=index, dtype="int64"),
-            "version": pd.Series(0, index=index, dtype="int64"),
-            "time_reported": pd.Series(pd.NaT, index=index, dtype="datetime64[ns]"),
-            "hostname": pd.Series("", index=index, dtype="object"),
-            "appname": pd.Series("", index=index, dtype="object"),
-            "procid": pd.Series("", index=index, dtype="object"),
-            "msgid": pd.Series("", index=index, dtype="object"),
-            "structured": pd.Series("", index=index, dtype="object"),
-            "message": pd.Series("", index=index, dtype="object"),
-            "properties_json": pd.Series(None, index=index, dtype="object"),
-            "parse_ok": pd.Series(True, index=index, dtype="bool"),
-            "parser_name": pd.Series("rfc3164", index=index, dtype="object"),
+            "hdr": F.when(is5424, F.regexp_extract(s, RE_5424_HEAD, 0)),
+            "pri": F.when(
+                is5424, F.substring_index(F.substr(s, F.lit(2)), ">", 1)
+            ).otherwise(F.regexp_extract(s, RE_PRI, 1)),
         },
-        index=index,
-    )
-
-
-# --------------------------------------------------------------------------
-# parseTag (rfc3164_format.go:168-185), vectorized
-# --------------------------------------------------------------------------
-
-def _parse_tag(tag: pd.Series) -> tuple[pd.Series, pd.Series]:
-    t = pd.Series(
-        np.asarray(
-            pc.utf8_trim(_pa_arr(tag.fillna("")), characters=":")
-        ),
-        index=tag.index, dtype=object,
-    )
-    e = _pc_extract(t, r"(?s)^(?P<g0>[^\[]*)\[(?P<g1>.*)$")
-    app_part, after = e[0], e[1]
-    # Go: use the bracket split only when '[' exists AND something follows it
-    use = after.notna() & (after.str.len() > 0)
-    # procid = tag[i+1:j] when the first ']' of the WHOLE tag is after '[',
-    # else tag[i+1:].  ']' inside app_part means j < i.
-    app_has_rb = _pc_contains_lit(app_part.fillna(""), "]")
-    proc_to_rb = _pc_extract(after, r"^(?P<g0>[^\]]*)")[0]
-    proc = after.where(app_has_rb, proc_to_rb)
-    appname = app_part.where(use, t)
-    procid = proc.where(use, "")
-    return appname.fillna(""), procid.fillna("")
-
-
-def _is_hostname(s: pd.Series) -> pd.Series:
-    return s.fillna("").str.match(RE_HOSTNAME)
-
-
-# --------------------------------------------------------------------------
-# RFC3164 (rfc3164_format.go:28-166), vectorized over a sub-frame
-# --------------------------------------------------------------------------
-
-def _parse_3164(s: pd.Series, ts_year: pd.Series, out: pd.DataFrame) -> None:
-    """Mutates ``out.loc[s.index]`` in place.  ``s`` is pre-trimmed."""
-    idx = s.index
-    out.loc[idx, "parser_name"] = "rfc3164"
-
-    ext = _pc_extract(s, RE2_PRI)
-    haspri = ext[0].notna()
-    # default branch (:40-54): no '<', '>' missing/too-early, or bad PRI →
-    # whole line is message, timestamps = now (NULL → coalesce(ts)).
-    didx = idx[~haspri]
-    out.loc[didx, "message"] = s[~haspri]
-
-    if not haspri.any():
-        return
-    pidx = idx[haspri]
-    pri = ext.loc[pidx, 0].astype("int64")
-    out.loc[pidx, "priority"] = pri
-    out.loc[pidx, "facility"] = pri // 8
-    out.loc[pidx, "severity"] = pri % 8
-
-    rest = ext.loc[pidx, 1].str.strip()
-    # nothing after '>' (:59-67): fields from PRI only, no message.
-    live = rest.str.len() > 0
-    rest = rest[live]
-    if rest.empty:
-        return
-    ridx = rest.index
-
-    # ---- timestamp ----
-    is3339 = _pc_match(rest, r"^[0-9]")
-    tail = pd.Series(None, index=ridx, dtype="object")
-
-    # RFC3339 branch (:70-90)
-    r1 = rest[is3339]
-    if not r1.empty:
-        e1 = _pc_extract(r1, r"(?s)^(?P<g0>[^ ]*)(?: (?P<g1>.*))?$")
-        f0, rem = e1[0], e1[1]
-        okfmt = _pc_match(f0, RE2_3339)
-        parsed = pd.to_datetime(
-            f0.where(okfmt), utc=True, errors="coerce", format="ISO8601"
-        )
-        ok = parsed.notna()
-        out.loc[r1.index[ok], "time_reported"] = (
-            parsed[ok].dt.tz_localize(None)
-        )
-        # failure (:74-81): message = whole remainder, time = now
-        out.loc[r1.index[~ok], "message"] = r1[~ok]
-        tail.loc[r1.index[ok]] = rem[ok]
-
-    # old unix-timestamp branch (:92-114)
-    r2 = rest[~is3339]
-    if not r2.empty:
-        n_sp = _pc_count_lit(r2, " ")
-        short = n_sp < 2  # len(s) < 3 → degrade (:93-98)
-        out.loc[r2.index[short], "message"] = r2[short]
-        r2b = r2[~short]
-        if not r2b.empty:
-            e2 = _pc_extract(
-                r2b,
-                r"(?s)^(?P<g0>[^ ]*) (?P<g1>[^ ]*) (?P<g2>[^ ]*)"
-                r"(?: (?P<g3>.*))?$",
-            )
-            mon = e2[0].map(MONTHS)
-            dayok = _pc_match(e2[1], r"^\d{1,2}$")
-            timok = _pc_match(e2[2], RE2_STAMP_TIME)
-            cand = mon.notna() & dayok & timok
-            stamp = (
-                ts_year.loc[r2b.index].astype("int64").astype(str).str.zfill(4)
-                + "-"
-                + mon.fillna(1).astype("int64").astype(str).str.zfill(2)
-                + "-"
-                + e2[1].where(dayok, "01").str.zfill(2)
-                + " "
-                + e2[2].where(timok, "00:00:00")
-            )
-            parsed = pd.to_datetime(
-                stamp.where(cand), format="%Y-%m-%d %H:%M:%S", errors="coerce"
-            )
-            ok = parsed.notna()
-            out.loc[r2b.index[ok], "time_reported"] = parsed[ok]
-            out.loc[r2b.index[~ok], "message"] = r2b[~ok]  # degrade (:101-105)
-            tail.loc[r2b.index[ok]] = e2.loc[ok, 3]
-
-    # ---- tail: HOSTNAME / TAG / MSG (:116-165) ----
-    t = tail[tail.notna()]
-    if t.empty:
-        return
-    tidx = t.index
-    n_sp = _pc_count_lit(t, " ")
-
-    # len(s) == 1 (:116-120)
-    one = n_sp == 0
-    out.loc[tidx[one], "message"] = t[one]
-
-    # len(s) == 2 (:122-152)
-    two = n_sp == 1
-    t2 = t[two]
-    if not t2.empty:
-        e = _pc_extract(t2, r"(?s)^(?P<g0>[^ ]*) (?P<g1>.*)$")
-        t0, t1 = e[0], e[1]
-        ipish = (_pc_count_lit(t0, ":") == 7) | (_pc_count_lit(t0, ".") == 3)
-        t0brk = _pc_contains_re(t0, r"[\[\]:]")
-        t1brk = _pc_contains_re(t1, r"[\[\]:]")
-
-        c1 = ipish  # looks like IPv6/IPv4 (:124-135)
-        i1 = t2.index[c1]
-        out.loc[i1, "hostname"] = t0[c1]
-        a, p = _parse_tag(t1[c1 & t1brk])
-        out.loc[a.index, "appname"] = a
-        out.loc[p.index, "procid"] = p
-        out.loc[t2.index[c1 & ~t1brk], "message"] = t1[c1 & ~t1brk]
-
-        c2 = ~c1 & t0brk  # TAG MSG (:136-141)
-        a, p = _parse_tag(t0[c2])
-        out.loc[a.index, "appname"] = a
-        out.loc[p.index, "procid"] = p
-        out.loc[t2.index[c2], "message"] = t1[c2]
-
-        c3 = ~c1 & ~c2 & t1brk  # HOSTNAME + tag-from-s[0] (:142-147,
-        # reference parses the tag out of s[0] here — quirk preserved)
-        i3 = t2.index[c3]
-        out.loc[i3, "hostname"] = t0[c3]
-        a, p = _parse_tag(t0[c3])
-        out.loc[a.index, "appname"] = a
-        out.loc[p.index, "procid"] = p
-
-        c4 = ~c1 & ~c2 & ~c3  # APPNAME MSG (:148-151)
-        out.loc[t2.index[c4], "appname"] = t0[c4]
-        out.loc[t2.index[c4], "message"] = t1[c4]
-
-    # len(s) >= 3 (:154-165)
-    many = n_sp >= 2
-    t3 = t[many]
-    if not t3.empty:
-        e = _pc_extract(t3, r"(?s)^(?P<g0>[^ ]*) (?P<g1>[^ ]*) (?P<g2>.*)$")
-        t0, t1, rest2 = e[0], e[1], e[2]
-        noheur = _pc_contains_re(t0, r"[\[\]:]") | ~_is_hostname(t0)
-        # hostname omitted (:154-159)
-        i1 = t3.index[noheur]
-        a, p = _parse_tag(t0[noheur])
-        out.loc[i1, "appname"] = a
-        out.loc[i1, "procid"] = p
-        out.loc[i1, "message"] = (t1[noheur] + " " + rest2[noheur])
-        # HOSTNAME TAG MSG (:161-164)
-        i2 = t3.index[~noheur]
-        out.loc[i2, "hostname"] = t0[~noheur]
-        a, p = _parse_tag(t1[~noheur])
-        out.loc[i2, "appname"] = a
-        out.loc[i2, "procid"] = p
-        out.loc[i2, "message"] = rest2[~noheur]
-
-
-# --------------------------------------------------------------------------
-# RFC5424 (grammar RFC5424.g4 + listener rfc5424_format.go:110-230)
-# --------------------------------------------------------------------------
-
-def _parse_5424(s: pd.Series, out: pd.DataFrame) -> None:
-    idx = s.index
-    out.loc[idx, "parser_name"] = "rfc5424"
-
-    e = _pc_extract(s, RE2_5424_HEAD)
-    ok = e[0].notna()
-    # header mismatch → decode error (errorListener path)
-    out.loc[idx[~ok], "parse_ok"] = False
-    if not ok.any():
-        return
-    h = e[ok]
-    hidx = h.index
-
-    pri = h[0].astype("int64")
-    out.loc[hidx, "priority"] = pri
-    out.loc[hidx, "facility"] = pri // 8
-    out.loc[hidx, "severity"] = pri % 8
-    out.loc[hidx, "version"] = h[1].astype("int64")
-
-    # timestamp: '-' → now (NULL, coalesced to ts); invalid → error (:136-152)
-    tsx = h[2]
-    isnil = tsx == "-"
-    okfmt = _pc_match(tsx, RE2_3339) & ~isnil
-    parsed = pd.to_datetime(
-        tsx.where(okfmt), utc=True, errors="coerce", format="ISO8601"
-    )
-    badts = ~isnil & parsed.isna()
-    out.loc[hidx[badts], "parse_ok"] = False
-    tok = parsed.notna()
-    out.loc[hidx[tok], "time_reported"] = parsed[tok].dt.tz_localize(None)
-
-    good = ~badts
-    # '-' → empty (:154-192)
-    for gi, col in ((3, "hostname"), (4, "appname"), (5, "procid"), (6, "msgid")):
-        v = h[gi].where(h[gi] != "-", "")
-        out.loc[hidx[good], col] = v[good]
-
-    # structured + msg
-    rest = h[7][good]
-    if rest.empty:
-        return
-    nil_sd = _pc_match(rest, r"^-( |$)")
-    # '- msg' → message after the spaces
-    m1 = _pc_extract(rest[nil_sd], r"(?s)^- +(?P<g0>.*)$")[0]
-    has_m1 = m1.notna()
-    out.loc[m1.index[has_m1], "message"] = m1[has_m1]
-
-    sd = rest[~nil_sd]
-    if sd.empty:
-        return
-    blk = _pc_extract(sd, RE2_SD_BLOCK)
-    sd_ok = blk[0].notna()
-    out.loc[sd.index[~sd_ok], "parse_ok"] = False  # malformed SD → error
-    if not sd_ok.any():
-        return
-    # keep the raw SD block so sink encoders re-emit it without a map
-    # round-trip (the reference's Structured field stays "", but the
-    # canonical re-encode equals the raw block for valid input)
-    out.loc[sd.index[sd_ok], "structured"] = blk[0][sd_ok]
-    msg = blk[1][sd_ok]
-    has_msg = msg.notna()
-    out.loc[msg.index[has_msg], "message"] = msg[has_msg]
-
-    # SD params: values stored raw (escapes kept), per listener
-    # value.GetText() at rfc5424_format.go:206-223.
-    elems = blk[0][sd_ok].str.extractall(RE_SD_ELEM)
-    if elems.empty:
-        return
-    props: dict = {}
-    for (row, _m), sid, ptxt in zip(
-        elems.index, elems[0].to_numpy(), elems[1].to_numpy()
-    ):
-        d = props.setdefault(row, {})
-        d[sid] = {}  # ClearDomain per element (:194-204)
-        for k, v in RE_SD_PARAM.findall(ptxt):
-            d[sid][k] = v
-    pidx = list(props.keys())
-    out.loc[pidx, "properties_json"] = [
-        json.dumps(props[i], separators=(",", ":"), sort_keys=True) for i in pidx
+        {
+            # RFC5424: <PRI>VERSION, TIMESTAMP, HOSTNAME, APP-NAME,
+            # PROCID, MSGID; the SD and MSG rest
+            "h": F.when(hdr != "", F.array_remove(F.split(hdr, " "), "")),
+            "rest5": F.when(hdr != "", F.substr(s, F.length(hdr) + 1)),
+            # RFC3164: the trimmed text after <PRI>
+            "r": F.when(~is5424 & (_c("pri") != ""), F.btrim(
+                F.substr(s, F.length(_c("pri")) + 3), F.lit(_WS))),
+        },
+        {
+            # RFC3164: a leading digit selects the RFC3339 branch
+            # (:70-90), anything else time.Stamp (:92-114)
+            "dig": first.between("0", "9"),
+            "stok": F.when((r != "") & ~first.between("0", "9"),
+                           r.rlike(RE_STAMP)),
+            # RFC5424 SD field: the maximal element run at its start
+            "blk": F.when((rest5 != "-") & ~rest5.startswith("- "),
+                          F.regexp_extract(rest5, RE_SD_BLOCK, 0)),
+        },
+        {
+            "tsx": F.when(hdr != "", F.get(h, 1)).when(
+                _c("dig"), F.substring_index(r, " ", 1)),
+            # SD block + optional " +MSG" must be the whole field
+            "sdok": (blk != "") & (
+                (F.length(blk) == F.length(rest5))
+                | (F.substr(rest5, F.length(blk) + 1, F.lit(1)) == " ")),
+            "ids": F.when(blk != "", F.regexp_extract_all(
+                blk, F.lit(RE_SD_ELEM), F.lit(1))),
+            "ps": F.when(blk != "", F.regexp_extract_all(
+                blk, F.lit(RE_SD_ELEM), F.lit(2))),
+        },
+        {
+            "tsok": (_c("tsx") != "-") & _c("tsx").rlike(RE_3339),
+            # the common SD shape: one element
+            "keys": F.when(F.size(ids) == 1, F.regexp_extract_all(
+                F.get(_c("ps"), 0), F.lit(RE_SD_PARAM), F.lit(1))),
+            "vals": F.when(F.size(ids) == 1, F.regexp_extract_all(
+                F.get(_c("ps"), 0), F.lit(RE_SD_PARAM), F.lit(2))),
+        },
+        {
+            # one element with ascending names maps directly; anything
+            # else takes the interpreted path
+            "props": F.when(_c("sdok") & (F.size(ids) > 0), F.when(
+                (F.size(ids) == 1) & _ascending(keys),
+                F.to_json(F.map_from_arrays(ids, F.array(
+                    F.map_from_arrays(keys, _c("vals"))))),
+            ).otherwise(_properties(ids, _c("ps")))),
+            "t3339": F.when(_c("tsok"), _rfc3339(_c("tsx"))),
+            "tstamp": F.when(_c("stok"), _stamp(r, year)),
+            # RFC5424 fields; '-' → empty (:154-192)
+            "version5": F.substring_index(F.get(h, 0), ">", -1)
+            .try_cast("int"),
+            "host5": _dash(F.get(h, 2)),
+            "app5": _dash(F.get(h, 3)),
+            "proc5": _dash(F.get(h, 4)),
+            "msgid5": _dash(F.get(h, 5)),
+            "msg5": F.when(rest5 == "-", "").otherwise(F.ltrim(F.substr(
+                rest5, F.when(rest5.startswith("- "), 3)
+                .otherwise(F.length(blk) + 1)), F.lit(" "))),
+        },
+        {
+            "time": F.coalesce(_c("t3339"), _c("tstamp")),
+            # RFC3164 HOSTNAME/TAG/MSG tokens; NULL = no tail
+            "t": F.when(_c("dig") & _c("t3339").isNotNull(), F.when(
+                F.instr(r, " ") > 0, F.substr(r, F.instr(r, " ") + 1)
+            )).when(_c("tstamp").isNotNull(), F.get(F.split(r, " ", 4), 3)),
+            # RFC3164 timestamp failure (:74-81, :93-105): the whole
+            # remainder is the message
+            "deg": (r != "") & _c("t3339").isNull() & _c("tstamp").isNull(),
+            # RFC5424 decode errors: header, timestamp (:136-152), SD
+            "err5": is5424 & ((hdr == "") | (
+                (_c("tsx") != "-") & _c("t3339").isNull())
+                | (blk.isNotNull() & ~_c("sdok"))),
+        },
+        {
+            "ok5": is5424 & ~_c("err5"),
+            # token count of the tail: 1, 2 or 3+ (:116-165)
+            "n": F.when(F.instr(t, " ") == 0, 1).when(
+                F.instr(F.substr(t, F.instr(t, " ") + 1), " ") == 0, 2
+            ).otherwise(3),
+            "t0": F.substring_index(t, " ", 1),
+            "aft": F.substr(t, F.instr(t, " ") + 1),
+        },
+        {
+            "t1": F.substring_index(_c("aft"), " ", 1),
+            "brk0": F.when(n >= 2, t0.rlike(RE_TAG_CHARS)),
+            "host0": F.when(n == 3, t0.rlike(RE_HOSTNAME)),
+            "ip0": (n == 2) & (
+                (F.length(t0) - F.length(F.replace(t0, F.lit(":"))) == 7)
+                | (F.length(t0) - F.length(F.replace(t0, F.lit("."))) == 3)),
+        },
+        {
+            "brk1": F.when(n == 2, t1.rlike(RE_TAG_CHARS)),
+            "c_tag0": ((n == 2) & ~_c("ip0") & _c("brk0"))
+            | ((n == 3) & (_c("brk0") | ~_c("host0"))),
+        },
+        {
+            # len(s)==2 (:122-152) and len(s)>=3 (:154-165) branches;
+            # quirk: HOSTNAME + tag parsed from s[0] (:142-147)
+            "c_quirk": (n == 2) & ~_c("ip0") & ~_c("brk0") & _c("brk1"),
+            "c_host": (n == 3) & ~_c("c_tag0"),
+        },
+        {
+            "host3": F.when(_c("ip0") | _c("c_quirk") | _c("c_host"), t0),
+            "tag": F.when(_c("c_tag0") | _c("c_quirk"), t0).when(
+                (_c("ip0") & _c("brk1")) | _c("c_host"), t1),
+            "msg3": F.when(_c("deg"), r).when(n == 1, t).when(
+                _c("ip0"), F.when(_c("brk1"), "").otherwise(t1)).when(
+                _c("c_tag0"), _c("aft")).when(_c("c_quirk"), "").when(
+                n == 2, t1).when(n == 3, F.substr(
+                    _c("aft"), F.instr(_c("aft"), " ") + 1)),
+            # len(s)==2 APPNAME MSG (:148-151): s[0] verbatim, no parseTag
+            "app_raw": F.when((n == 2) & ~_c("ip0") & ~_c("c_tag0")
+                              & ~_c("c_quirk"), t0),
+            "prio": F.when(~_c("err5") & (_c("pri") != ""),
+                           _c("pri").try_cast("int")).otherwise(0),
+        },
+        # parseTag (rfc3164_format.go:168-185)
+        {"tg": F.btrim(_c("tag"), F.lit(":"))},
+        {"ti": F.instr(tg, "["), "tj": F.instr(tg, "]")},
+        {
+            "tuse": (_c("ti") > 0) & (F.length(tg) > _c("ti")),
+            "proc3": F.when(_c("tj") > _c("ti"), F.substr(
+                tg, _c("ti") + 1, _c("tj") - _c("ti") - 1)).otherwise(
+                F.substr(tg, _c("ti") + 1)),
+        },
+        {
+            "priority": _c("prio"),
+            "facility": F.shiftright(_c("prio"), 3),
+            "severity": _c("prio").bitwiseAND(7),
+            "version": F.when(_c("ok5"), _c("version5")).otherwise(0),
+            "time_reported": F.when(~_c("err5"), _c("time")),
+            "hostname": F.when(_c("ok5"), _c("host5")).otherwise(
+                F.coalesce(_c("host3"), F.lit(""))),
+            "appname": F.when(_c("ok5"), _c("app5")).otherwise(
+                F.coalesce(_c("app_raw"), F.when(_c("tuse"), F.substr(
+                    tg, F.lit(1), _c("ti") - 1)).otherwise(tg), F.lit(""))),
+            "procid": F.when(_c("ok5"), _c("proc5")).when(
+                _c("tuse"), _c("proc3")).otherwise(""),
+            "msgid": F.when(_c("ok5"), _c("msgid5")).otherwise(""),
+            "structured": F.when(_c("ok5") & _c("sdok"), blk).otherwise(""),
+            "message": F.when(_c("ok5"), _c("msg5")).when(is5424, "").when(
+                _c("pri") == "", s).otherwise(
+                F.coalesce(_c("msg3"), F.lit(""))),
+            "properties_json": F.when(_c("ok5"), _c("props")),
+            "parse_ok": ~_c("err5"),
+            # no ELSE: nullable like every parsed column, so the stored
+            # schema (and its parquet definition levels) stays as it was
+            "parser_name": F.when(is5424, "rfc5424").when(~is5424, "rfc3164"),
+        },
     ]
 
 
-# --------------------------------------------------------------------------
-# the UDF + operator
-# --------------------------------------------------------------------------
-
-def parse_batch(text: pd.Series, ts: pd.Series) -> pd.DataFrame:
-    """Vectorized core: one batch of raw lines → parsed frame."""
-    s = text.fillna("").str.strip()
-    out = _empty_result(s.index)
-    is5424 = _pc_match(s, RE2_5424_DETECT)
-    ts_year = pd.to_datetime(ts).dt.year.fillna(1970)
-    if is5424.any():
-        _parse_5424(s[is5424], out)
-    if (~is5424).any():
-        _parse_3164(s[~is5424], ts_year, out)
-    # decode error → nil message (all fields default), matching the
-    # reference's parse-error path (decoders/decode.go: message dropped).
-    bad = ~out["parse_ok"]
-    if bad.any():
-        bidx = out.index[bad]
-        out.loc[bidx, ["priority", "facility", "severity", "version"]] = 0
-        out.loc[bidx, "time_reported"] = pd.NaT
-        for c in ("hostname", "appname", "procid", "msgid", "structured", "message"):
-            out.loc[bidx, c] = ""
-        out.loc[bidx, "properties_json"] = None
-    out["priority"] = out["priority"].astype("int32")
-    out["facility"] = out["facility"].astype("int32")
-    out["severity"] = out["severity"].astype("int32")
-    out["version"] = out["version"].astype("int32")
-    return out[_COLS]
-
-
-@pandas_udf(PARSED_STRUCT)
-def parse_syslog_udf(text: pd.Series, ts: pd.Series) -> pd.DataFrame:
-    return parse_batch(text, ts)
-
-
-# The udf is PURE; ``_parse_syslog_nd`` is the same function marked
-# non-deterministic — the single-eval guard for plans that FILTER on a
-# parsed field (parse_ok, severity, …): such a filter otherwise gets
-# pushed below the flatten projection and the optimizer duplicates the
-# WHOLE parse — two ArrowEvalPython nodes, every row parsed twice
-# (guide §4.4; observed in q_parse_errors / q_parse_rfc5424, r6: 2
-# nodes → 1, ~390k → 200k UDF rows at sf0.1).  It is OPT-IN
-# (``parse_transcripts(single_eval=True)``) because the
-# non-deterministic marker also blocks every OTHER reordering through
-# the projection — measured ~2 s (~30%) on the 1M-row headline
-# pipeline, which has no parsed-field filter and wants the default
-# optimizer freedom.  Callers opting in must place PRE-parse filters
-# below parse themselves (the entry queries do).
-_parse_syslog_nd = parse_syslog_udf.asNondeterministic()
+@functools.lru_cache(maxsize=None)
+def _stages_in(gateway, text_col: str, ts_col: str) -> list[dict[str, Column]]:
+    """``_stages`` built once per JVM gateway: its ~1,000 expression
+    nodes are one py4j round trip each, about 1 s of Python and JVM CPU
+    per build, and the unresolved Columns are reusable on any frame."""
+    return _stages(text_col, ts_col)
 
 
 def parse_transcripts(
-    df: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    single_eval: bool = False,
+    df: DataFrame, text_col: str = "text", ts_col: str = "ts"
 ) -> DataFrame:
-    """Scan-stage operator: attach the parsed struct, flattened.
+    """Scan-stage operator: append the 14 parsed columns.
 
-    Narrow (no shuffle): one whole-stage-codegen span feeding an
-    Arrow-batched UDF.  Properties travel as the compact JSON string
-    ``properties_json`` — writing a nested map column to parquet costs
-    ~2× the rest of the row combined (measured), so the map is revived
-    with :func:`with_properties_map` / ``from_json`` only where an
-    operator actually needs map semantics.  ``single_eval`` applies the
-    non-deterministic duplicate-eval guard (see ``_parse_syslog_nd``);
-    set it when the consumer filters on a PARSED field.
+    Narrow (no shuffle, no Python).  Properties travel as the compact
+    JSON string ``properties_json`` — writing a nested map column to
+    parquet costs ~2× the rest of the row combined (measured), so the
+    map is revived with :func:`with_properties_map` / ``from_json`` only
+    where an operator actually needs map semantics.
     """
-    udf = _parse_syslog_nd if single_eval else parse_syslog_udf
-    parsed = df.withColumn("_p", udf(F.col(text_col), F.col(ts_col)))
-    flat = parsed.select(
-        "*",
-        *[F.col(f"_p.{f.name}").alias(f.name) for f in PARSED_STRUCT.fields],
-    ).drop("_p")
-    return flat
+    out = df
+    for stage in _stages_in(df.sparkSession.sparkContext._gateway,
+                            text_col, ts_col):
+        out = out.withColumns({
+            (k if k in _COLS else f"_p_{k}"): v for k, v in stage.items()
+        })
+    return out.select(*[F.col(f"`{c}`") for c in df.columns], *_COLS)
 
 
 def with_properties_map(df: DataFrame) -> DataFrame:
     """Revive properties_json → map<string,map<string,string>>."""
-    return df.withColumn(
-        "properties", F.from_json(F.col("properties_json"), PROPERTIES_TYPE)
+    return df.withColumns(
+        {"properties": F.from_json(F.col("properties_json"), PROPERTIES_TYPE)}
     )

@@ -673,24 +673,39 @@ def read_sink_diff(
     return df.filter(F.col("bucket").isin(new_buckets))
 
 
+def _sink_leaves(path: str) -> dict[str, int]:
+    """``bucket=/sink=`` leaf directory (relative to ``path``) → number
+    of parquet files in it."""
+    leaves = {}
+    for d, _, files in os.walk(path):
+        n = sum(f.endswith(".parquet") for f in files)
+        if n:
+            leaves[os.path.relpath(d, path)] = n
+    return leaves
+
+
 def compact_sinks(
     spark: SparkSession,
     out_dir: str,
     run_id: str,
     files_per_partition: int = 1,
-) -> str:
+) -> str | None:
     """Small-file compaction — the Iceberg ``rewrite_data_files``
     maintenance analog.  Per-bucket waves write one parquet file per
     task, so a 10^5-bucket × 4-sink store accumulates O(buckets ×
     sinks × tasks) small files; scans then pay per-file open cost.
-    This rewrites each ``bucket=/sink=`` leaf down to
-    ``files_per_partition`` files with IDENTICAL rows (no re-encode,
-    no re-encrypt — bytes move, content doesn't), then commits a
-    ``replace`` snapshot so lineage records the rewrite.
+    This rewrites each ``bucket=/sink=`` leaf that holds more than
+    ``files_per_partition`` files down to that many, with IDENTICAL
+    rows (no re-encode, no re-encrypt — bytes move, content doesn't),
+    then commits a ``replace`` snapshot so lineage records the rewrite.
+    Leaves already that compact are not read or touched; when every
+    leaf is, nothing is written or committed and the current head
+    snapshot id (None before the first snapshot) is returned.
 
-    The directory swap is atomic-enough on a local/HDFS filesystem
-    (rename); on an object store this step is exactly what the Iceberg
-    metadata swap replaces — documented, not hidden.
+    Each rewritten leaf is swapped by two renames through
+    ``_sinks_precompact``, which is atomic-enough on a local/HDFS
+    filesystem; on an object store this step is exactly what the
+    Iceberg metadata swap replaces — documented, not hidden.
     """
     import shutil
 
@@ -698,7 +713,8 @@ def compact_sinks(
     # run_id would only be rejected by commit_snapshot at the very end —
     # after the backup was already deleted — leaving an unrecorded
     # rewrite with no lineage row and nothing to roll back to
-    if run_id in ckpt.snapshotted_run_ids(spark, out_dir):
+    snaps = ckpt._read_snapshots_or_empty(spark, out_dir)
+    if any(r.run_id == run_id for r in snaps):
         raise ValueError(
             f"run_id {run_id!r} already snapshotted in {out_dir!r}; "
             "use a fresh run_id per compaction"
@@ -707,16 +723,25 @@ def compact_sinks(
     if os.path.exists(old):
         raise RuntimeError(
             f"leftover {old} from a crashed compaction — a crash between "
-            "the two renames leaves the pre-compaction data there; "
-            "restore it to sinks/ (or remove it) before compacting"
+            "the renames leaves the pre-compaction leaves there; "
+            "restore them to sinks/ (or remove them) before compacting"
         )
     path = os.path.join(out_dir, "sinks")
-    df = spark.read.option("basePath", path).parquet(path)
-    part_cols = [c for c in ("bucket", "sink") if c in df.columns]
+    todo = sorted(
+        leaf for leaf, n in _sink_leaves(path).items()
+        if n > files_per_partition
+    )
+    if not todo:
+        head = max(snaps, key=lambda r: (r.seq, r.snapshot_id), default=None)
+        return head.snapshot_id if head is not None else None
+    # the leaves' own key=value levels, so each rewritten leaf lands at
+    # the path it is swapped back into
+    part_cols = [seg.split("=", 1)[0] for seg in todo[0].split(os.sep)]
     if "sink" not in part_cols:
         raise ValueError(f"{path} is not a sink store")
+    df = spark.read.option("basePath", path).parquet(
+        *[os.path.join(path, leaf) for leaf in todo])
     tmp = os.path.join(out_dir, "_sinks_compacting")
-    n_leaves = max(1, df.select(*part_cols).distinct().count())
     # hash-repartition on the partition columns puts each leaf's rows in
     # ONE task → one output file per leaf; files_per_partition > 1 adds
     # a deterministic per-turn salt so big leaves split into exactly
@@ -729,10 +754,14 @@ def compact_sinks(
     # store's conversation order within each file, and write it in the
     # store's page form
     store_writer(
-        df.repartition(n_leaves * files_per_partition, *keys)
+        df.repartition(len(todo) * files_per_partition, *keys)
         .sortWithinPartitions(*part_cols, "conv_id", "turn_idx")
     ).mode("overwrite").partitionBy(*part_cols).parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
+    for leaf in todo:
+        os.makedirs(os.path.dirname(os.path.join(old, leaf)), exist_ok=True)
+        os.rename(os.path.join(path, leaf), os.path.join(old, leaf))
+        if os.path.isdir(os.path.join(tmp, leaf)):  # else: no rows
+            os.rename(os.path.join(tmp, leaf), os.path.join(path, leaf))
     shutil.rmtree(old)
+    shutil.rmtree(tmp)
     return ckpt.commit_snapshot(spark, out_dir, run_id, operation="replace")

@@ -34,34 +34,11 @@ TRANSCRIPT_SCHEMA = T.StructType(
 )
 
 # ---------------------------------------------------------------------------
-# Parsed-record schema (SyslogMessage analog, model/types.proto:19-33).
-# The parse UDF returns this struct; timestamps stay micro-second
-# TimestampType (the reference stores int64 ns; Spark timestamps are µs —
-# documented precision trade, all fixtures are second-granularity).
-# Structured-data properties are carried as a JSON string through the
-# Arrow boundary (older Arrow pandas-UDF paths don't do nested maps
-# reliably) and revived with from_json into
-# map<string,map<string,string>> right after the UDF.
+# Structured-data properties (SyslogMessage analog, model/types.proto:19-33).
+# The parse carries them as the compact JSON string ``properties_json``
+# (a nested map column costs ~2x the rest of the row in parquet); readers
+# that need map semantics revive it with from_json into this type.
 # ---------------------------------------------------------------------------
-
-PARSED_FIELDS = [
-    T.StructField("priority", T.IntegerType(), True),
-    T.StructField("facility", T.IntegerType(), True),
-    T.StructField("severity", T.IntegerType(), True),
-    T.StructField("version", T.IntegerType(), True),
-    T.StructField("time_reported", T.TimestampType(), True),
-    T.StructField("hostname", T.StringType(), True),
-    T.StructField("appname", T.StringType(), True),
-    T.StructField("procid", T.StringType(), True),
-    T.StructField("msgid", T.StringType(), True),
-    T.StructField("structured", T.StringType(), True),
-    T.StructField("message", T.StringType(), True),
-    T.StructField("properties_json", T.StringType(), True),
-    T.StructField("parse_ok", T.BooleanType(), True),
-    T.StructField("parser_name", T.StringType(), True),
-]
-
-PARSED_STRUCT = T.StructType(PARSED_FIELDS)
 
 PROPERTIES_TYPE = T.MapType(
     T.StringType(), T.MapType(T.StringType(), T.StringType())

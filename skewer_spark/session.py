@@ -1,7 +1,7 @@
 """SparkSession factory tuned for the pipeline.
 
 Configs mirror what the job would ship with on a real multi-executor
-cluster (AQE, skew-join handling, Arrow for pandas UDFs); shuffle
+cluster (AQE, skew-join handling, Arrow for toPandas); shuffle
 partition count is sized for local[N] testing and overridable.  On a
 1000-executor / 100 TB run the same builder is used from spark-submit
 with cluster-appropriate ``spark.sql.shuffle.partitions`` (rule of
@@ -55,7 +55,9 @@ _SQL_TUNING = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow transfer for every pandas UDF (the parse stage).
+    # Arrow for toPandas / createDataFrame(pandas): write_outputs'
+    # grouping-sets toPandas.  (The pandas UDFs of sinks/wire.py and
+    # functions/crypto.py always move Arrow batches.)
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # Dictionary dims are tiny; make sure they broadcast even if stats

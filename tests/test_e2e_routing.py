@@ -55,10 +55,14 @@ def oracle_rows(pipeline_out):
 
 COMPARE_COLS = [
     "conv_id", "turn_idx", "role", "tool", "priority", "facility",
-    "severity", "version", "hostname", "appname", "procid", "msgid",
-    "message", "parse_ok", "parser_name", "facility_name", "severity_name",
-    "filter_status", "topic", "partition_key",
+    "severity", "version", "time_reported", "hostname", "appname", "procid",
+    "msgid", "message", "parse_ok", "parser_name", "facility_name",
+    "severity_name", "filter_status", "topic", "partition_key",
 ]
+
+
+def _props(js: str | None) -> dict:
+    return json.loads(js) if js else {}
 
 
 def test_row_counts(pipeline_out):
@@ -79,7 +83,9 @@ def test_routed_table_row_equality(spark, pipeline_out, oracle_rows):
         g = got[uid]
         for c in COMPARE_COLS:
             assert g[c] == w[c], f"routed uid={uid[:8]} col={c}: {g[c]!r} != {w[c]!r}"
-        for c in ("time_reported", "time_generated", "ts"):
+        assert _props(g["properties_json"]) == _props(w["properties"]), (
+            f"routed uid={uid[:8]} properties")
+        for c in ("time_generated", "ts"):
             assert pd.Timestamp(g[c]) == pd.Timestamp(w[c]), (
                 f"routed uid={uid[:8]} {c}: {g[c]} != {w[c]}")
 

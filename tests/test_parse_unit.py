@@ -1,19 +1,20 @@
 """Golden tests for every parse branch of the reference decoders.
 
-Each case is checked twice: against the vectorized pandas core
-(skewer_spark.operators.parse.parse_batch) and against the independent
-per-row oracle (tests/oracle.py).  Both must agree with the golden.
+Each case is checked twice: against the Spark expression parse
+(skewer_spark.operators.parse.parse_transcripts, through a DataFrame)
+and against the independent per-row oracle (tests/oracle.py).  Both
+must agree with the golden.
 Branch labels cite /root/reference/decoders/rfc3164_format.go.
 """
 
 from __future__ import annotations
 
+import json
 from datetime import datetime
 
-import pandas as pd
 import pytest
 
-from skewer_spark.operators.parse import parse_batch
+from skewer_spark.operators.parse import parse_transcripts
 from tests import oracle
 
 TS = datetime(2026, 1, 1, 0, 0, 0)
@@ -137,21 +138,28 @@ CASES: list[tuple[str, dict]] = [
 ]
 
 
+def parse_lines(spark, lines: list[str], ts: datetime) -> list:
+    """Parse ``lines`` through a DataFrame; rows in input order."""
+    df = spark.createDataFrame(
+        [(i, line, ts) for i, line in enumerate(lines)],
+        "i int, text string, ts timestamp",
+    )
+    return sorted(parse_transcripts(df).collect(), key=lambda r: r.i)
+
+
+@pytest.fixture(scope="module")
+def golden_rows(spark) -> dict:
+    lines = [c[0] for c in CASES]
+    return dict(zip(lines, parse_lines(spark, lines, TS)))
+
+
 @pytest.mark.parametrize("line,want", CASES, ids=[c[0][:40] for c in CASES])
-def test_vectorized_parser_golden(line: str, want: dict):
-    res = parse_batch(pd.Series([line]), pd.Series([pd.Timestamp(TS)]))
-    row = res.iloc[0]
+def test_vectorized_parser_golden(golden_rows, line: str, want: dict):
+    row = golden_rows[line]
     for k, v in want.items():
         if k == "properties":
-            import json
             got = json.loads(row["properties_json"]) if row["properties_json"] else {}
             assert got == v, f"properties: {got!r} != {v!r}"
-        elif k == "time_reported":
-            got = row["time_reported"]
-            if v is None:
-                assert pd.isna(got), f"time_reported: {got!r} != None"
-            else:
-                assert got == pd.Timestamp(v), f"time_reported: {got!r} != {v!r}"
         else:
             assert row[k] == v, f"{k}: {row[k]!r} != {v!r}"
 
@@ -164,21 +172,13 @@ def test_oracle_parser_golden(line: str, want: dict):
         assert got == v, f"{k}: {got!r} != {v!r}"
 
 
-def test_vectorized_matches_oracle_bulk():
+def test_vectorized_matches_oracle_bulk(golden_rows):
     """Both implementations agree on every golden in one batch."""
-    lines = [c[0] for c in CASES]
-    res = parse_batch(
-        pd.Series(lines), pd.Series([pd.Timestamp(TS)] * len(lines))
-    )
-    for i, line in enumerate(lines):
+    for line, row in golden_rows.items():
         m = oracle.parse_line(line, TS.year)
-        row = res.iloc[i]
         for f in ("priority", "facility", "severity", "version", "hostname",
                   "appname", "procid", "msgid", "message", "parse_ok",
-                  "parser_name"):
+                  "parser_name", "time_reported"):
             assert row[f] == getattr(m, f), f"{line!r} field {f}"
-        exp_tr = m.time_reported
-        if exp_tr is None:
-            assert pd.isna(row["time_reported"]), line
-        else:
-            assert row["time_reported"] == pd.Timestamp(exp_tr), line
+        got = json.loads(row["properties_json"]) if row["properties_json"] else {}
+        assert got == m.properties, line

@@ -10,7 +10,10 @@ shape that silently degrades at 100 TB if lost:
   the band key (without it AQE coalesces the quadratic-output join to
   one task — the trap documented in PLANS.md);
 * parquet scans push filters and prune columns (a scan that reads all
-  columns for a 2-column projection re-reads the corpus).
+  columns for a 2-column projection re-reads the corpus);
+* the pipeline's parse runs in the JVM: no Python evaluation node on
+  the batch, streaming or entry paths, and the parse projection inside
+  a whole-stage-codegen stage.
 """
 
 from __future__ import annotations
@@ -26,6 +29,81 @@ def _plan(df, mode: str = "formatted") -> str:
     with contextlib.redirect_stdout(buf):
         df.explain(mode)
     return buf.getvalue()
+
+
+def _assert_parse_native(plan: str) -> None:
+    from skewer_spark.operators.parse import RE_PRI
+
+    for node in ("ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
+        assert node not in plan, plan
+    # the PRI extraction lives in the parse projection; "*(n)" marks an
+    # operator compiled into whole-stage-codegen stage n (an adaptive
+    # plan also prints its pre-codegen initial plan: skip that part)
+    final = plan.split("== Initial Plan ==")[0]
+    pri = [ln for ln in final.splitlines() if RE_PRI in ln]
+    assert pri, plan
+    assert all(ln.lstrip(" +-:").startswith("*(") for ln in pri), pri
+
+
+def test_pipeline_parse_runs_without_python_workers(spark, tmp_path):
+    """The batch (plans.job.build_routed), streaming
+    (streaming.pipeline.build_streaming_routed) and entry
+    (__spark_entry__._routed_events) paths parse with Spark SQL
+    expressions only, inside the scan stage's codegen."""
+    import __spark_entry__ as entry
+    from skewer_spark.plans.job import build_routed
+    from tests.test_wire_codecs import SF
+    from skewer_spark.streaming.pipeline import (
+        build_streaming_routed, streaming_transcripts)
+    from skewer_spark.synth import transcripts_df
+
+    def executed(df) -> str:
+        df.collect()
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    _assert_parse_native(executed(build_routed(transcripts_df(spark, 4, 10))))
+    _assert_parse_native(executed(entry._routed_events(spark, SF)))
+
+    inp = str(tmp_path / "in")
+    transcripts_df(spark, 4, 10).write.parquet(inp)
+    q = (
+        build_streaming_routed(streaming_transcripts(spark, inp))
+        .writeStream.format("memory").queryName("plan_guard_stream")
+        .trigger(availableNow=True).start()
+    )
+    try:
+        q.awaitTermination()
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            q.explain()
+    finally:
+        q.stop()
+    _assert_parse_native(buf.getvalue())
+
+
+def test_pipeline_codegen_methods_fit_the_jit_limit(spark, tmp_path):
+    """Every whole-stage-codegen method of build_routed over a parquet
+    scan stays under HotSpot's 8000-byte HugeMethodLimit: a larger one
+    is never JIT-compiled and runs in the bytecode interpreter (the
+    parse as one fused stage measured 14.4 kB and twice the CPU)."""
+    from skewer_spark.plans.job import build_routed
+    from skewer_spark.synth import transcripts_df
+
+    inp = str(tmp_path / "in")
+    transcripts_df(spark, 4, 10).write.parquet(inp)
+    debug = getattr(getattr(
+        spark._jvm.org.apache.spark.sql.execution.debug, "package$"), "MODULE$")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")  # one static plan
+    try:
+        plan = build_routed(spark.read.parquet(inp))._jdf.queryExecution() \
+            .executedPlan()
+        stages = debug.codegenStringSeq(plan).iterator()
+        sizes = []
+        while stages.hasNext():
+            sizes.append(stages.next()._3().maxMethodCodeSize())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert len(sizes) >= 2 and max(sizes) < 8000, sizes
 
 
 def _docs(spark, n=50):

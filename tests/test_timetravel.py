@@ -73,22 +73,21 @@ def test_snapshot_members_lineage(spark, store):
     assert runs1 == {"runA"} and runs2 == {"runA", "runB"}
 
 
+def _sink_fingerprint(spark, out):
+    """(row count, xor of row hashes) of a store's sinks."""
+    df = spark.read.option("basePath", f"{out}/sinks").parquet(f"{out}/sinks")
+    return (
+        df.count(),
+        df.agg(
+            F.bit_xor(
+                F.xxhash64("conv_id", "turn_idx", "sink", "encoded", "bucket")
+            ).alias("h")
+        ).collect()[0].h,
+    )
+
+
 def test_compaction_preserves_rows_and_records_replace(spark, store):
     out = store["out"]
-
-    def fingerprint():
-        df = spark.read.option("basePath", f"{out}/sinks").parquet(
-            f"{out}/sinks"
-        )
-        return (
-            df.count(),
-            df.agg(
-                F.bit_xor(
-                    F.xxhash64("conv_id", "turn_idx", "sink", "encoded",
-                               "bucket")
-                ).alias("h")
-            ).collect()[0].h,
-        )
 
     # fragment the store first (the tiny fixture writes one file per
     # leaf already): rewrite with a 4-way salt so each bucket=/sink=
@@ -108,7 +107,7 @@ def test_compaction_preserves_rows_and_records_replace(spark, store):
     shutil.rmtree(os.path.join(out, "sinks"))
     os.rename(frag, os.path.join(out, "sinks"))
 
-    before = fingerprint()
+    before = _sink_fingerprint(spark, out)
     n_files_before = len(
         glob.glob(os.path.join(out, "sinks", "**", "*.parquet"),
                   recursive=True)
@@ -119,7 +118,7 @@ def test_compaction_preserves_rows_and_records_replace(spark, store):
                for f in glob.glob(os.path.join(out, "sinks", "**", "*.parquet"),
                                   recursive=True))
     sid = job.compact_sinks(spark, out, run_id="compact1")
-    after = fingerprint()
+    after = _sink_fingerprint(spark, out)
     files_after = glob.glob(os.path.join(out, "sinks", "**", "*.parquet"),
                             recursive=True)
     n_files_after = len(files_after)
@@ -169,6 +168,49 @@ def test_compaction_fails_fast_on_bad_preconditions(spark, store):
             job.compact_sinks(spark, out, run_id="compact2")
     finally:
         os.rmdir(leftover)
+
+
+def test_compaction_rewrites_only_fragmented_leaves(spark, store):
+    """Leaves already at files_per_partition are neither read nor
+    rewritten; with none left to compact, compact_sinks writes and
+    commits nothing and answers the head snapshot."""
+    out = store["out"]
+    sinks = os.path.join(out, "sinks")
+
+    def mtimes():
+        return {
+            f: os.stat(f).st_mtime_ns
+            for f in glob.glob(os.path.join(sinks, "**", "*.parquet"),
+                               recursive=True)
+        }
+
+    def snapshots():
+        return ckpt.read_snapshots(spark, out).collect()
+
+    # one file per leaf (a no-op if an earlier compaction got there)
+    job.compact_sinks(spark, out, run_id="compact_pre")
+    before, snaps = mtimes(), snapshots()
+    head = max(snaps, key=lambda r: r.seq).snapshot_id
+    assert job.compact_sinks(spark, out, run_id="compact_noop") == head
+    assert mtimes() == before
+    assert len(snapshots()) == len(snaps)
+
+    # split the biggest leaf's file in two: only that leaf is rewritten
+    big = max(before, key=os.path.getsize)
+    leaf = os.path.dirname(big)
+    t = pq.ParquetFile(big).read()
+    assert t.num_rows >= 2
+    os.remove(big)
+    pq.write_table(t.slice(0, t.num_rows // 2), os.path.join(leaf, "a.parquet"))
+    pq.write_table(t.slice(t.num_rows // 2), os.path.join(leaf, "b.parquet"))
+    fp = _sink_fingerprint(spark, out)
+    job.compact_sinks(spark, out, run_id="compact_one")
+    after = mtimes()
+    assert _sink_fingerprint(spark, out) == fp
+    assert len(snapshots()) == len(snaps) + 1
+    assert {f: m for f, m in after.items() if os.path.dirname(f) != leaf} \
+        == {f: m for f, m in before.items() if os.path.dirname(f) != leaf}
+    assert len([f for f in after if os.path.dirname(f) == leaf]) == 1
 
 
 def test_asof_on_empty_store_returns_no_buckets(spark, tmp_path):
