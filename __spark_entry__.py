@@ -104,7 +104,10 @@ def _routed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _parsed_events(spark: SparkSession, sf_dir: str, pre=None) -> DataFrame:
     """``pre`` filters the TRANSCRIPT frame before the parse, so a
-    selective query parses only the lines it keeps."""
+    selective query parses only the lines it keeps.  A filter on a
+    PARSED field above the parse would be pushed down through its
+    projection chain with every alias inlined (see
+    ``parse_transcripts``), so no query here filters on one."""
     from skewer_spark.operators.parse import parse_transcripts
     from skewer_spark.sources.events import event_transcripts
 
@@ -229,28 +232,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_parse_rfc5424(spark, sf):
-        # pre-parse shape filter; parse_ok is a PARSED field, so its
-        # filter applies after the parse
+        # pre-parse shape filter; parse_ok is a PARSED field, and no
+        # filter on it sits above the parse (see _parsed_events): a row
+        # that failed yields an empty inline
         p = _parsed_events(
             spark, sf, pre=F.pmod(F.col("turn_idx"), F.lit(3)) == 0
         )
-        return (
-            p.filter(F.col("parse_ok"))
-            .select(
-                F.col("turn_idx").cast("long").alias("event_id"),
-                "hostname", "appname", "procid", "msgid", "message",
-                F.col("severity").cast("int").alias("severity"),
-                F.date_format("time_reported", "yyyy-MM-dd HH:mm:ss").alias("tr_str"),
-                F.get_json_object("properties_json", "$.meta.k").alias("meta_k"),
-            )
-        )
+        return p.select(F.inline(F.when(F.col("parse_ok"), F.array(F.struct(
+            F.col("turn_idx").cast("long").alias("event_id"),
+            "hostname", "appname", "procid", "msgid", "message",
+            F.col("severity").cast("int").alias("severity"),
+            F.date_format("time_reported", "yyyy-MM-dd HH:mm:ss").alias("tr_str"),
+            F.get_json_object("properties_json", "$.meta.k").alias("meta_k"),
+        )))))
 
     def q_parse_errors(spark, sf):
+        # count, then drop the parsers with none: a filter on parse_ok
+        # would sit above the parse (see _parsed_events)
         p = _parsed_events(spark, sf)
         return (
-            p.filter(~F.col("parse_ok"))
-            .groupBy("parser_name")
-            .agg(F.count("*").alias("n_errors"))
+            p.groupBy("parser_name")
+            .agg(F.count_if(~F.col("parse_ok")).alias("n_errors"))
+            .filter(F.col("n_errors") > 0)
         )
 
     def q_filter_fourway(spark, sf):

@@ -165,16 +165,6 @@ def _stamp(x: Column, year: Column) -> Column:
                       hms.substr(1, 2), hms.substr(4, 2), hms.substr(7, 2))
 
 
-def _ascending(a: Column, up_to: int = 4) -> Column:
-    """``a`` holds at most ``up_to`` strictly ascending strings."""
-    cond = F.size(a) <= 1
-    for n in range(2, up_to + 1):
-        cond = cond | functools.reduce(
-            lambda x, i: x & (F.get(a, i) < F.get(a, i + 1)),
-            range(n - 1), F.size(a) == n)
-    return cond
-
-
 def _properties(ids: Column, params: Column) -> Column:
     """SD elements → JSON of ``{sd_id: {name: raw value}}``, keys
     ascending (``sort_keys``); the last of a repeated name wins (the
@@ -213,12 +203,12 @@ def _stages(text_col: str, ts_col: str) -> list[dict[str, Column]]:
     a second codegen stage.  Each codegen stage stays under the JVM's
     8000-byte limit for JIT-compiling a method; the whole parse fused
     into one method exceeded it and ran in the bytecode interpreter.
-    ``props`` references ``keys`` more than once, and the stage after it
+    ``props`` references ``ids`` more than once, and the stage after it
     ``tstamp``, so CollapseProject merges neither neighbour into it."""
     s, h, r = _c("s"), _c("h"), _c("r")
     t, t0, t1, n = _c("t"), _c("t0"), _c("t1"), _c("n")
     is5424, hdr, rest5 = _c("is5424"), _c("hdr"), _c("rest5")
-    ids, keys, blk, tg = _c("ids"), _c("keys"), _c("blk"), _c("tg")
+    ids, blk, tg = _c("ids"), _c("blk"), _c("tg")
     first = F.substr(r, F.lit(1), F.lit(1))
     year = F.coalesce(F.year(F.col(ts_col)), F.lit(1970))
     return [
@@ -261,22 +251,10 @@ def _stages(text_col: str, ts_col: str) -> list[dict[str, Column]]:
             "ps": F.when(blk != "", F.regexp_extract_all(
                 blk, F.lit(RE_SD_ELEM), F.lit(2))),
         },
+        {"tsok": (_c("tsx") != "-") & _c("tsx").rlike(RE_3339)},
         {
-            "tsok": (_c("tsx") != "-") & _c("tsx").rlike(RE_3339),
-            # the common SD shape: one element
-            "keys": F.when(F.size(ids) == 1, F.regexp_extract_all(
-                F.get(_c("ps"), 0), F.lit(RE_SD_PARAM), F.lit(1))),
-            "vals": F.when(F.size(ids) == 1, F.regexp_extract_all(
-                F.get(_c("ps"), 0), F.lit(RE_SD_PARAM), F.lit(2))),
-        },
-        {
-            # one element with ascending names maps directly; anything
-            # else takes the interpreted path
-            "props": F.when(_c("sdok") & (F.size(ids) > 0), F.when(
-                (F.size(ids) == 1) & _ascending(keys),
-                F.to_json(F.map_from_arrays(ids, F.array(
-                    F.map_from_arrays(keys, _c("vals"))))),
-            ).otherwise(_properties(ids, _c("ps")))),
+            "props": F.when(_c("sdok") & (F.size(ids) > 0),
+                            _properties(ids, _c("ps"))),
             "t3339": F.when(_c("tsok"), _rfc3339(_c("tsx"))),
             "tstamp": F.when(_c("stok"), _stamp(r, year)),
             # RFC5424 fields; '-' → empty (:154-192)
@@ -401,6 +379,12 @@ def parse_transcripts(
     parquet costs ~2× the rest of the row combined (measured), so the
     map is revived with :func:`with_properties_map` / ``from_json`` only
     where an operator actually needs map semantics.
+
+    Do not filter the result on a parsed column: Catalyst pushes the
+    filter down through the whole projection chain with every alias
+    inlined, into a condition too big for codegen (over 1 M characters
+    of plan for ``parse_ok``) that evaluates the parse a second time.
+    Aggregate first, or drop rows with ``inline`` over a ``when``.
     """
     out = df
     for stage in _stages_in(df.sparkSession.sparkContext._gateway,

@@ -722,23 +722,25 @@ def compact_sinks(
     old = os.path.join(out_dir, "_sinks_precompact")
     if os.path.exists(old):
         raise RuntimeError(
-            f"leftover {old} from a crashed compaction — a crash between "
-            "the renames leaves the pre-compaction leaves there; "
-            "restore them to sinks/ (or remove them) before compacting"
+            f"leftover {old} from a crashed compaction — each leaf is "
+            "swapped by its own two renames; a leaf that sinks/ also "
+            "holds was already compacted, so its backup there can be "
+            "removed; restore the others to sinks/ before compacting"
         )
     path = os.path.join(out_dir, "sinks")
-    todo = sorted(
-        leaf for leaf, n in _sink_leaves(path).items()
-        if n > files_per_partition
-    )
+    leaves = _sink_leaves(path)
+    if not os.path.isdir(path) or any(
+        not os.path.basename(leaf).startswith("sink=") for leaf in leaves
+    ):
+        raise ValueError(f"{path} is not a sink store")
+    todo = sorted(leaf for leaf, n in leaves.items()
+                  if n > files_per_partition)
     if not todo:
         head = max(snaps, key=lambda r: (r.seq, r.snapshot_id), default=None)
         return head.snapshot_id if head is not None else None
     # the leaves' own key=value levels, so each rewritten leaf lands at
     # the path it is swapped back into
     part_cols = [seg.split("=", 1)[0] for seg in todo[0].split(os.sep)]
-    if "sink" not in part_cols:
-        raise ValueError(f"{path} is not a sink store")
     df = spark.read.option("basePath", path).parquet(
         *[os.path.join(path, leaf) for leaf in todo])
     tmp = os.path.join(out_dir, "_sinks_compacting")

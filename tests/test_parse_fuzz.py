@@ -19,7 +19,7 @@ import string
 from datetime import datetime
 
 from tests import oracle
-from tests.test_parse_unit import parse_lines
+from tests.parse_frames import parse_lines
 
 TS = datetime(2026, 1, 5, 10, 20, 30)  # 2026: Feb 29 does not exist
 

@@ -14,8 +14,8 @@ from datetime import datetime
 
 import pytest
 
-from skewer_spark.operators.parse import parse_transcripts
 from tests import oracle
+from tests.parse_frames import parse_lines
 
 TS = datetime(2026, 1, 1, 0, 0, 0)
 
@@ -136,15 +136,6 @@ CASES: list[tuple[str, dict]] = [
     ("<14>2 - h a p m - v2 msg", dict(version=2, message="v2 msg",
                                       parse_ok=True)),
 ]
-
-
-def parse_lines(spark, lines: list[str], ts: datetime) -> list:
-    """Parse ``lines`` through a DataFrame; rows in input order."""
-    df = spark.createDataFrame(
-        [(i, line, ts) for i, line in enumerate(lines)],
-        "i int, text string, ts timestamp",
-    )
-    return sorted(parse_transcripts(df).collect(), key=lambda r: r.i)
 
 
 @pytest.fixture(scope="module")

@@ -8,6 +8,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -168,6 +169,18 @@ def test_compaction_fails_fast_on_bad_preconditions(spark, store):
             job.compact_sinks(spark, out, run_id="compact2")
     finally:
         os.rmdir(leftover)
+
+
+def test_compaction_rejects_a_store_without_sink_leaves(spark, tmp_path):
+    """The layout check runs before the nothing-to-compact return: a
+    sinks/ whose leaves hold one file each but carry no sink= level is
+    refused, not answered with the head snapshot."""
+    leaf = tmp_path / "out" / "sinks" / "bucket=0"
+    leaf.mkdir(parents=True)
+    pq.write_table(pa.table({"conv_id": [1], "turn_idx": [0]}),
+                   str(leaf / "part-0.parquet"))
+    with pytest.raises(ValueError, match="not a sink store"):
+        job.compact_sinks(spark, str(tmp_path / "out"), run_id="c1")
 
 
 def test_compaction_rewrites_only_fragmented_leaves(spark, store):
