@@ -13,7 +13,7 @@ a count table here:
 * per-sink delivered counts — ``skw_store_acks_total``
   (``store/store.go:69-75``).
 * distinct conversations — ``skw_client_connections_total`` analog
-  (``metrics.go:25-31``) via approx_count_distinct at scale.
+  (``metrics.go:25-31``) via a mergeable HLL sketch at scale.
 
 The incoming, parse-error and filter tables come out of one scan,
 ``metric_grouping_sets``; ``plans.job.write_outputs`` splits them.
@@ -51,14 +51,13 @@ def metric_grouping_sets(routed: DataFrame) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_messages"),
-            # approx HLL: exact count_distinct under grouping sets
-            # expands the input 3x before the shuffle — far too heavy
-            # for a metrics side-channel
-            F.approx_count_distinct("conv_id").alias("n_convs"),
-            # mergeable sketch state (operators/sketches.py): stored
-            # with the slice's partials so whole-table distincts come
-            # from unioning sketches, valid under ANY slicing (time
-            # slices too, where summing per-slice counts double-counts)
+            # the one distinct count, as mergeable sketch state
+            # (operators/sketches.py): stored with the slice's partials
+            # so whole-table distincts come from unioning sketches,
+            # valid under ANY slicing (micro-batches too, where summing
+            # per-slice counts double-counts).  Exact count_distinct
+            # under grouping sets would expand the input 3x before the
+            # shuffle.
             F.hll_sketch_agg("conv_id", F.lit(12)).alias("convs_hll"),
             F.grouping_id().alias("gid"),
         )

@@ -10,8 +10,7 @@ SQL joins don't express well:
   ``/root/reference/services/*`` passing the *current* config snapshot
   to each handler).
 * :func:`session_agg` — gap-based session windows over an event
-  stream, batch edition (`F.session_window`), mirroring the streaming
-  sessionizer in ``streaming/stateful.py``.
+  stream, batch edition (`F.session_window`).
 
 Scale notes (the part that matters at 100 TB):
 

@@ -21,9 +21,19 @@ Execution model (SURVEY.md §3.1 "Spark trace", §4.2):
    aggregate scans of the sink files → manifest commit (the ACK).  A
    killed run leaves un-committed buckets; a rerun into the same
    ``out_dir`` processes exactly those (a full rerun takes a fresh
-   ``out_dir``).
-3. **Finalize** — per-bucket partial aggregate tables are summed
-   (counts are associative) into the final metric tables.
+   ``out_dir``).  A bucket no conversation hashed to has no staged
+   files and is committed with zero rows.
+3. **Finalize** — the per-bucket partial aggregate tables are merged
+   into the final metric tables: counts are summed, and the one
+   distinct count (``incoming_counts.n_convs``) is the union of the
+   buckets' HLL sketches.
+
+:func:`write_outputs` is the one write path for a slice.  The
+streaming job (``streaming.pipeline``) calls it for each micro-batch
+with ``sub="batch=<id>"``, so a micro-batch is a bucket (with no turn
+rank: the stream does not rank), and :func:`finalize_aggregates`
+merges ``batch=`` partials as it merges ``bucket=`` ones.  An empty
+slice writes no aggregate partial.
 
 uid dedup inside a bucket is globally correct because the uid is a
 function of (conv_id, turn_idx) and conv_id determines the bucket —
@@ -75,7 +85,7 @@ from skewer_spark.plans import checkpoint as ckpt
 # topic, value=encoded, timestamp=time_reported) plus the join/test keys.
 # No derived key: uid is a function of (conv_id, turn_idx), so read_sink
 # recomputes it rather than reading it from disk, and the Kafka timestamp
-# time_reported is stored NULL where it equals ts (write_sink_files).
+# time_reported is stored NULL where it equals ts (write_outputs).
 SINK_COLUMNS = [
     "conv_id", "turn_idx", "role", "tool", "ts", "severity",
     "severity_name", "filter_status", "parse_ok", "parser_name",
@@ -106,15 +116,6 @@ def store_writer(df: DataFrame) -> DataFrameWriter:
     ``stage_input``'s ``_staged`` table does not use it: it is
     hash-scattered by (bucket, salt), where v2 pages measured larger."""
     return df.write.option("parquet.writer.version", "v2")
-
-
-def write_sink_files(labeled: DataFrame, path: str) -> None:
-    """The sink store form, shared by the batch and streaming writers:
-    ``SINK_COLUMNS`` stripped by ``enrich.strip_derived``, one
-    ``sink=`` directory per destination, overwriting ``path``."""
-    store_writer(
-        strip_derived(labeled.select(*SINK_COLUMNS, "sink"))
-    ).partitionBy("sink").mode("overwrite").parquet(path)
 
 
 def bucket_col(n_buckets: int):
@@ -274,7 +275,15 @@ def write_outputs(
         labeled = labeled.withColumn(
             "encoded", seal_col("encoded", "uid", secret, salt_col="sink")
         )
-    write_sink_files(labeled, sinks_path)
+    # the sink store form: SINK_COLUMNS stripped of what read_sink
+    # rebuilds, one sink= directory per destination
+    store_writer(
+        strip_derived(labeled.select(*SINK_COLUMNS, "sink"))
+    ).partitionBy("sink").mode("overwrite").parquet(sinks_path)
+    if not any(d.startswith("sink=") for d in os.listdir(sinks_path)):
+        # an empty slice (a no-data micro-batch) leaves no sink=
+        # directory to read back: it has no counts to write
+        return 0, 0
 
     sinks_p = spark.read.option("basePath", sinks_path).parquet(sinks_path)
     canonical = sinks_p.filter(F.col("sink").isin(*CANONICAL_SINKS))
@@ -311,7 +320,7 @@ def write_outputs(
         columns={"n_messages": "n_errors"}
     ).reset_index(drop=True)
     inc = gs[gs["gid"] == 11][
-        ["role", "n_messages", "n_convs", "convs_hll"]
+        ["role", "n_messages", "convs_hll"]
     ].reset_index(drop=True)
     for name, pdf_out in (
         ("filter_counts", fc),
@@ -336,7 +345,7 @@ _AGG_ARROW_SCHEMAS = {
     ),
     "incoming_counts": pa.schema(
         [("role", pa.string()), ("n_messages", pa.int64()),
-         ("n_convs", pa.int64()), ("convs_hll", pa.binary())]
+         ("convs_hll", pa.binary())]
     ),
 }
 
@@ -358,7 +367,11 @@ def process_bucket(
     spark: SparkSession, staged: str, out_dir: str, bucket: int,
     secret: bytes | None = None,
 ) -> tuple[int, int]:
-    src = spark.read.parquet(os.path.join(staged, f"bucket={bucket}"))
+    path = os.path.join(staged, f"bucket={bucket}")
+    if not os.path.isdir(path):
+        # no conversation hashed to this bucket: nothing to read
+        return 0, 0
+    src = spark.read.parquet(path)
     if secret is not None:
         src = open_content_cols(src, secret)
     routed = build_routed(src)
@@ -479,8 +492,14 @@ _AGG_KEYS = {
 
 
 def finalize_aggregates(spark: SparkSession, out_dir: str) -> None:
-    """Merge per-bucket partials (counts are associative); sink_counts
-    is the (sink, severity_name) rollup of the merged windowed table."""
+    """Merge the slices' partials — ``bucket=`` (``run_pipeline``),
+    ``batch=`` (``streaming.pipeline``, one per micro-batch) or the one
+    unpartitioned slice of ``run_flat`` — into ``agg_final``.  Counts
+    are sums; ``incoming_counts.n_convs`` is the estimate of the union
+    of the slices' HLL sketches, so a conversation spread over several
+    slices counts once.  Partials that still carry a per-slice
+    ``n_convs`` column finalize alike: it is not read.  sink_counts is
+    the (sink, severity_name) rollup of the merged windowed table."""
     for name, keys in _AGG_KEYS.items():
         src = os.path.join(out_dir, "agg", name)
         try:
@@ -492,15 +511,13 @@ def finalize_aggregates(spark: SparkSession, out_dir: str) -> None:
         if name == "parse_error_counts":
             agg = [F.sum("n_errors").alias("n_errors")]
         elif name == "incoming_counts":
-            # n_convs: summed per-bucket approx distincts — exact-sum
-            # ONLY because buckets partition conv_id (bucket_col).
-            # n_convs_merged: HLL sketch union — the slicing-agnostic
-            # number (time-sliced resume keeps it right when summing
-            # would double-count convs spanning slices).
+            # n_convs from the union of the slices' HLL sketches: right
+            # under any slicing, micro-batches included, where a sum of
+            # per-slice distinct counts counts a conversation once per
+            # slice it spans
             agg = [F.sum("n_messages").alias("n_messages"),
-                   F.sum("n_convs").alias("n_convs"),
                    F.hll_sketch_estimate(F.hll_union_agg("convs_hll"))
-                    .cast("bigint").alias("n_convs_merged")]
+                    .cast("bigint").alias("n_convs")]
         else:
             agg = [F.sum("n_messages").alias("n_messages")]
         (

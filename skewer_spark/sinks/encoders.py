@@ -97,23 +97,6 @@ def with_envelope(df, source_port: int = 0):
     return df
 
 
-def _sd_from_properties() -> Column:
-    """[sid k="v" ...]... from map<string,map<string,string>>.
-
-    Escaping per encoders/rfc5424.go:84-110: ``\\ " ]`` get
-    backslash-escaped in param values.  Properties hold raw (already
-    escaped) values from the parser, so only quote them here.
-    """
-    inner = (
-        'aggregate(map_entries(e.value), "", (a, p) -> '
-        "concat(a, ' ', p.key, '=\"', p.value, '\"'))"
-    )
-    return F.expr(
-        "aggregate(map_entries(properties), '', (acc, e) -> "
-        f"concat(acc, '[', e.key, {inner}, ']'))"
-    )
-
-
 def encode_rfc5424() -> Column:
     # the parser keeps the raw SD block in `structured`; re-emitting it
     # avoids a map round-trip (reference rebuilds from the map with the

@@ -13,28 +13,28 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 def test_streaming_pipeline(spark, tmp_path):
+    from skewer_spark.plans.job import build_routed, finalize_aggregates
     from skewer_spark.streaming.pipeline import run_streaming
     from skewer_spark.synth import transcripts_df
 
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")
     transcripts_df(spark, 10, 10).write.parquet(inp)
-    q1, q2 = run_streaming(spark, inp, out, trigger_once=True)
-    q1.awaitTermination(120)
-    q2.awaitTermination(120)
+    q = run_streaming(spark, inp, out, trigger_once=True)
+    assert q.awaitTermination(120)
 
     sinks = spark.read.option("basePath", f"{out}/sinks").parquet(f"{out}/sinks")
     n_firehose = sinks.filter(F.col("sink") == "sink_firehose").count()
     assert n_firehose > 0
     # batch pipeline on the same input agrees on the PASS count
-    from skewer_spark.plans.job import build_routed
     batch_pass = (
         build_routed(spark.read.parquet(inp))
         .filter(F.col("filter_status") == "PASS").count()
     )
     assert n_firehose == batch_pass
-    wc = spark.read.parquet(f"{out}/agg/windowed_counts")
-    assert wc.count() >= 0  # append-mode windows may be withheld by watermark
+    finalize_aggregates(spark, out)
+    fc = spark.read.parquet(f"{out}/agg_final/filter_counts")
+    assert fc.agg(F.sum("n_messages")).collect()[0][0] == 100
 
 
 def test_encode_gelf(spark):
@@ -125,64 +125,112 @@ def test_dedup_clusters_releases_caches(spark):
     assert len(after - before) <= 1
 
 
+def _rows(df, drop=()):
+    """Every row of ``df`` without the ``drop`` columns, sorted."""
+    cols = sorted(c for c in df.columns if c not in drop)
+    return sorted(df.select(*cols).collect(), key=repr)
+
+
+def _store_rows(spark, path):
+    """Every row under ``path`` (partition columns included), sorted."""
+    return _rows(spark.read.option("basePath", path).parquet(path))
+
+
 def test_streaming_sink_write_idempotent(spark, tmp_path):
-    """A retried micro-batch must replace, not duplicate (ADVICE r01)."""
-    from skewer_spark.plans.job import build_routed
-    from skewer_spark.streaming.pipeline import write_sink_batch
+    """A retried micro-batch must replace, not duplicate (ADVICE r01):
+    the foreachBatch body, ``write_outputs(..., sub="batch=<id>")``,
+    run twice for one batch id leaves routed, sinks and every aggregate
+    partial unchanged."""
+    from skewer_spark.operators.enrich import enrich
+    from skewer_spark.operators.parse import parse_transcripts
+    from skewer_spark.operators.route import route
+    from skewer_spark.plans.job import write_outputs
     from skewer_spark.synth import transcripts_df
 
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")
     transcripts_df(spark, 6, 8).write.parquet(inp)
-    routed = build_routed(spark.read.parquet(inp))
-    write_sink_batch(routed, 0, out)
-    n1 = spark.read.option("basePath", f"{out}/sinks").parquet(
-        f"{out}/sinks").count()
-    write_sink_batch(routed, 0, out)  # simulated retry of the same batch
-    n2 = spark.read.option("basePath", f"{out}/sinks").parquet(
-        f"{out}/sinks").count()
-    assert n1 == n2 > 0
+    # a micro-batch as the stream routes it (no turn rank)
+    routed = route(enrich(
+        parse_transcripts(spark.read.parquet(inp)).drop("text")))
+    tables = ["routed", "sinks"] + [
+        f"agg/{t}" for t in ("filter_counts", "windowed_counts",
+                             "parse_error_counts", "incoming_counts")
+    ]
+    first = write_outputs(spark, routed, out, sub="batch=0")
+    rows = {t: _store_rows(spark, f"{out}/{t}") for t in tables}
+    # simulated retry of the same batch
+    assert write_outputs(spark, routed, out, sub="batch=0") == first
+    assert first[0] == 48
+    for t in tables:
+        assert rows[t] and _store_rows(spark, f"{out}/{t}") == rows[t], t
 
 
 def test_stream_output_equals_batch(spark, tmp_path):
-    """VERDICT r01 #10: the streaming path and the batch one-pass
-    fan-out agree row-for-row on (conv_id, turn_idx, sink, encoded)."""
-    from skewer_spark.operators.route import with_sink_labels
-    from skewer_spark.plans.job import build_routed
-    from skewer_spark.sinks.encoders import encoded_by_sink
+    """A drained stream equals ``run_flat`` + ``finalize_aggregates`` on
+    the same input: every ``agg_final`` table, every sink through
+    ``read_sink`` and, apart from ``turn_rank`` (a batch construct),
+    ``read_routed``.  The input spreads every conversation over three
+    data micro-batches, redelivers turns across them, and the drained
+    stream fires a no-data micro-batch."""
+    from datetime import timedelta
+
+    from skewer_spark.plans import job
     from skewer_spark.streaming.pipeline import run_streaming
     from skewer_spark.synth import transcripts_df
 
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")
-    transcripts_df(spark, 8, 10).write.parquet(inp)
-    q1, q2 = run_streaming(spark, inp, out, trigger_once=True)
-    q1.awaitTermination(120)
-    q2.awaitTermination(120)
-    keys = ["conv_id", "turn_idx", "sink", "encoded"]
-    streamed = {
-        tuple(r)
-        for r in spark.read.option("basePath", f"{out}/sinks")
-        .parquet(f"{out}/sinks").select(*keys).collect()
-    }
-    batch = with_sink_labels(
-        build_routed(spark.read.parquet(inp)), include_dropped=True
-    ).withColumn("encoded", encoded_by_sink())
-    expected = {tuple(r) for r in batch.select(*keys).collect()}
-    assert streamed == expected and len(streamed) > 0
+    flat = str(tmp_path / "flat")
+    df = transcripts_df(spark, 24, 10)
+    # three waves of 80 s of turns, 8 files each (one micro-batch a
+    # wave): conversations interleave in time, so each one's turns land
+    # in every data micro-batch and only a slicing-agnostic distinct
+    # count finalizes right
+    t0 = df.agg(F.min("ts")).collect()[0][0]
+    cut1, cut2 = t0 + timedelta(seconds=80), t0 + timedelta(seconds=160)
+    waves = [
+        df.filter(F.col("ts") < cut1),
+        df.filter((F.col("ts") >= cut1) & (F.col("ts") < cut2)),
+        # the last wave also redelivers every third earlier turn
+        df.filter(F.col("ts") >= cut2).unionByName(
+            df.filter((F.col("ts") < cut2) & (F.col("turn_idx") % 3 == 0))),
+    ]
+    for wave in waves:
+        wave.repartition(8).write.mode("append").parquet(inp)
+    q = run_streaming(spark, inp, out, trigger_once=True)
+    assert q.awaitTermination(180)
+    # the last wave advances the watermark: a no-data micro-batch follows
+    n_in = [p["numInputRows"] for p in q.recentProgress]
+    assert sum(n > 0 for n in n_in) == 3 and 0 in n_in, n_in
+    job.finalize_aggregates(spark, out)
+
+    job.run_flat(spark, inp, flat)
+    job.finalize_aggregates(spark, flat)
+
+    for name in job.AGG_TABLES:
+        got = _store_rows(spark, f"{out}/agg_final/{name}")
+        assert got and got == _store_rows(spark, f"{flat}/agg_final/{name}"), name
+
+    for sink in ("sink_alerts", "sink_tools", "sink_firehose",
+                 "sink_rejects", "_dropped"):
+        got = _rows(job.read_sink(spark, out, sink), drop=("batch",))
+        assert got and got == _rows(job.read_sink(spark, flat, sink)), sink
+    got = _rows(job.read_routed(spark, out), drop=("batch",))
+    want = _rows(job.read_routed(spark, flat), drop=("turn_rank",))
+    assert len(got) == 240 and got == want
 
 
 def test_stream_windowed_counts_equals_batch(spark, tmp_path):
-    """VERDICT r4 #5: the watermarked streaming agg leg agrees
-    row-for-row with the batch ``windowed_counts`` rollup once the
-    watermark has passed every real window.  A DROPPED sentinel
-    (severity 7 → no sink on either side, reference four-way filter)
-    placed far in the future advances the watermark so all real
-    windows flush, without contributing a single count."""
+    """The drained stream's finalized ``windowed_counts`` agrees
+    row-for-row with the batch ``windowed_counts`` rollup.  A DROPPED
+    sentinel (severity 7 → no sink on either side, reference four-way
+    filter) placed far in the future advances the watermark without
+    contributing a single count."""
     from datetime import timedelta
 
     from skewer_spark.operators.aggregate import windowed_counts
-    from skewer_spark.plans.job import build_routed
+    from skewer_spark.plans.job import build_routed, finalize_aggregates
     from skewer_spark.streaming.pipeline import run_streaming
     from skewer_spark.synth import transcripts_df
 
@@ -198,13 +246,14 @@ def test_stream_windowed_counts_equals_batch(spark, tmp_path):
     )
     sentinel.write.mode("append").parquet(inp)
 
-    q1, q2 = run_streaming(spark, inp, out, trigger_once=True)
-    q1.awaitTermination(120)
-    q2.awaitTermination(120)
+    q = run_streaming(spark, inp, out, trigger_once=True)
+    assert q.awaitTermination(120)
+    finalize_aggregates(spark, out)
 
     streamed = {
         (r.window_start, r.sink, r.severity_name, r.tool, r.n_messages)
-        for r in spark.read.parquet(f"{out}/agg/windowed_counts").collect()
+        for r in spark.read.parquet(
+            f"{out}/agg_final/windowed_counts").collect()
     }
     expected = {
         (r.window_start, r.sink, r.severity_name, r.tool, r.n_messages)
@@ -213,6 +262,26 @@ def test_stream_windowed_counts_equals_batch(spark, tmp_path):
         ).collect()
     }
     assert streamed == expected and len(streamed) > 0
+
+
+def test_streaming_refuses_earlier_store_layout(spark, tmp_path):
+    """A store whose stream checkpointed a separate windowed-counts
+    query in ``_ckpt/agg`` is refused before any query starts: that
+    query's file-sink metadata would hide the ``batch=`` partials from
+    ``finalize_aggregates``."""
+    import pytest
+
+    from skewer_spark.streaming.pipeline import run_streaming
+    from skewer_spark.synth import transcripts_df
+
+    inp = str(tmp_path / "in")
+    out = tmp_path / "out"
+    transcripts_df(spark, 2, 5).write.parquet(inp)
+    (out / "_ckpt" / "agg").mkdir(parents=True)
+    with pytest.raises(ValueError, match="fresh out_dir"):
+        run_streaming(spark, inp, str(out))
+    assert not spark.streams.active
+    assert not (out / "routed").exists()
 
 
 def test_dedup_clusters_transitive_closure(spark):
@@ -428,11 +497,13 @@ def test_conv_stats(spark):
 
 def test_streaming_watermark_late_data(spark, tmp_path):
     """Two incremental runs against one checkpoint: a row later than the
-    watermark must NOT reopen an already-emitted window (no duplicate
-    window rows, count unchanged), and a duplicate (conv_id, turn_idx)
-    within the watermark must be dropped before the sinks."""
+    watermark is dropped (never stored or counted, so it cannot reopen
+    an hour), and a duplicate (conv_id, turn_idx) within the watermark
+    is dropped before the sinks.  Each micro-batch's counts are final
+    when it is written, so an hour is counted as its rows arrive."""
     from datetime import datetime
 
+    from skewer_spark.plans.job import finalize_aggregates
     from skewer_spark.streaming.pipeline import run_streaming
 
     inp = str(tmp_path / "in")
@@ -445,42 +516,39 @@ def test_streaming_watermark_late_data(spark, tmp_path):
             [(c, i, "user", t, "none", ts) for (c, i, t, ts) in rows], schema
         )
 
+    def firehose_by_hour():
+        finalize_aggregates(spark, out)
+        by_hour = {}
+        # firehose carries every PASS row exactly once, so its rows are
+        # the per-hour message counts
+        for r in spark.read.parquet(f"{out}/agg_final/windowed_counts") \
+                .filter(F.col("sink") == "sink_firehose").collect():
+            by_hour.setdefault(r.window_start.hour, []).append(r.n_messages)
+        return by_hour
+
     d = lambda h, m=30: datetime(2026, 1, 1, h, m)  # noqa: E731
     wave1 = [("c1", 0, "plain zero", d(0)), ("c1", 1, "plain one", d(1)),
              ("c1", 2, "plain two", d(2)), ("c1", 3, "plain three", d(3))]
     rows_df(wave1).write.parquet(inp)
-    q1, q2 = run_streaming(spark, inp, out, watermark="1 hour")
-    q1.awaitTermination(120); q2.awaitTermination(120)
+    assert run_streaming(spark, inp, out, watermark="1 hour") \
+        .awaitTermination(120)
+    assert firehose_by_hour() == {0: [1], 1: [1], 2: [1], 3: [1]}
 
-    wc_path = f"{out}/agg/windowed_counts"
-    first = spark.read.parquet(wc_path).collect()
-    # watermark after wave 1 = 02:30 -> hours 0 and 1 are closed
-    assert {r.window_start.hour for r in first} == {0, 1}
-
-    # wave 2: one too-late row (00:15 < watermark), one duplicate of a
-    # wave-1 row inside the watermark, one genuinely new row at 05:30
+    # wave 2: one too-late row (00:15 < the 02:30 watermark), one
+    # duplicate of a wave-1 row inside the watermark, one genuinely new
+    # row at 05:30
     wave2 = [("c1", 0, "late dupe-hour row", datetime(2026, 1, 1, 0, 15)),
              ("c1", 3, "plain three", d(3)),      # duplicate key
              ("c1", 9, "plain nine", d(5))]
     rows_df(wave2).write.mode("append").parquet(inp)
-    q1, q2 = run_streaming(spark, inp, out, watermark="1 hour")
-    q1.awaitTermination(120); q2.awaitTermination(120)
+    assert run_streaming(spark, inp, out, watermark="1 hour") \
+        .awaitTermination(120)
 
-    wc = spark.read.parquet(wc_path).collect()
-    by_hour = {}
-    # the agg is sink-labeled like the batch windowed_counts table;
-    # firehose carries every PASS row exactly once, so it is the
-    # per-hour message count
-    for r in wc:
-        if r.sink != "sink_firehose":
-            continue
-        by_hour.setdefault(r.window_start.hour, []).append(r.n_messages)
-    # hour 0 emitted exactly once, count 1: the 00:15 row was dropped as
-    # late, not re-opened into a duplicate window row
-    assert by_hour[0] == [1]
-    # watermark is now 04:30 -> hours 2 and 3 closed; hour 5 withheld
-    assert set(by_hour) == {0, 1, 2, 3}
-    assert by_hour[3] == [1]  # the duplicate (c1,3) never re-counted
+    by_hour = firehose_by_hour()
+    # hour 0 still counts 1: the 00:15 row was dropped as late; hour 3
+    # still counts 1: the duplicate (c1, 3) was never re-counted; hour
+    # 5 is counted in the micro-batch it arrived in
+    assert by_hour == {0: [1], 1: [1], 2: [1], 3: [1], 5: [1]}
 
     sinks = spark.read.option("basePath", f"{out}/sinks").parquet(
         f"{out}/sinks"

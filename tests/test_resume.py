@@ -137,6 +137,28 @@ def test_rerun_is_noop(spark, tmp_path):
         job.run_pipeline(spark, inp, out, n_buckets=2, run_id="r1")
 
 
+def test_bucket_without_conversations(spark, tmp_path):
+    """Two conversations over 8 buckets leave buckets no conversation
+    hashed to, with no staged directory: each commits zero rows, and
+    the finalized tables equal ``run_flat``'s on the same input."""
+    inp = str(tmp_path / "in")
+    transcripts_df(spark, 2, 5).write.parquet(inp)
+    out = str(tmp_path / "out")
+    res = job.run_pipeline(spark, inp, out, n_buckets=8)
+    assert res["rows"] == 10
+    staged = glob.glob(f"{out}/_staged/bucket=*")
+    assert 0 < len(staged) < 8
+    committed = {r.bucket: r.n_rows
+                 for r in job.ckpt.read_manifest(spark, out).collect()}
+    assert set(committed) == set(range(8))
+    assert sum(n == 0 for n in committed.values()) == 8 - len(staged)
+
+    flat = str(tmp_path / "flat")
+    job.run_flat(spark, inp, flat)
+    job.finalize_aggregates(spark, flat)
+    assert _agg_final(spark, out) == _agg_final(spark, flat)
+
+
 def test_corrupt_manifest_raises(spark, tmp_path):
     """An unreadable manifest is an error, not "nothing committed":
     read as empty, it would send every bucket through the job again."""

@@ -2,10 +2,10 @@
 
 Prints the total line count of ``skewer_spark/`` and the lines in the
 static import closure of the pipeline's entry modules (``plans.job``,
-``streaming.pipeline``, ``streaming.stateful``, ``__main__`` and
-``session``).  The closure follows every ``import`` statement the
-``ast`` finds, including function-level (lazy) imports, plus the
-``__init__`` of every package on the way.  Nothing is imported or run.
+``streaming.pipeline``, ``__main__`` and ``session``).  The closure
+follows every ``import`` statement the ``ast`` finds, including
+function-level (lazy) imports, plus the ``__init__`` of every package
+on the way.  Nothing is imported or run.
 ``tests/test_contracts.py`` walks the same closure (``closure``) to
 check that no module is reached only by tests.
 
@@ -21,8 +21,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PKG = "skewer_spark"
 ENTRIES = (
-    "plans.job", "streaming.pipeline", "streaming.stateful", "__main__",
-    "session",
+    "plans.job", "streaming.pipeline", "__main__", "session",
 )
 
 
